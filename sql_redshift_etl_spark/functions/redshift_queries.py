@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sql_redshift_etl_spark.catalog import load_table
 from sql_redshift_etl_spark.functions.redshift_sql import run_redshift_sql
 from sql_redshift_etl_spark.plans.registry import register
+from sql_redshift_etl_spark.scale import parquet_total_rows
 
 # Verbatim Redshift-dialect script (DATEDIFF boundary semantics, TO_CHAR
 # format dialect, NVL, DECODE, ILIKE — all as a Redshift user writes them).
@@ -2831,14 +2832,6 @@ def redshift_script_case_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _parquet_total_rows(path: str) -> int | None:
-    """Moved to scale.parquet_total_rows (r14: the q3 join hint needs it
-    too); kept as an alias for this module's guard callers."""
-    from sql_redshift_etl_spark.scale import parquet_total_rows
-
-    return parquet_total_rows(path)
-
-
 def _guard_gk_group_sizes(
     df: DataFrame, group_col: str, query_name: str, parquet_path: str | None = None
 ) -> None:
@@ -2861,7 +2854,7 @@ def _guard_gk_group_sizes(
     from sql_redshift_etl_spark.functions.redshift_sql import _APPROX_PCT_ACCURACY
 
     if parquet_path is not None:
-        total = _parquet_total_rows(parquet_path)
+        total = parquet_total_rows(parquet_path)
         if total is not None and total < _APPROX_PCT_ACCURACY:
             return
     max_group = df.groupBy(group_col).count().agg(F.max("count")).first()[0]

@@ -16,24 +16,14 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# COPY error-budget materializations awaiting release: a budgeted load
-# caches the parsed frame because it has two consumers inside one COPY
-# (the MAXERROR count and the good/bad split). The cache must NOT
-# outlive the COPY's script — at 100 TB it would pin the whole load in
-# the block-manager for the session's lifetime (guide §5) — so the
-# script runner drains this registry in its cleanup once the bound
-# splits have served the script's statements.
-_BUDGET_CACHES: list[DataFrame] = []
-
-
-def release_budget_caches() -> None:
-    """Unpersist every COPY error-budget cache registered since the last
-    release. Lineage stays intact, so a consumer that runs afterwards
-    (e.g. the driver collecting a script's returned result) recomputes
-    the parse deterministically from the source files — correct, just no
-    longer pinned."""
-    while _BUDGET_CACHES:
-        _BUDGET_CACHES.pop().unpersist()
+# COPY error-budget loads (read_with_error_budget, the budgeted path of
+# read_json_with_paths) cache the parsed frame because it has two
+# consumers inside one COPY (the MAXERROR count and the good/bad split).
+# The cache must NOT outlive its consumers — at 100 TB it would pin the
+# whole load in the block-manager for the session's lifetime (guide §5)
+# — so each such load appends it to the ``caches`` list its caller
+# passes in, and the caller unpersists what it registered (the script
+# runner: at the end of the COPY's script).
 
 
 def read_csv(
@@ -105,6 +95,7 @@ def read_json_with_paths(
     jsonpaths_file: str,
     *,
     max_error: int | None = None,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """COPY ... FORMAT AS JSON '<jsonpaths file>' analog (S2, r13).
 
@@ -141,7 +132,8 @@ def read_json_with_paths(
       read_with_error_budget: count malformed lines (one cached-scan
       job at COPY time), raise if over budget, otherwise skip them and
       return ``(good_rows, bad_raw_lines)`` for the stl_load_errors
-      sink.
+      sink. The scan's cache is appended to ``caches``, which this
+      path requires; the caller unpersists it.
 
     The probe treats a line as malformed iff its root does not parse as
     a JSON OBJECT or ARRAY (``get_json_object(line, '$')`` non-NULL and
@@ -224,8 +216,10 @@ def read_json_with_paths(
             for c, f in zip(cols, fields)
         ]
         return raw.select(*guarded)
+    if caches is None:
+        raise ValueError("read_json_with_paths: max_error needs a caches list to register in")
     flagged = raw.withColumn("_rs_doc_ok", ok).cache()
-    _BUDGET_CACHES.append(flagged)
+    caches.append(flagged)
     n_bad = flagged.filter(~F.col("_rs_doc_ok")).count()
     if n_bad > max_error:
         raise ValueError(
@@ -365,6 +359,7 @@ def read_with_error_budget(
     fmt: str,
     *,
     max_error: int,
+    caches: list[DataFrame],
     header: bool = False,
     delimiter: str = ",",
     null_value: str | None = None,
@@ -382,7 +377,9 @@ def read_with_error_budget(
     The parsed frame is cached before the acceptance count: Spark
     disallows queries that reference ONLY the internal corrupt-record
     column on a raw scan (SPARK-21610), and the cache also makes the
-    gate + consume a single parse at any scale.
+    gate + consume a single parse at any scale. The cache is appended
+    to ``caches``; the caller unpersists it once the returned frames
+    have served.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField
@@ -408,7 +405,7 @@ def read_with_error_budget(
             reader = reader.option("timestampFormat", timestamp_format)
         df = reader.option("multiLine", True).option("escape", '"').csv(*paths)
     df = df.cache()
-    _BUDGET_CACHES.append(df)
+    caches.append(df)
     n_bad = df.filter(F.col(corrupt).isNotNull()).count()
     if n_bad > max_error:
         raise ValueError(
@@ -419,11 +416,12 @@ def read_with_error_budget(
     # corrupt-record-only projection is ILLEGAL to recompute from an
     # uncached raw scan
     # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — a lazy
-    # `bad` would break the moment release_budget_caches() drops the
-    # cache at script end. raw_line is truncated to 1024 chars, which
-    # is Redshift's own STL_LOAD_ERRORS.raw_line width — and what
-    # bounds driver BYTES as well as rows (a multiLine CSV corrupt
-    # record can otherwise swallow the rest of a file into one value).
+    # `bad` would break the moment the caller unpersists the cache
+    # (the script runner: at script end). raw_line is truncated to
+    # 1024 chars, which is Redshift's own STL_LOAD_ERRORS.raw_line
+    # width — and what bounds driver BYTES as well as rows (a
+    # multiLine CSV corrupt record can otherwise swallow the rest of a
+    # file into one value).
     bad_rows = (
         df.filter(F.col(corrupt).isNotNull())
         .select(F.substring(F.col(corrupt), 1, 1024).alias("raw_line"))

@@ -17,6 +17,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pandas as pd
@@ -28,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sql_redshift_etl_spark.session import apply_runtime_confs
+
+_log = logging.getLogger(__name__)
 
 # Target input rows per streaming state partition. Stateful-operator cost
 # per micro-batch is O(shuffle partitions): every partition owns a state
@@ -52,10 +55,18 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     state explicitly via SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS, which
     wins outright because the state layout is a checkpoint-compatibility
     property an engine should never silently change under a kept
-    checkpoint (these availableNow runs start from fresh checkpoints)."""
+    checkpoint (these availableNow runs start from fresh checkpoints).
+    A value that is not an integer >= 1 is ignored with a warning."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env:
-        return int(env)
+        n = int(env) if env.strip().isdigit() else 0
+        if n >= 1:
+            return n
+        _log.warning(
+            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS=%r is not an integer >= 1; "
+            "using the partition count derived from the input size",
+            env,
+        )
     from sql_redshift_etl_spark.scale import parquet_total_rows
 
     rows = parquet_total_rows(f"{sf_dir}/events.parquet") or 0

@@ -1340,8 +1340,9 @@ def test_copy_jsonpaths_matches_python_model(spark, tmp_path):
     schema = StructType.fromDDL("kid BIGINT, name STRING, third BIGINT")
 
     # budget path: acceptance at exactly n_bad, rejection one below
+    caches: list = []
     good, bad = read_json_with_paths(
-        spark, str(data), schema, str(ctl), max_error=n_bad
+        spark, str(data), schema, str(ctl), max_error=n_bad, caches=caches
     )
     got = sorted(
         [tuple(r) for r in good.collect()], key=lambda t: (repr(t))
@@ -1361,8 +1362,10 @@ def test_copy_jsonpaths_matches_python_model(spark, tmp_path):
     assert n_bad > 0  # seed sanity: the taxonomy is actually exercised
     with _pytest.raises(ValueError, match="exceed MAXERROR"):
         read_json_with_paths(
-            spark, str(data), schema, str(ctl), max_error=n_bad - 1
+            spark, str(data), schema, str(ctl), max_error=n_bad - 1, caches=caches
         )
+    for c in caches:  # the caller owns the budget caches it registered
+        c.unpersist()
 
     # strict mode: loud on the first error record read
     strict = read_json_with_paths(spark, str(data), schema, str(ctl))
@@ -1379,12 +1382,45 @@ def test_copy_budget_cache_released_after_script(spark):
     (delta against pre-existing storage so unrelated tests can't leak
     into this one)."""
     from sql_redshift_etl_spark.plans.registry import all_queries
-    from sql_redshift_etl_spark.sources.readers import release_budget_caches
 
-    release_budget_caches()  # drop any earlier direct-reader leftovers
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
     out = all_queries()["source_copy_jsonpaths_maxerror"].builder(spark, SF_DIR)
     assert len(out.collect()) > 0
     after = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     leaked = [str(i) for i in after if i.id() not in before]
     assert not leaked, f"COPY budget cache survived the script: {leaked}"
+
+
+def test_script_cleanup_keeps_other_callers_budget_caches(spark, tmp_path):
+    """A script releases only the COPY error-budget caches it registered:
+    a cache that a direct reader call registered in its caller's list
+    survives an unrelated script's cleanup, and is gone once its owner
+    unpersists it."""
+    from pyspark.sql.types import StructType
+
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+    from sql_redshift_etl_spark.sources.readers import read_with_error_budget
+
+    data = tmp_path / "load.csv"
+    data.write_text("1,a\nnot-a-number,b\n3,c\n")
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    caches: list = []
+    good, bad = read_with_error_budget(
+        spark,
+        str(data),
+        StructType.fromDDL("id BIGINT, s STRING"),
+        "CSV",
+        max_error=1,
+        caches=caches,
+    )
+    assert len(caches) == 1 and good.count() == 2 and bad.count() == 1
+    held = {i.id() for i in sc.getRDDStorageInfo()} - before
+    assert held, "the budgeted read registered no cache"
+
+    run_redshift_script(spark, "CREATE TEMP TABLE t AS SELECT 1 AS x; SELECT * FROM t")
+    still = {i.id() for i in sc.getRDDStorageInfo()}
+    assert held <= still, "an unrelated script's cleanup released a reader's cache"
+
+    caches.pop().unpersist(blocking=True)
+    assert not held & {i.id() for i in sc.getRDDStorageInfo()}

@@ -144,3 +144,25 @@ def test_stateful_sessions_across_real_microbatches(spark, duck, tmp_path):
         ).fetchall()
     }
     assert out == batch
+
+
+def test_stream_state_partitions_env_override(spark, monkeypatch, caplog):
+    """SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS wins when it is an integer
+    >= 1; anything else is ignored with a warning, falling back to the
+    count derived from the input size."""
+    import logging
+
+    from sql_redshift_etl_spark.streaming.pipeline import stream_state_partitions
+
+    env = "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
+    monkeypatch.delenv(env, raising=False)
+    derived = stream_state_partitions(spark, SF_DIR)
+    assert derived >= 1
+    for bad in ("abc", "0", "-3"):
+        monkeypatch.setenv(env, bad)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            assert stream_state_partitions(spark, SF_DIR) == derived
+        assert env in caplog.text and repr(bad) in caplog.text
+    monkeypatch.setenv(env, "4")
+    assert stream_state_partitions(spark, SF_DIR) == 4
