@@ -12,8 +12,12 @@ cannot fix:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_BROADCAST_BYTES = 512 * 1024 * 1024  # bigger than Spark's 10MB default: dims are cheap
 
@@ -94,7 +98,8 @@ def parquet_total_rows(path: str) -> int | None:
     """Driver-side parquet-footer row count (file or directory of part
     files) — zero Spark jobs, reads only footers. None when the path
     isn't plain readable parquet (callers fall back to their Spark-side
-    check). This is the engine's substitute for table statistics:
+    check), with a WARNING naming the path and the error. This is the
+    engine's substitute for table statistics:
     ``ANALYZE ... FOR ALL COLUMNS`` deterministically crashes Spark
     4.1.2 on TimestampNTZ column stats (r13 CBO A/B), so tier-dependent
     plan decisions key off footer row counts instead."""
@@ -111,7 +116,8 @@ def parquet_total_rows(path: str) -> int | None:
                         total += pq.read_metadata(os.path.join(root, f)).num_rows
             return total
         return pq.read_metadata(path).num_rows
-    except Exception:
+    except Exception as exc:
+        _log.warning("parquet footer row count failed for %s: %r", path, exc)
         return None
 
 

@@ -231,6 +231,12 @@ def run_to_memory(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
+    # The set/restore below changes a session-wide conf. It is safe only
+    # because the engine's driver submits from one thread at a time: a
+    # batch job planned from another thread between set() and restore
+    # would inherit the stream's partition count. ``stage_inputs`` is
+    # the one place that plans jobs from a thread pool, and it joins the
+    # pool before it returns, so no staging job overlaps a stream start.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
