@@ -45,6 +45,18 @@ BTRIM / INITCAP / REGEXP_SUBSTR / REGEXP_COUNT / REGEXP_INSTR /
 DATE_PART / EXTRACT / DATEADD / ADD_MONTHS / LAST_DAY need no rewrite —
 Spark 4 parses them natively with matching semantics (probe-verified).
 
+Call rewrites: every pass that replaces a function call goes through
+one function, ``_rewrite_calls(sql, pattern, render)``. It takes the
+matches of ``pattern`` that fall outside string literals, right to
+left, so the innermost call is rewritten first; it balanced-scans from
+the call's open paren to its close paren (quote-aware) and splices in
+``render(m, raw_body)``, or leaves the call when render returns None.
+Replacement text is never scanned again, so a rewrite cannot re-match
+its own output. Two-argument calls split at the FIRST top-level comma
+(``_split_two_args``). Passes that read text after the call (LISTAGG
+... WITHIN GROUP, APPROXIMATE PERCENTILE_DISC, RATIO_TO_REPORT ...
+OVER, AT TIME ZONE, PartiQL unnest) scan with the same primitives.
+
 Bounded-subset assumptions (documented, not silent):
 - String literals escape quotes by DOUBLING (''), the SQL standard both
   dialects share. Backslash-escaped quotes (\\') are NOT supported by
@@ -60,10 +72,14 @@ Bounded-subset assumptions (documented, not silent):
 from __future__ import annotations
 
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sql_redshift_etl_spark.functions.dialect import translate_datetime_format
+from sql_redshift_etl_spark.functions.dialect import (
+    tochar_needs_upper,
+    translate_datetime_format,
+)
 
 _DATEDIFF_EXPRS = {
     "year": "(year({b}) - year({a}))",
@@ -182,72 +198,6 @@ def _split_two_args(body: str) -> tuple[str, str]:
     raise ValueError(f"expected two arguments: {body!r}")
 
 
-def _rewrite_datediff(sql: str) -> str:
-    pat = re.compile(r"\bDATEDIFF\s*\(\s*(\w+)\s*,", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            # 'contains DATEDIFF(' inside a string literal — not a call.
-            search_from = m.end()
-            continue
-        unit = m.group(1).lower()
-        unit = _DATEDIFF_UNIT_ALIASES.get(unit, unit)
-        if unit not in _DATEDIFF_EXPRS:
-            raise ValueError(f"unsupported DATEDIFF unit: {m.group(1)}")
-        i = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : i - 1])
-        sql = sql[: m.start()] + _DATEDIFF_EXPRS[unit].format(a=a, b=b) + sql[i:]
-        search_from = 0
-
-
-def _fmt_literal(rs_fmt: str) -> str:
-    """Translate a Redshift datetime format and re-embed it as a Spark
-    single-quoted SQL literal. The translation can itself emit single
-    quotes (alpha literals become 'c'), so they must be doubled — the
-    SQL-literal escape — or formats like 'YYYY-MM-DD\"T\"HH24:MI:SS'
-    would splice into broken SQL."""
-    return "'" + translate_datetime_format(rs_fmt).replace("'", "''") + "'"
-
-
-def _rewrite_to_char(sql: str) -> str:
-    """TO_CHAR(expr, 'fmt') → date_format(expr, <translated fmt>).
-
-    Balanced-scan on the first argument, so expression args
-    (TO_CHAR(DATEADD(day, 1, d), 'YYYY-MM-DD')) translate instead of
-    silently reaching Spark, where the SAME format letters mean
-    different fields (DD = day-of-year digits, YYYY = week-based year —
-    silently wrong values, not an error). Non-literal formats raise."""
-    pat = re.compile(r"\bTO_CHAR\s*\(", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
-        expr, fmt = _split_two_args(sql[m.end() : end - 1])
-        fm = re.fullmatch(r"'([^']*)'", fmt)
-        if not fm:
-            raise ValueError(f"TO_CHAR format must be a string literal: {fmt!r}")
-        from sql_redshift_etl_spark.functions.dialect import tochar_needs_upper
-
-        rendered = f"date_format({expr}, {_fmt_literal(fm.group(1))})"
-        if tochar_needs_upper(fm.group(1)):
-            # Redshift case semantics: uppercase name tokens emit
-            # uppercase names; exact via upper() on the whole rendering
-            # (tochar_needs_upper guards out literal/mixed-case formats).
-            rendered = f"upper({rendered})"
-        sql = f"{sql[: m.start()]}{rendered}{sql[end:]}"
-        # resume inside the replacement: nested TO_CHAR in expr still
-        # rewrites; the translated outer format must not re-translate
-        search_from = m.start() + len("upper(" if rendered.startswith("upper(") else "date_format(")
-
-
 def _split_args(body: str) -> list[str]:
     """Split an argument list on top-level commas (paren/quote-aware)."""
     args: list[str] = []
@@ -268,22 +218,97 @@ def _split_args(body: str) -> list[str]:
     return args
 
 
+def _scan_balanced(sql: str, i: int) -> int:
+    """Given ``i`` just past an opening paren, return the index just past
+    its matching close paren (quote-aware)."""
+    depth, in_quote = 1, False
+    while depth:
+        ch = sql[i]
+        if ch == "'":
+            in_quote = not in_quote
+        elif not in_quote:
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+        i += 1
+    return i
+
+
+def _rewrite_calls(
+    sql: str,
+    pattern: re.Pattern,
+    render: Callable[[re.Match, str], str | None],
+) -> str:
+    """The shared call rewriter (contract in the module docstring): each
+    match of ``pattern`` outside a string literal, innermost first, is
+    replaced from its start to its close paren by ``render(m, body)``,
+    ``body`` being the raw text between the call's parens."""
+    hits = [m for m in pattern.finditer(sql) if not _in_literal(sql, m.start())]
+    for m in reversed(hits):
+        open_paren = sql.index("(", m.start())
+        end = _scan_balanced(sql, open_paren + 1)
+        repl = render(m, sql[open_paren + 1 : end - 1])
+        if repl is not None:
+            sql = sql[: m.start()] + repl + sql[end:]
+    return sql
+
+
+def _rewrite_datediff(sql: str) -> str:
+    def render(m: re.Match, body: str) -> str:
+        unit = m.group(1).lower()
+        unit = _DATEDIFF_UNIT_ALIASES.get(unit, unit)
+        if unit not in _DATEDIFF_EXPRS:
+            raise ValueError(f"unsupported DATEDIFF unit: {m.group(1)}")
+        a, b = _split_two_args(body.split(",", 1)[1])
+        return _DATEDIFF_EXPRS[unit].format(a=a, b=b)
+
+    return _rewrite_calls(
+        sql, re.compile(r"\bDATEDIFF\s*\(\s*(\w+)\s*,", re.IGNORECASE), render
+    )
+
+
+def _fmt_literal(rs_fmt: str) -> str:
+    """Translate a Redshift datetime format and re-embed it as a Spark
+    single-quoted SQL literal. The translation can itself emit single
+    quotes (alpha literals become 'c'), so they must be doubled — the
+    SQL-literal escape — or formats like 'YYYY-MM-DD\"T\"HH24:MI:SS'
+    would splice into broken SQL."""
+    return "'" + translate_datetime_format(rs_fmt).replace("'", "''") + "'"
+
+
+def _rewrite_to_char(sql: str) -> str:
+    """TO_CHAR(expr, 'fmt') → date_format(expr, <translated fmt>).
+
+    Expression arguments (TO_CHAR(DATEADD(day, 1, d), 'YYYY-MM-DD'))
+    must translate rather than reach Spark, where the SAME format letters
+    mean different fields (DD = day-of-year digits, YYYY = week-based
+    year — silently wrong values, not an error). Non-literal formats
+    raise."""
+
+    def render(m: re.Match, body: str) -> str:
+        expr, fmt = _split_two_args(body)
+        fm = re.fullmatch(r"'([^']*)'", fmt)
+        if not fm:
+            raise ValueError(f"TO_CHAR format must be a string literal: {fmt!r}")
+        rendered = f"date_format({expr}, {_fmt_literal(fm.group(1))})"
+        if tochar_needs_upper(fm.group(1)):
+            # Redshift case semantics: uppercase name tokens emit
+            # uppercase names; exact via upper() on the whole rendering
+            # (tochar_needs_upper guards out literal/mixed-case formats).
+            rendered = f"upper({rendered})"
+        return rendered
+
+    return _rewrite_calls(sql, re.compile(r"\bTO_CHAR\s*\(", re.IGNORECASE), render)
+
+
 def _rewrite_json_extract(sql: str) -> str:
     """JSON_EXTRACT_PATH_TEXT(j, 'a'[, 'b'...]) → get_json_object(j,
-    '$.a.b'). Balanced-scan so expression first arguments work;
-    non-literal path elements raise (a dynamic path cannot become a
-    static JSONPath)."""
-    pat = re.compile(r"\bJSON_EXTRACT_PATH_TEXT\s*\(", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
-        args = _split_args(sql[m.end() : end - 1])
+    '$.a.b'). Non-literal path elements raise (a dynamic path cannot
+    become a static JSONPath)."""
+
+    def render(m: re.Match, body: str) -> str:
+        args = _split_args(body)
         if len(args) < 2:
             raise ValueError("JSON_EXTRACT_PATH_TEXT needs a column and ≥1 path element")
         elems = []
@@ -294,9 +319,11 @@ def _rewrite_json_extract(sql: str) -> str:
                     f"JSON_EXTRACT_PATH_TEXT path elements must be string literals: {p!r}"
                 )
             elems.append(pm.group(1))
-        path = ".".join(elems)
-        sql = f"{sql[: m.start()]}get_json_object({args[0]}, '$.{path}'){sql[end:]}"
-        search_from = m.start() + len("get_json_object(")
+        return f"get_json_object({args[0]}, '$.{'.'.join(elems)}')"
+
+    return _rewrite_calls(
+        sql, re.compile(r"\bJSON_EXTRACT_PATH_TEXT\s*\(", re.IGNORECASE), render
+    )
 
 
 def _rewrite_listagg(sql: str) -> str:
@@ -470,23 +497,6 @@ def _rewrite_qualify(sql: str) -> str:
     return _rewrite_qualify(rewritten)
 
 
-def _scan_balanced(sql: str, i: int) -> int:
-    """Given ``i`` just past an opening paren, return the index just past
-    its matching close paren (quote-aware)."""
-    depth, in_quote = 1, False
-    while depth:
-        ch = sql[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        i += 1
-    return i
-
-
 def _rewrite_ratio_to_report(sql: str) -> str:
     """RATIO_TO_REPORT(x) OVER (w) → (CAST(x AS DOUBLE) / SUM(x) OVER (w)).
 
@@ -517,24 +527,17 @@ def _rewrite_ratio_to_report(sql: str) -> str:
 def _rewrite_approx_count(sql: str) -> str:
     """APPROXIMATE COUNT ( DISTINCT x ) → approx_count_distinct(x).
 
-    Redshift's HLL spelling; Spark's parser has no APPROXIMATE keyword.
-    Argument extracted with the quote-aware balanced scan so nested
-    parens/literals survive."""
-    pat = re.compile(r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\b", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_paren = sql.index("(", m.start())
-        arg_end = _scan_balanced(sql, open_paren + 1)
-        body = sql[open_paren + 1 : arg_end - 1].strip()
-        expr = re.sub(r"^DISTINCT\s+", "", body, flags=re.IGNORECASE)
-        sql = sql[: m.start()] + f"approx_count_distinct({expr})" + sql[arg_end:]
-        search_from = 0
+    Redshift's HLL spelling; Spark's parser has no APPROXIMATE keyword."""
+
+    def render(m: re.Match, body: str) -> str:
+        expr = re.sub(r"^DISTINCT\s+", "", body.strip(), flags=re.IGNORECASE)
+        return f"approx_count_distinct({expr})"
+
+    return _rewrite_calls(
+        sql,
+        re.compile(r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\b", re.IGNORECASE),
+        render,
+    )
 
 
 _APPROX_PCT_ACCURACY = 1_000_000
@@ -640,56 +643,35 @@ _CONVERT_KW = re.compile(r"\bCONVERT\s*\(", re.IGNORECASE)
 
 
 def _rewrite_convert(sql: str) -> str:
-    """Redshift ``CONVERT(type, expr)`` → ``CAST(expr AS type)``.
+    """Redshift ``CONVERT(type, expr)`` → ``CAST(expr AS type)``."""
 
-    Balanced-paren + quote-aware scan; innermost-first via re-scan, so
-    nested CONVERTs compose."""
-    while True:
-        hits = [m for m in _CONVERT_KW.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]  # last hit = innermost-or-later; re-loop handles the rest
-        end = _scan_balanced(sql, m.end())
-        typ, expr = _split_two_args(sql[m.end() : end - 1])
-        sql = f"{sql[: m.start()]}CAST({expr} AS {typ}){sql[end:]}"
+    def render(m: re.Match, body: str) -> str:
+        typ, expr = _split_two_args(body)
+        return f"CAST({expr} AS {typ})"
+
+    return _rewrite_calls(sql, _CONVERT_KW, render)
 
 
 def _rewrite_to_datetime(sql: str) -> str:
     """TO_DATE/TO_TIMESTAMP(expr, 'redshift-fmt') → same fn with the
     format translated to Spark's pattern dialect (YYYY→yyyy, MI→mm,
     HH24→HH ... — the shared translate_datetime_format table TO_CHAR
-    uses, applied in reverse direction). Balanced-scan + literal-aware
-    like the sibling rewrites, so nested first arguments
-    (TO_DATE(SUBSTRING(c, 1, 10), ...)) and quoted commas both work and
-    occurrences inside string literals are left alone."""
-    pat = re.compile(r"\b(TO_DATE|TO_TIMESTAMP)\s*\(", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
+    uses, applied in reverse direction). A single-argument call is left
+    to Spark, which parses it natively."""
+
+    def render(m: re.Match, body: str) -> str | None:
         try:
-            expr, fmt = _split_two_args(sql[m.end() : end - 1])
+            expr, fmt = _split_two_args(body)
         except ValueError:
-            # single-arg TO_DATE(x): Spark parses it natively
-            search_from = end
-            continue
+            return None
         fm = re.fullmatch(r"'([^']*)'", fmt)
         if not fm:
             raise ValueError(f"{m.group(1)} format must be a string literal: {fmt!r}")
-        fn = m.group(1).lower()
-        repl = f"{fn}({expr}, {_fmt_literal(fm.group(1))})"
-        sql = f"{sql[: m.start()]}{repl}{sql[end:]}"
-        # resume just INSIDE the replacement (past "fn("): a nested
-        # TO_DATE in the first argument still gets rewritten, while the
-        # outer call itself — which the case-insensitive pattern would
-        # re-match — cannot be re-translated (re-translating an already
-        # Spark-dialect format would corrupt it)
-        search_from = m.start() + len(fn) + 1
+        return f"{m.group(1).lower()}({expr}, {_fmt_literal(fm.group(1))})"
+
+    return _rewrite_calls(
+        sql, re.compile(r"\b(TO_DATE|TO_TIMESTAMP)\s*\(", re.IGNORECASE), render
+    )
 
 
 def _rewrite_string_fns(sql: str) -> str:
@@ -697,17 +679,13 @@ def _rewrite_string_fns(sql: str) -> str:
     argument order (both return the 1-based position, 0 when absent —
     semantics identical)."""
 
-    for kw, swap in (("CHARINDEX", True), ("STRPOS", False)):
-        pat = re.compile(rf"\b{kw}\s*\(", re.IGNORECASE)
-        while True:
-            hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(sql, m.end())
-            first, second = _split_two_args(sql[m.end() : end - 1])
-            hay, needle = (second, first) if swap else (first, second)
-            sql = f"{sql[: m.start()]}instr({hay}, {needle}){sql[end:]}"
+    def render(m: re.Match, body: str) -> str:
+        first, second = _split_two_args(body)
+        hay, needle = (second, first) if m.group(1).upper() == "CHARINDEX" else (first, second)
+        return f"instr({hay}, {needle})"
+
+    for kw in ("CHARINDEX", "STRPOS"):
+        sql = _rewrite_calls(sql, re.compile(rf"\b({kw})\s*\(", re.IGNORECASE), render)
     return sql
 
 
@@ -722,36 +700,22 @@ def _rewrite_trunc(sql: str) -> str:
     literal (Spark requires a foldable scale anyway); a quoted second
     argument is date-format trunc and passes through natively. Numeric
     single-arg TRUNC(x) is NOT supported — spell TRUNC(x, 0)."""
-    pat = re.compile(r"\bTRUNC\s*\(", re.IGNORECASE)
-    search_from = 0
-    while True:
-        hits = [
-            m
-            for m in pat.finditer(sql, search_from)
-            if not _in_literal(sql, m.start())
-        ]
-        if not hits:
-            return sql
-        m = hits[0]
-        end = _scan_balanced(sql, m.end())
-        body = sql[m.end() : end - 1]
+
+    def render(m: re.Match, body: str) -> str | None:
         try:
             x, n = _split_two_args(body)
         except ValueError:
-            sql = f"{sql[: m.start()]}CAST({body.strip()} AS DATE){sql[end:]}"
-            search_from = 0
-            continue
+            return f"CAST({body.strip()} AS DATE)"
         if re.fullmatch(r"'[^']*'", n):
-            search_from = end  # TRUNC(date, 'fmt'): native Spark date trunc
-            continue
+            return None  # TRUNC(date, 'fmt'): native Spark date trunc
         if not re.fullmatch(r"[+-]?\d+", n):
             raise ValueError(
                 f"numeric TRUNC scale must be an integer literal (got {n!r}); "
                 "Spark's floor/ceil require a foldable scale"
             )
-        repl = f"(CASE WHEN ({x}) >= 0 THEN FLOOR({x}, {n}) ELSE CEIL({x}, {n}) END)"
-        sql = f"{sql[: m.start()]}{repl}{sql[end:]}"
-        search_from = 0
+        return f"(CASE WHEN ({x}) >= 0 THEN FLOOR({x}, {n}) ELSE CEIL({x}, {n}) END)"
+
+    return _rewrite_calls(sql, re.compile(r"\bTRUNC\s*\(", re.IGNORECASE), render)
 
 
 def _rewrite_math_aliases(sql: str) -> str:
@@ -836,30 +800,19 @@ def _rewrite_extract_epoch(sql: str) -> str:
     ``unix_timestamp(x)`` (r5). Spark's EXTRACT has no EPOCH field
     (INVALID_EXTRACT_FIELD, probe-verified); Redshift returns integer
     epoch seconds, exactly unix_timestamp's contract."""
-    pat = re.compile(r"\bEXTRACT\s*\(\s*EPOCH\s+FROM\b", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            break
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_paren = sql.index("(", m.start())
-        end = _scan_balanced(sql, open_paren + 1)
-        expr = sql[m.end() : end - 1].strip()
-        sql = f"{sql[: m.start()]}unix_timestamp({expr}){sql[end:]}"
-        search_from = m.start() + len("unix_timestamp(")
-    pat2 = re.compile(r"\bDATE_PART\s*\(\s*'?epoch'?\s*,", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat2.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[0]
-        open_paren = sql.index("(", m.start())
-        end = _scan_balanced(sql, open_paren + 1)
-        expr = sql[m.end() : end - 1].strip()
-        sql = f"{sql[: m.start()]}unix_timestamp({expr}){sql[end:]}"
+
+    def render(m: re.Match, body: str) -> str:
+        # the body starts with the matched text past the open paren
+        # ("EPOCH FROM" / "epoch,"); the operand is what follows it
+        skip = len(m.group()) - m.group().index("(") - 1
+        return f"unix_timestamp({body[skip:].strip()})"
+
+    sql = _rewrite_calls(
+        sql, re.compile(r"\bEXTRACT\s*\(\s*EPOCH\s+FROM\b", re.IGNORECASE), render
+    )
+    return _rewrite_calls(
+        sql, re.compile(r"\bDATE_PART\s*\(\s*'?epoch'?\s*,", re.IGNORECASE), render
+    )
 
 
 def _operand_start(sql: str, i: int) -> int:
@@ -1624,36 +1577,28 @@ def _rewrite_log_base10(sql: str) -> str:
     call: table-name positions (CREATE TABLE log (...), INSERT INTO
     log (...), FROM/JOIN log, alias log (...)) are excluded by the
     preceding keyword."""
-    pat = re.compile(r"\bLOG\s*\(", re.IGNORECASE)
     name_pos = re.compile(
         r"(?is)\b(?:TABLE|VIEW|INTO|FROM|JOIN|UPDATE|USING|EXISTS|AS)\s*$"
     )
-    while True:
-        hits = [
-            m
-            for m in pat.finditer(sql)
-            if not _in_literal(sql, m.start())
-            and not name_pos.search(sql[: m.start()])
-            and len(_split_args(sql[m.end() : _scan_balanced(sql, m.end()) - 1])) == 1
-        ]
-        if not hits:
-            return sql
-        m = hits[-1]
-        sql = f"{sql[: m.start()]}log10({sql[m.end():]}"
+
+    def render(m: re.Match, body: str) -> str | None:
+        # text left of a match is never rewritten before it, so the
+        # input's prefix is the current one
+        if name_pos.search(sql[: m.start()]) or len(_split_args(body)) != 1:
+            return None
+        return f"log10({body})"
+
+    return _rewrite_calls(sql, re.compile(r"\bLOG\s*\(", re.IGNORECASE), render)
 
 
 def _rewrite_to_hex(sql: str) -> str:
     """TO_HEX(n) → lower(hex(n)) (Redshift emits lowercase hex; Spark's
     hex() is uppercase)."""
-    pat = re.compile(r"\bTO_HEX\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        arg = sql[m.end() : end - 1]
-        sql = f"{sql[: m.start()]}lower(hex({arg})){sql[end:]}"
+    return _rewrite_calls(
+        sql,
+        re.compile(r"\bTO_HEX\s*\(", re.IGNORECASE),
+        lambda m, arg: f"lower(hex({arg}))",
+    )
 
 
 def _rewrite_json_fns(sql: str) -> str:
@@ -1673,23 +1618,13 @@ def _rewrite_json_fns(sql: str) -> str:
       split takes a REGEX; the \\\\Q quoting keeps Redshift's literal-
       delimiter contract for any delimiter (e.g. '.').
     """
-    out = sql
-    while True:
+
+    def array_length(m: re.Match, body: str) -> str | None:
         # Spark's native json_array_length takes ONE arg; only the
-        # Redshift 2-arg (null_if_invalid) form needs the flag dropped —
-        # and the rewrite keeps the same function name, so the loop must
-        # skip already-1-arg calls or it never terminates.
-        hits = [
-            m
-            for m in re.finditer(r"\bJSON_ARRAY_LENGTH\s*\(", out, re.IGNORECASE)
-            if not _in_literal(out, m.start())
-            and len(_split_args(out[m.end() : _scan_balanced(out, m.end()) - 1])) > 1
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        args = _split_args(out[m.end() : end - 1])
+        # Redshift 2-arg (null_if_invalid) form needs the flag dropped
+        args = _split_args(body)
+        if len(args) < 2:
+            return None
         flag = args[1].strip().lower()
         if flag != "true":
             # error-on-invalid is the semantics Spark's lenient
@@ -1702,20 +1637,10 @@ def _rewrite_json_fns(sql: str) -> str:
                 "true (the error-on-invalid form is unsupported — Spark "
                 f"returns NULL on malformed input); got {flag[:30]!r}"
             )
-        out = f"{out[: m.start()]}json_array_length({args[0]}){out[end:]}"
-    while True:
-        hits = [
-            m
-            for m in re.finditer(
-                r"\bJSON_EXTRACT_ARRAY_ELEMENT_TEXT\s*\(", out, re.IGNORECASE
-            )
-            if not _in_literal(out, m.start())
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        args = _split_args(out[m.end() : end - 1])
+        return f"json_array_length({args[0]})"
+
+    def element_text(m: re.Match, body: str) -> str:
+        args = _split_args(body)
         if len(args) < 2 or not re.fullmatch(r"\d+", args[1].strip()):
             raise ValueError(
                 "JSON_EXTRACT_ARRAY_ELEMENT_TEXT: position must be an integer "
@@ -1733,59 +1658,40 @@ def _rewrite_json_fns(sql: str) -> str:
                 "unsupported — Spark returns NULL on malformed input); "
                 f"got {args[2].strip()[:30]!r}"
             )
-        out = (
-            f"{out[: m.start()]}get_json_object({args[0]}, "
-            f"'$[{args[1].strip()}]'){out[end:]}"
+        return f"get_json_object({args[0]}, '$[{args[1].strip()}]')"
+
+    def is_valid(m: re.Match, j: str) -> str:
+        # first-NON-WHITESPACE-char probe: JSON permits leading
+        # tabs/newlines too, which Spark's ltrim (space-only) would
+        # leave in place — a regex anchor classifies correctly
+        probe = "" if m.group(1) else "NOT "
+        return (
+            f"(try_parse_json({j}) IS NOT NULL "
+            f"AND {probe}regexp_like({j}, '^\\\\s*\\\\['))"
         )
-    for kw, want_array in (("IS_VALID_JSON_ARRAY", True), ("IS_VALID_JSON", False)):
-        while True:
-            hits = [
-                m
-                for m in re.finditer(rf"\b{kw}\s*\(", out, re.IGNORECASE)
-                if not _in_literal(out, m.start())
-            ]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(out, m.end())
-            j = out[m.end() : end - 1]
-            # first-NON-WHITESPACE-char probe: JSON permits leading
-            # tabs/newlines too, which Spark's ltrim (space-only) would
-            # leave in place — a regex anchor classifies correctly
-            probe = "" if want_array else "NOT "
-            out = (
-                f"{out[: m.start()]}(try_parse_json({j}) IS NOT NULL "
-                f"AND {probe}regexp_like({j}, '^\\\\s*\\\\[')){out[end:]}"
-            )
-    while True:
-        hits = [
-            m
-            for m in re.finditer(r"\bSPLIT_TO_ARRAY\s*\(", out, re.IGNORECASE)
-            if not _in_literal(out, m.start())
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        s, d = _split_two_args(out[m.end() : end - 1])
-        out = (
-            f"{out[: m.start()]}split({s}, concat('\\\\Q', {d}, '\\\\E'))"
-            f"{out[end:]}"
-        )
-    return out
+
+    def split_to_array(m: re.Match, body: str) -> str:
+        s, d = _split_two_args(body)
+        return f"split({s}, concat('\\\\Q', {d}, '\\\\E'))"
+
+    for pattern, render in (
+        (r"\bJSON_ARRAY_LENGTH\s*\(", array_length),
+        (r"\bJSON_EXTRACT_ARRAY_ELEMENT_TEXT\s*\(", element_text),
+        (r"\bIS_VALID_JSON(_ARRAY)?\s*\(", is_valid),
+        (r"\bSPLIT_TO_ARRAY\s*\(", split_to_array),
+    ):
+        sql = _rewrite_calls(sql, re.compile(pattern, re.IGNORECASE), render)
+    return sql
 
 
 def _rewrite_strtol(sql: str) -> str:
     """STRTOL(str, base) → CAST(conv(str, base, 10) AS BIGINT)."""
-    pat = re.compile(r"\bSTRTOL\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        s, base = _split_two_args(sql[m.end() : end - 1])
-        sql = f"{sql[: m.start()]}CAST(conv({s}, {base}, 10) AS BIGINT){sql[end:]}"
+
+    def render(m: re.Match, body: str) -> str:
+        s, base = _split_two_args(body)
+        return f"CAST(conv({s}, {base}, 10) AS BIGINT)"
+
+    return _rewrite_calls(sql, re.compile(r"\bSTRTOL\s*\(", re.IGNORECASE), render)
 
 
 def _rewrite_difference(sql: str) -> str:
@@ -1794,57 +1700,51 @@ def _rewrite_difference(sql: str) -> str:
     native soundex(). Redshift documents the result as 'the number of
     matching characters' of the codes; this is the position-wise
     reading (identical codes → 4 either way)."""
-    pat = re.compile(r"\bDIFFERENCE\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : end - 1])
+
+    def render(m: re.Match, body: str) -> str:
+        a, b = _split_two_args(body)
         terms = " + ".join(
             f"(CASE WHEN substring(soundex({a}), {i}, 1) = "
             f"substring(soundex({b}), {i}, 1) THEN 1 ELSE 0 END)"
             for i in (1, 2, 3, 4)
         )
-        sql = f"{sql[: m.start()]}({terms}){sql[end:]}"
+        return f"({terms})"
+
+    return _rewrite_calls(
+        sql, re.compile(r"\bDIFFERENCE\s*\(", re.IGNORECASE), render
+    )
 
 
 def _rewrite_get_byte(sql: str) -> str:
     """GET_BYTE(expr, offset) → the 0-based byte value via a binary
     substring (hex → base-10)."""
-    pat = re.compile(r"\bGET_BYTE\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, off = _split_two_args(sql[m.end() : end - 1])
-        sql = (
-            f"{sql[: m.start()]}CAST(conv(hex(substring(CAST({a} AS BINARY), "
-            f"({off}) + 1, 1)), 16, 10) AS INT){sql[end:]}"
+
+    def render(m: re.Match, body: str) -> str:
+        a, off = _split_two_args(body)
+        return (
+            f"CAST(conv(hex(substring(CAST({a} AS BINARY), "
+            f"({off}) + 1, 1)), 16, 10) AS INT)"
         )
+
+    return _rewrite_calls(sql, re.compile(r"\bGET_BYTE\s*\(", re.IGNORECASE), render)
 
 
 def _rewrite_cmp_fns(sql: str) -> str:
     """DATE_CMP / TIMESTAMP_CMP / DATE_CMP_TIMESTAMP /
     TIMESTAMP_CMP_DATE (a, b) → the -1/0/+1 CASE comparison (Spark
     compares date↔timestamp operands directly)."""
-    pat = re.compile(
-        r"\b(?:DATE_CMP(?:_TIMESTAMP)?|TIMESTAMP_CMP(?:_DATE)?)\s*\(", re.IGNORECASE
+
+    def render(m: re.Match, body: str) -> str:
+        a, b = _split_two_args(body)
+        return f"CASE WHEN ({a}) < ({b}) THEN -1 WHEN ({a}) > ({b}) THEN 1 ELSE 0 END"
+
+    return _rewrite_calls(
+        sql,
+        re.compile(
+            r"\b(?:DATE_CMP(?:_TIMESTAMP)?|TIMESTAMP_CMP(?:_DATE)?)\s*\(", re.IGNORECASE
+        ),
+        render,
     )
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : end - 1])
-        sql = (
-            f"{sql[: m.start()]}CASE WHEN ({a}) < ({b}) THEN -1 "
-            f"WHEN ({a}) > ({b}) THEN 1 ELSE 0 END{sql[end:]}"
-        )
 
 
 def _rewrite_quote_fns(sql: str) -> str:
@@ -1852,18 +1752,11 @@ def _rewrite_quote_fns(sql: str) -> str:
     QUOTE_LITERAL(s) → '-wrapped likewise (Redshift/Postgres quoting
     helpers; pure string expressions in both engines)."""
     for kw, q, esc in (("QUOTE_IDENT", '"', '""'), ("QUOTE_LITERAL", "''", "''''")):
-        pat = re.compile(rf"\b{kw}\s*\(", re.IGNORECASE)
-        while True:
-            hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(sql, m.end())
-            arg = sql[m.end() : end - 1]
-            sql = (
-                f"{sql[: m.start()]}concat('{q}', "
-                f"replace({arg}, '{q}', '{esc}'), '{q}'){sql[end:]}"
-            )
+        sql = _rewrite_calls(
+            sql,
+            re.compile(rf"\b{kw}\s*\(", re.IGNORECASE),
+            lambda m, arg: f"concat('{q}', replace({arg}, '{q}', '{esc}'), '{q}')",
+        )
     return sql
 
 
@@ -1872,14 +1765,9 @@ def _rewrite_to_number(sql: str) -> str:
     stripped, typed DECIMAL(p, s) from the format's digit layout.
     Supported format alphabet: 9 0 , . $ S — anything else raises
     (loud-on-unsupported, the module policy)."""
-    pat = re.compile(r"\bTO_NUMBER\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        expr, fmt = _split_two_args(sql[m.end() : end - 1])
+
+    def render(m: re.Match, body: str) -> str:
+        expr, fmt = _split_two_args(body)
         fm = re.match(r"^\s*'([^']*)'\s*$", fmt)
         if fm is None:
             raise ValueError(f"TO_NUMBER: format must be a string literal, got {fmt!r}")
@@ -1892,10 +1780,12 @@ def _rewrite_to_number(sql: str) -> str:
         prec, scale = digits[0] + (digits[1] if len(digits) > 1 else 0), (
             digits[1] if len(digits) > 1 else 0
         )
-        sql = (
-            f"{sql[: m.start()]}CAST(replace(replace({expr}, ',', ''), '$', '') "
-            f"AS DECIMAL({prec},{scale})){sql[end:]}"
+        return (
+            f"CAST(replace(replace({expr}, ',', ''), '$', '') "
+            f"AS DECIMAL({prec},{scale}))"
         )
+
+    return _rewrite_calls(sql, re.compile(r"\bTO_NUMBER\s*\(", re.IGNORECASE), render)
 
 
 _CAST_SPELLINGS = {

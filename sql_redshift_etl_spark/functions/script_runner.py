@@ -265,17 +265,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_redshift_etl_spark.functions.redshift_sql import (
+    _rewrite_calls,
+    _scan_balanced,
+    _split_args,
     rewrite_temp_names,
     strip_sql_comments,
     translate_redshift_sql,
 )
 
-__all__ = ["run_redshift_script", "split_statements", "strip_comments"]
-
-
-# Shared with the single-statement front-end (one implementation of
-# quote-aware comment stripping; redshift_sql also strips internally).
-strip_comments = strip_sql_comments
+__all__ = ["run_redshift_script", "split_statements"]
 
 
 def split_statements(script: str) -> list[str]:
@@ -285,7 +283,7 @@ def split_statements(script: str) -> list[str]:
     buf: list[str] = []
     in_quote = False
     in_dollar = False
-    s = strip_comments(script)
+    s = strip_sql_comments(script)
     i, n = 0, len(s)
     while i < n:
         ch = s[i]
@@ -374,8 +372,7 @@ def _parse_func_params(params: str) -> list[str]:
     """Parameter NAMES from a SQL-UDF signature; unnamed (type-only)
     parameters are referenced as $N and get positional placeholders."""
     names: list[str] = []
-    for i, p in enumerate(_split_top_commas(params)):
-        p = p.strip()
+    for i, p in enumerate(_split_args(params)):
         if not p:
             continue
         pm = re.match(r"(?i)^([\w$]+)\s+\w", p)
@@ -385,21 +382,16 @@ def _parse_func_params(params: str) -> list[str]:
 
 
 def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
-    """Inline every call to a script-defined SQL UDF: balanced-scan the
-    argument list, substitute named params on identifier boundaries and
-    $N positionally, wrap in parens. Repeats until no calls remain, so
-    UDFs may call other UDFs (depth-capped loudly)."""
+    """Inline every call to a script-defined SQL UDF: substitute named
+    params on identifier boundaries and $N positionally, wrap in parens.
+    Repeats until no calls remain, so UDFs may call other UDFs
+    (depth-capped loudly)."""
     for _ in range(16):
-        changed = False
+        before = sql
         for fname, (params, expr) in funcs.items():
-            pat = re.compile(rf"(?<![\w$]){re.escape(fname)}\s*\(", re.IGNORECASE)
-            while True:
-                hits = [m for m in pat.finditer(sql) if not _in_lit(sql, m.start())]
-                if not hits:
-                    break
-                m = hits[-1]
-                end = _scan_balanced_fwd(sql, m.end())
-                args = [a.strip() for a in _split_top_commas(sql[m.end() : end - 1]) if a.strip()]
+
+            def render(m: re.Match, arg_text: str) -> str:
+                args = [a for a in _split_args(arg_text) if a]
                 if len(args) != len(params):
                     raise ValueError(
                         f"{fname}(): expected {len(params)} argument(s), got {len(args)}"
@@ -411,15 +403,13 @@ def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
                         body = re.sub(
                             rf"(?i)(?<![\w$]){re.escape(p)}(?![\w$])", f"({a})", body
                         )
-                sql = f"{sql[: m.start()]}({body}){sql[end:]}"
-                changed = True
-        if not changed:
+                return f"({body})"
+
+            pat = re.compile(rf"(?<![\w$]){re.escape(fname)}\s*\(", re.IGNORECASE)
+            sql = _rewrite_calls(sql, pat, render)
+        if sql == before:
             return sql
     raise ValueError("SQL UDF inlining exceeded depth 16 (recursive definition?)")
-
-
-def _in_lit(sql: str, pos: int) -> bool:
-    return sql.count("'", 0, pos) % 2 == 1
 
 
 # Redshift scalar Python UDFs: `CREATE FUNCTION f(a type, ...) RETURNS
@@ -485,8 +475,7 @@ def _parse_func_param_types(params: str) -> list[str]:
     VARCHAR(10)' -> ['FLOAT8', 'VARCHAR']); a bare type (unnamed param)
     passes through as itself."""
     types: list[str] = []
-    for p in _split_top_commas(params):
-        p = p.strip()
+    for p in _split_args(params):
         if not p:
             continue
         pm = re.match(r"(?i)^[\w$]+\s+(\w+)", p)
@@ -581,37 +570,11 @@ _DELETE = re.compile(
 _UPDATE = re.compile(r"^UPDATE\s+([\w.]+)\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL)
 
 
-def _split_set_where(body: str) -> tuple[str, str | None]:
-    """Split an UPDATE's SET body from its optional WHERE at the TOP
-    level only (paren- and quote-aware): a WHERE inside a subquery
-    assignment like ``SET v = (SELECT max(x) FROM s WHERE k = 1)`` or
-    inside a string literal is content, not the clause keyword."""
-    depth, in_quote = 0, False
-    n = len(body)
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and body[i : i + 5].upper() == "WHERE"
-                and i > 0
-                and body[i - 1].isspace()
-                and (i + 5 == n or not (body[i + 5].isalnum() or body[i + 5] == "_"))
-            ):
-                return body[:i].strip(), body[i + 5 :].strip()
-    return body.strip(), None
-
-
 def _split_top_kw(body: str, kw: str) -> tuple[str, str | None]:
     """Split ``body`` at the first TOP-LEVEL occurrence of keyword ``kw``
-    (paren- and quote-aware) — same contract as _split_set_where, for the
-    UPDATE ... FROM clause (a FROM inside a subquery assignment or a
-    SUBSTRING(x FROM 2) sits at depth > 0 and is content)."""
+    (paren- and quote-aware): a WHERE or FROM inside a subquery
+    assignment like ``SET v = (SELECT max(x) FROM s WHERE k = 1)``, or a
+    SUBSTRING(x FROM 2), sits at depth > 0 and is content."""
     depth, in_quote = 0, False
     n, k = len(body), len(kw)
     for i, ch in enumerate(body):
@@ -746,22 +709,6 @@ _CREATE_EXTERNAL_TAIL = re.compile(
 )
 
 
-def _scan_balanced_fwd(text: str, i: int) -> int:
-    """Index just past the paren that closes the one opened before ``i``
-    (quote-aware) — the column list of CREATE EXTERNAL TABLE contains
-    nested parens (VARCHAR(8), DECIMAL(18,2)) a non-greedy regex chops."""
-    depth, in_quote = 1, False
-    while depth:
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        i += 1
-    return i
 # Redshift MERGE (the last SQL-DML spelling): MERGE INTO tgt [AS a]
 # USING src [AS b] ON cond WHEN MATCHED THEN {UPDATE SET ...|DELETE}
 # WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (...). Spark's own MERGE
@@ -808,8 +755,7 @@ def _parse_proc_params(params: str) -> list[tuple[str, str, str]]:
     result — Redshift's contract. OUT stays loud because Redshift
     itself forbids OUT arguments in a SQL-level CALL."""
     out: list[tuple[str, str, str]] = []
-    for p in _split_top_commas(params):
-        p = p.strip()
+    for p in _split_args(params):
         if not p:
             continue
         if re.match(r"(?i)^OUT\b", p):
@@ -1892,33 +1838,13 @@ def _parse_io_options(clause: str, stmt_kind: str) -> dict:
     return opts
 
 
-def _split_top_commas(body: str) -> list[str]:
-    """Split on top-level commas (paren/quote-aware)."""
-    parts: list[str] = []
-    depth, in_quote, start = 0, False, 0
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif in_quote:
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(body[start:i])
-            start = i + 1
-    parts.append(body[start:])
-    return parts
-
-
 def _split_assignments(body: str) -> list[tuple[str, str]]:
     """Split ``a = e1, b = e2`` on top-level commas (paren/quote-aware)."""
     out = []
-    for p in _split_top_commas(body):
+    for p in _split_args(body):
         col, _, expr = p.partition("=")
         if not expr:
-            raise ValueError(f"malformed SET assignment: {p.strip()!r}")
+            raise ValueError(f"malformed SET assignment: {p!r}")
         out.append((col.strip(), expr.strip()))
     return out
 
@@ -2385,7 +2311,7 @@ def _run_merge_into(
             cl,
         ):
             saw_not_matched = True
-            insert_exprs = [e.strip() for e in _split_top_commas(im.group(2))]
+            insert_exprs = _split_args(im.group(2))
             insert_cols = (
                 [c.strip() for c in im.group(1).split(",")]
                 if im.group(1)
@@ -2815,13 +2741,9 @@ def _exec_execute(state: _ScriptState, scope: dict | None, m: re.Match, raw: str
         # the current scope — one bounded one-row job per
         # argument) as a typed literal, outside quotes only
         # — plpgsql's value-not-text parameter contract.
-        from sql_redshift_etl_spark.functions.redshift_sql import (
-            _split_args,
-        )
-
         rendered: list[str] = []
         for a in _split_args(using_tail):
-            if not a.strip():
+            if not a:
                 raise ValueError("EXECUTE ... USING: empty argument")
             vdf = _query(state, None, f"SELECT ({_subst_vars(scope, a)}) AS v")
             vrow = vdf.first()
@@ -3152,7 +3074,7 @@ def _exec_create_ext_func(state: _ScriptState, scope: dict | None, m: re.Match, 
 def _exec_create_func(
     state: _ScriptState, scope: dict | None, m: re.Match, raw: str
 ) -> str | None:
-    sig_end = _scan_balanced_fwd(raw, m.end())
+    sig_end = _scan_balanced(raw, m.end())
     tm = _CREATE_FUNC_TAIL.match(raw[sig_end:])
     if tm is None:
         return raw
@@ -3224,7 +3146,7 @@ def _inline_udfs(state: _ScriptState, scope: dict | None, m: re.Match, raw: str)
 # dialect front-end must not rewrite a $$ body at define
 # time (each body statement is rewritten when it RUNS).
 def _exec_create_proc(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    sig_end = _scan_balanced_fwd(raw, m.end())
+    sig_end = _scan_balanced(raw, m.end())
     tm = _CREATE_PROC_TAIL.match(raw[sig_end:])
     if tm is None:
         raise ValueError(
@@ -3273,7 +3195,7 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
             "script (recursive CALL?)"
         )
     params, decls, body = state.procs[name]
-    args = [a.strip() for a in _split_top_commas(m.group(2)) if a.strip()]
+    args = [a for a in _split_args(m.group(2)) if a]
     if len(args) != len(params):
         raise ValueError(
             f"CALL {name}: expected {len(params)} argument(s) "
@@ -3400,11 +3322,7 @@ def _exec_raise(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) 
         raise ValueError(f"RAISE: unsupported form {raw[:60]!r}")
     level = (m.group(1) or "EXCEPTION").upper()
     if level == "EXCEPTION":
-        args = [
-            a.strip()
-            for a in _split_top_commas(m.group(3) or "")
-            if a.strip()
-        ]
+        args = [a for a in _split_args(m.group(3) or "") if a]
         vals = [
             str(_eval_script_scalar(state, None, a, "STRING"))
             for a in args
@@ -3834,7 +3752,7 @@ def _skip(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> No
 def _exec_create_external(
     state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
 ) -> str | None:
-    cols_end = _scan_balanced_fwd(stmt, m.end())
+    cols_end = _scan_balanced(stmt, m.end())
     tm = _CREATE_EXTERNAL_TAIL.match(stmt[cols_end:]) if cols_end else None
     if tm is None:
         return stmt
@@ -4271,7 +4189,7 @@ def _exec_delete(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
 def _exec_update(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
     spark = state.spark
     name, rest = m.group(1), m.group(2)
-    sets_from, cond = _split_set_where(rest)
+    sets_from, cond = _split_top_kw(rest, "WHERE")
     sets, from_text = _split_top_kw(sets_from, "FROM")
     base = state.existing(name)
     assigned = dict(_split_assignments(sets))

@@ -77,74 +77,25 @@ def register(
     return deco
 
 
-# Driver-verification priority. The round driver oracle-checks the FIRST
-# ~50 names in registration order, so ordering is evidence strategy, not
-# style. History: r1 checked the original first 50, r2 the next window,
-# r3 the 38 then-never-checked, r4 the 19 post-r3 registrations + bench
-# set + an r1 sample, r5 rotated to freshness (q12 + 8 new + all r1-era
-# + 26 r2-era) and came back 50/50 green — r1∪…∪r5 covered all 165
-# then-registered queries, every SQL-oracled row ever-green; r6 finished
-# the freshness rotation (nothing oracled older than r3) and came back
-# 50/50 green; r7 (the r6-verdict items) came back 50/50 green — the
-# third consecutive fully green round, and after it EVERY registered
-# query had an official row except the two late-r7 additions. The
-# ROUND-8 window (verdict r7 item 1, the documented below-boundary
-# order): (1) the two late-r7 additions with no official row yet
-# (case_stmt, dedup_substring_spans) lead; (2) the two r7 displacements
-# (stored_procedure, sim_ann_lsh — retiring the last r3-era row);
-# (3) new r8 queries as they land (inserted after those four, displacing
-# the window tail); (4) the 13 r6-era first-session oracled queries;
-# (5) the front of the r5 cohort — and came back 50/50 green, the
-# fourth consecutive fully green round. The ROUND-9 window (verdict r8
-# item 1): the five r9-new queries lead (all four r6-era leads the
-# verdict named yield their slots — a no-row query beats re-rowing an
-# r6 row), then the ENTIRE 45-query r4-era cohort — after r9 no
-# official row is older than r5, and the below-boundary front
-# (46 r5-era + 8 r6-era) fronts the r10 window. All 50 slots are
-# SQL-oracled again — and came back 50/50 green, the fifth consecutive
-# fully green round. The ROUND-10 window (verdict r9 item 1, the
-# documented below-boundary order): (1) the only two queries with no
-# official row (redshift_script_python_udf, redshift_script_decl_block —
-# registered after the r9 window froze); (2) the two r6-era leads that
-# yielded their r9 slots (source_external_table, update_from); (3) the
-# full 46-query r5-era cohort — exactly 50 slots, all SQL-oracled —
-# and came back 50/50 green, the sixth consecutive fully green round;
-# after r10 every registered query had an official row. The ROUND-11
-# window (verdict r10 item 1): the 9 remaining pre-r7 rows (3 r5-era +
-# 6 r6-era) lead, then the oldest r7-era SQL-oracled rows in cohort
-# order; the two r11-new oracled queries inserted at the TOP and
-# displaced the r7 tail — so after r11, 11 official rows remain at r7:
-# the 6 displaced SQL-oracled tail rows + the 5 rows-only-by-design
-# rows (VERDICT r11 "what's wrong" #2 corrected the earlier "nothing
-# older than r8" claim that stood here). The ROUND-12 window (verdict
-# r11 item 1, finishing the ratchet): those 6 r7-era oracled rows
-# lead, then the r8-era cohort in its r8 order fills the remaining
-# slots; r12-new oracled queries insert at the TOP, displacing the r8
-# tail into the r13 front — and came back 50/50 green, the eighth
-# consecutive fully green round (the two r12-new inserts pushed the
-# LAST TWO r8 rows, curation_repetition_scores and
-# curation_contamination_check, just below the boundary — ADVICE r12
-# caught the marker comment lagging that displacement, which is why
-# test_registry_hygiene now pins the marker's position to exactly 50).
-# The ROUND-13 window (verdict r12 item 1, steady-state rotation):
-# r13-new oracled queries lead, then the 8 remaining r8-era rows in
-# their r8 cohort order, then the FRONT of the outgoing r9 cohort
-# fills the rest; the displaced r9 tail heads the r14 window.
-# ROWS-ONLY POLICY (standing, verdict r11
-# item 1): the 5 rows-only-by-design queries keep their official r7
-# rows permanently — a window slot spent on a query with no SQL oracle
-# only re-buys the weak rows-only check, so they never re-enter the
-# window; their correctness evidence is the per-query pytest batteries
-# plus each round's full driver_sim re-run.
+# Verification priority. The per-round oracle check covers the FIRST 50
+# names in registration order, so this order is evidence strategy, not
+# style: each round's window leads with never-checked oracled queries,
+# then the oldest official rows in cohort order, displacing only the
+# window tail. The 5 rows-only-by-design queries never re-enter the
+# window (a slot spent on a query with no SQL oracle buys only the weak
+# rows-only check); their evidence is their pytest batteries plus each
+# round's full end-to-end re-run.
 # Maintenance rules (CI-enforced in tests/test_registry_hygiene.py):
 #  - every SQL-oracled query must appear in this list OR carry a
 #    "sibling-coverage:" note in its docstring naming the in-list query
 #    that exercises the same SURVEY §2 row;
 #  - new SQL-oracled queries go ABOVE the rows-only tail so they displace
 #    weaker checks, not stronger ones;
-#  - oracle-checked queries return scalar columns only (the driver's
+#  - oracle-checked queries return scalar columns only (the check's
 #    canonicalizer hashes via pandas sort_values — raw array/struct
-#    columns throw; serialize with array_join/to_json).
+#    columns throw; serialize with array_join/to_json);
+#  - the window-boundary marker comment in the list sits after exactly
+#    50 entries.
 # Names not listed keep their module registration order after these.
 _VERIFY_FIRST: list[str] = [
     # --- ROUND-13 window (50 slots, all SQL-oracled) ---

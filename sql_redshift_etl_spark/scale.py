@@ -96,26 +96,36 @@ def repartition_for_join(df: DataFrame, key: str, num_partitions: int | None = N
 
 def parquet_total_rows(path: str) -> int | None:
     """Driver-side parquet-footer row count (file or directory of part
-    files) — zero Spark jobs, reads only footers. None when the path
-    isn't plain readable parquet (callers fall back to their Spark-side
-    check), with a WARNING naming the path and the error. This is the
-    engine's substitute for table statistics:
+    files, local path or filesystem URI) — zero Spark jobs, reads only
+    footers. None when the path isn't plain readable parquet (callers
+    fall back to their Spark-side check), with a WARNING naming the path
+    and the error. This is the engine's substitute for table statistics:
     ``ANALYZE ... FOR ALL COLUMNS`` deterministically crashes Spark
     4.1.2 on TimestampNTZ column stats (r13 CBO A/B), so tier-dependent
     plan decisions key off footer row counts instead."""
-    import os
+    from urllib.parse import urlparse
 
     try:
         import pyarrow.parquet as pq
+        from pyarrow import fs
 
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.read_metadata(os.path.join(root, f)).num_rows
-            return total
-        return pq.read_metadata(path).num_rows
+        if urlparse(path).scheme:
+            filesystem, root = fs.FileSystem.from_uri(path)
+        else:
+            filesystem, root = fs.LocalFileSystem(), path
+        files = [root]
+        if filesystem.get_file_info(root).type == fs.FileType.Directory:
+            selector = fs.FileSelector(root, recursive=True)
+            files = [
+                f.path
+                for f in filesystem.get_file_info(selector)
+                if f.is_file and f.path.endswith(".parquet")
+            ]
+        total = 0
+        for f in files:
+            with filesystem.open_input_file(f) as fh:
+                total += pq.read_metadata(fh).num_rows
+        return total
     except Exception as exc:
         _log.warning("parquet footer row count failed for %s: %r", path, exc)
         return None

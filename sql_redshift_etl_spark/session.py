@@ -9,9 +9,12 @@ and Arrow transfer is enabled for the (rare) Pandas-UDF paths.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Runtime-settable SQL confs that the engine depends on. Applied both at
 # session build time and defensively by catalog.load_table (the verify
@@ -50,19 +53,21 @@ def get_spark(app_name: str = "sql-redshift-etl-spark", *, shuffle_partitions: i
     cpus = default_parallelism()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    session_confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Arrow for any toPandas / pandas_udf path (vector + multimodal ops).
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Files: split large scans at 128 MiB — at 100 TB this yields
+        # ~800k input splits, the right granularity for 1000 executors.
+        "spark.sql.files.maxPartitionBytes": "134217728",
+    }
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Arrow for any toPandas / pandas_udf path (vector + multimodal ops).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Files: split large scans at 128 MiB — at 100 TB this yields
-        # ~800k input splits, the right granularity for 1000 executors.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**session_confs, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # getOrCreate SILENTLY drops every builder config when a session
@@ -70,23 +75,19 @@ def get_spark(app_name: str = "sql-redshift-etl-spark", *, shuffle_partitions: i
     # tool's). Re-apply the runtime-settable subset so callers get the
     # posture they asked for; JVM-startup-only settings (driver memory,
     # master) genuinely cannot change and stay as-is.
-    for k, v in {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.files.maxPartitionBytes": "134217728",
-        **RUNTIME_CONFS,
-    }.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this session; startup value applies
+    _set_confs(spark, session_confs)
+    apply_runtime_confs(spark)
     return spark
 
 
 def apply_runtime_confs(spark: SparkSession) -> None:
     """Best-effort apply of runtime-settable confs to a foreign session."""
-    for k, v in RUNTIME_CONFS.items():
+    _set_confs(spark, RUNTIME_CONFS)
+
+
+def _set_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass
+        except Exception as exc:
+            _log.warning("cannot set %s on this session, its startup value applies: %r", k, exc)

@@ -219,3 +219,63 @@ def test_script_runner_functions_stay_short():
         and node.end_lineno - node.lineno + 1 > 300
     ]
     assert not too_long, f"functions over 300 lines in script_runner.py: {too_long}"
+
+
+# The functions allowed to track SQL quote state themselves. Everything
+# else in functions/ reuses them (redshift_sql's scanners and the
+# _rewrite_calls), so there is one quote/paren lexer, not copies.
+_QUOTE_SCANNERS = {
+    "strip_sql_comments", "_in_literal", "_split_args", "_split_two_args",
+    "_depth0_matches", "_scan_balanced", "split_statements", "_split_top_kw",
+    "_mask_quoted",
+}
+
+
+def _tracks_quotes(fn) -> bool:
+    """True when ``fn`` flips a quote flag (``x = not x`` on a name with
+    ``quot``/``in_q`` in it) or counts ``"'"`` characters."""
+    import ast
+
+    for node in ast.walk(fn):
+        if (
+            isinstance(node, ast.Assign)
+            and len(node.targets) == 1
+            and isinstance(node.targets[0], ast.Name)
+            and isinstance(node.value, ast.UnaryOp)
+            and isinstance(node.value.op, ast.Not)
+            and isinstance(node.value.operand, ast.Name)
+            and node.value.operand.id == node.targets[0].id
+            and ("quot" in node.targets[0].id or "in_q" in node.targets[0].id)
+        ):
+            return True
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "count"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "'"
+        ):
+            return True
+    return False
+
+
+def test_quote_scanners_are_not_copied():
+    import ast
+    from pathlib import Path
+
+    from sql_redshift_etl_spark import functions
+
+    copies = []
+    for path in sorted(Path(functions.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name not in _QUOTE_SCANNERS
+                and _tracks_quotes(node)
+            ):
+                copies.append(f"{path.name}:{node.name}")
+    assert not copies, (
+        "functions that scan SQL quotes themselves; use the shared "
+        f"scanners in redshift_sql instead: {copies}"
+    )

@@ -159,3 +159,12 @@ def test_parquet_total_rows_logs_unreadable_footer(tmp_path, caplog):
     assert records[0].levelno == logging.WARNING
     assert str(bad) in records[0].getMessage()
     assert parquet_total_rows(os.path.join(SF_DIR, "region.parquet")) == 5
+
+
+def test_parquet_total_rows_reads_file_uri_directory(tmp_path, caplog):
+    part_dir = tmp_path / "region"
+    part_dir.mkdir()
+    shutil.copy2(os.path.join(SF_DIR, "region.parquet"), part_dir / "part-00000.parquet")
+    with caplog.at_level(logging.WARNING, logger="sql_redshift_etl_spark.scale"):
+        assert parquet_total_rows(part_dir.as_uri()) == 5
+    assert not [r for r in caplog.records if r.name == "sql_redshift_etl_spark.scale"]

@@ -3,6 +3,8 @@ assembly (no live DB — wiring only, SURVEY.md §7), and scale utilities."""
 
 from __future__ import annotations
 
+from datetime import date, datetime
+
 import pytest
 
 from sql_redshift_etl_spark.functions.dialect import translate_datetime_format
@@ -433,13 +435,101 @@ def test_rewrite_to_datetime_nested_and_literal_aware():
     )
 
 
+# Every call-shaped rewrite, nested in itself ("{}" marks the slot of the
+# inner call) — the innermost call must be rewritten first and the outer
+# one must wrap its translation.
+_NESTED_CALLS = [
+    ("DATEDIFF(day, a, {})", "DATEDIFF(day, b, c)"),
+    ("TO_CHAR({}, 'MM')", "TO_CHAR(d, 'YYYY')"),
+    ("JSON_EXTRACT_PATH_TEXT({}, 'b')", "JSON_EXTRACT_PATH_TEXT(j, 'a')"),
+    ("APPROXIMATE COUNT(DISTINCT {})", "APPROXIMATE COUNT(DISTINCT x)"),
+    ("CONVERT(INT, {})", "CONVERT(VARCHAR(10), x)"),
+    ("TO_DATE({}, 'YYYY')", "TO_DATE(s, 'YYYYMMDD')"),
+    ("to_date({})", "TO_DATE(s, 'YYYYMMDD')"),
+    ("to_timestamp({})", "TO_TIMESTAMP(s, 'YYYY-MM-DD HH24:MI:SS')"),
+    ("CHARINDEX('a', {})", "CHARINDEX('b', s)"),
+    ("STRPOS({}, 'b')", "STRPOS(s, 'a')"),
+    ("TRUNC({}, 1)", "TRUNC(x, 2)"),
+    ("trunc({}, 'MM')", "TRUNC(ts)"),
+    ("EXTRACT(EPOCH FROM {})", "EXTRACT(EPOCH FROM ts)"),
+    ("DATE_PART(epoch, {})", "DATE_PART('epoch', ts)"),
+    ("LOG({})", "LOG(x)"),
+    ("TO_HEX({})", "TO_HEX(n)"),
+    ("JSON_ARRAY_LENGTH({}, true)", "JSON_ARRAY_LENGTH(j, true)"),
+    ("JSON_EXTRACT_ARRAY_ELEMENT_TEXT({}, 1)", "JSON_EXTRACT_ARRAY_ELEMENT_TEXT(j, 0)"),
+    ("IS_VALID_JSON({})", "IS_VALID_JSON(j)"),
+    ("IS_VALID_JSON_ARRAY({})", "IS_VALID_JSON_ARRAY(j)"),
+    ("SPLIT_TO_ARRAY({}, ';')", "SPLIT_TO_ARRAY(s, ',')"),
+    ("STRTOL({}, 2)", "STRTOL(s, 16)"),
+    ("DIFFERENCE({}, c)", "DIFFERENCE(a, b)"),
+    ("GET_BYTE({}, 1)", "GET_BYTE(b, 0)"),
+    ("DATE_CMP({}, c)", "TIMESTAMP_CMP(a, b)"),
+    ("QUOTE_IDENT({})", "QUOTE_IDENT(s)"),
+    ("QUOTE_LITERAL({})", "QUOTE_LITERAL(s)"),
+    ("TO_NUMBER({}, '9.9')", "TO_NUMBER(s, '999')"),
+]
+
+
+@pytest.mark.parametrize("outer,inner", _NESTED_CALLS, ids=[o for o, _ in _NESTED_CALLS])
+def test_call_rewrite_nested_in_itself(outer, inner):
+    from sql_redshift_etl_spark.functions.redshift_sql import translate_redshift_sql as t
+
+    name = inner[: inner.index("(")].split()[-1]
+    out = t(f"SELECT {outer.format(inner)} AS v FROM x")
+    assert out == t(f"SELECT {outer.format('zq')} AS v FROM x").replace("zq", t(inner))
+    assert f"{name}(" not in out
+
+
+@pytest.mark.parametrize("outer,inner", _NESTED_CALLS, ids=[o for o, _ in _NESTED_CALLS])
+def test_call_rewrite_leaves_string_literals(outer, inner):
+    from sql_redshift_etl_spark.functions.redshift_sql import translate_redshift_sql as t
+
+    lit = "'" + outer.format(inner).replace("'", "''") + "'"
+    sql = f"SELECT {lit} AS v, 'x' AS w FROM x"
+    assert t(sql) == sql
+
+
+@pytest.mark.parametrize(
+    "expr,row,expected",
+    [
+        ("to_date(TO_DATE(s, 'YYYYMMDD'))", "'20240315'", date(2024, 3, 15)),
+        (
+            "to_timestamp(TO_TIMESTAMP(s, 'YYYY-MM-DD HH24:MI:SS'))",
+            "'2024-03-15 10:20:30'",
+            datetime(2024, 3, 15, 10, 20, 30),
+        ),
+        ("trunc(TRUNC(ts), 'MM')", "TIMESTAMP'2024-03-15 10:20:30'", date(2024, 3, 1)),
+    ],
+)
+def test_call_nested_in_a_call_left_alone_runs(spark, expr, row, expected):
+    """An outer call the shim leaves to Spark (single-argument TO_DATE /
+    TO_TIMESTAMP, date-format TRUNC) must still get its inner Redshift
+    call rewritten, or Spark rejects the Redshift format / argument count."""
+    from sql_redshift_etl_spark.functions.redshift_sql import run_redshift_sql
+
+    col = "ts" if expr.startswith("trunc") else "s"
+    out = run_redshift_sql(spark, f"SELECT {expr} AS v FROM (SELECT {row} AS {col}) t")
+    assert out.collect()[0]["v"] == expected
+
+
+def test_sql_udf_inlining_nested_and_literal_aware():
+    from sql_redshift_etl_spark.functions.script_runner import _inline_sql_udfs
+
+    funcs = {"f": (["a"], "a + 1")}
+    assert _inline_sql_udfs("SELECT f(f(x)) FROM t", funcs) == "SELECT ((((x) + 1)) + 1) FROM t"
+    assert _inline_sql_udfs("SELECT 'f(x)' FROM t", funcs) == "SELECT 'f(x)' FROM t"
+    with pytest.raises(ValueError, match="depth 16"):
+        _inline_sql_udfs("SELECT f(x) FROM t", {"f": (["a"], "f(a)")})
+
+
 # ---------------------------------------------------------------------------
 # multi-statement script runner (functions.script_runner)
 # ---------------------------------------------------------------------------
 
 
 def test_script_split_and_comments():
-    from sql_redshift_etl_spark.functions.script_runner import split_statements, strip_comments
+    from sql_redshift_etl_spark.functions.redshift_sql import strip_sql_comments as strip_comments
+    from sql_redshift_etl_spark.functions.script_runner import split_statements
 
     s = strip_comments("SELECT 1; -- trailing; with semicolon\n/* block;\nstill block */ SELECT 2")
     assert "--" not in s and "block" not in s
@@ -612,7 +702,7 @@ def test_script_runner_update_with_subquery_where_in_set(spark):
 
 
 def test_script_block_comment_is_token_separator():
-    from sql_redshift_etl_spark.functions.script_runner import strip_comments
+    from sql_redshift_etl_spark.functions.redshift_sql import strip_sql_comments as strip_comments
 
     assert strip_comments("SELECT a/**/b FROM t").split() == ["SELECT", "a", "b", "FROM", "t"]
 
@@ -6327,3 +6417,23 @@ def test_found_column_collision_is_loud(spark):
             CALL p_c2();
             """,
         )
+
+
+def test_apply_runtime_confs_warns_on_unsettable_key(caplog):
+    import logging
+
+    from sql_redshift_etl_spark.session import apply_runtime_confs
+
+    class _Conf:
+        def set(self, key, value):
+            if key == "spark.sql.session.timeZone":
+                raise RuntimeError("locked")
+
+    class _Spark:
+        conf = _Conf()
+
+    with caplog.at_level(logging.WARNING, logger="sql_redshift_etl_spark.session"):
+        apply_runtime_confs(_Spark())
+    msgs = [r.getMessage() for r in caplog.records if r.name == "sql_redshift_etl_spark.session"]
+    assert len(msgs) == 1
+    assert "spark.sql.session.timeZone" in msgs[0] and "locked" in msgs[0]
