@@ -72,7 +72,7 @@ Bounded-subset assumptions (documented, not silent):
 from __future__ import annotations
 
 import re
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -927,127 +927,90 @@ def _rewrite_partiql_unnest(sql: str) -> str:
         masked = masked[: m.start()] + repl + masked[m.end() :]
 
 
-# Redshift hierarchical queries: SELECT ... FROM t [WHERE w]
-# START WITH cond CONNECT BY [NOCYCLE] PRIOR-cond
-# [ORDER SIBLINGS BY col | ORDER BY/LIMIT].
-# Rewritten to a recursive CTE (Spark 4 executes those natively via
-# UnionLoop — same engine path as redshift_sql_recursive). LEVEL is
-# exposed as the CTE's `level` column; CONNECT_BY_ROOT arg and
-# SYS_CONNECT_BY_PATH(arg, 'sep') become columns carried through both
-# CTE arms (r8; an EXPRESSION arg is precomputed row-locally in a
-# derived base CTE — r9); NOCYCLE guards the recursive join on a
-# carried ancestor-key path; CONNECT_BY_ISLEAF and (under NOCYCLE)
-# CONNECT_BY_ISCYCLE are post-CTE lookahead probes (r9). Subset (loud
-# otherwise): one top-level clause pair, a single unaliased table, at
-# least one PRIOR reference, base-column-only pseudo-column expression
-# arguments, ISCYCLE only with NOCYCLE (Oracle's ORA-30007 contract),
-# no pseudo-columns inside START WITH / CONNECT BY conditions, no bare
-# `SELECT *` (Redshift's * excludes the LEVEL pseudocolumn; the CTE's
-# cannot).
-_START_WITH_KW = re.compile(r"\bSTART\s+WITH\b", re.IGNORECASE)
+# Redshift hierarchical queries, rewritten to WITH RECURSIVE (Spark 4 runs
+# recursive CTEs natively through UnionLoop, the same engine path as
+# redshift_sql_recursive). The contract is _rewrite_connect_by's docstring;
+# the rewrite is three steps: _parse_connect_by slices the clauses once,
+# _subst_pseudo/_carry_arg resolve the pseudo-columns into carried
+# columns, and _rewrite_connect_by renders the CTE from the small
+# renderers below it.
 _CONNECT_BY_KW = re.compile(r"\bCONNECT\s+BY\b", re.IGNORECASE)
-_WHERE_KW = re.compile(r"\bWHERE\b", re.IGNORECASE)
-_CB_TAIL_KW = re.compile(
-    r"\b(ORDER\s+SIBLINGS\s+BY|ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE
+# Every clause keyword of the statement, taken in ONE depth-0 scan. A
+# LIMIT/OFFSET after whitespace is told apart (limit_ws): only that form
+# ends an ORDER SIBLINGS BY key list (`(k)LIMIT 3` is one malformed key).
+_CB_CLAUSE_KW = re.compile(
+    r"(?i)\b(?:(?P<select>SELECT)|(?P<from>FROM)|(?P<where>WHERE)"
+    r"|(?P<start>START\s+WITH)|(?P<connect>CONNECT\s+BY)"
+    r"|(?P<siblings>ORDER\s+SIBLINGS\s+BY)|(?P<order>ORDER\s+BY)"
+    r"|(?P<limit_ws>(?<=\s)(?:LIMIT|OFFSET))|(?P<limit>LIMIT|OFFSET))\b"
 )
+# the clauses that occur exactly once; every other kind ends the clause pair
+_CB_ONCE = ("select", "from", "start", "connect")
+_AND_KW = re.compile(r"(?i)\bAND\b")
 _PRIOR_REF = re.compile(r"\bPRIOR\s+([\w$]+)\b", re.IGNORECASE)
 _CBR_KW = re.compile(r"(?i)\bCONNECT_BY_ROOT\b")
 _SCBP_KW = re.compile(r"(?i)\bSYS_CONNECT_BY_PATH\s*\(")
+_CB_PSEUDO = re.compile(
+    r"(?i)\b(CONNECT_BY_ROOT|SYS_CONNECT_BY_PATH|CONNECT_BY_ISLEAF|CONNECT_BY_ISCYCLE)\b"
+)
+# post-CTE probe columns and the pseudo-columns they stand for
+_CB_PROBES = (
+    ("__cbleaf", re.compile(r"(?i)\bCONNECT_BY_ISLEAF\b")),
+    ("__cbcyc", re.compile(r"(?i)\bCONNECT_BY_ISCYCLE\b")),
+)
 # bare LEVEL (not a qualified __p.level) — in the CONNECT BY condition it
 # means the CHILD row's level, i.e. parent + 1 (Oracle/Redshift evaluate
 # the condition when deciding whether to produce the child)
 _BARE_LEVEL = re.compile(r"(?i)(?<![\w$.])LEVEL(?![\w$])")
+_SIBLING_KEY = re.compile(
+    r"(?is)^\s*(?P<key>\(.*\)|[\w$]+)"
+    r"(?:\s+(?P<dir>ASC|DESC))?"
+    r"(?:\s+NULLS\s+(?P<nf>FIRST|LAST))?\s*$"
+)
+# LEVEL as a pseudo-column argument is loud; the message names the caller
+_LEVEL_ARG_ERRORS = {
+    "SYS_CONNECT_BY_PATH": "SYS_CONNECT_BY_PATH: LEVEL is not a base-table column",
+    "CONNECT_BY_ROOT": "CONNECT_BY_ROOT LEVEL is always 1 — write 1",
+    "ORDER SIBLINGS BY": (
+        "ORDER SIBLINGS BY LEVEL is meaningless — siblings share their level"
+    ),
+}
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Strip balanced outermost parentheses: '((LEVEL <= 3))' → 'LEVEL <= 3'.
-    Leaves '(a) AND (b)'-shaped text alone (the parens don't span it)."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        spans = True
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    spans = False
-                    break
-        if not spans:
-            break
-        s = s[1:-1].strip()
-    return s
+class _ConnectBy(NamedTuple):
+    """The clauses of one ``SELECT ... CONNECT BY`` statement, as
+    literal-masked text. ``where`` is the Oracle-position WHERE merged
+    with a trailing one; ``tail`` is what follows the clause pair (an
+    ORDER SIBLINGS BY already turned into ``ORDER BY __cbs``)."""
+
+    select_list: str
+    table: str
+    where: str | None
+    start_with: str
+    connect_by: str
+    nocycle: bool
+    siblings: list[tuple[str, bool, bool]]  # (key, desc, nulls_first)
+    tail: str
 
 
-def _rewrite_connect_by(sql: str) -> str:
-    """``START WITH ... CONNECT BY [NOCYCLE] PRIOR ...`` → WITH RECURSIVE.
-
-    The recursive arm joins the base table (child side, ``__c``) against
-    a projection of the working set that renames each PRIOR-referenced
-    column to ``__prior_<col>`` — so unqualified column references in
-    the CONNECT BY condition resolve unambiguously to the child row and
-    ``PRIOR x`` rewrites to ``__p.__prior_x`` (plus the parent's level),
-    exactly Oracle/Redshift's two-row evaluation model. A bare LEVEL in
-    the CONNECT BY condition is the CHILD's level — the condition is
-    evaluated to decide whether to produce the child — so it rewrites to
-    ``__p.level + 1``, not ``__p.level`` (off-by-one otherwise).
-
-    Pseudo-columns (r8) become columns CARRIED through both CTE arms,
-    one extra projected column each — no extra join or shuffle:
-    ``CONNECT_BY_ROOT col`` seeds ``col`` in the base arm and propagates
-    it verbatim through the recursive arm; ``SYS_CONNECT_BY_PATH(col,
-    sep)`` seeds ``sep || col`` and appends per level (NULL renders
-    empty, Oracle's contract); ``NOCYCLE`` carries a '|'-delimited path
-    of the PRIOR-column tuple and guards the recursive join with
-    ``instr(path, child_key) = 0`` — the walk stops at a row that is its
-    own ancestor instead of erroring at the recursion limit. Row
-    identity for cycle detection = the PRIOR-referenced columns (the
-    parent-key pattern), a documented subset.
-
-    r9 additions: EXPRESSION arguments to ROOT/PATH (parenthesized,
-    base-table columns only) precompute in a derived base CTE and carry
-    like simple columns; CONNECT_BY_ISLEAF is a post-CTE lookahead probe
-    of the distinct parent tuples against the base table on the same
-    connect condition; CONNECT_BY_ISCYCLE (NOCYCLE required — Oracle's
-    ORA-30007 contract) and ISLEAF-under-NOCYCLE share one probe that
-    classifies each condition-child by the recursive arm's own instr()
-    guard: ISCYCLE = some child pruned as an ancestor-or-self; ISLEAF =
-    no child expanded (a row whose every child is cycle-pruned cannot be
-    further expanded, so it IS a leaf of the returned tree). A WHERE clause
-    (Oracle position before START WITH, or trailing after the clause
-    pair) filters AFTER hierarchy expansion (Redshift's semantics), so
-    it lands on the outer SELECT — except a top-level ``LEVEL <= n``
-    conjunct, which ALSO pushes into the recursive arm (monotone in
-    depth, so pruning is exact) and bounds the recursion (measured 4.9×
-    at sf10, docs/ROUND7.md). Cyclic data without a LEVEL cap stops
-    LOUDLY at Spark's RECURSION_LEVEL_LIMIT_EXCEEDED (both behaviors
-    unit-tested) — never a silent hang. Capacity knob (r9, measured):
-    Spark also guards recursive CTEs with a total ROW limit
-    (spark.sql.cteRecursionRowLimit, default 1M) — a legitimate
-    hierarchy above that stops loudly with RECURSION_ROW_LIMIT_EXCEEDED;
-    raise the conf for big trees (a 1.5M-row walk runs fine at a 50M
-    cap, tools/connectby_probe_ab.py) — the DEPTH guard stays in force
-    and still bounds cyclic runaway. Scale note: the formatted plan
-    shows a bare Join over UnionLoopRef — UnionLoop plans each
-    iteration's frontier join AT RUNTIME with the materialized
-    frontier's actual size, which is exactly right (a small frontier
-    broadcasts; a wide tree's doesn't), so no static join hint is
-    emitted here.
-    """
-    masked, lits = _mask_literals(sql)
-    cbs = _depth0_matches(masked, _CONNECT_BY_KW)
-    if not cbs:
-        return sql
-    sws = _depth0_matches(masked, _START_WITH_KW)
-    selects = _depth0_matches(masked, _SELECT_KW)
-    froms = _depth0_matches(masked, _FROM_KW)
-    if len(cbs) != 1 or len(sws) != 1 or len(selects) != 1 or len(froms) != 1:
+def _parse_connect_by(masked: str) -> _ConnectBy | None:
+    """Slice a literal-masked statement into its CONNECT BY clauses, or
+    return None when it has no depth-0 CONNECT BY. Every clause boundary
+    comes from one depth-0 scan of the clause keywords."""
+    if not _CONNECT_BY_KW.search(masked):
+        return None
+    kws = _depth0_matches(masked, _CB_CLAUSE_KW)
+    by_kind: dict[str, list[re.Match]] = {}
+    for m in kws:
+        by_kind.setdefault(m.lastgroup, []).append(m)
+    if "connect" not in by_kind:
+        return None
+    if any(len(by_kind.get(k, ())) != 1 for k in _CB_ONCE):
         raise ValueError(
             "CONNECT BY: only one top-level SELECT ... FROM <table> "
             "START WITH ... CONNECT BY ... is supported (no nesting/UNION)"
         )
-    sel, frm, sw, cb = selects[0], froms[0], sws[0], cbs[0]
+    (sel,), (frm,), (sw,), (cb,) = (by_kind[k] for k in _CB_ONCE)
     select_list = masked[sel.end() : frm.start()].strip()
     if select_list == "*":
         raise ValueError(
@@ -1055,476 +1018,235 @@ def _rewrite_connect_by(sql: str) -> str:
             "the LEVEL pseudocolumn, the rewrite's working set cannot"
         )
     first, second = (sw, cb) if sw.start() < cb.start() else (cb, sw)
-    wheres = [
-        w
-        for w in _depth0_matches(masked, _WHERE_KW)
-        if frm.end() <= w.start() < first.start()
-    ]
-    if wheres:
-        where_part = masked[wheres[0].end() : first.start()].strip()
-        from_part = masked[frm.end() : wheres[0].start()].strip()
-    else:
-        where_part = None
-        from_part = masked[frm.end() : first.start()].strip()
-    tm = re.match(r"(?s)^[\w.]+$", from_part)
-    if tm is None:
+    where_kw = next(
+        (w for w in by_kind.get("where", ()) if frm.end() <= w.start() < first.start()),
+        None,
+    )
+    where = masked[where_kw.end() : first.start()].strip() if where_kw else None
+    table = masked[frm.end() : where_kw.start() if where_kw else first.start()].strip()
+    if re.match(r"(?s)^[\w.]+$", table) is None:
         raise ValueError(
-            f"CONNECT BY: FROM must be a single unaliased table, got {from_part[:40]!r}"
+            f"CONNECT BY: FROM must be a single unaliased table, got {table[:40]!r}"
         )
+    # the clause pair ends at the first WHERE or tail keyword after it
+    ends = [m for m in kws if m.start() > second.end() and m.lastgroup not in _CB_ONCE]
+    end = ends[0].start() if ends else len(masked)
     cond1 = masked[first.end() : second.start()].strip()
-    ends = [
-        t
-        for t in _depth0_matches(masked, _CB_TAIL_KW) + _depth0_matches(masked, _WHERE_KW)
-        if t.start() > second.end()
-    ]
-    end2 = min((t.start() for t in ends), default=len(masked))
-    cond2 = masked[second.end() : end2].strip().rstrip(";").strip()
-    tail = masked[end2:].strip()
+    cond2 = masked[second.end() : end].strip().rstrip(";").strip()
+    tail = masked[end:].strip()
     # a TRAILING WHERE (after the clause pair) filters post-expansion
     # exactly like the Oracle-position one — merge them
-    if wm2 := re.match(r"(?is)^WHERE\s+(.*)$", tail):
-        rest = wm2.group(1)
-        sub = _depth0_matches(rest, _CB_TAIL_KW)
-        w2 = (rest[: sub[0].start()] if sub else rest).strip().rstrip(";").strip()
-        tail = rest[sub[0].start() :].strip() if sub else ""
-        where_part = f"({where_part}) AND ({w2})" if where_part else w2
-    # ORDER SIBLINGS BY (r9; widened r10): depth-first output with
-    # siblings ordered — implemented as a CARRIED array of the sibling
-    # key tuple along the root-to-row path. Arrays compare
-    # lexicographically (element-wise, then by length), which IS
-    # depth-first-with-ordered-siblings: a parent's array is a proper
-    # prefix of its children's (parent first), siblings differ exactly
-    # in their last element (the key tuple), and cross-subtree rows
-    # differ at the first divergent ancestor. A prefix sorts before its
-    # extensions REGARDLESS of element values, so per-key direction
-    # never disturbs parent-before-child.
-    # r10 subset: MULTIPLE keys (key-major via struct field order);
-    # per-key ASC|DESC and NULLS FIRST|LAST (Oracle defaults: ASC →
-    # NULLS LAST, DESC → NULLS FIRST); parenthesized EXPRESSION keys
-    # (precomputed row-locally in the derived base CTE, base-table
-    # columns only — the CONNECT_BY_ROOT(expr) machinery). DESC orders
-    # by the NEGATED value (float NaN handled via a flag band — ADVICE
-    # r10), so it requires a numeric key — a string/date DESC key fails
-    # loudly under ANSI (no silent missort: ANSI unary minus rejects
-    # non-numerics). The loud non-numeric-DESC subset is the right
-    # stopping point for a TEXT rewrite: it cannot see column types, so
-    # any automatic proxy would either mis-analyze for some type or need
-    # a rank window (a single-partition shuffle — a scale-killer).
-    # Expression keys already give a zero-shuffle, collation-safe
-    # spelling the error message names: DATE → (DATEDIFF(day, col,
-    # DATE '1970-01-01')) ASC is descending-by-date; TIMESTAMP →
-    # (-unix_micros(col)); STRING → the order-reversing hex-complement
-    # (TRANSLATE(hex(encode(col,'utf-8')),'0123456789ABCDEF',
-    # 'FEDCBA9876543210') || 'G') ASC — complemented hex digits reverse
-    # byte order and the 'G' terminator (> any hex digit) makes every
-    # proper prefix sort AFTER its extensions, i.e. exact UTF8_BINARY
-    # DESC (fuzz-verified vs the Python DFS model). LEVEL stays loud
-    # (siblings share their level).
-    siblings_keys: list[tuple[str, bool, bool]] = []  # (key, desc, nulls_first)
+    if wm := re.match(r"(?is)^WHERE\s+(.*)$", tail):
+        rest = end + wm.start(1)
+        nxt = next((m for m in ends if m.lastgroup != "where" and m.start() > end), None)
+        end = nxt.start() if nxt else len(masked)
+        w2 = masked[rest:end].strip().rstrip(";").strip()
+        where = f"({where}) AND ({w2})" if where else w2
+        tail = masked[end:].strip()
+    siblings: list[tuple[str, bool, bool]] = []
     if sm := re.match(r"(?is)^ORDER\s+SIBLINGS\s+BY\s+(.*)$", tail):
         spec = sm.group(1).strip().rstrip(";").strip()
-        # split a trailing LIMIT/OFFSET at paren depth 0
-        keys_text, tail_rest = spec, ""
-        depth = 0
-        for i, ch in enumerate(spec):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and i > 0 and spec[i - 1].isspace():
-                if re.match(r"(?i)(LIMIT|OFFSET)\b", spec[i:]):
-                    keys_text, tail_rest = spec[:i].strip(), spec[i:].strip()
-                    break
-        for part in _split_args(keys_text):
-            pm = re.match(
-                r"(?is)^\s*(?P<key>\(.*\)|[\w$]+)"
-                r"(?:\s+(?P<dir>ASC|DESC))?"
-                r"(?:\s+NULLS\s+(?P<nf>FIRST|LAST))?\s*$",
-                part,
-            )
-            if pm is None:
-                raise ValueError(
-                    "ORDER SIBLINGS BY: each key must be a base-table "
-                    "column or a parenthesized expression, optionally "
-                    "ASC|DESC and NULLS FIRST|LAST "
-                    f"(got {part.strip()[:40]!r})"
-                )
-            key = pm.group("key")
-            if key.lower() == "level":
-                raise ValueError(
-                    "ORDER SIBLINGS BY LEVEL is meaningless — siblings "
-                    "share their level"
-                )
-            desc = (pm.group("dir") or "").upper() == "DESC"
-            nf = pm.group("nf")
-            nulls_first = desc if nf is None else nf.upper() == "FIRST"
-            siblings_keys.append((key, desc, nulls_first))
-        if not siblings_keys:
-            raise ValueError("ORDER SIBLINGS BY: empty key list")
+        spec_at = end + sm.start(1)
+        # a trailing LIMIT/OFFSET at paren depth 0 ends the key list
+        lims = [m for m in ends if m.lastgroup == "limit_ws" and m.start() > spec_at]
+        cut = lims[0].start() - spec_at if lims else len(spec)
+        siblings = [_parse_sibling_key(p) for p in _split_args(spec[:cut].strip())]
+        tail_rest = spec[cut:].strip()
         tail = "ORDER BY __cbs" + (f" {tail_rest}" if tail_rest else "")
-    start_cond = cond1 if first is sw else cond2
-    cb_cond = cond2 if first is sw else cond1
-    if not start_cond or not cb_cond:
+    start_with, connect_by = (cond1, cond2) if first is sw else (cond2, cond1)
+    if not start_with or not connect_by:
         raise ValueError("CONNECT BY: empty START WITH or CONNECT BY condition")
-    nocycle = False
-    if nm := re.match(r"(?is)^NOCYCLE\b\s*(.*)$", cb_cond):
-        nocycle, cb_cond = True, nm.group(1).strip()
-    prior_cols = sorted({m.group(1).lower() for m in _PRIOR_REF.finditer(cb_cond)})
-    if not prior_cols:
-        raise ValueError("CONNECT BY: the condition must reference PRIOR <column>")
-    join_cond = _PRIOR_REF.sub(lambda m: f"__p.__prior_{m.group(1).lower()}", cb_cond)
-    # bare LEVEL in the CONNECT BY condition is the CHILD row's level
-    # (the condition decides whether to PRODUCE the child), i.e. the
-    # parent's + 1 — substituting __p.level here would be off by one
-    join_cond = _BARE_LEVEL.sub("(__p.level + 1)", join_cond)
-    # CONNECT_BY_ROOT col / SYS_CONNECT_BY_PATH(col, sep) in the select
-    # list, post-expansion WHERE, or ORDER BY tail become columns CARRIED
-    # through both CTE arms: the base arm seeds them from the root row,
-    # the recursive arm propagates (ROOT) or appends (PATH). An
-    # EXPRESSION argument (r9 — Oracle requires it parenthesized:
-    # CONNECT_BY_ROOT(expr) / SYS_CONNECT_BY_PATH(expr, sep)) is
-    # precomputed ROW-LOCALLY in a derived base CTE (__cbb) and then
-    # carried exactly like a simple column — the expression may
-    # reference base-table columns only (PRIOR / LEVEL / pseudo-columns
-    # inside it are loud; they would need per-walk evaluation, which the
-    # carry model cannot see).
-    roots: dict[str, None] = {}
-    paths: dict[tuple[str, str], int] = {}
-    exprs: dict[str, str] = {}  # unmasked expr text -> derived column
-    expr_defs: list[tuple[str, str]] = []  # (masked expr, derived column)
+    nm = re.match(r"(?is)^NOCYCLE\b\s*(.*)$", connect_by)
+    if nm:
+        connect_by = nm.group(1).strip()
+    return _ConnectBy(
+        select_list, table, where, start_with, connect_by, nm is not None, siblings, tail
+    )
 
-    def _expr_col(masked_expr: str) -> str:
-        e = masked_expr.strip()
-        if (
-            re.search(r"(?i)\b(PRIOR|CONNECT_BY_\w+|SYS_CONNECT_BY_PATH)\b", e)
-            or _BARE_LEVEL.search(e)
-            # an already-substituted carry column (__cbp_N from a nested
-            # SYS_CONNECT_BY_PATH processed first) is a pseudo-column in
-            # disguise — same loud rule, not an unresolved-column leak
-            or re.search(r"(?i)__cb[a-z]*_", e)
-        ):
-            raise ValueError(
-                "CONNECT BY: a pseudo-column expression argument may "
-                "reference base-table columns only — no PRIOR, LEVEL, or "
-                f"nested pseudo-columns: {_unmask_literals(e, lits)[:60]!r}"
-            )
-        # dedup on the UNMASKED text (sentinel-keyed dedup would carry
-        # duplicate derived columns for textually identical expressions)
-        key = _unmask_literals(e, lits)
-        col = exprs.get(key)
-        if col is None:
-            col = f"__cbx_{len(exprs)}"
-            exprs[key] = col
-            expr_defs.append((e, col))
-        return col
 
-    def _subst_pseudo(txt: str | None) -> str | None:
-        if txt is None:
-            return None
-        while m := _SCBP_KW.search(txt):
-            end = _scan_balanced(txt, m.end())
-            col, sep = _split_two_args(txt[m.end() : end - 1])
-            col = col.strip()
-            if re.fullmatch(r"[\w$]+", col):
-                col = col.lower()
-                if col == "level":
-                    raise ValueError(
-                        "SYS_CONNECT_BY_PATH: LEVEL is not a base-table column"
-                    )
-                if col.startswith("__cb"):
-                    _expr_col(col)  # reserved carry prefix — loud
-            else:
-                col = _expr_col(col)
-            # dedup on the UNMASKED separator: two textually identical
-            # calls mask their literals to different sentinels, and a
-            # sentinel-keyed dict would carry duplicate path columns
-            # through every frontier row
-            idx = paths.setdefault(
-                (col, _unmask_literals(sep.strip(), lits)), len(paths)
-            )
-            txt = f"{txt[: m.start()]}__cbp_{idx}{txt[end:]}"
-        while m := _CBR_KW.search(txt):
-            after = txt[m.end() :].lstrip()
-            if after.startswith("("):
-                popen = m.end() + (len(txt) - m.end() - len(after))
-                end = _scan_balanced(txt, popen + 1)
-                inner = txt[popen + 1 : end - 1].strip()
-                if re.fullmatch(r"[\w$]+", inner):
-                    col = inner.lower()
-                    if col == "level":
-                        raise ValueError(
-                            "CONNECT_BY_ROOT LEVEL is always 1 — write 1"
-                        )
-                    if col.startswith("__cb"):
-                        # a substituted SYS_CONNECT_BY_PATH carry column:
-                        # nested pseudo-columns are loud, not a leak
-                        _expr_col(inner)
-                    roots.setdefault(col)
-                else:
-                    col = _expr_col(inner)
-                    roots.setdefault(col)
-                txt = f"{txt[: m.start()]}__cbr_{col}{txt[end:]}"
-                continue
+def _parse_sibling_key(part: str) -> tuple[str, bool, bool]:
+    """One ORDER SIBLINGS BY key → (key, desc, nulls_first), with Oracle's
+    NULL defaults: ASC → NULLS LAST, DESC → NULLS FIRST."""
+    pm = _SIBLING_KEY.match(part)
+    if pm is None:
+        raise ValueError(
+            "ORDER SIBLINGS BY: each key must be a base-table "
+            "column or a parenthesized expression, optionally "
+            "ASC|DESC and NULLS FIRST|LAST "
+            f"(got {part.strip()[:40]!r})"
+        )
+    key = pm.group("key")
+    if key.lower() == "level":
+        raise ValueError(_LEVEL_ARG_ERRORS["ORDER SIBLINGS BY"])
+    desc = (pm.group("dir") or "").upper() == "DESC"
+    nf = pm.group("nf")
+    return key, desc, desc if nf is None else nf.upper() == "FIRST"
+
+
+class _Carry(NamedTuple):
+    """The pseudo-columns one CONNECT BY rewrite carries through both CTE
+    arms: CONNECT_BY_ROOT columns, SYS_CONNECT_BY_PATH (column, separator)
+    → path index, and expression arguments (unmasked text → (masked
+    text, derived ``__cbx_N`` column))."""
+
+    lits: list[str]
+    roots: dict[str, None]
+    paths: dict[tuple[str, str], int]
+    exprs: dict[str, tuple[str, str]]
+
+
+def _expr_col(carry: _Carry, masked_expr: str) -> str:
+    """The derived base column for an expression argument. The expression
+    may reference base-table columns only: PRIOR, LEVEL or a pseudo-column
+    inside it would need per-walk evaluation, which the carry model cannot
+    see, so they are loud."""
+    e = masked_expr.strip()
+    if (
+        re.search(r"(?i)\b(PRIOR|CONNECT_BY_\w+|SYS_CONNECT_BY_PATH)\b", e)
+        or _BARE_LEVEL.search(e)
+        # an already-substituted carry column (__cbp_N from a nested
+        # SYS_CONNECT_BY_PATH processed first) is a pseudo-column in
+        # disguise — same loud rule, not an unresolved-column leak
+        or re.search(r"(?i)__cb[a-z]*_", e)
+    ):
+        raise ValueError(
+            "CONNECT BY: a pseudo-column expression argument may "
+            "reference base-table columns only — no PRIOR, LEVEL, or "
+            f"nested pseudo-columns: {_unmask_literals(e, carry.lits)[:60]!r}"
+        )
+    # dedup on the UNMASKED text (sentinel-keyed dedup would carry
+    # duplicate derived columns for textually identical expressions)
+    key = _unmask_literals(e, carry.lits)
+    if key not in carry.exprs:
+        carry.exprs[key] = (e, f"__cbx_{len(carry.exprs)}")
+    return carry.exprs[key][1]
+
+
+def _carry_arg(carry: _Carry, text: str, who: str) -> str:
+    """Resolve the argument of a ROOT, PATH or sibling key (``who`` names
+    the caller) to the column carried for it: a simple column, lowercased,
+    or the derived ``__cbx_N`` of an expression."""
+    arg = text.strip()
+    if not re.fullmatch(r"[\w$]+", arg):
+        return _expr_col(carry, arg)
+    col = arg.lower()
+    if col == "level":
+        raise ValueError(_LEVEL_ARG_ERRORS[who])
+    if col.startswith("__cb"):
+        # the reserved carry prefix: a substituted pseudo-column in
+        # argument position is nested, and loud by the expression rule
+        # (CONNECT_BY_ROOT registers the argument as written)
+        _expr_col(carry, arg if who == "CONNECT_BY_ROOT" else col)
+    return col
+
+
+def _subst_pseudo(carry: _Carry, txt: str | None) -> str | None:
+    """Replace SYS_CONNECT_BY_PATH(arg, sep) by ``__cbp_N`` and
+    CONNECT_BY_ROOT arg / CONNECT_BY_ROOT(arg) by ``__cbr_<col>``,
+    registering each in ``carry``."""
+    if txt is None:
+        return None
+    while m := _SCBP_KW.search(txt):
+        end = _scan_balanced(txt, m.end())
+        arg, sep = _split_two_args(txt[m.end() : end - 1])
+        col = _carry_arg(carry, arg, "SYS_CONNECT_BY_PATH")
+        # dedup on the UNMASKED separator: two textually identical
+        # calls mask their literals to different sentinels, and a
+        # sentinel-keyed dict would carry duplicate path columns
+        # through every frontier row
+        key = (col, _unmask_literals(sep.strip(), carry.lits))
+        idx = carry.paths.setdefault(key, len(carry.paths))
+        txt = f"{txt[: m.start()]}__cbp_{idx}{txt[end:]}"
+    while m := _CBR_KW.search(txt):
+        after = txt[m.end() :].lstrip()
+        arg_at = len(txt) - len(after)
+        if after.startswith("("):
+            end = _scan_balanced(txt, arg_at + 1)
+            col = _carry_arg(carry, txt[arg_at + 1 : end - 1], "CONNECT_BY_ROOT")
+        else:
             bm = re.match(r"([\w$]+)", after)
-            nxt = after[bm.end() :].lstrip()[:1] if bm else ""
-            if bm is None or nxt in ("(", "."):
+            if bm is None or after[bm.end() :].lstrip()[:1] in ("(", "."):
                 raise ValueError(
                     "CONNECT_BY_ROOT: argument must be a simple unqualified "
                     "base-table column (parenthesize an expression), got "
                     f"{txt[m.start(): m.end() + 20]!r}"
                 )
-            col = bm.group(1).lower()
-            if col == "level":
-                raise ValueError("CONNECT_BY_ROOT LEVEL is always 1 — write 1")
-            if col.startswith("__cb"):
-                # mirror the paren branch: a substituted SYS_CONNECT_BY_PATH
-                # carry column (CONNECT_BY_ROOT SYS_CONNECT_BY_PATH(...) with
-                # SCBP substituted first) is a nested pseudo-column — raise
-                # the clean base-table-columns-only error, not a downstream
-                # Spark unresolved-column failure (ADVICE r9)
-                _expr_col(col)
-            roots.setdefault(col)
-            cut = m.end() + (len(txt) - m.end() - len(after)) + bm.end()
-            txt = f"{txt[: m.start()]}__cbr_{col}{txt[cut:]}"
-        return txt
+            col = _carry_arg(carry, bm.group(1).lower(), "CONNECT_BY_ROOT")
+            end = arg_at + bm.end()
+        carry.roots.setdefault(col)
+        txt = f"{txt[: m.start()]}__cbr_{col}{txt[end:]}"
+    return txt
 
-    select_list = _subst_pseudo(select_list)
-    where_part = _subst_pseudo(where_part)
-    tail = _subst_pseudo(tail)
-    # CONNECT_BY_ISLEAF (r9): leaf-ness of the CONNECT-BY-defined tree —
-    # Oracle computes it on the tree the CONDITION defines, independent
-    # of any post-expansion WHERE (so a WHERE LEVEL cap does NOT make
-    # capped rows leaves, while an IN-CONDITION "AND LEVEL <= k" does).
-    # Rewritten as a post-CTE probe, not a carried column (leaf-ness
-    # needs one step of lookahead the recursion cannot see).
-    _ISLEAF = re.compile(r"(?i)\bCONNECT_BY_ISLEAF\b")
-    _ISCYCLE = re.compile(r"(?i)\bCONNECT_BY_ISCYCLE\b")
-    isleaf = any(t and _ISLEAF.search(t) for t in (select_list, where_part, tail))
-    iscycle = any(t and _ISCYCLE.search(t) for t in (select_list, where_part, tail))
-    if iscycle and not nocycle:
-        # Oracle's own contract (ORA-30007): without NOCYCLE a cycle is
-        # an ERROR, not a flag — CONNECT_BY_ISCYCLE is meaningless there.
-        raise ValueError(
-            "CONNECT BY: CONNECT_BY_ISCYCLE requires the NOCYCLE keyword "
-            "(without NOCYCLE a cycle is an error, not a flag)"
-        )
-    for _pat, _col in ((_ISLEAF, "__cbleaf"), (_ISCYCLE, "__cbcyc")):
-        select_list = _pat.sub(_col, select_list)
-        where_part = _pat.sub(_col, where_part) if where_part else where_part
-        tail = _pat.sub(_col, tail) if tail else tail
-    if re.search(
-        r"(?i)\b(CONNECT_BY_ROOT|SYS_CONNECT_BY_PATH|CONNECT_BY_ISLEAF"
-        r"|CONNECT_BY_ISCYCLE)\b",
-        f"{start_cond} {cb_cond}",
-    ):
-        raise ValueError(
-            "CONNECT BY: pseudo-columns are not supported inside START WITH "
-            "or the CONNECT BY condition"
-        )
-    # resolve ORDER SIBLINGS BY keys HERE — before the derived base CTE
-    # renders — so a parenthesized expression key's _expr_col
-    # registration lands in expr_defs in time (r10)
-    siblings_resolved: list[tuple[str, bool, bool]] = []
-    for key, desc, nulls_first in siblings_keys:
+
+def _level_cap(where: str | None) -> str:
+    """The recursive-arm push-down of a top-level ``LEVEL <= n`` /
+    ``LEVEL < n`` WHERE conjunct (the last one wins). Balanced outer
+    parens strip, so the conjuncts of a merged '(w1) AND (w2)' push too."""
+    cap = ""
+    if where:
+        cuts = [0] + [i for m in _depth0_matches(where, _AND_KW) for i in m.span()]
+        for a, b in zip(cuts[::2], cuts[1::2] + [len(where)]):
+            conj = _strip_outer_parens(where[a:b])
+            if lm := re.match(r"(?is)^LEVEL\s*(<=|<)\s*(\d+)\s*$", conj):
+                cap = f" AND __p.level + 1 {lm.group(1)} {lm.group(2)}"
+    return cap
+
+
+def _strip_outer_parens(s: str) -> str:
+    """Strip balanced outermost parentheses: '((LEVEL <= 3))' → 'LEVEL <= 3'.
+    Leaves '(a) AND (b)'-shaped text alone (the parens don't span it); an
+    unclosed '(' counts as spanning, so '((a)' → '(a'."""
+    s = s.strip()
+    while s.startswith("(") and s.endswith(")"):
+        try:
+            if _scan_balanced(s, 1) != len(s):
+                break
+        except IndexError:
+            pass
+        s = s[1:-1].strip()
+    return s
+
+
+def _sibling_elem(carry: _Carry, keys: list[tuple[str, bool, bool]]) -> str:
+    """One ORDER SIBLINGS BY array element: a struct of (flag, value)
+    pairs, key-major in declaration order. A parenthesized key is an
+    expression argument, carried as its derived column."""
+    # Struct comparison is field-wise, so 'n0' settles key 0's NULL/NaN
+    # placement before 'v0' compares, before key 1 is consulted. The flag
+    # puts NULL at the requested end (a bare value sorts NULLs first).
+    fields: list[str] = []
+    for i, (key, desc, nulls_first) in enumerate(keys):
         if key.startswith("("):
-            col = _expr_col(key[1:-1].strip())
+            v = f"__c.{_expr_col(carry, key[1:-1])}"
         else:
-            col = key.lower()
-            if col.startswith("__cb"):
-                # a substituted pseudo-column in key position — the same
-                # clean error as pseudo-column expression args
-                _expr_col(col)
-        siblings_resolved.append((col, desc, nulls_first))
-    # A top-level `LEVEL <= n` / `LEVEL < n` WHERE conjunct is monotone in
-    # the walk depth, so it also PUSHES into the recursive arm: descendants
-    # of a max-depth node can only be deeper, so pruning them is
-    # semantics-preserving — and it bounds the recursion (a depth-capped
-    # query terminates even on cyclic data, where the uncapped walk stops
-    # loudly at Spark's RECURSION_LEVEL_LIMIT_EXCEEDED instead of hanging).
-    level_cap = ""
-    if where_part:
-        for conj in _split_depth0_and(where_part):
-            # balanced outer parens strip so the conjuncts this code itself
-            # creates when merging two WHEREs ('(w1) AND (w2)') still push
-            if lm := re.match(
-                r"(?is)^LEVEL\s*(<=|<)\s*(\d+)\s*$", _strip_outer_parens(conj)
-            ):
-                level_cap = f" AND __p.level + 1 {lm.group(1)} {lm.group(2)}"
-    # expression pseudo-column arguments: precompute each expression
-    # ROW-LOCALLY in a derived base CTE so the carry logic (and the
-    # leaf/cycle probes) see it as just another base column — no extra
-    # shuffle, the projection folds into the base scan. Skipped entirely
-    # when no expressions appear (existing plans stay byte-identical).
-    base_src = from_part
-    pre_cte = ""
-    if expr_defs:
-        xcols = ", ".join(f"({e}) AS {c}" for e, c in expr_defs)
-        pre_cte = f"__cbb AS (SELECT *, {xcols} FROM {from_part}), "
-        base_src = "__cbb"
-    # carried-column expressions per arm
-    base_extra, rec_extra, carried = [], [], []
-    for c in roots:
-        base_extra.append(f"__c.{c} AS __cbr_{c}")
-        rec_extra.append(f"__p.__cbr_{c} AS __cbr_{c}")
-        carried.append(f"__cbr_{c}")
-    for (c, sep), idx in paths.items():
-        # Oracle/Redshift path semantics: NULL column renders as empty
-        base_extra.append(
-            f"concat({sep}, coalesce(CAST(__c.{c} AS STRING), '')) AS __cbp_{idx}"
-        )
-        rec_extra.append(
-            f"concat(__p.__cbp_{idx}, {sep}, "
-            f"coalesce(CAST(__c.{c} AS STRING), '')) AS __cbp_{idx}"
-        )
-        carried.append(f"__cbp_{idx}")
-    if siblings_keys:
-        # element = one struct of (flag, value) PAIRS, key-major in
-        # declaration order (struct comparison is field-wise, so 'n0'
-        # settles key 0's NULL/NaN placement before 'v0' compares,
-        # before key 1 is consulted). The flag encodes the requested
-        # NULL end (FIRST → null sorts as 0 < rest, LAST → greatest);
-        # a bare element would silently sort NULLs first (r9 review).
-        # DESC negates the value — loud for non-numeric keys under ANSI
-        # — and adds a NaN flag band (ADVICE r10, see below).
-        fields: list[str] = []
-        for i, (col, desc, nulls_first) in enumerate(siblings_resolved):
-            v = f"__c.{col}"
-            if desc:
-                # DESC folds NaN into the flag (ADVICE r10): negation
-                # leaves NaN unchanged and NaN compares greatest, so a
-                # bare -(v) would sort a float NaN LAST where descending
-                # semantics (NaN is the greatest value — Oracle
-                # BINARY_DOUBLE and Spark agree) put it FIRST among
-                # non-NULL siblings. Three flag bands: NULL at the
-                # requested end, NaN, then numbers. The NaN probe is
-                # flag-only (never the sort value, so BIGINT precision
-                # loss cannot missort) and goes through a STRING
-                # round-trip + try_cast (ADVICE r11): a bare
-                # CAST(v AS DOUBLE) failed ANALYSIS for key types that
-                # support ANSI negation but not a double cast (a
-                # day-time INTERVAL sorted fine in r10 and then broke
-                # in r11), silently narrowing the DESC domain. Every
-                # type casts to STRING; try_cast(string AS DOUBLE) is
-                # analysis-total and yields NaN exactly for a true
-                # float/double NaN ('NaN' is the only value whose
-                # string form parses back to NaN; isnan(NULL) = false),
-                # so negatable non-float keys keep the r10 behavior and
-                # float NaN still lands in its band. DESC stays exactly
-                # as loud as -(v) itself for non-numeric keys.
-                null_f, nan_f, num_f = ("0", "1", "2") if nulls_first else ("2", "0", "1")
-                fields.append(
-                    f"'n{i}', CASE WHEN {v} IS NULL THEN {null_f} "
-                    f"WHEN isnan(try_cast(CAST({v} AS STRING) AS DOUBLE)) "
-                    f"THEN {nan_f} ELSE {num_f} END"
-                )
-                fields.append(f"'v{i}', -({v})")
-            else:
-                # ASC needs no NaN band: NaN natively compares greatest,
-                # which IS its ascending place among non-NULL values.
-                nf_case = "0 ELSE 1" if nulls_first else "1 ELSE 0"
-                fields.append(f"'n{i}', CASE WHEN {v} IS NULL THEN {nf_case} END")
-                fields.append(f"'v{i}', {v}")
-        elem = f"named_struct({', '.join(fields)})"
-        base_extra.append(f"array({elem}) AS __cbs")
-        rec_extra.append(f"concat(__p.__cbs, array({elem})) AS __cbs")
-        carried.append("__cbs")
-    cycle_guard = ""
-    if nocycle:
-        # NOCYCLE: stop expanding when the child row is already its own
-        # ancestor. Row identity = the PRIOR-referenced column tuple (the
-        # parent-key pattern; a loud documented subset — values render as
-        # strings, '|'-delimited). Delimiter chars INSIDE a key value are
-        # escaped ('!'→'!!' first, then '|'→'!p', '~'→'!t') so a value
-        # like 'q|a|r' cannot fabricate a '|a|' frame; NULL renders as
-        # '!n' and '' as '!e' — both unreachable from real values after
-        # '!'-doubling (a literal '!n' becomes '!!n'), so neither a NULL
-        # sentinel collision nor an empty frame component ('||' would
-        # match every frame junction) can mis-prune (r9 review).
-        child_key = _cyc_key("__c.", prior_cols)
-        base_extra.append(f"{child_key} AS __cyc")
-        rec_extra.append(f"concat(__p.__cyc, {child_key}) AS __cyc")
-        carried.append("__cyc")
-        cycle_guard = f" AND instr(__p.__cyc, {child_key}) = 0"
-    proj_prior = ", ".join(
-        [f"{c} AS __prior_{c}" for c in prior_cols] + ["level"] + carried
-    )
-    base_sel = ", ".join(["__c.*", "CAST(1 AS INT) AS level"] + base_extra)
-    rec_sel = ", ".join(["__c.*", "__p.level + 1 AS level"] + rec_extra)
-    src = "__cb"
-    leaf_ctes = ""
-    if isleaf or iscycle:
-        # Lookahead probe (r9): leaf-ness (and under NOCYCLE cycle-ness)
-        # needs one step the recursion cannot see, so the DISTINCT parent
-        # tuples — bounded by the result set — LEFT JOIN the base table
-        # once on the SAME connect condition (minus the pushed WHERE cap:
-        # Oracle's WHERE is a post-filter and does not make capped rows
-        # leaves; an in-condition "AND LEVEL <= k" is part of join_cond
-        # and DOES). Without NOCYCLE: ISLEAF = no condition-child exists.
-        # With NOCYCLE, both flags depend on which children the walk
-        # PRUNED, so the probe also carries each row's ancestor path
-        # (__cyc) and classifies every child by the SAME instr() guard
-        # the recursive arm used: CONNECT_BY_ISCYCLE = 1 iff some child
-        # was pruned as an ancestor-or-self (exactly where NOCYCLE
-        # stopped — Oracle's flag); CONNECT_BY_ISLEAF = 1 iff NO child
-        # was EXPANDED (a row whose every child is cycle-pruned "cannot
-        # be further expanded" — Oracle's ISLEAF contract). The carried
-        # path adds bytes per probe row, never jobs.
-        leaf_cond = join_cond.replace("__p.level", "__p.__prior_level")
-        dist = [f"{c} AS __prior_{c}" for c in prior_cols] + [
-            "level AS __prior_level"
-        ]
-        group = [f"__p.__prior_{c}" for c in prior_cols] + ["__p.__prior_level"]
-        back_eq = [f"__cb.{c} <=> __cbl.__prior_{c}" for c in prior_cols] + [
-            "__cb.level = __cbl.__prior_level"
-        ]
-        if nocycle:
-            dist.append("__cyc AS __prior_cyc")
-            group.append("__p.__prior_cyc")
-            back_eq.append("__cb.__cyc = __cbl.__prior_cyc")
-            child_cols = f"*, {_cyc_key('', prior_cols)} AS __ck"
-            pruned = "instr(__p.__prior_cyc, __c.__ck) > 0"
-            flags = []
-            if isleaf:
-                flags.append(
-                    f" CAST(CASE WHEN COUNT(CASE WHEN NOT ({pruned}) THEN 1"
-                    " END) = 0 THEN 1 ELSE 0 END AS INT) AS __cbleaf"
-                )
-            if iscycle:
-                flags.append(
-                    f" CAST(CASE WHEN COUNT(CASE WHEN {pruned} THEN 1 END)"
-                    " > 0 THEN 1 ELSE 0 END AS INT) AS __cbcyc"
-                )
+            v = f"__c.{_carry_arg(carry, key, 'ORDER SIBLINGS BY')}"
+        if desc:
+            # DESC negates the value and adds a NaN band: negation leaves
+            # NaN unchanged and NaN compares greatest, so a bare -(v) would
+            # sort a float NaN LAST where descending order (NaN is the
+            # greatest value — Oracle BINARY_DOUBLE and Spark agree) puts
+            # it FIRST among non-NULL siblings. The NaN probe only sets the
+            # flag (never the sort value, so BIGINT precision loss cannot
+            # missort) and goes through a STRING round-trip + try_cast: a
+            # bare CAST(v AS DOUBLE) fails analysis for key types that
+            # negate but do not cast to double (a day-time INTERVAL).
+            # try_cast(string AS DOUBLE) is analysis-total and yields NaN
+            # exactly for a true float NaN, so DESC stays exactly as loud
+            # as -(v) for non-numeric keys.
+            null_f, nan_f, num_f = ("0", "1", "2") if nulls_first else ("2", "0", "1")
+            fields.append(
+                f"'n{i}', CASE WHEN {v} IS NULL THEN {null_f} "
+                f"WHEN isnan(try_cast(CAST({v} AS STRING) AS DOUBLE)) "
+                f"THEN {nan_f} ELSE {num_f} END"
+            )
+            fields.append(f"'v{i}', -({v})")
         else:
-            child_cols = "*, 1 AS __one"
-            flags = [
-                " CAST(CASE WHEN COUNT(__c.__one) = 0 THEN 1 ELSE 0 END"
-                " AS INT) AS __cbleaf"
-            ]
-        gcols = ", ".join(group)
-        leaf_ctes = (
-            f", __cbd AS (SELECT DISTINCT {', '.join(dist)} FROM __cb)"
-            f", __cbl AS ("
-            f" SELECT {gcols},{','.join(flags)}"
-            f" FROM __cbd __p"
-            f" LEFT JOIN (SELECT {child_cols} FROM {base_src}) __c"
-            f" ON ({leaf_cond})"
-            f" GROUP BY {gcols})"
-        )
-        src = f"__cb JOIN __cbl ON ({' AND '.join(back_eq)})"
-    rewritten = (
-        f"WITH RECURSIVE {pre_cte}__cb AS ("
-        f" SELECT {base_sel} FROM {base_src} __c"
-        f" WHERE {start_cond}"
-        f" UNION ALL"
-        f" SELECT {rec_sel}"
-        f" FROM {base_src} __c"
-        f" JOIN (SELECT {proj_prior} FROM __cb) __p"
-        f" ON ({join_cond}){level_cap}{cycle_guard}"
-        f"){leaf_ctes} SELECT {select_list} FROM {src}"
-        + (f" WHERE {where_part}" if where_part else "")
-        + (f" {tail}" if tail else "")
-    )
-    return _unmask_literals(rewritten, lits)
+            # ASC needs no NaN band: NaN natively compares greatest, which
+            # is its ascending place among non-NULL values
+            nf_case = "0 ELSE 1" if nulls_first else "1 ELSE 0"
+            fields.append(f"'n{i}', CASE WHEN {v} IS NULL THEN {nf_case} END")
+            fields.append(f"'v{i}', {v}")
+    return f"named_struct({', '.join(fields)})"
 
 
 def _cyc_key(q: str, prior_cols: list[str]) -> str:
@@ -1534,9 +1256,9 @@ def _cyc_key(q: str, prior_cols: list[str]) -> str:
     a value like 'q|a|r' cannot fabricate a '|a|' frame; NULL renders as
     '!n' and '' as '!e' — both unreachable from real values after
     '!'-doubling, so neither a NULL-sentinel collision nor an empty
-    frame component can mis-prune (r9 review). ``q`` is the column
-    qualifier prefix ('__c.' in the CTE arms, '' inside the probe's
-    base-table subselect)."""
+    frame component can mis-prune. ``q`` is the column qualifier prefix
+    ('__c.' in the CTE arms, '' inside the probe's base-table
+    subselect)."""
     key_parts = ", '~', ".join(
         f"CASE WHEN {q}{k} IS NULL THEN '!n' "
         f"WHEN CAST({q}{k} AS STRING) = '' THEN '!e' "
@@ -1547,19 +1269,188 @@ def _cyc_key(q: str, prior_cols: list[str]) -> str:
     return f"concat('|', {key_parts}, '|')"
 
 
-def _split_depth0_and(cond: str) -> list[str]:
-    """Split a (literal-masked) predicate on its top-level ANDs."""
-    parts, depth, start = [], 0, 0
-    for m in re.finditer(r"(?is)\(|\)|\bAND\b", cond):
-        if m.group() == "(":
-            depth += 1
-        elif m.group() == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append(cond[start : m.start()])
-            start = m.end()
-    parts.append(cond[start:])
-    return parts
+def _carried_columns(
+    carry: _Carry, siblings: list[tuple[str, bool, bool]], nocycle: bool,
+    prior_cols: list[str],
+) -> list[tuple[str, str, str]]:
+    """Each carried column as (name, base-arm expr, recursive-arm expr):
+    ROOT seeds and propagates, PATH seeds ``sep || col`` and appends (a
+    NULL column renders empty), the sibling array appends one element,
+    and NOCYCLE appends the row's key to its ancestor path."""
+    cols = [(f"__cbr_{c}", f"__c.{c}", f"__p.__cbr_{c}") for c in carry.roots]
+    for (c, sep), idx in carry.paths.items():
+        step = f"coalesce(CAST(__c.{c} AS STRING), '')"
+        rec = f"concat(__p.__cbp_{idx}, {sep}, {step})"
+        cols.append((f"__cbp_{idx}", f"concat({sep}, {step})", rec))
+    if siblings:
+        elem = f"array({_sibling_elem(carry, siblings)})"
+        cols.append(("__cbs", elem, f"concat(__p.__cbs, {elem})"))
+    if nocycle:
+        key = _cyc_key("__c.", prior_cols)
+        cols.append(("__cyc", key, f"concat(__p.__cyc, {key})"))
+    return cols
+
+
+def _probe_ctes(
+    join_cond: str, prior_cols: list[str], base_src: str, nocycle: bool,
+    probes: set[str],
+) -> tuple[str, str]:
+    """The ISLEAF/ISCYCLE probe CTEs and the outer FROM source: the walk's
+    DISTINCT parent tuples LEFT JOIN the base table on the connect
+    condition. Under NOCYCLE each child is classified by the recursive
+    arm's own instr() guard: ISCYCLE = some child pruned as an
+    ancestor-or-self, ISLEAF = no child expanded."""
+    # (walk column, its name in the probe, how the walk joins back to it)
+    keys = [(c, f"__prior_{c}", "<=>") for c in prior_cols]
+    keys.append(("level", "__prior_level", "="))
+    if nocycle:
+        keys.append(("__cyc", "__prior_cyc", "="))
+        child_cols = f"*, {_cyc_key('', prior_cols)} AS __ck"
+        pruned = "instr(__p.__prior_cyc, __c.__ck) > 0"
+        flags = []
+        if "__cbleaf" in probes:
+            flags.append(
+                f" CAST(CASE WHEN COUNT(CASE WHEN NOT ({pruned}) THEN 1"
+                " END) = 0 THEN 1 ELSE 0 END AS INT) AS __cbleaf"
+            )
+        if "__cbcyc" in probes:
+            flags.append(
+                f" CAST(CASE WHEN COUNT(CASE WHEN {pruned} THEN 1 END)"
+                " > 0 THEN 1 ELSE 0 END AS INT) AS __cbcyc"
+            )
+    else:
+        child_cols = "*, 1 AS __one"
+        flags = [
+            " CAST(CASE WHEN COUNT(__c.__one) = 0 THEN 1 ELSE 0 END"
+            " AS INT) AS __cbleaf"
+        ]
+    leaf_cond = join_cond.replace("__p.level", "__p.__prior_level")
+    dist = ", ".join(f"{c} AS {p}" for c, p, _ in keys)
+    gcols = ", ".join(f"__p.{p}" for _, p, _ in keys)
+    ctes = (
+        f", __cbd AS (SELECT DISTINCT {dist} FROM __cb)"
+        f", __cbl AS ("
+        f" SELECT {gcols},{','.join(flags)}"
+        f" FROM __cbd __p"
+        f" LEFT JOIN (SELECT {child_cols} FROM {base_src}) __c"
+        f" ON ({leaf_cond})"
+        f" GROUP BY {gcols})"
+    )
+    back = " AND ".join(f"__cb.{c} {op} __cbl.{p}" for c, p, op in keys)
+    return ctes, f"__cb JOIN __cbl ON ({back})"
+
+
+def _rewrite_connect_by(sql: str) -> str:
+    """``SELECT ... FROM t [WHERE w] START WITH s CONNECT BY [NOCYCLE] c
+    [WHERE w2] [ORDER SIBLINGS BY k, ... | ORDER BY ...] [LIMIT/OFFSET]``
+    → WITH RECURSIVE.
+
+    Subset, loud otherwise: one top-level SELECT with one START WITH /
+    CONNECT BY pair in either order (no nesting or UNION), one unaliased
+    table, at least one PRIOR, explicit columns (Redshift's ``*``
+    excludes LEVEL, the CTE's cannot), and no pseudo-columns inside
+    START WITH or the condition.
+
+    PRIOR model: the recursive arm joins the base table (child, ``__c``)
+    to the working set with each PRIOR column renamed ``__prior_<col>``,
+    so bare columns in the condition are the child's and ``PRIOR x`` is
+    ``__p.__prior_x`` — Oracle/Redshift's two-row evaluation. A bare
+    LEVEL in the condition is the CHILD's level (the condition decides
+    whether to produce the child): ``__p.level + 1``, not ``__p.level``.
+
+    Carry model: CONNECT_BY_ROOT, SYS_CONNECT_BY_PATH (a NULL renders
+    empty), the ORDER SIBLINGS BY key path and the NOCYCLE ancestor path
+    are columns carried through both arms — no extra join or shuffle. An
+    expression argument (parenthesized, base-table columns only) is
+    computed row-locally in a derived base CTE ``__cbb`` and carried like
+    a column. NOCYCLE joins only children whose PRIOR-column key is not
+    on the ancestor path, so a walk stops at a row that is its own
+    ancestor. ORDER SIBLINGS BY sorts by the array of sibling keys along
+    the root-to-row path: a parent's array is a prefix of its children's
+    and sorts first, so the order is depth-first with ordered siblings.
+    DESC negates the key, so a non-numeric DESC key fails under ANSI;
+    the zero-shuffle spellings are expression keys: DATE →
+    (DATEDIFF(day, col, DATE '1970-01-01')) ASC, TIMESTAMP →
+    (-unix_micros(col)), STRING → (TRANSLATE(hex(encode(col,'utf-8')),
+    '0123456789ABCDEF','FEDCBA9876543210') || 'G') ASC, exact
+    UTF8_BINARY DESC (fuzz-verified against the Python DFS model).
+
+    Probes: CONNECT_BY_ISLEAF and CONNECT_BY_ISCYCLE need a lookahead the
+    recursion cannot see, so they are a post-CTE probe on the tree the
+    condition defines (a WHERE cap does not make capped rows leaves, an
+    in-condition ``LEVEL <= k`` does). ISCYCLE requires NOCYCLE, as in
+    Oracle (ORA-30007).
+
+    WHERE, in either position, filters after expansion. A top-level
+    ``LEVEL <= n`` conjunct also pushes into the recursive arm: it is
+    monotone in depth, so the pruning is exact, and it bounds the
+    recursion (4.9× at sf10, docs/ROUND7.md). Loud limits: a cycle with
+    no NOCYCLE or LEVEL cap stops at Spark's RECURSION_LEVEL_LIMIT_EXCEEDED,
+    never a hang; a walk over spark.sql.cteRecursionRowLimit rows
+    (default 1M) stops at RECURSION_ROW_LIMIT_EXCEEDED, so raise that
+    conf for big trees (a 1.5M-row walk runs fine at 50M,
+    tools/connectby_probe_ab.py). No join hint is emitted: UnionLoop
+    plans each frontier join at runtime from the frontier's real size.
+    """
+    masked, lits = _mask_literals(sql)
+    cb = _parse_connect_by(masked)
+    if cb is None:
+        return sql
+    prior_cols = sorted({m.group(1).lower() for m in _PRIOR_REF.finditer(cb.connect_by)})
+    if not prior_cols:
+        raise ValueError("CONNECT BY: the condition must reference PRIOR <column>")
+    join_cond = _PRIOR_REF.sub(lambda m: f"__p.__prior_{m.group(1).lower()}", cb.connect_by)
+    join_cond = _BARE_LEVEL.sub("(__p.level + 1)", join_cond)
+    carry = _Carry(lits, {}, {}, {})
+    texts = [_subst_pseudo(carry, t) for t in (cb.select_list, cb.where, cb.tail)]
+    probes: set[str] = set()
+    for col, pat in _CB_PROBES:
+        for i, t in enumerate(texts):
+            if t and pat.search(t):
+                probes.add(col)
+                texts[i] = pat.sub(col, t)
+    select_list, where, tail = texts
+    if "__cbcyc" in probes and not cb.nocycle:
+        raise ValueError(
+            "CONNECT BY: CONNECT_BY_ISCYCLE requires the NOCYCLE keyword "
+            "(without NOCYCLE a cycle is an error, not a flag)"
+        )
+    if _CB_PSEUDO.search(f"{cb.start_with} {cb.connect_by}"):
+        raise ValueError(
+            "CONNECT BY: pseudo-columns are not supported inside START WITH "
+            "or the CONNECT BY condition"
+        )
+    # the carried columns render first: an expression sibling key
+    # registers its derived column in the base CTE
+    cols = _carried_columns(carry, cb.siblings, cb.nocycle, prior_cols)
+    base_src, pre_cte = cb.table, ""
+    if carry.exprs:
+        xcols = ", ".join(f"({e}) AS {c}" for e, c in carry.exprs.values())
+        base_src, pre_cte = "__cbb", f"__cbb AS (SELECT *, {xcols} FROM {cb.table}), "
+    proj_prior = [f"{c} AS __prior_{c}" for c in prior_cols] + ["level"]
+    proj_prior += [n for n, _, _ in cols]
+    base_sel = ["__c.*", "CAST(1 AS INT) AS level"] + [f"{b} AS {n}" for n, b, _ in cols]
+    rec_sel = ["__c.*", "__p.level + 1 AS level"] + [f"{r} AS {n}" for n, _, r in cols]
+    guard = _level_cap(where)
+    if cb.nocycle:
+        guard += f" AND instr(__p.__cyc, {_cyc_key('__c.', prior_cols)}) = 0"
+    probe_ctes, src = "", "__cb"
+    if probes:
+        probe_ctes, src = _probe_ctes(join_cond, prior_cols, base_src, cb.nocycle, probes)
+    rewritten = (
+        f"WITH RECURSIVE {pre_cte}__cb AS ("
+        f" SELECT {', '.join(base_sel)} FROM {base_src} __c"
+        f" WHERE {cb.start_with}"
+        f" UNION ALL"
+        f" SELECT {', '.join(rec_sel)}"
+        f" FROM {base_src} __c"
+        f" JOIN (SELECT {', '.join(proj_prior)} FROM __cb) __p"
+        f" ON ({join_cond}){guard}"
+        f"){probe_ctes} SELECT {select_list} FROM {src}"
+        + (f" WHERE {where}" if where else "")
+        + (f" {tail}" if tail else "")
+    )
+    return _unmask_literals(rewritten, lits)
 
 
 def _rewrite_replicate(sql: str) -> str:

@@ -265,6 +265,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_redshift_etl_spark.functions.redshift_sql import (
+    _in_literal,
     _rewrite_calls,
     _scan_balanced,
     _split_args,
@@ -384,11 +385,18 @@ def _parse_func_params(params: str) -> list[str]:
 def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
     """Inline every call to a script-defined SQL UDF: substitute named
     params on identifier boundaries and $N positionally, wrap in parens.
+    All parameters substitute in one pass that skips the body's string
+    literals, so an argument's text is never substituted again.
     Repeats until no calls remain, so UDFs may call other UDFs
     (depth-capped loudly)."""
     for _ in range(16):
         before = sql
         for fname, (params, expr) in funcs.items():
+            names = [re.escape(p) for p in params if not p.startswith("$")]
+            param_re = re.compile(
+                "|".join([r"\$\d+\b"] + [rf"(?<![\w$]){n}(?![\w$])" for n in names]),
+                re.IGNORECASE,
+            )
 
             def render(m: re.Match, arg_text: str) -> str:
                 args = [a for a in _split_args(arg_text) if a]
@@ -396,14 +404,18 @@ def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
                     raise ValueError(
                         f"{fname}(): expected {len(params)} argument(s), got {len(args)}"
                     )
-                body = expr
+                by_ref: dict[str, str] = {}
                 for i, (p, a) in enumerate(zip(params, args)):
-                    body = re.sub(rf"\${i + 1}\b", f"({a})", body)
-                    if not p.startswith("$"):
-                        body = re.sub(
-                            rf"(?i)(?<![\w$]){re.escape(p)}(?![\w$])", f"({a})", body
-                        )
-                return f"({body})"
+                    by_ref[f"${i + 1}"] = a
+                    by_ref.setdefault(p.lower(), a)
+
+                def subst(pm: re.Match) -> str:
+                    a = by_ref.get(pm.group().lower())
+                    if a is None or _in_literal(expr, pm.start()):
+                        return pm.group()
+                    return f"({a})"
+
+                return f"({param_re.sub(subst, expr)})"
 
             pat = re.compile(rf"(?<![\w$]){re.escape(fname)}\s*\(", re.IGNORECASE)
             sql = _rewrite_calls(sql, pat, render)

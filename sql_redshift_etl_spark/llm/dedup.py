@@ -133,28 +133,10 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_spark_digest(seed: int) -> F.Column:
-    base = F.col("sh") if seed == 0 else F.concat(F.lit(f"{seed}:"), F.col("sh"))
-    return F.md5(base.cast("binary"))
-
-
 def _minhash_duck_expr(s: int) -> str:
     seed = _digest_seed(s)
     digest = "md5(sh)" if seed == 0 else f"md5('{seed}:' || sh)"
     return f"MIN(substr({digest}, {_slice_start(s)}, 8)) AS m{s}"
-
-
-def _minhash_agg_cols() -> list[F.Column]:
-    """N_MINHASH minhash values from ceil(N/4) md5 digests per shingle:
-    each digest's 32 hex chars split into four 32-bit slices — md5 bits
-    are independent, so slices are valid independent hash functions.
-    Measured faster signature build than one digest per seed;
-    lexicographic MIN over fixed-width hex == numeric MIN."""
-    digests = {seed: _minhash_spark_digest(seed) for seed in range(_digest_seed(N_MINHASH - 1) + 1)}
-    return [
-        F.min(F.substring(digests[_digest_seed(s)], _slice_start(s), 8)).alias(f"m{s}")
-        for s in range(N_MINHASH)
-    ]
 
 
 def minhash_pairs_oracle(docs_rel: str = "documents") -> str:

@@ -147,5 +147,6 @@ def should_broadcast(df: DataFrame, limit_bytes: int = DEFAULT_BROADCAST_BYTES) 
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         return int(plan.stats().sizeInBytes()) <= limit_bytes
-    except Exception:
+    except Exception as exc:
+        _log.warning("broadcast size estimate failed, not broadcasting: %r", exc)
         return False

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def unload_parquet(
@@ -148,12 +148,3 @@ def jdbc_writer_options(
 def write_jdbc(df: DataFrame, *, mode: str = "append", **kwargs) -> None:
     """JDBC sink (S5)."""
     df.write.format("jdbc").options(**jdbc_writer_options(**kwargs)).mode(mode).save()
-
-
-def analyze_table(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:
-    """Redshift ANALYZE analog: collect table/column stats so Catalyst's
-    CBO can reorder joins and choose broadcast sides (SURVEY §4)."""
-    if columns:
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {', '.join(columns)}")
-    else:
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")

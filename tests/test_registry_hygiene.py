@@ -202,23 +202,25 @@ def test_doc_counts_match_registry():
 
 
 def test_script_runner_functions_stay_short():
-    """The script runner dispatches statements through ordered
-    (pattern, handler) tables; a new statement kind is one more handler,
-    not one more branch of a chain. No function in the module may grow
-    past 300 lines."""
+    """No function anywhere in the package may grow past 300 lines. The
+    script runner dispatches statements through ordered (pattern,
+    handler) tables, and CONNECT BY parses its clauses once and renders
+    from small parts: a new feature is one more handler or renderer, not
+    one more branch of a chain."""
     import ast
     from pathlib import Path
 
-    from sql_redshift_etl_spark.functions import script_runner
+    import sql_redshift_etl_spark
 
-    tree = ast.parse(Path(script_runner.__file__).read_text())
+    root = Path(sql_redshift_etl_spark.__file__).parent
     too_long = [
-        (node.name, node.end_lineno - node.lineno + 1)
-        for node in ast.walk(tree)
+        (f"{path.relative_to(root)}:{node.name}", node.end_lineno - node.lineno + 1)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         and node.end_lineno - node.lineno + 1 > 300
     ]
-    assert not too_long, f"functions over 300 lines in script_runner.py: {too_long}"
+    assert not too_long, f"functions over 300 lines in the package: {too_long}"
 
 
 # The functions allowed to track SQL quote state themselves. Everything
@@ -228,6 +230,12 @@ _QUOTE_SCANNERS = {
     "strip_sql_comments", "_in_literal", "_split_args", "_split_two_args",
     "_depth0_matches", "_scan_balanced", "split_statements", "_split_top_kw",
     "_mask_quoted",
+}
+# The functions allowed to count paren depth themselves (_operand_start
+# is a backward scan, the rest are the forward scanners).
+_PAREN_SCANNERS = {
+    "_split_two_args", "_split_args", "_scan_balanced", "_depth0_matches",
+    "_operand_start", "_split_top_kw",
 }
 
 
@@ -260,6 +268,28 @@ def _tracks_quotes(fn) -> bool:
     return False
 
 
+def _counts_parens(fn) -> bool:
+    """True when ``fn`` has a ``depth += 1`` next to a ``"("`` comparison."""
+    import ast
+
+    increments = compares = False
+    for node in ast.walk(fn):
+        if (
+            isinstance(node, ast.AugAssign)
+            and isinstance(node.op, ast.Add)
+            and isinstance(node.target, ast.Name)
+            and isinstance(node.value, ast.Constant)
+            and node.value.value == 1
+        ):
+            increments = True
+        if isinstance(node, ast.Compare) and any(
+            isinstance(c, ast.Constant) and c.value == "("
+            for c in [node.left, *node.comparators]
+        ):
+            compares = True
+    return increments and compares
+
+
 def test_quote_scanners_are_not_copied():
     import ast
     from pathlib import Path
@@ -269,13 +299,13 @@ def test_quote_scanners_are_not_copied():
     copies = []
     for path in sorted(Path(functions.__file__).parent.glob("*.py")):
         for node in ast.walk(ast.parse(path.read_text())):
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and node.name not in _QUOTE_SCANNERS
-                and _tracks_quotes(node)
-            ):
-                copies.append(f"{path.name}:{node.name}")
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name not in _QUOTE_SCANNERS and _tracks_quotes(node):
+                copies.append(f"{path.name}:{node.name} (quotes)")
+            if node.name not in _PAREN_SCANNERS and _counts_parens(node):
+                copies.append(f"{path.name}:{node.name} (parens)")
     assert not copies, (
-        "functions that scan SQL quotes themselves; use the shared "
-        f"scanners in redshift_sql instead: {copies}"
+        "functions that scan SQL quotes or count parens themselves; use "
+        f"the shared scanners in redshift_sql instead: {copies}"
     )

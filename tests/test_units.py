@@ -119,6 +119,22 @@ def test_should_broadcast(spark):
     assert not should_broadcast(load_table(spark, SF_DIR, "lineitem"), limit_bytes=1024)
 
 
+def test_should_broadcast_logs_a_failed_estimate(caplog):
+    import logging
+
+    from sql_redshift_etl_spark.scale import should_broadcast
+
+    class _BrokenPlan:
+        @property
+        def _jdf(self):
+            raise RuntimeError("no plan")
+
+    with caplog.at_level(logging.WARNING, logger="sql_redshift_etl_spark.scale"):
+        assert should_broadcast(_BrokenPlan()) is False
+    msgs = [r.getMessage() for r in caplog.records if r.name == "sql_redshift_etl_spark.scale"]
+    assert any("RuntimeError" in m and "no plan" in m for m in msgs), msgs
+
+
 def test_redshift_sql_translation():
     from sql_redshift_etl_spark.functions.redshift_sql import translate_redshift_sql as t
 
@@ -520,6 +536,15 @@ def test_sql_udf_inlining_nested_and_literal_aware():
     assert _inline_sql_udfs("SELECT 'f(x)' FROM t", funcs) == "SELECT 'f(x)' FROM t"
     with pytest.raises(ValueError, match="depth 16"):
         _inline_sql_udfs("SELECT f(x) FROM t", {"f": (["a"], "f(a)")})
+    # every parameter substitutes in one pass that skips the body's literals:
+    # no argument's text is substituted again, and no literal is rewritten
+    for body, params, call, want in [
+        ("a + b", ["a", "b"], "g(b, 1)", "((b) + (1))"),
+        ("'a=' || a", ["a"], "g(x)", "('a=' || (x))"),
+        ("$1 || '$2' || $2", ["$1", "$2"], "g(x, y)", "((x) || '$2' || (y))"),
+        ("a || b", ["a", "b"], "g('it''s b', 2)", "(('it''s b') || (2))"),
+    ]:
+        assert _inline_sql_udfs(f"SELECT {call}", {"g": (params, body)}) == f"SELECT {want}"
 
 
 # ---------------------------------------------------------------------------
@@ -3989,6 +4014,21 @@ def test_cursor_loud_cases(spark):
             CALL p();
             """,
         )
+
+
+def test_connect_by_level_cap_parens_and_conjuncts():
+    """The LEVEL-cap push-down strips balanced outer parens (an unclosed
+    one counts as spanning, without raising) and looks at every top-level
+    conjunct of a merged WHERE."""
+    from sql_redshift_etl_spark.functions.redshift_sql import _level_cap, _strip_outer_parens
+
+    assert _strip_outer_parens(" ((LEVEL <= 3)) ") == "LEVEL <= 3"
+    assert _strip_outer_parens("(a) AND (b)") == "(a) AND (b)"
+    assert _strip_outer_parens("((a)") == "(a"
+    assert _level_cap("(x = 1 AND y) AND ((level < 4))") == " AND __p.level + 1 < 4"
+    assert _level_cap("LEVEL <= 2 and band = 1 ANDy LEVEL < 9") == " AND __p.level + 1 <= 2"
+    assert _level_cap("(LEVEL <= 2 OR x)") == ""
+    assert _level_cap(None) == ""
 
 
 def test_connect_by_rewrite_and_loud_cases(spark):
