@@ -47,6 +47,8 @@ Statement support:
   of an explicit column list take their declared ``DEFAULT`` literal
   (r6; recorded from CREATE/ALTER DDL, inherited by CREATE (LIKE ...
   INCLUDING DEFAULTS), following renames, dying with drops), else NULL.
+- ``INSERT INTO name DEFAULT VALUES`` — one row of declared
+  defaults (identity generates; unattributed columns NULL).
 - ``DELETE FROM name [WHERE cond]`` — keeps rows where ``cond`` is not
   TRUE (NULL-cond rows survive, matching SQL DELETE); subqueries in
   ``cond`` work because the filter runs through ``spark.sql``.
@@ -59,62 +61,26 @@ Statement support:
   update (r5): each target row updates AT MOST once even on multi-match
   joins (deterministic pick); WHERE is required (loud).
 - ``TRUNCATE [TABLE] name`` / ``DROP TABLE|VIEW [IF EXISTS] name``.
-- ``COPY name FROM 'path' [FORMAT AS CSV|JSON|PARQUET] [IGNOREHEADER n]
-  [DELIMITER 'c'] [IAM_ROLE ...]`` — bulk load appended to an existing
-  table (the Redshift contract: COPY targets a created table, whose
-  declared schema becomes the read schema — never inferSchema). Bare
-  COPY (no format) is Redshift's pipe-delimited text. Auth clauses are
-  accepted and ignored (credentials belong to the filesystem conf);
-  unknown options raise.
-- ``UNLOAD ('select...') TO 'path' [FORMAT AS PARQUET|CSV] [PARTITION
-  BY (...)] [HEADER] [ALLOWOVERWRITE] [PARALLEL OFF] [MANIFEST]`` — the
-  inner query (quote-unescaped, dialect-rewritten) written to files;
-  PARALLEL OFF coalesces to one file, ALLOWOVERWRITE maps to
-  mode=overwrite (without it an existing prefix errors, as in
-  Redshift), MANIFEST writes a Redshift-format file manifest after the
-  data (sources.writers.write_manifest); GZIP/BZIP2/ZSTD map to the
-  writer codec (parquet: gzip/zstd; text: gzip/bzip2 — loud otherwise),
-  NULL AS 'str' writes/reads the null sentinel, and MAXFILESIZE n
-  [MB|GB] (r6) sizes output files by repartitioning to the estimated
-  byte total / cap (sampled row size; approximate, as in Redshift).
-- ``COPY ... MAXERROR n`` (r6) — the error-budgeted load: malformed
-  CSV/TEXT/JSON rows are counted (corrupt-record column), the load
-  fails loudly past the budget and skips the bad rows within it;
-  skipped raw records accumulate in a script-scoped
-  ``stl_load_errors`` table (tbl, raw_line — the system-table analog);
-  MAXERROR on PARQUET/FIXEDWIDTH raises.
-- ``INSERT INTO name DEFAULT VALUES`` (r6) — one row of declared
-  defaults (identity generates; unattributed columns NULL).
-- ``COPY ... DATEFORMAT/TIMEFORMAT 'fmt'`` (r6) — Redshift-dialect
-  read formats for delimited text, translated to Spark patterns
-  ('auto' = engine default); epoch spellings and non-text formats
-  raise.
-- ``COPY ... [FORMAT AS] JSON 'spec'`` (r13) — 'auto' /
-  'auto ignorecase' = name-matched load; any other spec is a jsonpaths
-  control file reshaping nested documents into flat columns
-  positionally (readers.read_json_with_paths; dot and bracket path
-  spellings; count mismatch and unspellable bracket keys raise).
-  Malformed records follow the COPY contract: without MAXERROR the
-  load fails at the first bad line (per-column validity guard, never a
-  silent row of NULLs); with MAXERROR they consume the budget and land
-  in stl_load_errors.
-- ``COPY`` data-conversion parameters (r6): BLANKSASNULL, TRIMBLANKS,
-  EMPTYASNULL, IGNOREBLANKLINES, ACCEPTINVCHARS ['c'] (decoder
-  replacement chars U+FFFD → the requested char, default '?') applied
-  to parsed string columns / all-null rows (text loads only — PARQUET
-  raises); ACCEPTANYDATE, ESCAPE, TRUNCATECOLUMNS,
-  COMPUPDATE/STATUPDATE, ENCRYPTED accepted as no-ops (PERMISSIVE
-  parsing already nulls unparseable dates, Spark's CSV reader already
-  honors backslash escapes, strings are unbounded, maintenance/storage
-  flags have no Spark analog).
-- ``COPY name FROM 'path' FIXEDWIDTH 'label:width,...'`` (r6) — fixed
-  -width text load: lines cut by the spec (which must cover exactly
-  the target's columns), fields right-trimmed, NULL AS honored, cast
-  to the declared schema. FIXEDWIDTH with FORMAT raises.
-- ``COPY name FROM 'path/manifest' ... MANIFEST`` — the path is a
-  manifest file; exactly its listed files load (a missing mandatory
-  file raises before any read). ``EXPLICIT_IDS`` is accepted (our COPY
-  loads provided values positionally, which is exactly its meaning).
+- ``COPY name FROM 'path' [options]`` / ``UNLOAD ('select...') TO
+  'path' [options]`` — the bulk load and export. COPY appends to an
+  existing table whose declared schema is the read schema (never
+  inferSchema); UNLOAD writes the inner query (quote-unescaped,
+  dialect-rewritten) to files. ``_IO_RULES`` is the contract: one row
+  per option, naming the statements that take it and the formats it
+  applies to (TEXT — bare, Redshift's pipe-delimited text —, CSV, JSON,
+  PARQUET, FIXEDWIDTH), and ``_parse_io_options`` checks every given
+  option against it, so an option is applied or raises, never dropped.
+  Beyond the table: IGNOREHEADER above 1, an epoch DATEFORMAT (epoch
+  spellings are TIMEFORMAT-only), FIXEDWIDTH with FORMAT, MAXFILESIZE
+  with PARALLEL OFF, and UNLOAD's codec by format (PARQUET takes
+  GZIP/ZSTD, text GZIP/BZIP2) raise. Auth clauses and the
+  ``_OPT_TOKEN`` no-ops (ESCAPE, COMPUPDATE, ...) are accepted; any
+  other token raises. MAXERROR loads through the same CSV reader as the
+  plain load, skips up to n malformed rows and fails past them, and
+  the skipped raw records accumulate in a script-scoped
+  ``stl_load_errors`` table (tbl, raw_line). A MANIFEST COPY loads
+  exactly the listed files; a MANIFEST UNLOAD lists every file Spark
+  committed (sources.writers.write_manifest).
 - ``CREATE EXTERNAL TABLE name (cols) [PARTITIONED BY (...)] [ROW
   FORMAT DELIMITED FIELDS TERMINATED BY 'c'] STORED AS PARQUET|TEXTFILE
   LOCATION 'path'`` — the Spectrum analog (r5): a schema-on-read
@@ -260,6 +226,8 @@ from __future__ import annotations
 
 import re
 from collections import deque
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1729,43 +1697,42 @@ _UNLOAD = re.compile(
     r"^UNLOAD\s*\(\s*'(.+)'\s*\)\s*TO\s+'([^']+)'\s*(.*)$", re.IGNORECASE | re.DOTALL
 )
 
-# COPY/UNLOAD option clauses. Auth/transport clauses (IAM_ROLE,
-# CREDENTIALS, REGION, ENCRYPTED) are accepted and ignored — they select
-# S3 credentials, which Spark's filesystem layer owns (hadoop-aws conf),
-# not the statement. Everything unrecognized raises: a silently dropped
-# COMPUPDATE or MAXERROR would change semantics without a trace.
+# COPY/UNLOAD option clauses: one named group per option, each with its
+# row in _IO_RULES. The unnamed tokens are accepted and ignored: the
+# auth/transport clauses select S3 credentials, which Spark's filesystem
+# layer owns (hadoop-aws conf), not the statement, and each of the rest
+# says why it is a no-op. Everything unrecognized raises: a silently
+# dropped COMPUPDATE or MAXERROR would change semantics without a trace.
 _OPT_TOKEN = re.compile(
     r"""
-    FORMAT\s+AS\s+JSON\s+'(?P<jsonspec2>[^']*)'
-    | JSON\s+'(?P<jsonspec>[^']*)'
-    | FORMAT\s+AS\s+(?P<fmt2>CSV|JSON|PARQUET)
-    | (?P<fmt>CSV|JSON|PARQUET)\b
-    | IGNOREHEADER\s+(?:AS\s+)?(?P<skip>\d+)
-    | DELIMITER\s+(?:AS\s+)?'(?P<delim>[^']*)'
-    | PARTITION\s+BY\s*\((?P<part>[^)]*)\)
-    | (?P<header>HEADER)\b
-    | (?P<overwrite>ALLOWOVERWRITE)\b
-    | PARALLEL\s+(?P<parallel>ON|OFF|TRUE|FALSE)
-    | (?P<manifest>MANIFEST)\b
-    | (?P<codec>GZIP|BZIP2|ZSTD)\b
-    | MAXFILESIZE\s+(?:AS\s+)?(?P<maxfs>\d+(?:\.\d+)?)\s*(?P<maxfsunit>MB|GB)?
-    | EXPLICIT_IDS\b
+    (?:FORMAT\s+AS\s+)?JSON\s+'(?P<jsonpaths>[^']*)'
+    | (?:FORMAT\s+AS\s+)?(?P<format>CSV|JSON|PARQUET)\b
     | FIXEDWIDTH\s+(?:AS\s+)?'(?P<fixedwidth>[^']*)'
-    | MAXERROR\s+(?:AS\s+)?(?P<maxerror>\d+)
+    | IGNOREHEADER\s+(?:AS\s+)?(?P<skip>\d+)
+    | DELIMITER\s+(?:AS\s+)?'(?P<delimiter>[^']*)'
+    | NULL\s+(?:AS\s+)?'(?P<null_as>[^']*)'
+    | QUOTE\s+(?:AS\s+)?'(?P<quotechar>[^']*)'
     | DATEFORMAT\s+(?:AS\s+)?'(?P<datefmt>[^']*)'
     | TIMEFORMAT\s+(?:AS\s+)?'(?P<timefmt>[^']*)'
-    | NULL\s+(?:AS\s+)?'(?P<nullas>[^']*)'
-    | ACCEPTINVCHARS(?:\s+(?:AS\s+)?'(?P<invchar>[^']*)')?
+    | MAXERROR\s+(?:AS\s+)?(?P<maxerror>\d+)
+    | ACCEPTINVCHARS(?P<invchar>(?:\s+(?:AS\s+)?'[^']*')?)
     | (?P<removequotes>REMOVEQUOTES)\b
-    | QUOTE\s+(?:AS\s+)?'(?P<quotechar>[^']*)'
-    | (?P<addquotes>ADDQUOTES)\b
-    | (?P<cleanpath>CLEANPATH)\b
-    | ACCEPTANYDATE\b              # PERMISSIVE parsing already nulls unparseable dates
-    | ESCAPE\b                     # Spark's CSV reader already honors backslash escapes
     | (?P<blanksasnull>BLANKSASNULL)\b
     | (?P<trimblanks>TRIMBLANKS)\b
     | (?P<emptyasnull>EMPTYASNULL)\b
     | (?P<ignoreblank>IGNOREBLANKLINES)\b
+    | (?P<header>HEADER)\b
+    | (?P<addquotes>ADDQUOTES)\b
+    | (?P<overwrite>ALLOWOVERWRITE)\b
+    | (?P<cleanpath>CLEANPATH)\b
+    | PARALLEL\s+(?P<parallel>ON|OFF|TRUE|FALSE)
+    | PARTITION\s+BY\s*\((?P<partition_by>[^)]*)\)
+    | MAXFILESIZE\s+(?:AS\s+)?(?P<maxfilesize>\d+(?:\.\d+)?(?:\s*(?:MB|GB))?)
+    | (?P<manifest>MANIFEST)\b
+    | (?P<codec>GZIP|BZIP2|ZSTD)\b
+    | EXPLICIT_IDS\b               # COPY loads provided values positionally, which is its meaning
+    | ACCEPTANYDATE\b              # PERMISSIVE parsing already nulls unparseable dates
+    | ESCAPE\b                     # Spark's CSV reader already honors backslash escapes
     | TRUNCATECOLUMNS\b            # strings are unbounded here: nothing to truncate
     | (?:COMPUPDATE|STATUPDATE)(?:\s+(?:ON|OFF|TRUE|FALSE))?\b  # warehouse maintenance flags
     | ENCRYPTED\b                  # storage-layer concern (S3 SSE analog)
@@ -1775,18 +1742,103 @@ _OPT_TOKEN = re.compile(
     re.IGNORECASE | re.VERBOSE,
 )
 
+_ALL_FORMATS = ("CSV", "TEXT", "JSON", "PARQUET", "FIXEDWIDTH")
+_DELIMITED = ("CSV", "TEXT")
+_TEXTUAL = ("CSV", "TEXT", "JSON", "FIXEDWIDTH")
+# how an error names a format set, where not as the list of formats
+_PHRASES = {_DELIMITED: "delimited text", _TEXTUAL: "text loads"}
+# TIMEFORMAT epoch spellings: the column loads as BIGINT, then converts
+_EPOCH = {"epochsecs": F.timestamp_seconds, "epochmillisecs": F.timestamp_millis}
+
+
+class _IoRule(NamedTuple):
+    """One COPY/UNLOAD option: its SQL name, the formats each statement
+    takes it with (empty: not that statement's option), how its matched
+    text becomes its value (``bool``: a flag) and its value when absent."""
+
+    name: str
+    copy: tuple[str, ...]
+    unload: tuple[str, ...]
+    value: Callable[[str], object] = bool
+    default: object = False
+
+
+def _auto_none(text: str) -> str | None:
+    """DATEFORMAT/TIMEFORMAT 'auto' is the engine default: no option."""
+    return None if text.lower() == "auto" else text
+
+
+def _jsonpaths(spec: str) -> str:
+    """``JSON '<spec>'``: 'auto' / 'auto ignorecase' load by matching
+    field names (the engine default here, so ''); any other spec is the
+    path of a jsonpaths control file (readers.read_json_with_paths)."""
+    return "" if " ".join(spec.lower().split()) in ("auto", "auto ignorecase") else spec
+
+
+def _bytes(size: str) -> int:
+    """MAXFILESIZE ``n [MB|GB]`` in bytes (MB when no unit is given)."""
+    num, unit = re.fullmatch(r"([\d.]+)\s*([MG]B)?", size.upper()).groups()
+    return int(float(num) * (1 << (30 if unit == "GB" else 20)))
+
+
+# option → (statements that take it, formats it applies to). The table
+# is the COPY/UNLOAD contract; _parse_io_options checks every given
+# option against it, so an option cannot be silently dropped.
+_IO_RULES: dict[str, _IoRule] = {
+    "format": _IoRule("FORMAT", _ALL_FORMATS, _ALL_FORMATS, str.upper, "TEXT"),
+    "jsonpaths": _IoRule("JSON '<spec>'", ("JSON",), (), _jsonpaths, None),
+    "fixedwidth": _IoRule("FIXEDWIDTH", ("FIXEDWIDTH",), (), str, None),
+    "skip": _IoRule("IGNOREHEADER", _DELIMITED, (), int, 0),
+    "removequotes": _IoRule("REMOVEQUOTES", _DELIMITED, ()),
+    "datefmt": _IoRule("DATEFORMAT", _DELIMITED, (), _auto_none, None),
+    "timefmt": _IoRule("TIMEFORMAT", _DELIMITED, (), _auto_none, None),
+    "quotechar": _IoRule("QUOTE AS", ("CSV",), (), str, None),  # Redshift's own restriction
+    "maxerror": _IoRule("MAXERROR", ("CSV", "TEXT", "JSON"), (), int, None),
+    "blanksasnull": _IoRule("BLANKSASNULL", _TEXTUAL, ()),
+    "trimblanks": _IoRule("TRIMBLANKS", _TEXTUAL, ()),
+    "emptyasnull": _IoRule("EMPTYASNULL", _TEXTUAL, ()),
+    "ignoreblank": _IoRule("IGNOREBLANKLINES", _TEXTUAL, ()),
+    # the JVM text decoder replaces invalid UTF-8 with U+FFFD; the value
+    # is the replacement char (Redshift's default '?')
+    "invchar": _IoRule(
+        "ACCEPTINVCHARS", _TEXTUAL, (), lambda t: t.partition("'")[2][:-1] or "?", None
+    ),
+    "delimiter": _IoRule("DELIMITER", _DELIMITED, _DELIMITED, str, None),
+    "null_as": _IoRule("NULL AS", _DELIMITED + ("FIXEDWIDTH",), _DELIMITED, str, None),
+    "header": _IoRule("HEADER", (), _DELIMITED),
+    "addquotes": _IoRule("ADDQUOTES", (), _DELIMITED),
+    "overwrite": _IoRule("ALLOWOVERWRITE", (), _ALL_FORMATS),
+    "cleanpath": _IoRule("CLEANPATH", (), _ALL_FORMATS),
+    "parallel": _IoRule(
+        "PARALLEL", (), _ALL_FORMATS, lambda t: t.upper() in ("ON", "TRUE"), True
+    ),
+    "partition_by": _IoRule(
+        "PARTITION BY", (), _ALL_FORMATS,
+        lambda t: [c.strip() for c in t.split(",") if c.strip()], (),
+    ),
+    "maxfilesize": _IoRule("MAXFILESIZE", (), _ALL_FORMATS, _bytes, None),
+    "manifest": _IoRule("MANIFEST", _ALL_FORMATS, _ALL_FORMATS),
+    "codec": _IoRule("GZIP/BZIP2/ZSTD", _ALL_FORMATS, _ALL_FORMATS, str.lower, None),
+}
+# UNLOAD codecs by format: Spark's text sources have no zstd codec
+_UNLOAD_CODECS = {"PARQUET": ("gzip", "zstd")}
+
 
 def _parse_io_options(clause: str, stmt_kind: str) -> dict:
-    opts: dict = {"format": None, "header": False, "skip": 0, "delimiter": None,
-                  "partition_by": [], "overwrite": False, "parallel": True,
-                  "manifest": False, "codec": None, "null_as": None,
-                  "fixedwidth": None, "maxerror": None,
-                  "datefmt": None, "timefmt": None, "maxfilesize": None,
-                  "blanksasnull": False, "trimblanks": False,
-                  "emptyasnull": False, "ignoreblank": False,
-                  "invchar": None, "removequotes": False,
-                  "quotechar": None, "addquotes": False, "cleanpath": False,
-                  "jsonpaths": None}
+    """Parse a COPY/UNLOAD option clause into ``{option: value}``.
+
+    The effective format is FORMAT (bare = Redshift's pipe-delimited
+    TEXT), JSON for a ``JSON '<spec>'``, or FIXEDWIDTH for a FIXEDWIDTH
+    spec. Every given option is then checked against its ``_IO_RULES``
+    row for ``stmt_kind`` and that format, then the checks no row can
+    express: IGNOREHEADER above 1 (Spark CSV can only skip one header
+    line), an epoch DATEFORMAT (epoch spellings are TIMEFORMAT-only),
+    FIXEDWIDTH with FORMAT, MAXFILESIZE with PARALLEL OFF (one file
+    cannot split by size) and UNLOAD's codec by format. Each failure
+    raises a ValueError naming the option.
+    """
+    opts = {key: rule.default for key, rule in _IO_RULES.items()}
+    given: list[str] = []
     pos = 0
     while pos < len(clause):
         m = _OPT_TOKEN.match(clause, pos)
@@ -1794,59 +1846,51 @@ def _parse_io_options(clause: str, stmt_kind: str) -> dict:
             raise ValueError(
                 f"unsupported {stmt_kind} option near: {clause[pos:pos + 40]!r}"
             )
-        if fmt := (m.group("fmt2") or m.group("fmt")):
-            opts["format"] = fmt.upper()
-        spec = m.group("jsonspec2") or m.group("jsonspec")
-        if spec is not None:
-            # COPY ... [FORMAT AS] JSON '<spec>' — Redshift's spec string
-            # is either 'auto' / 'auto ignorecase' (load by matching
-            # field names, the engine default here) or the path of a
-            # jsonpaths control file mapping expressions onto the target
-            # columns positionally (readers.read_json_with_paths).
-            opts["format"] = "JSON"
-            if " ".join(spec.lower().split()) not in ("auto", "auto ignorecase"):
-                opts["jsonpaths"] = spec
-        if m.group("skip"):
-            opts["skip"] = int(m.group("skip"))
-        if m.group("delim"):
-            opts["delimiter"] = m.group("delim")
-        if m.group("part"):
-            opts["partition_by"] = [c.strip() for c in m.group("part").split(",") if c.strip()]
-        if m.group("header"):
-            opts["header"] = True
-        if m.group("overwrite"):
-            opts["overwrite"] = True
-        if m.group("parallel"):
-            opts["parallel"] = m.group("parallel").upper() in ("ON", "TRUE")
-        if m.group("manifest"):
-            opts["manifest"] = True
-        if m.group("codec"):
-            opts["codec"] = m.group("codec").lower()
-        if m.group("nullas") is not None:
-            opts["null_as"] = m.group("nullas")
-        if m.group("fixedwidth") is not None:
-            opts["fixedwidth"] = m.group("fixedwidth")
-        if m.group("maxerror") is not None:
-            opts["maxerror"] = int(m.group("maxerror"))
-        if m.group("datefmt") is not None:
-            opts["datefmt"] = m.group("datefmt")
-        if m.group("timefmt") is not None:
-            opts["timefmt"] = m.group("timefmt")
-        for flag in ("blanksasnull", "trimblanks", "emptyasnull", "ignoreblank",
-                     "removequotes", "addquotes", "cleanpath"):
-            if m.group(flag):
-                opts[flag] = True
-        if m.group("quotechar") is not None:
-            opts["quotechar"] = m.group("quotechar")
-        if m.group(0).upper().startswith("ACCEPTINVCHARS"):
-            # default replacement is '?' (Redshift's own default)
-            opts["invchar"] = m.group("invchar") or "?"
-        if m.group("maxfs") is not None:
-            unit = (m.group("maxfsunit") or "MB").upper()
-            opts["maxfilesize"] = int(
-                float(m.group("maxfs")) * (1 << (30 if unit == "GB" else 20))
-            )
+        for key, text in m.groupdict().items():
+            if text is not None:
+                opts[key] = _IO_RULES[key].value(text)
+                given.append(key)
+                if key == "jsonpaths":
+                    opts["format"] = "JSON"
         pos = m.end()
+    fmt = opts["format"] if opts["fixedwidth"] is None else "FIXEDWIDTH"
+    for key in given:
+        rule = _IO_RULES[key]
+        formats = rule.copy if stmt_kind == "COPY" else rule.unload
+        if not formats:
+            raise ValueError(f"{stmt_kind} does not take {rule.name}")
+        if fmt not in formats and opts[key] is not None:
+            raise ValueError(
+                f"{stmt_kind}: {rule.name} applies to "
+                f"{_PHRASES.get(formats, '/'.join(formats))} only, not {fmt}"
+            )
+    if fmt == "FIXEDWIDTH" and "format" in given:
+        raise ValueError(
+            f"{stmt_kind}: FIXEDWIDTH excludes FORMAT {opts['format']} "
+            "(fixed-width IS the format)"
+        )
+    opts["format"] = fmt
+    if opts["skip"] > 1:
+        raise ValueError(
+            f"{stmt_kind}: IGNOREHEADER {opts['skip']} unsupported "
+            "(only 0 or 1); preprocess multi-line preambles upstream"
+        )
+    if (opts["datefmt"] or "").lower() in _EPOCH:
+        raise ValueError(
+            f"{stmt_kind}: DATEFORMAT {opts['datefmt']!r} invalid — "
+            "epoch spellings are TIMEFORMAT-only"
+        )
+    if opts["maxfilesize"] is not None and not opts["parallel"]:
+        raise ValueError(
+            f"{stmt_kind}: MAXFILESIZE with PARALLEL OFF unsupported "
+            "(a single-file write cannot split by size)"
+        )
+    codec = opts["codec"]
+    if stmt_kind == "UNLOAD" and codec not in (None, *_UNLOAD_CODECS.get(fmt, ("gzip", "bzip2"))):
+        raise ValueError(
+            f"UNLOAD {fmt}: {codec.upper()} unsupported (PARQUET takes GZIP "
+            "or ZSTD; ZSTD is parquet-only in this engine)"
+        )
     return opts
 
 
@@ -3351,279 +3395,158 @@ def _exec_raise(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) 
 # COPY/UNLOAD carry path literals and option clauses the SQL
 # rewriter must not touch — matched on the RAW statement;
 # only UNLOAD's inner query goes through the front-end.
+def _copy_read(
+    state: _ScriptState, src: str | list[str], schema, opts: dict
+) -> tuple[DataFrame, DataFrame | None]:
+    """Read a COPY source under the target's declared schema (never
+    inferSchema). Returns the rows and, for a MAXERROR load, the skipped
+    raw lines (else None)."""
+    from pyspark.sql import types as T
+
+    from sql_redshift_etl_spark.functions.dialect import translate_datetime_format
+    from sql_redshift_etl_spark.sources import readers
+
+    spark, fmt, budget = state.spark, opts["format"], opts["maxerror"]
+    if fmt == "FIXEDWIDTH":
+        loaded = readers.read_fixed_width(
+            spark, src, schema, opts["fixedwidth"], null_value=opts["null_as"]
+        )
+        return loaded, None
+    if fmt == "PARQUET":
+        return spark.read.schema(schema).parquet(*([src] if isinstance(src, str) else src)), None
+    if opts["jsonpaths"]:
+        loaded = readers.read_json_with_paths(
+            spark, src, schema, opts["jsonpaths"], max_error=budget, caches=state.budget_caches
+        )
+        return loaded if budget is not None else (loaded, None)
+    text: dict = {}
+    if fmt != "JSON":
+        if (opts["timefmt"] or "").lower() in _EPOCH:
+            # epoch ints load as BIGINT; _copy_convert makes them timestamps
+            schema = T.StructType([
+                T.StructField(f.name, T.LongType(), f.nullable)
+                if isinstance(f.dataType, T.TimestampType) else f
+                for f in schema.fields
+            ])
+        text = {
+            key: translate_datetime_format(opts[opt])
+            for key, opt in (("date_format", "datefmt"), ("timestamp_format", "timefmt"))
+            if opts[opt] is not None and opts[opt].lower() not in _EPOCH
+        }
+        text.update(
+            header=opts["skip"] > 0,
+            delimiter=opts["delimiter"] or ("," if fmt == "CSV" else "|"),
+            null_value=opts["null_as"],
+            quote=opts["quotechar"],
+        )
+    if budget is not None:
+        return readers.read_with_error_budget(
+            spark, src, schema, fmt, max_error=budget, caches=state.budget_caches, **text
+        )
+    if fmt == "JSON":
+        return readers.read_json_lines(spark, src, schema), None
+    return readers.read_csv(spark, src, schema, **text), None
+
+
+_CONVERSIONS = ("removequotes", "invchar", "trimblanks", "blanksasnull", "emptyasnull", "ignoreblank")
+
+
+def _copy_convert(loaded: DataFrame, schema, opts: dict) -> DataFrame:
+    """COPY's conversions after the read: epoch TIMEFORMAT columns become
+    timestamps, then Redshift's data-conversion parameters apply to the
+    parsed string columns, before the positional cast to the target."""
+    from pyspark.sql import types as T
+
+    epoch = _EPOCH.get((opts["timefmt"] or "").lower())
+    if epoch is not None:
+        for f in schema.fields:
+            if isinstance(f.dataType, T.TimestampType):
+                loaded = loaded.withColumn(f.name, epoch(F.col(f.name)))
+    if not any(opts[k] for k in _CONVERSIONS):
+        return loaded
+    for f in loaded.schema.fields:
+        if not isinstance(f.dataType, T.StringType):
+            continue
+        col = F.col(f.name)
+        if opts["removequotes"]:
+            # strip ONE pair of matching surrounding quotes (" or ');
+            # unmatched quotes stay
+            col = F.regexp_replace(col, "^([\"'])(.*)\\1$", "$2")
+        if opts["invchar"] is not None:
+            col = F.regexp_replace(col, "�", opts["invchar"])
+        if opts["trimblanks"]:
+            col = F.rtrim(col)
+        if opts["blanksasnull"]:
+            col = F.when(F.trim(col) == "", F.lit(None)).otherwise(col)
+        elif opts["emptyasnull"]:
+            col = F.when(col == "", F.lit(None)).otherwise(col)
+        loaded = loaded.withColumn(f.name, col)
+    if opts["ignoreblank"]:
+        # a blank input line parses as an all-null row
+        import functools
+        import operator
+
+        loaded = loaded.filter(
+            ~functools.reduce(operator.and_, [F.col(c).isNull() for c in loaded.columns])
+        )
+    return loaded
+
+
 def _exec_copy(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    spark = state.spark
     name, path, clause = m.group(1), m.group(2), m.group(3)
     opts = _parse_io_options(clause, "COPY")
     base = state.existing(name)
-    if opts["skip"] > 1:
-        # Spark CSV has no skip-N-rows option; a collapsed
-        # header flag would silently load preamble lines as
-        # data — reject loudly (module policy).
-        raise ValueError(
-            f"COPY {name}: IGNOREHEADER {opts['skip']} unsupported "
-            "(only 0 or 1); preprocess multi-line preambles upstream"
-        )
-    fmt = opts["format"] or "TEXT"  # bare COPY = pipe-delimited text
-    if opts["null_as"] is not None and fmt in ("JSON", "PARQUET"):
-        # NULL AS only means something for delimited text;
-        # silently ignoring it on JSON/PARQUET would change
-        # semantics without a trace (module policy: loud).
-        raise ValueError(
-            f"COPY {name}: NULL AS applies to delimited text "
-            f"formats only, not {fmt}"
-        )
-    if opts["jsonpaths"] is not None and fmt != "JSON":
-        raise ValueError(
-            f"COPY {name}: a jsonpaths file requires "
-            f"FORMAT JSON, not {fmt}"
-        )
     src: str | list[str] = path
     if opts["manifest"]:
-        # COPY ... MANIFEST: the path IS a manifest file; load
-        # exactly its listed files (missing mandatory → loud).
+        # the path IS a manifest file: load exactly its listed files
+        # (a missing mandatory file raises before any read)
         from sql_redshift_etl_spark.sources.writers import read_manifest_paths
 
         src = read_manifest_paths(path)
         if not src:
-            # A zero-row UNLOAD legitimately writes a manifest
-            # with entries:[] (no data files); Redshift's COPY
-            # of it loads zero rows. Spark's readers throw on
-            # an empty path list, so bind the target unchanged.
+            # A zero-row UNLOAD writes a manifest with no entries, and
+            # Redshift's COPY of it loads zero rows; Spark's readers
+            # throw on an empty path list, so the target stays as it is.
             state.bind(name, base)
             return
-    # DATEFORMAT/TIMEFORMAT: Redshift-dialect read formats
-    # for delimited text; 'auto' = engine default. Epoch
-    # spellings and non-text formats are out of the
-    # supported subset (loud, not silently ignored).
-    fmt_opts: dict[str, str] = {}
-    epoch_unit: str | None = None
-    for key, opt_name in (("datefmt", "DATEFORMAT"), ("timefmt", "TIMEFORMAT")):
-        v = opts[key]
-        if v is None or v.lower() == "auto":
-            continue
-        if fmt in ("JSON", "PARQUET") or opts["fixedwidth"] is not None:
-            raise ValueError(
-                f"COPY {name}: {opt_name} applies to delimited "
-                "text loads only"
-            )
-        if v.lower() in ("epochsecs", "epochmillisecs"):
-            if key != "timefmt":
-                raise ValueError(
-                    f"COPY {name}: DATEFORMAT {v!r} invalid — "
-                    "epoch spellings are TIMEFORMAT-only"
-                )
-            # epoch ints: parse timestamp columns as BIGINT,
-            # convert after load (timestamp_seconds/_millis)
-            epoch_unit = "s" if v.lower() == "epochsecs" else "ms"
-            continue
-        from sql_redshift_etl_spark.functions.dialect import (
-            translate_datetime_format,
-        )
-
-        fmt_opts[key] = translate_datetime_format(v)
-    read_schema = base.schema
-    epoch_cols: list[str] = []
-    if epoch_unit is not None:
-        from pyspark.sql import types as T
-
-        swapped = []
-        for f in base.schema.fields:
-            if isinstance(f.dataType, T.TimestampType):
-                epoch_cols.append(f.name)
-                swapped.append(
-                    T.StructField(f.name, T.LongType(), f.nullable)
-                )
-            else:
-                swapped.append(f)
-        read_schema = T.StructType(swapped)
-    if opts["removequotes"] and (
-        fmt in ("JSON", "PARQUET") or opts["fixedwidth"] is not None
-    ):
-        raise ValueError(
-            f"COPY {name}: REMOVEQUOTES applies to delimited "
-            "text loads only"
-        )
-    if opts["quotechar"] is not None and fmt != "CSV":
-        raise ValueError(
-            f"COPY {name}: QUOTE AS applies to CSV only "
-            "(Redshift's own restriction)"
-        )
-    if opts["maxerror"] is not None and (
-        fmt == "PARQUET" or opts["fixedwidth"] is not None
-    ):
-        # Parquet loads are schema-checked at file level and
-        # fixed-width cuts cannot flag a malformed row —
-        # an ignored MAXERROR would be a silent contract
-        # change (module policy: loud).
-        raise ValueError(
-            f"COPY {name}: MAXERROR applies to CSV/TEXT/JSON "
-            "loads only"
-        )
-    if opts["fixedwidth"] is not None:
-        if opts["format"] is not None:
-            raise ValueError(
-                f"COPY {name}: FIXEDWIDTH excludes FORMAT "
-                f"{opts['format']} (fixed-width IS the format)"
-            )
-        from sql_redshift_etl_spark.sources.readers import read_fixed_width
-
-        loaded = read_fixed_width(
-            spark, src, base.schema, opts["fixedwidth"],
-            null_value=opts["null_as"],
-        )
-    elif opts["maxerror"] is not None:
-        if opts["jsonpaths"] is not None:
-            # MAXERROR composes with a jsonpaths load
-            # (r13): malformed lines consume the budget
-            # and land in stl_load_errors, same contract
-            # as the delimited path below.
-            from sql_redshift_etl_spark.sources.readers import (
-                read_json_with_paths,
-            )
-
-            loaded, bad = read_json_with_paths(
-                spark,
-                src,
-                base.schema,
-                opts["jsonpaths"],
-                max_error=opts["maxerror"],
-                caches=state.budget_caches,
-            )
-        else:
-            from sql_redshift_etl_spark.sources.readers import (
-                read_with_error_budget,
-            )
-
-            loaded, bad = read_with_error_budget(
-                spark,
-                src,
-                read_schema,
-                fmt,
-                max_error=opts["maxerror"],
-                header=opts["skip"] > 0,
-                delimiter=opts["delimiter"]
-                or ("," if fmt == "CSV" else "|"),
-                null_value=opts["null_as"],
-                date_format=fmt_opts.get("datefmt"),
-                timestamp_format=fmt_opts.get("timefmt"),
-                caches=state.budget_caches,
-            )
-        # the STL_LOAD_ERRORS analog: skipped raw records
-        # accumulate in a queryable script-scoped table
+    loaded, bad = _copy_read(state, src, base.schema, opts)
+    if bad is not None:
+        # the STL_LOAD_ERRORS analog: skipped raw records accumulate in
+        # a queryable script-scoped table
         errs = bad.select(F.lit(name).alias("tbl"), "raw_line")
         if "stl_load_errors" in state.tables:
             errs = state.tables["stl_load_errors"].unionAll(errs)
         state.bind("stl_load_errors", errs)
-    elif fmt == "JSON":
-        if opts["jsonpaths"] is not None:
-            from sql_redshift_etl_spark.sources.readers import (
-                read_json_with_paths,
-            )
-
-            loaded = read_json_with_paths(
-                spark, src, base.schema, opts["jsonpaths"]
-            )
-        else:
-            from sql_redshift_etl_spark.sources.readers import (
-                read_json_lines,
-            )
-
-            loaded = read_json_lines(spark, src, base.schema)
-    elif fmt == "PARQUET":
-        loaded = (
-            spark.read.schema(base.schema).parquet(*src)
-            if isinstance(src, list)
-            else spark.read.schema(base.schema).parquet(src)
-        )
-    else:
-        from sql_redshift_etl_spark.sources.readers import read_csv
-
-        loaded = read_csv(
-            spark,
-            src,
-            read_schema,
-            header=opts["skip"] > 0,
-            delimiter=opts["delimiter"] or ("," if fmt == "CSV" else "|"),
-            null_value=opts["null_as"],
-            date_format=fmt_opts.get("datefmt"),
-            timestamp_format=fmt_opts.get("timefmt"),
-            quote=opts["quotechar"],
-        )
-    for c in epoch_cols:
-        loaded = loaded.withColumn(
-            c,
-            F.timestamp_seconds(F.col(c))
-            if epoch_unit == "s"
-            else F.timestamp_millis(F.col(c)),
-        )
-    conv = [
-        k
-        for k in (
-            "blanksasnull",
-            "trimblanks",
-            "emptyasnull",
-            "ignoreblank",
-            "invchar",
-            "removequotes",
-        )
-        if opts[k]
-    ]
-    if conv and fmt == "PARQUET":
-        raise ValueError(
-            f"COPY {name}: {'/'.join(k.upper() for k in conv)} "
-            "applies to text loads only"
-        )
-    if conv:
-        # Redshift data-conversion parameters, applied to the
-        # parsed string columns before the positional cast
-        from pyspark.sql import types as T
-
-        for f in loaded.schema.fields:
-            if not isinstance(f.dataType, T.StringType):
-                continue
-            col = F.col(f.name)
-            if opts["removequotes"]:
-                # strip ONE pair of matching surrounding
-                # quotes (" or ') — Redshift's REMOVEQUOTES
-                # for delimited text; unmatched quotes stay
-                col = F.regexp_replace(col, "^([\"'])(.*)\\1$", "$2")
-            if opts["invchar"] is not None:
-                # ACCEPTINVCHARS: the JVM text decoder has
-                # already replaced invalid UTF-8 sequences
-                # with U+FFFD; map those to the requested
-                # replacement char (Redshift default '?')
-                col = F.regexp_replace(
-                    col, "�", opts["invchar"]
-                )
-            if opts["trimblanks"]:
-                col = F.rtrim(col)
-            if opts["blanksasnull"]:
-                col = F.when(F.trim(col) == "", F.lit(None)).otherwise(col)
-            elif opts["emptyasnull"]:
-                col = F.when(col == "", F.lit(None)).otherwise(col)
-            loaded = loaded.withColumn(f.name, col)
-        if opts["ignoreblank"]:
-            # a blank input line parses as an all-null row
-            import functools as _ft
-            import operator as _op
-
-            loaded = loaded.filter(
-                ~_ft.reduce(
-                    _op.and_,
-                    [F.col(c).isNull() for c in loaded.columns],
-                )
-            )
+    loaded = _copy_convert(loaded, base.schema, opts)
     state.bind(name, base.unionAll(_cast_positional(loaded, base, name)))
+
+
+def _split_by_size(df: DataFrame, opts: dict) -> DataFrame:
+    """UNLOAD MAXFILESIZE: repartition to ceil(estimated bytes / cap).
+    The estimate is a JSON-rendered row-size average over a 10k sample ×
+    the row count — approximate, like Redshift's own "approximately";
+    compression shrinks files below the cap, and no file exceeds it by
+    more than one task's skew."""
+    import math
+
+    avg_row = (
+        df.limit(10_000)
+        .select(F.avg(F.length(F.to_json(F.struct(*df.columns)))).alias("b"))
+        .first()["b"]
+    )
+    if not avg_row:  # empty result: leave partitioning alone
+        return df
+    n_files = max(1, math.ceil(df.count() * avg_row / opts["maxfilesize"]))
+    return df.repartition(n_files, *opts["partition_by"])
 
 
 def _exec_unload(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
     inner, path, clause = m.group(1), m.group(2), m.group(3)
     opts = _parse_io_options(clause, "UNLOAD")
-    # the inner query sat inside UNLOAD's single quotes, so
-    # the statement-level schema flattening and SQL-UDF
-    # inlining skipped it (they are literal-masked) — apply
-    # both to the unescaped text before translation
+    # the inner query sat inside UNLOAD's single quotes, so the
+    # statement-level schema flattening and SQL-UDF inlining skipped it
+    # (they are literal-masked) — apply both to the unescaped text
+    # before translation
     inner_sql = inner.replace("''", "'")
     for s in state.schemas:
         inner_sql = _sub_outside_quotes(
@@ -3633,77 +3556,27 @@ def _exec_unload(state: _ScriptState, scope: dict | None, m: re.Match, raw: str)
         inner_sql = _inline_sql_udfs(inner_sql, state.funcs)
     df = state.spark.sql(translate_redshift_sql(inner_sql).strip())
     if opts["maxfilesize"] is not None:
-        # MAXFILESIZE n [MB|GB]: size the output files by
-        # repartitioning to ceil(estimated_bytes / max) —
-        # the estimate is a JSON-rendered row-size average
-        # over a 10k sample × the row count (approximate,
-        # like Redshift's own "approximately"; compression
-        # shrinks below the cap, never splits above it by
-        # more than one task's skew).
-        if not opts["parallel"]:
-            raise ValueError(
-                "UNLOAD: MAXFILESIZE with PARALLEL OFF unsupported "
-                "(a single-file write cannot split by size)"
-            )
-        avg_row = (
-            df.limit(10_000)
-            .select(
-                F.avg(
-                    F.length(F.to_json(F.struct(*df.columns)))
-                ).alias("b")
-            )
-            .first()["b"]
-        )
-        if avg_row:  # empty result → leave partitioning alone
-            import math as _math
-
-            n_files = max(
-                1,
-                _math.ceil(df.count() * avg_row / opts["maxfilesize"]),
-            )
-            df = (
-                df.repartition(n_files, *opts["partition_by"])
-                if opts["partition_by"]
-                else df.repartition(n_files)
-            )
+        df = _split_by_size(df, opts)
     if not opts["parallel"]:
         df = df.coalesce(1)  # PARALLEL OFF = single output file
-    # CLEANPATH deletes what's at the prefix before writing —
-    # the same observable result as ALLOWOVERWRITE here
-    writer = df.write.mode(
-        "overwrite"
-        if (opts["overwrite"] or opts["cleanpath"])
-        else "errorifexists"
-    )
+    # without ALLOWOVERWRITE an existing prefix errors, as in Redshift;
+    # CLEANPATH's delete-then-write is the same observable result
+    overwrite = opts["overwrite"] or opts["cleanpath"]
+    writer = df.write.mode("overwrite" if overwrite else "errorifexists")
     if opts["partition_by"]:
         writer = writer.partitionBy(*opts["partition_by"])
-    fmt = opts["format"] or "TEXT"
     if opts["codec"]:
-        # UNLOAD GZIP/BZIP2/ZSTD: Spark writes per-file
-        # codecs natively; codec×format support differs —
-        # parquet: gzip/zstd, text: gzip/bzip2 (no zstd
-        # codec in Spark's text sources) — loud, not silent.
-        if fmt == "PARQUET" and opts["codec"] == "bzip2":
-            raise ValueError("UNLOAD PARQUET supports GZIP or ZSTD")
-        if fmt != "PARQUET" and opts["codec"] == "zstd":
-            raise ValueError(
-                f"UNLOAD {fmt}: ZSTD is parquet-only in this engine"
-            )
         writer = writer.option("compression", opts["codec"])
-    if opts["null_as"] is not None:
-        writer = writer.option("nullValue", opts["null_as"])
-    if opts["addquotes"] and fmt in ("PARQUET", "JSON"):
-        raise ValueError(
-            "UNLOAD: ADDQUOTES applies to delimited text only"
-        )
+    fmt = opts["format"]
     if fmt == "PARQUET":
         writer.parquet(path)
     elif fmt == "JSON":
         writer.json(path)
     else:
+        if opts["null_as"] is not None:
+            writer = writer.option("nullValue", opts["null_as"])
         if opts["addquotes"]:
-            # ADDQUOTES: every field quoted on export (the
-            # REMOVEQUOTES round-trip partner)
+            # every field quoted (the REMOVEQUOTES round-trip partner)
             writer = writer.option("quoteAll", True)
         writer.option("header", opts["header"]).option(
             "delimiter", opts["delimiter"] or ("," if fmt == "CSV" else "|")
@@ -3711,11 +3584,7 @@ def _exec_unload(state: _ScriptState, scope: dict | None, m: re.Match, raw: str)
     if opts["manifest"]:
         from sql_redshift_etl_spark.sources.writers import write_manifest
 
-        suffix = {"PARQUET": ".parquet", "JSON": ".json"}.get(fmt, ".csv")
-        if opts["codec"] and fmt != "PARQUET":
-            # codec'd text files end .csv.gz / .json.bz2 ...
-            suffix += {"gzip": ".gz", "bzip2": ".bz2"}[opts["codec"]]
-        write_manifest(path, suffix=suffix)
+        write_manifest(path)
 
 
 def _translate_stmt(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> str:

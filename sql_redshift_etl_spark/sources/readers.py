@@ -13,39 +13,30 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
 
-# COPY error-budget loads (read_with_error_budget, the budgeted path of
-# read_json_with_paths) cache the parsed frame because it has two
-# consumers inside one COPY (the MAXERROR count and the good/bad split).
-# The cache must NOT outlive its consumers — at 100 TB it would pin the
-# whole load in the block-manager for the session's lifetime (guide §5)
-# — so each such load appends it to the ``caches`` list its caller
-# passes in, and the caller unpersists what it registered (the script
-# runner: at the end of the COPY's script).
 
-
-def read_csv(
+def _csv_reader(
     spark: SparkSession,
-    path: str | list[str],
     schema: StructType | str,
     *,
-    header: bool = True,
+    header: bool = False,
     delimiter: str = ",",
     multi_line: bool = True,
     null_value: str | None = None,
     date_format: str | None = None,
     timestamp_format: str | None = None,
     quote: str | None = None,
-) -> DataFrame:
-    """COPY ... FORMAT CSV analog: schema-on-read bulk CSV load.
+) -> DataFrameReader:
+    """The reader behind every delimited-text load, plain (read_csv) or
+    error-budgeted (read_with_error_budget), so one file loads the same
+    rows either way. ``null_value`` is COPY's NULL AS sentinel and
+    ``quote`` its CSV QUOTE AS character; compressed inputs (.gz/.bz2)
+    need no option, Spark's text sources decompress by extension.
     ``date_format``/``timestamp_format`` are Spark (Java) patterns —
     COPY's Redshift-dialect DATEFORMAT/TIMEFORMAT strings are
     translated by the caller (functions.dialect.translate_datetime_format).
-
-    Explicit schema is mandatory — inferSchema would scan the data twice
-    and guess types per-file (drifting schemas across a 100 TB prefix).
 
     ``multi_line`` defaults ON for correctness: a quoted text field
     containing a newline (routine in free-text columns; Spark's own CSV
@@ -62,19 +53,32 @@ def read_csv(
         .option("multiLine", multi_line)
         .option("mode", "PERMISSIVE")
     )
-    if null_value is not None:
-        # COPY ... NULL AS 'str' (r5): the writer-side sentinel reads
-        # back as SQL NULL. Compressed inputs (.gz/.bz2) need no option —
-        # Spark's text sources decompress by extension.
-        reader = reader.option("nullValue", null_value)
-    if date_format is not None:
-        reader = reader.option("dateFormat", date_format)
-    if timestamp_format is not None:
-        reader = reader.option("timestampFormat", timestamp_format)
-    if quote is not None:
-        # COPY CSV QUOTE AS 'c' (r6): a non-default field quote
-        reader = reader.option("quote", quote)
-    return reader.csv(path)
+    for key, value in (
+        ("nullValue", null_value),
+        ("dateFormat", date_format),
+        ("timestampFormat", timestamp_format),
+        ("quote", quote),
+    ):
+        if value is not None:
+            reader = reader.option(key, value)
+    return reader
+
+
+def read_csv(
+    spark: SparkSession,
+    path: str | list[str],
+    schema: StructType | str,
+    *,
+    header: bool = True,
+    **options,
+) -> DataFrame:
+    """COPY ... FORMAT CSV analog: schema-on-read bulk CSV load;
+    ``options`` are ``_csv_reader``'s.
+
+    Explicit schema is mandatory — inferSchema would scan the data twice
+    and guess types per-file (drifting schemas across a 100 TB prefix).
+    """
+    return _csv_reader(spark, schema, header=header, **options).csv(path)
 
 
 def read_json_lines(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
@@ -97,7 +101,7 @@ def read_json_with_paths(
     max_error: int | None = None,
     caches: list[DataFrame] | None = None,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """COPY ... FORMAT AS JSON '<jsonpaths file>' analog (S2, r13).
+    """COPY ... FORMAT AS JSON '<jsonpaths file>' analog (S2).
 
     Redshift's jsonpaths control file is ``{"jsonpaths": [expr, ...]}``
     whose path expressions map POSITIONALLY onto the target table's
@@ -218,13 +222,9 @@ def read_json_with_paths(
         return raw.select(*guarded)
     if caches is None:
         raise ValueError("read_json_with_paths: max_error needs a caches list to register in")
-    flagged = raw.withColumn("_rs_doc_ok", ok).cache()
-    caches.append(flagged)
-    n_bad = flagged.filter(~F.col("_rs_doc_ok")).count()
-    if n_bad > max_error:
-        raise ValueError(
-            f"COPY: {n_bad} malformed row(s) exceed MAXERROR {max_error}"
-        )
+    flagged = _budget_gate(
+        raw.withColumn("_rs_doc_ok", ok), ~F.col("_rs_doc_ok"), max_error, caches
+    )
     bad = flagged.filter(~F.col("_rs_doc_ok")).select(
         F.col("value").alias("raw_line")
     )
@@ -352,6 +352,30 @@ def read_fixed_width(
     )
 
 
+# The budgeted frame is cached because it has two consumers inside one
+# COPY (the MAXERROR count and the good/bad split). The cache must NOT
+# outlive its consumers — at 100 TB it would pin the whole load in the
+# block-manager for the session's lifetime (guide §5) — so it goes on
+# the ``caches`` list the caller passes in, and the caller unpersists
+# what it registered (the script runner: at the end of the COPY's
+# script).
+def _budget_gate(df: DataFrame, is_bad, max_error: int, caches: list[DataFrame]) -> DataFrame:
+    """The MAXERROR gate of read_with_error_budget and the budgeted
+    read_json_with_paths: cache ``df``, register the cache in
+    ``caches``, count the rows ``is_bad`` flags, and fail the load past
+    the budget. Returns the cached frame."""
+    from pyspark.sql import functions as F
+
+    df = df.cache()
+    caches.append(df)
+    n_bad = df.filter(is_bad).count()
+    if n_bad > max_error:
+        raise ValueError(
+            f"COPY: {n_bad} malformed row(s) exceed MAXERROR {max_error}"
+        )
+    return df
+
+
 def read_with_error_budget(
     spark: SparkSession,
     path: str | list[str],
@@ -360,19 +384,17 @@ def read_with_error_budget(
     *,
     max_error: int,
     caches: list[DataFrame],
-    header: bool = False,
-    delimiter: str = ",",
-    null_value: str | None = None,
-    date_format: str | None = None,
-    timestamp_format: str | None = None,
+    **csv_options,
 ) -> tuple[DataFrame, DataFrame]:
-    """COPY ... MAXERROR n analog: load CSV/JSON permissively with a
+    """COPY ... MAXERROR n analog: load CSV/TEXT/JSON permissively with a
     corrupt-record column, count malformed rows, raise if the count
     exceeds the budget, otherwise skip them (Redshift skips up to
     MAXERROR bad rows and fails the load beyond it — silent-null
     loading is exactly what MAXERROR exists to prevent). Returns
     ``(good_rows, bad_raw_lines)`` — the caller surfaces the skipped
     raw records (the script runner's ``stl_load_errors`` analog).
+    CSV/TEXT reads take ``_csv_reader``'s ``csv_options``, so the good
+    rows are the rows the plain read_csv loads from the same file.
 
     The parsed frame is cached before the acceptance count: Spark
     disallows queries that reference ONLY the internal corrupt-record
@@ -388,29 +410,13 @@ def read_with_error_budget(
     tgt = _ST.fromDDL(schema) if isinstance(schema, str) else schema
     corrupt = "_rs_corrupt_record"
     aug = _ST(list(tgt.fields) + [StructField(corrupt, StringType())])
-    reader = (
-        spark.read.schema(aug)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt)
-    )
-    paths = path if isinstance(path, list) else [path]
     if fmt == "JSON":
-        df = reader.json(*paths)
+        reader = spark.read.schema(aug).option("mode", "PERMISSIVE")
+        df = reader.option("columnNameOfCorruptRecord", corrupt).json(path)
     else:
-        reader = reader.option("header", header).option("delimiter", delimiter)
-        reader = reader.option("nullValue", null_value)
-        if date_format is not None:
-            reader = reader.option("dateFormat", date_format)
-        if timestamp_format is not None:
-            reader = reader.option("timestampFormat", timestamp_format)
-        df = reader.option("multiLine", True).option("escape", '"').csv(*paths)
-    df = df.cache()
-    caches.append(df)
-    n_bad = df.filter(F.col(corrupt).isNotNull()).count()
-    if n_bad > max_error:
-        raise ValueError(
-            f"COPY: {n_bad} malformed row(s) exceed MAXERROR {max_error}"
-        )
+        reader = _csv_reader(spark, aug, **csv_options)
+        df = reader.option("columnNameOfCorruptRecord", corrupt).csv(path)
+    df = _budget_gate(df, F.col(corrupt).isNotNull(), max_error, caches)
     # Materialize the bad split NOW, while the cache is warm: it is
     # ≤ max_error rows by the contract just enforced, and a
     # corrupt-record-only projection is ILLEGAL to recompute from an

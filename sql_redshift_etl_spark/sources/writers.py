@@ -40,12 +40,12 @@ def unload_csv(df: DataFrame, path: str, *, mode: str = "overwrite", header: boo
     df.write.mode(mode).option("header", header).csv(path)
 
 
-def write_manifest(path: str, *, suffix: str = ".parquet") -> str:
+def write_manifest(path: str) -> str:
     """Redshift ``UNLOAD ... MANIFEST`` analog: after an unload, write a
-    manifest JSON listing every data file, in Redshift's own format
-    (``{"entries": [{"url": ..., "mandatory": true}, ...]}``) so a
-    downstream ``COPY ... MANIFEST`` — or any external consumer — gets
-    an EXPLICIT, atomic file list instead of a prefix listing. At
+    manifest JSON listing every data file Spark committed, in Redshift's
+    own format (``{"entries": [{"url": ..., "mandatory": true}, ...]}``),
+    so a downstream ``COPY ... MANIFEST`` — or any external consumer —
+    gets an EXPLICIT, atomic file list instead of a prefix listing. At
     100 TB the manifest is what makes hand-offs race-free: a reader of
     the prefix can see half-written output; a reader of the manifest
     (written last) sees exactly the committed files.
@@ -54,14 +54,17 @@ def write_manifest(path: str, *, suffix: str = ".parquet") -> str:
     underscore prefix keeps Spark's file listing from treating the
     manifest as data, so prefix readers of the same directory still
     work). Recurses into partition subdirectories so partitioned
-    unloads are covered.
+    unloads are covered. A data file is any file whose name does not
+    start with ``_`` or ``.`` — the names Spark's own file listing skips
+    (``_SUCCESS``, ``.crc`` checksums) — so the writer's part-file names,
+    extensions and codecs need not be known here.
     """
     import json
 
     entries = []
     for root, _dirs, files in sorted(os.walk(path)):
         for f in sorted(files):
-            if f.endswith(suffix) and not f.startswith("_"):
+            if not f.startswith(("_", ".")):
                 entries.append(
                     {"url": os.path.join(os.path.abspath(root), f), "mandatory": True}
                 )

@@ -649,6 +649,90 @@ def test_script_io_option_parser():
         _parse_io_options("READRATIO 100", "COPY")
 
 
+# (statement, option clause, option name the error must carry): options
+# a statement or format does not take, each accepted and dropped before
+# the COPY/UNLOAD rule table existed
+_REJECTED_IO_OPTIONS = [
+    ("COPY", "CSV HEADER", "HEADER"),
+    ("COPY", "CSV ADDQUOTES", "ADDQUOTES"),
+    ("COPY", "CSV PARALLEL OFF", "PARALLEL"),
+    ("COPY", "CSV PARTITION BY (k)", "PARTITION BY"),
+    ("COPY", "CSV ALLOWOVERWRITE", "ALLOWOVERWRITE"),
+    ("COPY", "CSV CLEANPATH", "CLEANPATH"),
+    ("COPY", "CSV MAXFILESIZE 5 MB", "MAXFILESIZE"),
+    ("COPY", "FIXEDWIDTH 'k:3,v:5' IGNOREHEADER 1", "IGNOREHEADER"),
+    ("COPY", "JSON IGNOREHEADER 1", "IGNOREHEADER"),
+    ("COPY", "JSON DELIMITER ','", "DELIMITER"),
+    ("UNLOAD", "FIXEDWIDTH 'k:3,v:5'", "FIXEDWIDTH"),
+    ("UNLOAD", "CSV MAXERROR 5", "MAXERROR"),
+    ("UNLOAD", "CSV IGNOREHEADER 1", "IGNOREHEADER"),
+    ("UNLOAD", "CSV REMOVEQUOTES", "REMOVEQUOTES"),
+    ("UNLOAD", "CSV DATEFORMAT 'YYYY-MM-DD'", "DATEFORMAT"),
+    ("UNLOAD", "CSV QUOTE AS '%'", "QUOTE AS"),
+    ("UNLOAD", "CSV BLANKSASNULL", "BLANKSASNULL"),
+    ("UNLOAD", "JSON 'auto'", "JSON"),
+    ("UNLOAD", "PARQUET NULL AS 'NUL'", "NULL AS"),
+    ("UNLOAD", "PARQUET HEADER", "HEADER"),
+    ("UNLOAD", "PARQUET DELIMITER ','", "DELIMITER"),
+]
+
+
+@pytest.mark.parametrize("stmt,clause,option", _REJECTED_IO_OPTIONS)
+def test_copy_unload_option_rules(spark, tmp_path, stmt, clause, option):
+    """An option the statement or the format does not take raises a
+    ValueError naming it, instead of being silently dropped (a COPY
+    FIXEDWIDTH IGNOREHEADER 1 used to load the header line as a row)."""
+    import re as _re
+
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    data = tmp_path / "in.txt"
+    data.write_text("kk vvvv\n  1    a\n")
+    io = (
+        f"COPY t FROM '{data}' {clause};"
+        if stmt == "COPY"
+        else f"UNLOAD ('SELECT k, v FROM t') TO '{tmp_path / 'out'}' {clause};"
+    )
+    with pytest.raises(ValueError, match=_re.escape(option)):
+        run_redshift_script(
+            spark, f"CREATE TEMP TABLE t (k VARCHAR(3), v VARCHAR(5)); {io} SELECT * FROM t;"
+        )
+
+
+@pytest.mark.parametrize(
+    "content,clause",
+    [
+        ("1,%a,b%\n2,%c%\n", "CSV QUOTE AS '%'"),
+        ('1,"quo\\"ted"\n', "CSV"),  # the engine's own UNLOAD CSV of quo"ted
+        ('2,""\n', "CSV"),
+    ],
+)
+def test_copy_maxerror_reads_like_plain_copy(spark, tmp_path, content, clause):
+    """A MAXERROR load of well-formed rows loads exactly what the plain
+    COPY of the same file loads: both read through one CSV reader."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    data = tmp_path / "in.csv"
+    data.write_text(content)
+
+    def load(budget: str) -> list[tuple]:
+        return [
+            tuple(r)
+            for r in run_redshift_script(
+                spark,
+                f"""
+                CREATE TEMP TABLE t (k INT, v VARCHAR(9));
+                COPY t FROM '{data}' {clause} {budget};
+                SELECT * FROM t ORDER BY k;
+                """,
+            ).collect()
+        ]
+
+    plain = load("")
+    assert load("MAXERROR 5") == plain
+    assert len(plain) == content.count("\n")
+
+
 def test_script_runner_copy_unload_roundtrip(spark, tmp_path):
     from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
 
