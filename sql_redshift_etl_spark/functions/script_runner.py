@@ -24,42 +24,46 @@ Statement support:
   the query's columns positionally (r6).
 - ``CREATE [TEMP] TABLE name (col type, ...)`` — empty table with the
   declared schema (Spark parses the DDL column list directly).
-- ``CREATE [TEMP] TABLE name (LIKE other)`` — empty table with the
-  other table's schema (r5); ``INCLUDING DEFAULTS`` copies the other
-  table's DEFAULT attributes, ``EXCLUDING``/bare does not (r6 —
-  Redshift's own LIKE contract).
-- ``ALTER TABLE a RENAME TO b`` — the atomic-swap publish step (r5):
-  the table moves to the new name within script scope.
+- ``CREATE [TEMP] TABLE name (LIKE other [INCLUDING|EXCLUDING
+  DEFAULTS])`` — empty table with the other table's schema.
+- ``ALTER TABLE a RENAME TO b`` — the atomic-swap publish step: the
+  table moves to the new name within script scope.
 - ``ALTER TABLE tgt APPEND FROM src`` — Redshift's move-rows publish
   (r5): src's rows append to tgt (positional cast) and src empties;
   IGNOREEXTRA/FILLTARGET accepted (width mismatches already raise).
-- ``IDENTITY(seed, step)`` column attribute (r5): recorded and stripped
-  from the DDL; INSERTs with a column list that OMITS the identity
-  column auto-generate unique ascending values (not consecutive —
-  Redshift's own IDENTITY contract). Inherited by CREATE TABLE (LIKE)
-  and RENAME, as in Redshift.
 - ``CREATE [OR REPLACE] VIEW name AS SELECT ... [WITH NO SCHEMA
   BINDING]`` — same as CTAS (script views are late-bound by nature).
-- ``ALTER TABLE t ALTER [COLUMN] c [SET DATA] TYPE type`` (r6) — cast
-  in place (Redshift's varchar-resize/type-migration op).
-- ``INSERT INTO name [(cols)] SELECT ... | VALUES ...`` — positional
-  append with per-column cast to the target schema; unlisted columns
-  of an explicit column list take their declared ``DEFAULT`` literal
-  (r6; recorded from CREATE/ALTER DDL, inherited by CREATE (LIKE ...
-  INCLUDING DEFAULTS), following renames, dying with drops), else NULL.
-- ``INSERT INTO name DEFAULT VALUES`` — one row of declared
-  defaults (identity generates; unattributed columns NULL).
-- ``DELETE FROM name [WHERE cond]`` — keeps rows where ``cond`` is not
-  TRUE (NULL-cond rows survive, matching SQL DELETE); subqueries in
-  ``cond`` work because the filter runs through ``spark.sql``.
-- ``DELETE FROM name USING src [, ...] WHERE cond`` — join-based delete
-  (r5): rows matching ANY source row go (NOT EXISTS → left-anti join);
-  WHERE is required.
-- ``UPDATE name SET c = e, ... [WHERE cond]`` — CASE-projection per
-  assigned column, cast back to the column's declared type.
-- ``UPDATE name SET ... FROM src [, ...] WHERE cond`` — join-based
-  update (r5): each target row updates AT MOST once even on multi-match
-  joins (deterministic pick); WHERE is required (loud).
+- ``ALTER TABLE t ALTER [COLUMN] c [SET DATA] TYPE type`` — cast in
+  place (Redshift's varchar-resize/type-migration op); ``ADD [COLUMN] c
+  type [DEFAULT lit]`` backfills existing rows; ``DROP [COLUMN]`` and
+  ``RENAME COLUMN a TO b``.
+- DML: ``INSERT INTO name [(cols)] SELECT ...|VALUES ...``, ``INSERT
+  INTO name DEFAULT VALUES``, ``UPDATE name SET c = e, ... [FROM src,
+  ...] [WHERE cond]``, ``DELETE FROM name [USING src, ...] [WHERE
+  cond]`` and ``MERGE INTO tgt USING src ON <key equalities> WHEN
+  MATCHED THEN UPDATE SET ...|DELETE WHEN NOT MATCHED THEN INSERT ...``
+  or its simplified ``ON ... REMOVE DUPLICATES`` form share one column
+  contract: resolve, fill, commit. Every column a statement names
+  resolves case-insensitively to the table's spelling, or the statement
+  raises naming it (``_target_col``). A column an INSERT or MERGE does
+  not list takes its DDL fill (``_fill_unlisted``): the ``DEFAULT``,
+  unique ascending ids above the table's maximum for ``IDENTITY(seed,
+  step)`` (not consecutive, Redshift's own contract), else NULL;
+  ``DEFAULT VALUES`` is a column-list INSERT of one row that lists no
+  column. Fills are recorded from CREATE/ALTER DDL, follow column and
+  table renames, are inherited by ``CREATE ... (LIKE ...)`` (identity
+  always, defaults only under INCLUDING DEFAULTS), and die with a drop
+  or rebind. The new table then binds, pinned (localCheckpoint) when a
+  fill generated ids or read the clock, so every later read sees the
+  same values, and INSERT/UPDATE/DELETE record their affected rows for
+  ROW_COUNT and FOUND (``_commit_dml``). DELETE keeps the rows whose
+  condition is not TRUE (NULL-condition rows survive) and USING deletes
+  a row that ANY source row matches (a left-anti join); UPDATE casts
+  each assignment to the column's type, and FROM updates each target
+  row at most once on multi-match joins (a deterministic pick); USING
+  and FROM require WHERE. MERGE is parsed once (``_parse_merge``) and
+  lowered to the relational merge plan (operators/merge.py); a key that
+  repeats in the source raises at runtime, as in Redshift.
 - ``TRUNCATE [TABLE] name`` / ``DROP TABLE|VIEW [IF EXISTS] name``.
 - ``COPY name FROM 'path' [options]`` / ``UNLOAD ('select...') TO
   'path' [options]`` — the bulk load and export. COPY appends to an
@@ -87,11 +91,6 @@ Statement support:
   binding over the prefix; PARQUET validates declared columns against
   the files and discovers hive partitions; TEXTFILE reads the declared
   schema at the given delimiter.
-- ``MERGE INTO tgt USING src ON cond WHEN MATCHED THEN UPDATE SET ...|
-  DELETE WHEN NOT MATCHED THEN INSERT ...`` and the simplified
-  ``ON cond REMOVE DUPLICATES`` form (r6) — executed through the
-  relational merge plan (operators/merge.py); a source key matching
-  multiple target rows raises at runtime, as in Redshift.
 - ``CREATE MATERIALIZED VIEW name [BACKUP ...] [AUTO REFRESH ...] AS
   SELECT ...`` / ``REFRESH MATERIALIZED VIEW name`` (r6) — CREATE
   snapshots the defining query (eager analysis = Redshift's
@@ -229,8 +228,9 @@ from collections import deque
 from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sql_redshift_etl_spark.functions.redshift_sql import (
     _in_literal,
@@ -633,8 +633,6 @@ def _ddl_schema(ddl: str):
     """The StructType of a DDL column list. CHAR/VARCHAR lower to plain
     STRING (Spark's own CTAS behavior; read schemas reject char/varchar
     and an empty LogicalRDD may not carry them)."""
-    from pyspark.sql import types as T
-
     parsed = T.StructType.fromDDL(_normalize_ddl_types(ddl))
     return T.StructType(
         [
@@ -1922,9 +1920,11 @@ class _ScriptState:
         self.spark = spark
         self.tables: dict[str, DataFrame] = {}
         self.created_views: set[str] = set()
-        # table -> {identity column: seed} (IDENTITY(seed, step) DDL
-        # attribute; values auto-generate on INSERTs that omit the column)
-        self.identity_cols: dict[str, dict[str, int]] = {}
+        # table -> {column: IDENTITY seed (int) or DEFAULT text (str)},
+        # the DDL fill of a column an INSERT or MERGE does not list (see
+        # _fill_unlisted). A column has at most one: Redshift forbids a
+        # DEFAULT on an IDENTITY column. A rebind or drop clears it.
+        self.fills: dict[str, dict[str, int | str]] = {}
         # materialized view -> defining SQL text; a REFRESH re-runs it
         # against the CURRENT bindings (Redshift MVs are stale until
         # REFRESH — spark.sql's eager analysis gives exactly that: the
@@ -1947,10 +1947,6 @@ class _ScriptState:
         # binding of that name (read-side resolution — see
         # _apply_search_path for the contract and its documented hazard)
         self.search_path: list[str] = []
-        # table -> {column: DEFAULT literal SQL text} (CREATE/ALTER DDL
-        # attribute; INSERTs that omit the column fill the default, not
-        # NULL — Redshift's contract). Lifecycle mirrors identity_cols.
-        self.default_cols: dict[str, dict[str, str]] = {}
         # Caller-registered TEMP views a script statement re-binds
         # (DELETE/UPDATE/INSERT/COPY on a base view): captured as
         # resolved DataFrames so cleanup restores them — "shadowed for
@@ -1996,8 +1992,7 @@ class _ScriptState:
         return {
             "tables": dict(self.tables),
             "created_views": set(self.created_views),
-            "identity_cols": {k: dict(v) for k, v in self.identity_cols.items()},
-            "default_cols": {k: dict(v) for k, v in self.default_cols.items()},
+            "fills": {k: dict(v) for k, v in self.fills.items()},
             "mv_defs": dict(self.mv_defs),
             "procs": dict(self.procs),
             "schemas": set(self.schemas),
@@ -2042,8 +2037,7 @@ class _ScriptState:
             df.createOrReplaceTempView(name)
         self.tables = snap["tables"]
         self.created_views = snap["created_views"]
-        self.identity_cols = snap["identity_cols"]
-        self.default_cols = snap["default_cols"]
+        self.fills = snap["fills"]
         self.mv_defs = snap["mv_defs"]
         self.procs = snap["procs"]
         self.schemas = snap["schemas"]
@@ -2062,8 +2056,7 @@ class _ScriptState:
 
     def drop_meta(self, name: str) -> None:
         """A rebind or drop kills per-table DDL attributes."""
-        self.identity_cols.pop(name, None)
-        self.default_cols.pop(name, None)
+        self.fills.pop(name, None)
 
     def bind(self, name: str, df: DataFrame) -> None:
         if (
@@ -2125,8 +2118,6 @@ def _cast_positional(sel: DataFrame, target: DataFrame, table: str) -> DataFrame
             f"INSERT INTO {table}: {len(sel.columns)} columns provided, "
             f"table has {len(tgt_schema)}"
         )
-    from pyspark.sql import functions as F
-
     # positional rename FIRST, then cast: an unaliased literal like 0.0
     # yields a column NAMED "0.0", which name-based resolution would
     # parse as `0`.`0` and fail
@@ -2203,34 +2194,114 @@ def _eval_script_scalar(state: "_ScriptState", scope: dict | None, expr: str, ca
     return None if row is None else row[0]
 
 
-def _run_merge_into(
-    spark: SparkSession, state: "_ScriptState", tgt_name: str, tgt_alias: str, rest: str
-) -> None:
-    """Execute a parsed ``MERGE INTO`` through the relational merge plan
-    (operators/merge.py merge_upsert: ONE full-outer join on the merge
-    key + conditional projection — the physical plan every engine's
-    MERGE lowers to, one key-partitioned shuffle at any scale).
+# --- the DML column contract ------------------------------------------------
+# Script DML resolves every column it names through _target_col, gives
+# every column it does not list the table's DDL fill (_fill_unlisted),
+# and INSERT/UPDATE/DELETE bind their result through _commit_dml.
 
-    Redshift semantics honored loudly:
-    - exactly the documented clause forms (WHEN MATCHED THEN UPDATE SET
-      / THEN DELETE, WHEN NOT MATCHED THEN INSERT); extra AND
-      predicates on WHEN clauses are not Redshift MERGE and raise;
-    - the ON condition must be AND-ed equality pairs between the two
-      tables (Redshift requires the merge key; range conditions raise);
-    - a source row matching multiple times raises "found multiple
-      matches" AT RUNTIME via a distributed raise_error guard (a window
-      count over the source keys — the delta side, which the join
-      shuffles by key anyway), exactly Redshift's contract;
-    - INSERT must supply each merge-key column as the source's key
-      reference (anything else would create a row that contradicts its
-      own match condition — Redshift rejects this shape too);
-      non-listed insert columns become NULL.
+
+def _target_col(df: DataFrame, name: str, stmt: str | None) -> str | None:
+    """*name* as *df* spells it (SQL identifiers are case-insensitive).
+    A name *df* lacks raises a ValueError that starts with *stmt* and
+    names the column, or returns None when *stmt* is None."""
+    for c in df.columns:
+        if c.lower() == name.lower():
+            return c
+    if stmt is None:
+        return None
+    raise ValueError(f"{stmt} {name!r} (table has {df.columns})")
+
+
+def _fill_unlisted(
+    state: "_ScriptState", table: str, base: DataFrame, field
+) -> tuple[Column, bool]:
+    """The value an INSERT or MERGE gives *field*, a column of *table*
+    (bound to *base*) that the statement does not list, and whether the
+    bound result must be pinned (localCheckpoint).
+
+    A DEFAULT gives its expression, pinned when it reads the clock so
+    every later read sees one load time. An IDENTITY column gives
+    unique ascending ids above everything already in the table (not
+    consecutive: Redshift's own IDENTITY contract), always pinned:
+    monotonically_increasing_id re-evaluates per action, and every
+    later statement reads the bound table, so two downstream actions
+    must see the SAME ids. The start is a one-row max lookup, the same
+    metadata-scale driver read as JDBC partition bounds. Any other
+    column is NULL.
     """
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as F
+    fill = state.fills.get(table, {}).get(field.name)
+    if fill is None:
+        return F.lit(None), False
+    if isinstance(fill, str):
+        return F.expr(fill), bool(_VOLATILE_DEFAULT.search(fill))
+    prior = base.agg(F.max(field.name)).first()[0]
+    start = fill if prior is None else int(prior) + 1
+    if isinstance(field.dataType, (T.IntegerType, T.ShortType, T.ByteType)):
+        # mid() values (partitionId*2^33 + n) wrap a narrow column
+        # under non-ANSI casts. A narrow identity type caps the table
+        # at the type's own range anyway, so a dense scheme (row_number
+        # over mid: one single-partition window, bounded by that same
+        # range) is both safe and honest.
+        rn = F.row_number().over(Window.orderBy(F.monotonically_increasing_id()))
+        return rn + F.lit(start - 1), True
+    return F.monotonically_increasing_id() + F.lit(start), True
 
-    from sql_redshift_etl_spark.operators.merge import merge_upsert
 
+def _commit_dml(
+    state: "_ScriptState",
+    scope: dict | None,
+    table: str,
+    new_df: DataFrame,
+    affected: DataFrame,
+    pin: bool = False,
+) -> None:
+    """Bind an INSERT/UPDATE/DELETE's new *table* (materialized first
+    when *pin*, see _fill_unlisted), then record its *affected* rows,
+    a lazy plan captured against the pre-statement bindings, for GET
+    DIAGNOSTICS ROW_COUNT and FOUND."""
+    if pin:
+        new_df = new_df.localCheckpoint(eager=True)
+    state.bind(table, new_df)
+    state.last_dml = affected
+    _mark_found_dml(scope, state)
+
+
+def _one_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
+    """One row of *df* per *keys* value, the first by *order*: a
+    deterministic pick where Redshift leaves the winner unspecified
+    (REMOVE DUPLICATES' replacement rows, UPDATE ... FROM's targets)."""
+    return (
+        df.withColumn("__rn", F.row_number().over(Window.partitionBy(*keys).orderBy(*order)))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+class _Merge(NamedTuple):
+    """A parsed MERGE INTO: clause texts, resolved against the tables
+    only by _lower_merge."""
+
+    source: str
+    src_alias: str
+    keys: list[tuple[str, str]]  # ON pairs: (target column, source column)
+    sets: list[tuple[str, str]]  # WHEN MATCHED THEN UPDATE SET: (column, expression)
+    delete: bool  # WHEN MATCHED THEN DELETE
+    insert_cols: list[str] | None  # None: the target's columns, in order
+    insert_vals: list[str]
+    remove_duplicates: bool
+
+
+_MERGE_INSERT = re.compile(
+    r"(?is)^NOT\s+MATCHED\s+THEN\s+INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.+)\)\s*$"
+)
+
+
+def _parse_merge(tgt_name: str, tgt_alias: str, rest: str) -> _Merge:
+    """Parse the text after ``MERGE INTO tgt [alias] USING``. Only
+    Redshift's forms pass: ``src [alias] ON <AND-ed equality pairs
+    between the two tables>`` (Redshift requires the merge key; range
+    conditions raise), then either the WHEN clauses or the simplified
+    ``REMOVE DUPLICATES``."""
     src_spec, after_on = _split_top_kw(rest, "ON")
     if after_on is None:
         raise ValueError(f"MERGE INTO {tgt_name}: missing ON condition")
@@ -2241,28 +2312,13 @@ def _run_merge_into(
             f"aliased), got {src_spec[:60]!r} — stage subqueries as a temp "
             "table first (Redshift's own MERGE takes a table reference)"
         )
-    src_name, src_alias = sm.group(1), sm.group(2) or sm.group(1)
+    source, src_alias = sm.group(1), sm.group(2) or sm.group(1)
     cond, when_text = _split_top_kw(after_on, "WHEN")
-    remove_duplicates = False
     if when_text is None:
-        # Redshift's SIMPLIFIED MERGE: `MERGE INTO t USING s ON cond
-        # REMOVE DUPLICATES` — no WHEN clauses; matched target rows are
-        # REPLACED by the source row (all columns), unmatched source
-        # rows insert, and duplicate target/source rows on the merge key
-        # collapse to one (Redshift's documented semantics for this
-        # form; it requires the column lists to be identical).
         cond, tail = _split_top_kw(cond, "REMOVE")
         if tail is None or not re.match(r"(?is)^DUPLICATES\s*$", tail):
             raise ValueError(f"MERGE INTO {tgt_name}: no WHEN clauses")
-        remove_duplicates = True
-
-    target = state.existing(tgt_name)
-    source = state.existing(src_name)
-    tgt_by_lower = {c.lower(): c for c in target.columns}
-    src_by_lower = {c.lower(): c for c in source.columns}
-
-    # --- ON: AND-ed equality pairs → (target col, source col) keys ----
-    keys: list[tuple[str, str]] = []
+    keys = []
     for part in _split_top_and(cond):
         pm = re.match(r"(?is)^\(?\s*([\w.]+)\s*=\s*([\w.]+)\s*\)?\s*$", part)
         sides: dict[str, str] = {}
@@ -2274,173 +2330,184 @@ def _run_merge_into(
                 f"MERGE INTO {tgt_name}: ON must be AND-ed equalities between "
                 f"{tgt_alias}.<col> and {src_alias}.<col>, got {part.strip()!r}"
             )
-        tcol = tgt_by_lower.get(sides[tgt_alias.lower()].lower())
-        scol = src_by_lower.get(sides[src_alias.lower()].lower())
-        if tcol is None or scol is None:
-            raise ValueError(f"MERGE INTO {tgt_name}: unknown key column in {part.strip()!r}")
-        keys.append((tcol, scol))
+        keys.append((sides[tgt_alias.lower()], sides[src_alias.lower()]))
+    if when_text is None:
+        return _Merge(source, src_alias, keys, [], False, None, [], True)
+    return _Merge(source, src_alias, keys, *_parse_merge_when(tgt_name, when_text), False)
 
-    # Source key columns renamed to the target's names (merge_upsert
-    # joins same-named keys); expression text is rewritten to match.
-    key_rename = {s.lower(): t for t, s in keys if s.lower() != t.lower()}
-    src = source
-    for t_, s_ in keys:
-        if s_.lower() != t_.lower():
-            src = src.withColumnRenamed(src_by_lower[s_.lower()], t_)
-    key_cols = [t for t, _ in keys]
 
-    if remove_duplicates:
-        tgt_set = {c.lower() for c in target.columns}
-        src_set = {c.lower() for c in src.columns}
-        if tgt_set != src_set:
-            raise ValueError(
-                f"MERGE INTO {tgt_name} ... REMOVE DUPLICATES requires identical "
-                f"column lists (target {sorted(tgt_set)}, source {sorted(src_set)})"
-            )
-        # one replacement row per matched/new key (deterministic pick by
-        # full-row order — Redshift leaves the winner unspecified);
-        # matched target rows, duplicates included, are all replaced
-        one = (
-            src.withColumn(
-                "__rn",
-                F.row_number().over(
-                    _W.partitionBy(*key_cols).orderBy(*sorted(src.columns))
-                ),
-            )
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        by_lower = {c.lower(): c for c in one.columns}
-        repl = one.select(
-            *[
-                F.col(by_lower[f.name.lower()]).cast(f.dataType).alias(f.name)
-                for f in target.schema.fields
-            ]
-        )
-        survivors = target.join(one.select(*key_cols), on=key_cols, how="left_anti")
-        state.bind(tgt_name, survivors.unionByName(repl))
-        return
-
-    def rewrite(expr_text: str) -> str:
-        def sub(mm: "re.Match[str]") -> str:
-            alias, col = mm.group(1).lower(), mm.group(2)
-            if alias == tgt_alias.lower():
-                return f"t.{col}"
-            return f"s.{key_rename.get(col.lower(), col)}"
-
-        pat = rf"(?i)\b({re.escape(tgt_alias)}|{re.escape(src_alias)})\.(\w+)"
-        return _sub_outside_quotes(expr_text, pat, sub)
-
-    # --- WHEN clauses --------------------------------------------------
-    clauses: list[str] = []
-    cur: str | None = when_text
-    while cur is not None:
-        head, cur = _split_top_kw(cur, "WHEN")
-        clauses.append(head)
-    update_set: dict = {}
-    insert_cols: list[str] | None = None
-    insert_exprs: list[str] | None = None
-    delete_matched = False
-    saw_matched = saw_not_matched = False
-    for cl in clauses:
+def _parse_merge_when(tgt_name: str, when_text: str) -> tuple:
+    """(SET pairs, delete flag, INSERT columns, INSERT values) of the
+    WHEN clauses: WHEN MATCHED THEN UPDATE SET or THEN DELETE, and WHEN
+    NOT MATCHED THEN INSERT, each required. An AND predicate on a WHEN
+    clause is not Redshift MERGE (its WHEN clauses are unconditional)."""
+    sets: list[tuple[str, str]] = []
+    delete = saw_insert = False
+    insert_cols, insert_vals = None, []
+    rest: str | None = when_text
+    while rest is not None:
+        cl, rest = _split_top_kw(rest, "WHEN")
         if re.match(r"(?is)^(?:NOT\s+)?MATCHED\s+AND\b", cl):
             raise ValueError(
                 f"MERGE INTO {tgt_name}: WHEN ... AND predicates are not part "
                 "of Redshift MERGE (its WHEN clauses are unconditional)"
             )
         if um := re.match(r"(?is)^MATCHED\s+THEN\s+UPDATE\s+SET\s+(.+)$", cl):
-            saw_matched = True
-            for c, e in _split_assignments(um.group(1)):
-                c = c.rpartition(".")[2]  # tolerate tgt-qualified SET t.c = ...
-                f = next((f for f in target.schema.fields if f.name.lower() == c.lower()), None)
-                if f is None:
-                    raise ValueError(f"MERGE INTO {tgt_name}: unknown SET column {c!r}")
-                if f.name in key_cols:
-                    raise ValueError(
-                        f"MERGE INTO {tgt_name}: cannot UPDATE merge key {f.name!r}"
-                    )
-                update_set[f.name] = F.expr(rewrite(e)).cast(f.dataType)
+            # a target-qualified SET t.c = ... is tolerated
+            sets += [(c.rpartition(".")[2], e) for c, e in _split_assignments(um.group(1))]
         elif re.match(r"(?is)^MATCHED\s+THEN\s+DELETE\s*$", cl):
-            saw_matched = delete_matched = True
-        elif im := re.match(
-            r"(?is)^NOT\s+MATCHED\s+THEN\s+INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.+)\)\s*$",
-            cl,
-        ):
-            saw_not_matched = True
-            insert_exprs = _split_args(im.group(2))
-            insert_cols = (
-                [c.strip() for c in im.group(1).split(",")]
-                if im.group(1)
-                else list(target.columns)
-            )
-            if len(insert_cols) != len(insert_exprs):
-                raise ValueError(
-                    f"MERGE INTO {tgt_name}: INSERT lists {len(insert_cols)} "
-                    f"columns but {len(insert_exprs)} values"
-                )
+            delete = True
+        elif im := _MERGE_INSERT.match(cl):
+            saw_insert = True
+            insert_vals = _split_args(im.group(2))
+            insert_cols = [c.strip() for c in im.group(1).split(",")] if im.group(1) else None
         else:
             raise ValueError(f"MERGE INTO {tgt_name}: unsupported WHEN clause {cl[:60]!r}")
-    if delete_matched and update_set:
+    if delete and sets:
         raise ValueError(
             f"MERGE INTO {tgt_name}: WHEN MATCHED is either UPDATE or DELETE, not both"
         )
-    if not (saw_matched and saw_not_matched):
+    if not ((sets or delete) and saw_insert):
         raise ValueError(
             f"MERGE INTO {tgt_name}: Redshift MERGE requires both a WHEN MATCHED "
             "and a WHEN NOT MATCHED clause"
         )
+    return sets, delete, insert_cols, insert_vals
 
+
+def _lower_merge(state: "_ScriptState", tgt_name: str, tgt_alias: str, mg: _Merge) -> None:
+    """Execute a parsed MERGE through the relational merge plan
+    (operators/merge.py merge_upsert: ONE full-outer join on the merge
+    key + conditional projection — the physical plan every engine's
+    MERGE lowers to, one key-partitioned shuffle at any scale), with its
+    columns resolved and filled like every script DML's.
+
+    The checks that need the tables: a SET may not assign a merge key,
+    and the INSERT must give each merge key the source's key reference
+    (anything else would create a row that contradicts its own match
+    condition — Redshift rejects this shape too). A key that repeats in
+    the source raises "found multiple matches" AT RUNTIME, as in
+    Redshift.
+    """
+    from sql_redshift_etl_spark.operators.merge import merge_upsert
+
+    stmt = f"MERGE INTO {tgt_name}"
+    target, source = state.existing(tgt_name), state.existing(mg.source)
+    keys = [
+        (
+            _target_col(target, t, f"{stmt}: unknown key column"),
+            _target_col(source, s, f"{stmt}: unknown key column"),
+        )
+        for t, s in mg.keys
+    ]
+    # Source key columns take the target's names (merge_upsert joins
+    # same-named keys); expression text is rewritten to match.
+    renamed = {s: t for t, s in keys if s != t}
+    src = source
+    for s, t in renamed.items():
+        src = src.withColumnRenamed(s, t)
+    key_cols = [t for t, _ in keys]
+    if mg.remove_duplicates:
+        _merge_replace(state, tgt_name, target, src, key_cols)
+        return
+
+    def rewrite(expr_text: str) -> str:
+        def sub(mm: "re.Match[str]") -> str:
+            if mm.group(1).lower() == tgt_alias.lower():
+                return f"t.{mm.group(2)}"
+            return f"s.{renamed.get(_target_col(source, mm.group(2), None), mm.group(2))}"
+
+        pat = rf"(?i)\b({re.escape(tgt_alias)}|{re.escape(mg.src_alias)})\.(\w+)"
+        return _sub_outside_quotes(expr_text, pat, sub)
+
+    update_set: dict = {}
+    for c, e in mg.sets:
+        col = _target_col(target, c, f"{stmt}: unknown SET column")
+        if col in key_cols:
+            raise ValueError(f"{stmt}: cannot UPDATE merge key {col!r}")
+        update_set[col] = F.expr(rewrite(e)).cast(target.schema[col].dataType)
+
+    cols = target.columns if mg.insert_cols is None else mg.insert_cols
+    if len(cols) != len(mg.insert_vals):
+        raise ValueError(
+            f"{stmt}: INSERT lists {len(cols)} columns but {len(mg.insert_vals)} values"
+        )
+    listed = {
+        _target_col(target, c, f"{stmt}: unknown INSERT column"): e
+        for c, e in zip(cols, mg.insert_vals)
+    }
     insert_values: dict = {}
-    listed_by_lower = {}
-    if insert_cols is not None and insert_exprs is not None:
-        for c, e in zip(insert_cols, insert_exprs):
-            cc = tgt_by_lower.get(c.lower())
-            if cc is None:
-                raise ValueError(f"MERGE INTO {tgt_name}: unknown INSERT column {c!r}")
-            listed_by_lower[cc.lower()] = e
-        for f in target.schema.fields:
-            e = listed_by_lower.get(f.name.lower())
-            if f.name in key_cols:
-                # the key's insert value MUST be the source key reference
-                want = f"s.{f.name}"
-                got = rewrite(e).strip() if e is not None else None
-                if got is None or got.lower() != want.lower():
-                    raise ValueError(
-                        f"MERGE INTO {tgt_name}: INSERT must set merge key "
-                        f"{f.name!r} to the source key (got {e!r})"
-                    )
-                continue
-            if e is None:
-                insert_values[f.name] = F.lit(None).cast(f.dataType)
-            else:
-                insert_values[f.name] = F.expr(rewrite(e)).cast(f.dataType)
+    pin = False
+    for f in target.schema.fields:
+        e = listed.get(f.name)
+        if f.name in key_cols:
+            if e is None or rewrite(e).strip().lower() != f"s.{f.name}".lower():
+                raise ValueError(
+                    f"{stmt}: INSERT must set merge key {f.name!r} to the source key (got {e!r})"
+                )
+        elif e is not None:
+            insert_values[f.name] = F.expr(rewrite(e)).cast(f.dataType)
+        else:
+            val, p = _fill_unlisted(state, tgt_name, target, f)
+            if p:
+                # generated once per source row, as INSERT generates it
+                # once per inserted row
+                src = src.withColumn(f"__fill_{f.name}", val)
+                val = F.col(f"s.__fill_{f.name}")
+            pin |= p
+            insert_values[f.name] = val.cast(f.dataType)
 
-    # --- "found multiple matches" runtime guard ------------------------
-    # Distributed, lazy, and on the delta side only: count per key via a
-    # window, raise inside the plan when any key repeats. The cast gives
-    # raise_error's NULL type the key's type so the CASE branches agree.
+    # "found multiple matches" runtime guard: distributed, lazy, and on
+    # the delta side only — count per key via a window (the join
+    # shuffles the source by key anyway), raise inside the plan when
+    # any key repeats. The cast gives raise_error's NULL type the key's
+    # type so the CASE branches agree.
     k0 = key_cols[0]
-    k0_type = next(f.dataType for f in src.schema.fields if f.name == k0)
-    cnt = F.count(F.lit(1)).over(_W.partitionBy(*key_cols))
+    cnt = F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
     src = src.withColumn(
         k0,
         F.when(
             cnt > 1,
-            F.raise_error(
-                F.lit(f"MERGE INTO {tgt_name}: found multiple source matches for a key")
-            ).cast(k0_type),
+            F.raise_error(F.lit(f"{stmt}: found multiple source matches for a key")).cast(
+                src.schema[k0].dataType
+            ),
         ).otherwise(F.col(k0)),
     )
-
     merged = merge_upsert(
         target,
         src,
         key_cols,
         update_set=update_set,
         insert_values=insert_values,
-        delete_when=F.lit(True) if delete_matched else None,
+        delete_when=F.lit(True) if mg.delete else None,
     )
-    state.bind(tgt_name, merged)
+    state.bind(tgt_name, merged.localCheckpoint(eager=True) if pin else merged)
+
+
+def _merge_replace(
+    state: "_ScriptState", tgt_name: str, target: DataFrame, src: DataFrame, key_cols: list[str]
+) -> None:
+    """Redshift's simplified ``MERGE ... ON cond REMOVE DUPLICATES``:
+    matched target rows, duplicates included, are all REPLACED by one
+    source row per key (all columns), unmatched source rows insert, and
+    duplicate source rows on the merge key collapse to one. Redshift
+    documents this form and requires identical column lists."""
+    tgt_set = {c.lower() for c in target.columns}
+    src_set = {c.lower() for c in src.columns}
+    if tgt_set != src_set:
+        raise ValueError(
+            f"MERGE INTO {tgt_name} ... REMOVE DUPLICATES requires identical "
+            f"column lists (target {sorted(tgt_set)}, source {sorted(src_set)})"
+        )
+    one = _one_per_key(src, key_cols, sorted(src.columns))
+    repl = one.select(
+        *[
+            F.col(_target_col(one, f.name, None)).cast(f.dataType).alias(f.name)
+            for f in target.schema.fields
+        ]
+    )
+    survivors = target.join(one.select(*key_cols), on=key_cols, how="left_anti")
+    state.bind(tgt_name, survivors.unionByName(repl))
 
 
 # --- the worklist and its tables -------------------------------------------
@@ -3401,8 +3468,6 @@ def _copy_read(
     """Read a COPY source under the target's declared schema (never
     inferSchema). Returns the rows and, for a MAXERROR load, the skipped
     raw lines (else None)."""
-    from pyspark.sql import types as T
-
     from sql_redshift_etl_spark.functions.dialect import translate_datetime_format
     from sql_redshift_etl_spark.sources import readers
 
@@ -3455,8 +3520,6 @@ def _copy_convert(loaded: DataFrame, schema, opts: dict) -> DataFrame:
     """COPY's conversions after the read: epoch TIMEFORMAT columns become
     timestamps, then Redshift's data-conversion parameters apply to the
     parsed string columns, before the positional cast to the target."""
-    from pyspark.sql import types as T
-
     epoch = _EPOCH.get((opts["timefmt"] or "").lower())
     if epoch is not None:
         for f in schema.fields:
@@ -3662,29 +3725,19 @@ def _exec_create_external(
         declared_fields = list(_ddl_schema(cols).fields) + (
             list(_ddl_schema(part_cols).fields) if part_cols else []
         )
-        actual = [c.lower() for c in ext.columns]
-        missing = [
-            f.name.lower()
-            for f in declared_fields
-            if f.name.lower() not in actual
-        ]
+        resolved = [_target_col(ext, f.name, None) for f in declared_fields]
+        missing = [f.name.lower() for f, c in zip(declared_fields, resolved) if c is None]
         if missing:
             raise ValueError(
-                f"CREATE EXTERNAL TABLE {name}: declared columns "
-                f"{missing} not present at {loc} (files have {actual})"
+                f"CREATE EXTERNAL TABLE {name}: declared columns {missing} not "
+                f"present at {loc} (files have {[c.lower() for c in ext.columns]})"
             )
         # Bind the DECLARED schema, not the file schema:
         # exactly the declared (+ partition) columns, each
         # cast to its declared type — Spectrum's contract.
         # Undeclared file columns are invisible to SELECT *.
-        by_lower = {c.lower(): c for c in ext.columns}
         ext = ext.select(
-            *[
-                F.col(by_lower[f.name.lower()])
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in declared_fields
-            ]
+            *[F.col(c).cast(f.dataType).alias(f.name) for f, c in zip(declared_fields, resolved)]
         )
     else:
         if part_cols:
@@ -3712,14 +3765,17 @@ def _exec_create_like(state: _ScriptState, scope: dict | None, m: re.Match, stmt
     # schema — the first half of Redshift's rebuild-and-swap
     # publish idiom. (Checked before CTAS/DDL: its "(LIKE x)"
     # body would otherwise parse as a column list.) Identity
-    # attributes inherit, as in Redshift's LIKE.
+    # attributes inherit, as in Redshift's LIKE; defaults only under
+    # INCLUDING DEFAULTS (EXCLUDING is the default).
     state.drop_meta(m.group(1))  # rebind clears
-    if m.group(2) in state.identity_cols:
-        state.identity_cols[m.group(1)] = dict(state.identity_cols[m.group(2)])
-    if m.group(2) in state.default_cols and (m.group(3) or "").upper() == "INCLUDING":
-        # Redshift LIKE copies defaults only under
-        # INCLUDING DEFAULTS (EXCLUDING is the default)
-        state.default_cols[m.group(1)] = dict(state.default_cols[m.group(2)])
+    including = (m.group(3) or "").upper() == "INCLUDING"
+    fills = {
+        c: v
+        for c, v in state.fills.get(m.group(2), {}).items()
+        if including or isinstance(v, int)
+    }
+    if fills:
+        state.fills[m.group(1)] = fills
     state.bind(m.group(1), state.existing(m.group(2)).limit(0))
 
 
@@ -3736,10 +3792,8 @@ def _exec_alter_rename(state: _ScriptState, scope: dict | None, m: re.Match, stm
     state.tables.pop(old, None)
     state.created_views.discard(old)
     state.drop_meta(new)  # overwritten target's dies
-    if old in state.identity_cols:
-        state.identity_cols[new] = state.identity_cols.pop(old)
-    if old in state.default_cols:
-        state.default_cols[new] = state.default_cols.pop(old)
+    if old in state.fills:
+        state.fills[new] = state.fills.pop(old)
     state.bind(new, df)
 
 
@@ -3762,11 +3816,8 @@ def _exec_alter_col_type(state: _ScriptState, scope: dict | None, m: re.Match, s
     # type-migration op): cast in place, keeping position
     name, col, typ = m.groups()
     base = state.existing(name)
-    actual = {c.lower(): c for c in base.columns}
-    if col.lower() not in actual:
-        raise ValueError(f"ALTER TABLE {name}: no column {col!r} to alter")
+    c0 = _target_col(base, col, f"ALTER TABLE {name}: no column to alter")
     dt = _ddl_schema(f"x {typ}").fields[0].dataType
-    c0 = actual[col.lower()]
     state.bind(
         name,
         base.select(
@@ -3784,30 +3835,24 @@ def _exec_alter_add_col(state: _ScriptState, scope: dict | None, m: re.Match, st
     # backfill. char/varchar lower to string as in CREATE.
     name, col, typ, default = m.groups()
     base = state.existing(name)
-    if col.lower() in {c.lower() for c in base.columns}:
+    if _target_col(base, col, None) is not None:
         raise ValueError(f"ALTER TABLE {name}: column {col!r} already exists")
     dt = _ddl_schema(f"x {typ}").fields[0].dataType
     val = F.expr(default).cast(dt) if default else F.lit(None).cast(dt)
     if default:
         # future INSERTs omitting the column also take the
         # default, not just the backfill of existing rows
-        state.default_cols.setdefault(name, {})[col] = default
+        state.fills.setdefault(name, {})[col] = default
     state.bind(name, base.withColumn(col, val))
 
 
 def _exec_alter_drop_col(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
     name, col = m.groups()
     base = state.existing(name)
-    actual = {c.lower(): c for c in base.columns}
-    if col.lower() not in actual:
-        raise ValueError(f"ALTER TABLE {name}: no column {col!r} to drop")
-    state.bind(name, base.drop(actual[col.lower()]))
-    ids = state.identity_cols.get(name)
-    if ids:  # dropping the identity column kills its generator
-        ids.pop(actual[col.lower()], None)
-    dfs = state.default_cols.get(name)
-    if dfs:  # ... and its default
-        dfs.pop(actual[col.lower()], None)
+    c0 = _target_col(base, col, f"ALTER TABLE {name}: no column to drop")
+    state.bind(name, base.drop(c0))
+    # its identity generator or default dies with it
+    state.fills.get(name, {}).pop(c0, None)
 
 
 def _exec_alter_rename_col(
@@ -3815,16 +3860,11 @@ def _exec_alter_rename_col(
 ) -> None:
     name, old_c, new_c = m.groups()
     base = state.existing(name)
-    actual = {c.lower(): c for c in base.columns}
-    if old_c.lower() not in actual:
-        raise ValueError(f"ALTER TABLE {name}: no column {old_c!r} to rename")
-    state.bind(name, base.withColumnRenamed(actual[old_c.lower()], new_c))
-    ids = state.identity_cols.get(name)
-    if ids and actual[old_c.lower()] in ids:
-        ids[new_c] = ids.pop(actual[old_c.lower()])
-    dfs = state.default_cols.get(name)
-    if dfs and actual[old_c.lower()] in dfs:
-        dfs[new_c] = dfs.pop(actual[old_c.lower()])
+    c0 = _target_col(base, old_c, f"ALTER TABLE {name}: no column to rename")
+    state.bind(name, base.withColumnRenamed(c0, new_c))
+    fills = state.fills.get(name, {})
+    if c0 in fills:
+        fills[new_c] = fills.pop(c0)
 
 
 def _exec_ctas_cols(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
@@ -3868,160 +3908,88 @@ def _exec_create_ddl(state: _ScriptState, scope: dict | None, m: re.Match, stmt:
     # Spark parses DDL-format schemas ("a BIGINT, b
     # VARCHAR(32)") directly — Redshift storage clauses were
     # already stripped by the front-end. CHAR/VARCHAR lower
-    # to plain STRING (_ddl_schema).
+    # to plain STRING (_ddl_schema). DEFAULT and
+    # IDENTITY(seed, step) attributes are recorded as the
+    # columns' fills and stripped (fromDDL cannot parse them).
     ddl_body = _normalize_ddl_types(m.group(2))
     state.drop_meta(m.group(1))  # rebind clears
-    defaults = {
-        c: lit for c, _typ, lit in _DEFAULT_ATTR.findall(ddl_body)
-    }
-    if defaults:
-        ddl_body = _DEFAULT_ATTR.sub(r"\1 \2", ddl_body)
-        state.default_cols[m.group(1)] = defaults
-    ids = {
-        c: int(seed)
-        for c, _typ, seed, _step in _IDENTITY_ATTR.findall(ddl_body)
-    }
-    if ids:
-        # IDENTITY(seed, step): record the columns, strip the
-        # attribute (fromDDL cannot parse it). Values
-        # auto-generate on INSERTs that omit the column —
-        # unique and ascending, NOT consecutive, which is
-        # Redshift's own IDENTITY contract (its docs: values
-        # "might not be consecutive").
-        ddl_body = _IDENTITY_ATTR.sub(r"\1 \2", ddl_body)
-        state.identity_cols[m.group(1)] = ids
+    fills: dict[str, int | str] = {c: lit for c, _typ, lit in _DEFAULT_ATTR.findall(ddl_body)}
+    ddl_body = _DEFAULT_ATTR.sub(r"\1 \2", ddl_body)
+    fills.update(
+        (c, int(seed)) for c, _typ, seed, _step in _IDENTITY_ATTR.findall(ddl_body)
+    )
+    ddl_body = _IDENTITY_ATTR.sub(r"\1 \2", ddl_body)
+    if fills:
+        state.fills[m.group(1)] = fills
     state.bind(m.group(1), state.spark.createDataFrame([], schema=_ddl_schema(ddl_body)))
 
 
-def _exec_insert_defaults(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
-    # INSERT INTO t DEFAULT VALUES: one row of declared
-    # defaults (identity generates, unattributed → NULL)
-    name = m.group(1)
-    base = state.existing(name)
-    dflts = state.default_cols.get(name, {})
-    ids = state.identity_cols.get(name, {})
-    exprs = []
-    for f in base.schema.fields:
-        if f.name in ids:
-            prior = base.agg(F.max(f.name)).first()[0]
-            start = ids[f.name] if prior is None else int(prior) + 1
-            exprs.append(F.lit(start).cast(f.dataType).alias(f.name))
-        elif f.name in dflts:
-            exprs.append(F.expr(dflts[f.name]).cast(f.dataType).alias(f.name))
-        else:
-            exprs.append(F.lit(None).cast(f.dataType).alias(f.name))
-    bound = base.unionAll(state.spark.range(1).select(*exprs))
-    if any(_VOLATILE_DEFAULT.search(d) for d in dflts.values()):
-        # a clock default must not re-evaluate per action
-        bound = bound.localCheckpoint(eager=True)
-    state.bind(name, bound)
-    state.last_dml = 1
-    _mark_found_dml(scope, state)
-
-
-def _exec_insert(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
-    name, cols, query = m.group(1), m.group(2), m.group(3)
-    base = state.existing(name)
-    sel = state.spark.sql(query)
-    if cols:
-        listed = [c.strip() for c in cols.split(",")]
+def _insert_rows(
+    state: _ScriptState,
+    scope: dict | None,
+    name: str,
+    base: DataFrame,
+    sel: DataFrame,
+    listed: list[str] | None,
+) -> None:
+    """Append *sel* to *name* (bound to *base*): positionally with a
+    per-column cast, or into the *listed* columns, every other column
+    taking its fill (_fill_unlisted). Each projection is aliased to its
+    target column: several unlisted columns would otherwise all be
+    named `NULL` and break the positional re-select."""
+    pin = False
+    if listed is not None:
         if len(listed) != len(sel.columns):
             raise ValueError(
                 f"INSERT INTO {name}: column list has {len(listed)} "
                 f"names, query returns {len(sel.columns)} columns"
             )
-        # SQL identifiers are case-insensitive: resolve the
-        # listed names against the target schema, loudly.
-        target_by_lower = {f.name.lower(): f.name for f in base.schema.fields}
-        unknown = [c for c in listed if c.lower() not in target_by_lower]
-        if unknown:
-            raise ValueError(
-                f"INSERT INTO {name}: unknown columns {unknown} "
-                f"(table has {list(target_by_lower.values())})"
-            )
         by_name = {
-            target_by_lower[c.lower()]: src for c, src in zip(listed, sel.columns)
+            _target_col(base, c, f"INSERT INTO {name}: unknown columns"): src
+            for c, src in zip(listed, sel.columns)
         }
-        # Alias every projection to the target column name —
-        # multiple unlisted columns would otherwise all be
-        # named `NULL` and break the positional re-select.
-        id_cols = state.identity_cols.get(name, {})
-        filled_identity = False
-
-        def _fill(f):  # unlisted → identity value or NULL
-            nonlocal filled_identity
+        cols = []
+        for f in base.schema.fields:
             if f.name in by_name:
-                return F.col(by_name[f.name])
-            if f.name in id_cols:
-                # unique ascending ids above everything already
-                # in the table (1-row max lookup — metadata
-                # scale, the same legitimate driver-side class
-                # as JDBC partition bounds); within the batch
-                # monotonically_increasing_id is unique.
-                filled_identity = True
-                prior = base.agg(F.max(f.name)).first()[0]
-                start = id_cols[f.name] if prior is None else int(prior) + 1
-                from pyspark.sql import types as T
-
-                if isinstance(
-                    f.dataType, (T.IntegerType, T.ShortType, T.ByteType)
-                ):
-                    # mid() values (partitionId*2^33 + n) wrap
-                    # a narrow column under non-ANSI casts.
-                    # A narrow identity type caps the TABLE at
-                    # the type's own range anyway, so a dense
-                    # scheme (row_number over mono-id — one
-                    # single-partition window, bounded by that
-                    # same range) is both safe and honest.
-                    from pyspark.sql import Window as _W
-
-                    return (
-                        F.row_number().over(
-                            _W.orderBy(F.monotonically_increasing_id())
-                        )
-                        + F.lit(start - 1)
-                    )
-                return F.monotonically_increasing_id() + F.lit(start)
-            if f.name in state.default_cols.get(name, {}):
-                # unlisted + declared DEFAULT → the default
-                # literal, not NULL (Redshift's contract)
-                dflt = state.default_cols[name][f.name]
-                if _VOLATILE_DEFAULT.search(dflt):
-                    filled_identity = True  # clock defaults pin too
-                return F.expr(dflt)
-            return F.lit(None)
-
-        sel = sel.select(
-            *[_fill(f).alias(f.name) for f in base.schema.fields]
-        )
+                cols.append(F.col(by_name[f.name]).alias(f.name))
+                continue
+            val, p = _fill_unlisted(state, name, base, f)
+            pin |= p
+            cols.append(val.alias(f.name))
+        sel = sel.select(*cols)
     delta = _cast_positional(sel, base, name)
-    state.last_dml = delta  # rows inserted (counted on demand)
-    _mark_found_dml(scope, state)
-    bound = base.unionAll(delta)
-    if cols and filled_identity:
-        # pin generated ids: monotonically_increasing_id is
-        # nondeterministic across re-evaluations, and a bound
-        # table is read by every later statement — two
-        # downstream actions must see the SAME ids (the same
-        # reason UPDATE...FROM pins its rowids).
-        bound = bound.localCheckpoint(eager=True)
-    state.bind(name, bound)
+    _commit_dml(state, scope, name, base.unionAll(delta), delta, pin)
+
+
+def _exec_insert_defaults(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
+    # INSERT INTO t DEFAULT VALUES: a column-list INSERT of one row that
+    # lists no column. One partition, so a BIGINT identity's first id is
+    # exactly its start.
+    base = state.existing(m.group(1))
+    one_row = state.spark.range(1, numPartitions=1).select()
+    _insert_rows(state, scope, m.group(1), base, one_row, [])
+
+
+def _exec_insert(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
+    name, cols, query = m.group(1), m.group(2), m.group(3)
+    base = state.existing(name)
+    listed = [c.strip() for c in cols.split(",")] if cols else None
+    _insert_rows(state, scope, name, base, state.spark.sql(query), listed)
 
 
 def _exec_merge(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
-    _run_merge_into(state.spark, state, m.group(1), m.group(2) or m.group(1), m.group(3))
+    tgt_name, tgt_alias = m.group(1), m.group(2) or m.group(1)
+    _lower_merge(state, tgt_name, tgt_alias, _parse_merge(tgt_name, tgt_alias, m.group(3)))
 
 
 def _exec_delete(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:
     spark = state.spark
     name, rest = m.group(1), m.group(2)
-    state.existing(name)  # must exist (loud failure)
+    base = state.existing(name)  # must exist (loud failure)
     if rest is None:
-        state.last_dml = state.existing(name)  # all rows deleted
-        state.bind(name, state.existing(name).limit(0))
-        _mark_found_dml(scope, state)
+        _commit_dml(state, scope, name, base.limit(0), base)  # all rows deleted
     elif um := re.match(r"(?is)^USING\s+(.+)$", rest):
-        # DELETE FROM t USING s [, s2] WHERE cond (r5): the
+        # DELETE FROM t USING s [, s2] WHERE cond: the
         # join-based delete (retention/dedup jobs). A row is
         # deleted when ANY source row satisfies cond —
         # exactly NOT EXISTS for the survivors, which Spark
@@ -4033,34 +4001,18 @@ def _exec_delete(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
                 "condition (an unconditioned delete-all is spelled "
                 "without USING)"
             )
-        # the deleted set, captured (lazily) BEFORE the
-        # rebind so ROW_COUNT sees this statement's view
-        state.last_dml = spark.sql(
-            f"SELECT {name}.* FROM {name} WHERE EXISTS "
-            f"(SELECT 1 FROM {using} WHERE {where})"
-        )
-        state.bind(
-            name,
-            spark.sql(
-                f"SELECT {name}.* FROM {name} WHERE NOT EXISTS "
-                f"(SELECT 1 FROM {using} WHERE {where})"
-            ),
-        )
-        _mark_found_dml(scope, state)
+        exists = f"EXISTS (SELECT 1 FROM {using} WHERE {where})"
+        deleted = spark.sql(f"SELECT {name}.* FROM {name} WHERE {exists}")
+        kept = spark.sql(f"SELECT {name}.* FROM {name} WHERE NOT {exists}")
+        _commit_dml(state, scope, name, kept, deleted)
     elif wm := re.match(r"(?is)^WHERE\s+(.+)$", rest):
         # DELETE removes rows where cond IS TRUE; NULL-cond
         # rows are kept. Through spark.sql so IN/EXISTS
         # subqueries in the predicate resolve.
-        state.last_dml = spark.sql(
-            f"SELECT * FROM {name} WHERE coalesce(({wm.group(1)}), false)"
-        )
-        state.bind(
-            name,
-            spark.sql(
-                f"SELECT * FROM {name} WHERE NOT coalesce(({wm.group(1)}), false)"
-            ),
-        )
-        _mark_found_dml(scope, state)
+        hit = f"coalesce(({wm.group(1)}), false)"
+        deleted = spark.sql(f"SELECT * FROM {name} WHERE {hit}")
+        kept = spark.sql(f"SELECT * FROM {name} WHERE NOT {hit}")
+        _commit_dml(state, scope, name, kept, deleted)
     else:
         raise ValueError(
             f"DELETE FROM {name}: expected WHERE or USING, got {rest[:40]!r}"
@@ -4073,22 +4025,20 @@ def _exec_update(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
     sets_from, cond = _split_top_kw(rest, "WHERE")
     sets, from_text = _split_top_kw(sets_from, "FROM")
     base = state.existing(name)
-    assigned = dict(_split_assignments(sets))
-    unknown = set(assigned) - set(base.columns)
-    if unknown:
-        raise ValueError(f"UPDATE {name}: unknown columns {sorted(unknown)}")
+    assigned = {
+        _target_col(base, c, f"UPDATE {name}: unknown columns"): e
+        for c, e in _split_assignments(sets)
+    }
     if from_text:
         # UPDATE t SET ... FROM s [, s2] WHERE cond — the
         # join-based update every Redshift ETL uses. Semantics
         # matched exactly: each TARGET row updates AT MOST
         # ONCE even when the join matches several source rows
-        # (Redshift leaves which match wins unspecified; we
-        # pick deterministically by ordering on the new
-        # values). Implemented with a synthetic rowid:
-        # localCheckpoint pins the ids so the match join and
-        # the final left join see the SAME rows — without it
-        # a nondeterministic base (e.g. IDENTITY inserts)
-        # could re-evaluate differently per use.
+        # (_one_per_key picks by the new values). Implemented
+        # with a synthetic rowid: localCheckpoint pins the ids
+        # so the match join and the final left join see the
+        # SAME rows — without it a nondeterministic base (e.g.
+        # IDENTITY inserts) could re-evaluate differently per use.
         if cond is None:
             raise ValueError(
                 f"UPDATE {name} ... FROM requires a WHERE join condition "
@@ -4105,21 +4055,8 @@ def _exec_update(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
             f"SELECT {name}.__rid AS __rid, {new_cols} "
             f"FROM {name}, {from_text} WHERE {cond}"
         )
-        from pyspark.sql import Window as _W
-
-        one = (
-            matched.withColumn(
-                "__rn",
-                F.row_number().over(
-                    _W.partitionBy("__rid").orderBy(
-                        *[f"__new_{c}" for c in assigned]
-                    )
-                ),
-            )
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-            .withColumn("__m", F.lit(True))
-        )
+        one = _one_per_key(matched, ["__rid"], [f"__new_{c}" for c in assigned])
+        one = one.withColumn("__m", F.lit(True))
         joined = rid.join(one, "__rid", "left")
         proj = [
             (
@@ -4134,27 +4071,21 @@ def _exec_update(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str
             )
             for f in base.schema.fields
         ]
-        state.last_dml = one.select("__rid")  # target rows updated
-        state.bind(name, joined.select(*proj))
-        _mark_found_dml(scope, state)
+        _commit_dml(state, scope, name, joined.select(*proj), one.select("__rid"))
         return
-    cond = cond or "true"
-    # updated set captured before the rebind (ROW_COUNT)
-    state.last_dml = spark.sql(
-        f"SELECT 1 AS __one FROM {name} WHERE coalesce(({cond}), false)"
-    )
+    hit = f"coalesce(({cond or 'true'}), false)"
+    updated = spark.sql(f"SELECT 1 AS __one FROM {name} WHERE {hit}")
     proj = []
     for f in base.schema.fields:
         if f.name in assigned:
             proj.append(
-                f"CASE WHEN coalesce(({cond}), false) "
+                f"CASE WHEN {hit} "
                 f"THEN CAST(({assigned[f.name]}) AS {f.dataType.simpleString()}) "
                 f"ELSE {f.name} END AS {f.name}"
             )
         else:
             proj.append(f.name)
-    state.bind(name, spark.sql(f"SELECT {', '.join(proj)} FROM {name}"))
-    _mark_found_dml(scope, state)
+    _commit_dml(state, scope, name, spark.sql(f"SELECT {', '.join(proj)} FROM {name}"), updated)
 
 
 def _exec_truncate(state: _ScriptState, scope: dict | None, m: re.Match, stmt: str) -> None:

@@ -434,4 +434,11 @@ def read_with_error_budget(
         .collect()
     )
     bad = spark.createDataFrame(bad_rows, "raw_line string")
-    return df.filter(F.col(corrupt).isNull()).drop(corrupt), bad
+    # The good split is read after the caller unpersists the cache too,
+    # and a column-free consumer (count(*)) would prune its raw scan to
+    # the corrupt-record column alone, which is just as illegal. The
+    # always-true test on the first data column keeps that column in
+    # the scan.
+    first = F.col(tgt.fields[0].name)
+    good = df.filter(F.col(corrupt).isNull() & (first.isNull() | first.isNotNull()))
+    return good.drop(corrupt), bad

@@ -6561,3 +6561,106 @@ def test_apply_runtime_confs_warns_on_unsettable_key(caplog):
     msgs = [r.getMessage() for r in caplog.records if r.name == "sql_redshift_etl_spark.session"]
     assert len(msgs) == 1
     assert "spark.sql.session.timeZone" in msgs[0] and "locked" in msgs[0]
+
+
+@pytest.mark.parametrize(
+    "fmt, content",
+    [
+        ("CSV", "1,a\nnotanint,b\n3,c\n4,d,EXTRA\n"),
+        ("JSON 'auto'", '{"k": 1, "v": "a"}\nTHIS IS NOT JSON\n{"k": 3, "v": "c"}\n'),
+    ],
+    ids=["csv", "json"],
+)
+def test_copy_maxerror_table_counts_after_script(spark, tmp_path, fmt, content):
+    """A MAXERROR-loaded table can be counted after its script ends. The
+    returned frame is collected after the script released the budget
+    cache, and a column-free count must still read a data column, not
+    the corrupt-record column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN)."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    p = tmp_path / ("m.json" if fmt.startswith("JSON") else "m.csv")
+    p.write_text(content)
+    out = run_redshift_script(
+        spark,
+        f"""
+        CREATE TEMP TABLE t (k BIGINT, v VARCHAR(4));
+        COPY t FROM '{p}' {fmt} MAXERROR 5;
+        SELECT count(*) AS n FROM t;
+        """,
+    )
+    assert [tuple(r) for r in out.collect()] == [(2,)]
+
+
+def test_dml_column_names_are_case_insensitive(spark):
+    """Every script DML statement resolves the columns it names the way
+    SQL does, case-insensitively: UPDATE, UPDATE ... FROM, INSERT with a
+    column list, and MERGE's ON, SET and INSERT lists."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    out = run_redshift_script(
+        spark,
+        """
+        CREATE TEMP TABLE t (k BIGINT, amt BIGINT);
+        INSERT INTO t (K, AMT) VALUES (1, 10), (2, 20), (3, 30);
+        UPDATE t SET AMT = 99 WHERE k = 1;
+        CREATE TEMP TABLE s (k BIGINT, amt BIGINT);
+        INSERT INTO s VALUES (2, 7), (4, 40);
+        UPDATE t SET Amt = s.amt FROM s WHERE t.k = s.k;
+        MERGE INTO t USING s ON t.K = s.K
+        WHEN MATCHED THEN UPDATE SET AMT = t.amt + s.AMT
+        WHEN NOT MATCHED THEN INSERT (K, AMT) VALUES (s.k, s.amt);
+        SELECT k, amt FROM t ORDER BY k;
+        """,
+    )
+    assert [tuple(r) for r in out.collect()] == [(1, 99), (2, 14), (3, 30), (4, 40)]
+
+
+@pytest.mark.parametrize(
+    "ddl, seed",
+    [
+        ("k BIGINT, v VARCHAR(10), tier VARCHAR(8) DEFAULT 'STD'", None),
+        ("id BIGINT IDENTITY(5,1), k BIGINT, v VARCHAR(10)", 5),
+        ("id INT IDENTITY(7,1), k BIGINT, v VARCHAR(10)", 7),
+    ],
+    ids=["default", "bigint_identity", "int_identity"],
+)
+def test_merge_insert_fills_like_insert(spark, ddl, seed):
+    """A column that MERGE's NOT MATCHED INSERT does not list takes the
+    fill INSERT gives it, never NULL: the DEFAULT, or an IDENTITY id
+    that is unique, at least the seed, and the same on every read."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    prelude = f"""
+        CREATE TEMP TABLE tgt ({ddl});
+        INSERT INTO tgt (k, v) VALUES (1, 'a');
+        CREATE TEMP TABLE src (k BIGINT, v VARCHAR(10));
+        INSERT INTO src VALUES (1, 'A'), (2, 'B'), (3, 'C');
+    """
+    merged = run_redshift_script(
+        spark,
+        prelude
+        + """
+        MERGE INTO tgt USING src ON tgt.k = src.k
+        WHEN MATCHED THEN UPDATE SET v = src.v
+        WHEN NOT MATCHED THEN INSERT (k, v) VALUES (src.k, src.v);
+        SELECT * FROM tgt;
+        """,
+    )
+    inserted = run_redshift_script(
+        spark,
+        prelude
+        + """
+        UPDATE tgt SET v = src.v FROM src WHERE tgt.k = src.k;
+        INSERT INTO tgt (k, v) SELECT k, v FROM src WHERE k > 1;
+        SELECT * FROM tgt;
+        """,
+    )
+    first, second = merged.collect(), merged.collect()
+    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
+    cols = [c for c in merged.columns if c != "id"]
+    assert sorted(tuple(r[c] for c in cols) for r in first) == sorted(
+        tuple(r[c] for c in cols) for r in inserted.collect()
+    )
+    if seed is not None:
+        ids = [r.id for r in first]
+        assert None not in ids and len(set(ids)) == len(ids) and min(ids) >= seed

@@ -6,7 +6,8 @@ empty, ~121 ms with one shuffle stage). This tool attributes that floor
 PER QUERY: it runs each bench query as one noop-sink action and counts
 the Spark jobs and stages the action spawns (via the status tracker), so
 "cut stages per query" work targets the worst offenders instead of
-guessing.
+guessing. The session, staging and counting are capture_plans'
+``staged_session`` and ``timed_capture``.
 
 Usage: python tools/job_floor_audit.py [sf_dir]
 """
@@ -15,46 +16,23 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
+from capture_plans import staged_session, timed_capture  # noqa: E402
+
 from sql_redshift_etl_spark.plans.registry import all_queries  # noqa: E402
-from sql_redshift_etl_spark.session import get_spark  # noqa: E402
-from sql_redshift_etl_spark.staging import stage_inputs  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark("job-floor-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    target = os.path.join(REPO_ROOT, "_scratch", "bench_staged", os.path.basename(sf_dir.rstrip("/")))
-    data_dir = stage_inputs(spark, sf_dir, target)
-
-    tracker = spark.sparkContext.statusTracker()
+    spark, data_dir = staged_session("job-floor-audit", sf_dir)
     bench = {n: q for n, q in all_queries().items() if q.bench}
     print(f"{'query':34s} {'jobs':>4s} {'stages':>6s} {'steady_s':>8s}")
     for name, q in sorted(bench.items()):
-        df = q.builder(spark, data_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm/compile
-        spark.sparkContext.setJobGroup(name, name)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        job_ids = tracker.getJobIdsForGroup(name) or []
-        n_jobs = len(job_ids) // 3  # 3 identical runs
-        n_stages = 0
-        for jid in job_ids[: n_jobs or len(job_ids)]:
-            info = tracker.getJobInfo(jid)
-            if info:
-                n_stages += len(info.stageIds)
-        spark.sparkContext.setJobGroup(None, None)
-        print(f"{name:34s} {n_jobs:4d} {n_stages:6d} {best:8.3f}")
+        r = timed_capture(spark, q.builder(spark, data_dir), os.devnull, name)
+        print(f"{name:34s} {r['jobs']:4d} {r['stages']:6d} {r['steady_s']:8.3f}")
     spark.stop()
 
 
