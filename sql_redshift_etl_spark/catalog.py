@@ -6,17 +6,48 @@ under an sf directory. ``load_table`` normalizes the one physical quirk
 (events.ts is TIMESTAMP(NANOS) which Spark 4 reads as bigint under
 ``nanosAsLong``) so every downstream operator sees clean Spark types.
 
-Scale note: these loaders are plain ``spark.read.parquet`` — at 100 TB the
+Schema cache. A plain ``spark.read.parquet`` fires one Spark job to infer
+the schema from the footers, on every call. ``read_parquet`` keeps the
+``StructType`` Spark inferred, so only the first load of a path pays that
+job: a repeat load reads with ``spark.read.schema(cached).parquet(path)``,
+which fires none. ``load_table`` (and so ``register_views``) and the
+stream reader's schema probe read through it.
+
+- Key: the SparkContext's ``applicationId``, the resolved path and the
+  values of the confs that shape parquet inference (``_INFERENCE_CONFS``),
+  so a session with other confs (a foreign, vanilla one) never receives
+  a schema inferred under ours.
+- Value: a listing fingerprint, the sorted (path, size, mtime_ns) of
+  every data file under the path (``scale.list_data_files``), plus the
+  schema. Every call lists the path again (no job); a fingerprint that
+  differs (a touched, rewritten or re-staged table) re-infers and
+  replaces the entry, so there is one entry per (app, path, confs).
+- A path pyarrow cannot list (e.g. ``s3a://``) logs a WARNING and infers
+  as before; each miss logs its reason at DEBUG.
+- The cached schema is Spark's own inference, partition columns
+  included, so the scan is the same one inference plans: same
+  ``ReadSchema``, pushed filters and partition discovery (the directory
+  listing still runs; only the footer-reading job is skipped).
+
+Scale note: these loaders are plain parquet reads — at 100 TB the
 same call reads a partitioned directory tree and Catalyst does partition
 pruning + predicate pushdown; nothing here assumes single files.
 """
 
 from __future__ import annotations
 
+import logging
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from sql_redshift_etl_spark.scale import list_data_files
 from sql_redshift_etl_spark.session import apply_runtime_confs
+
+_log = logging.getLogger(__name__)
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -31,6 +62,42 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
+# SQL confs whose values change the schema Spark infers from parquet.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (applicationId, resolved path) -> {inference conf values: (fingerprint, schema)}
+_SCHEMAS: dict[tuple[str, str], dict[tuple, tuple[tuple, StructType]]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    cache has none for the path's current listing and inference confs
+    (see the module docstring); a hit reads with the cached schema and
+    fires no job. The listing is taken before inference, so files
+    replaced mid-inference leave an entry the next call re-infers."""
+    try:
+        _, files = list_data_files(path)
+    except Exception as exc:
+        _log.warning("cannot list %s, inferring its schema: %r", path, exc)
+        return spark.read.parquet(path)
+    fingerprint = tuple(sorted((f.path, f.size, f.mtime_ns) for f in files))
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    resolved = path if urlparse(path).scheme else os.path.abspath(path)
+    entries = _SCHEMAS.setdefault((spark.sparkContext.applicationId, resolved), {})
+    hit = entries.get(confs)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    reason = "listing changed" if hit else "confs changed" if entries else "new path"
+    _log.debug("schema cache miss for %s (%s): inferring", resolved, reason)
+    df = spark.read.parquet(path)
+    entries[confs] = (fingerprint, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,7 +111,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ns→µs conversion here is lossless and oracle-exact.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

@@ -2506,8 +2506,9 @@ def _merge_replace(
             for f in target.schema.fields
         ]
     )
+    # a USING join lists the key first: project back to the target's order
     survivors = target.join(one.select(*key_cols), on=key_cols, how="left_anti")
-    state.bind(tgt_name, survivors.unionByName(repl))
+    state.bind(tgt_name, survivors.select(*target.columns).unionByName(repl))
 
 
 # --- the worklist and its tables -------------------------------------------

@@ -13,9 +13,15 @@ cannot fix:
 from __future__ import annotations
 
 import logging
+import os
+from typing import TYPE_CHECKING
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from pyarrow import fs
 
 _log = logging.getLogger(__name__)
 
@@ -94,36 +100,49 @@ def repartition_for_join(df: DataFrame, key: str, num_partitions: int | None = N
     return df.repartition(num_partitions, key) if num_partitions else df.repartition(key)
 
 
+def list_data_files(path: str) -> tuple[fs.FileSystem, list[fs.FileInfo]]:
+    """The filesystem of ``path`` (a file or a directory tree, local path
+    or filesystem URI) and the ``pyarrow.fs.FileInfo`` of every data file
+    under it, in listing order, with no Spark job. A directory's files
+    skip any name under a hidden component (``.``/``_`` prefix: Spark's
+    ``_SUCCESS``, ``.crc`` and ``_temporary`` files). Raises when the
+    path is missing or its scheme has no pyarrow filesystem."""
+    from pyarrow import fs
+
+    if urlparse(path).scheme:
+        filesystem, root = fs.FileSystem.from_uri(path)
+    else:
+        filesystem, root = fs.LocalFileSystem(), os.path.abspath(path)
+    info = filesystem.get_file_info(root)
+    if info.type == fs.FileType.NotFound:
+        raise FileNotFoundError(path)
+    if info.type != fs.FileType.Directory:
+        return filesystem, [info]
+    files = [
+        f
+        for f in filesystem.get_file_info(fs.FileSelector(root, recursive=True))
+        if f.is_file
+        and not any(p.startswith((".", "_")) for p in f.path[len(root):].split("/"))
+    ]
+    return filesystem, files
+
+
 def parquet_total_rows(path: str) -> int | None:
-    """Driver-side parquet-footer row count (file or directory of part
-    files, local path or filesystem URI) — zero Spark jobs, reads only
-    footers. None when the path isn't plain readable parquet (callers
+    """Driver-side parquet-footer row count over ``list_data_files``
+    (the files a Spark scan of ``path`` reads) — zero Spark jobs, reads
+    only footers. None when the path isn't plain readable parquet (callers
     fall back to their Spark-side check), with a WARNING naming the path
     and the error. This is the engine's substitute for table statistics:
     ``ANALYZE ... FOR ALL COLUMNS`` deterministically crashes Spark
     4.1.2 on TimestampNTZ column stats (r13 CBO A/B), so tier-dependent
     plan decisions key off footer row counts instead."""
-    from urllib.parse import urlparse
-
     try:
         import pyarrow.parquet as pq
-        from pyarrow import fs
 
-        if urlparse(path).scheme:
-            filesystem, root = fs.FileSystem.from_uri(path)
-        else:
-            filesystem, root = fs.LocalFileSystem(), path
-        files = [root]
-        if filesystem.get_file_info(root).type == fs.FileType.Directory:
-            selector = fs.FileSelector(root, recursive=True)
-            files = [
-                f.path
-                for f in filesystem.get_file_info(selector)
-                if f.is_file and f.path.endswith(".parquet")
-            ]
+        filesystem, files = list_data_files(path)
         total = 0
         for f in files:
-            with filesystem.open_input_file(f) as fh:
+            with filesystem.open_input_file(f.path) as fh:
                 total += pq.read_metadata(fh).num_rows
         return total
     except Exception as exc:

@@ -16,9 +16,11 @@ on identical bytes, not layout-vs-layout.
 
 Job budget. Staging is set-up latency paid before the first query, so it
 fires as few Spark jobs as the layout allows: per table, 1 schema job
-(``load_table``'s parquet footer read) plus 1 write job, or 2 when the
-table is split. The row count that sizes the split comes from the parquet
-footers (``scale.parquet_total_rows``, no job); ``df.count()`` runs only
+(``load_table``'s parquet footer read, paid once per source path: the
+catalog's schema cache serves every later load of an unchanged file in
+the same session) plus 1 write job, or 2 when the table is split. The
+row count that sizes the split comes from the parquet footers
+(``scale.parquet_total_rows``, no job); ``df.count()`` runs only
 when the footers cannot be read. A single-part table is written through
 ``coalesce(1)``: ``repartition(1)`` would plan an Exchange SinglePartition
 whose map stage is a second job (under AQE) and produces the same file in

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sql_redshift_etl_spark.catalog import read_parquet
 from sql_redshift_etl_spark.session import apply_runtime_confs
 
 _log = logging.getLogger(__name__)
@@ -99,13 +100,13 @@ def read_events_stream(
     would silently match zero files in the directory layout, hence the
     branch). The layout probe uses the Hadoop FileSystem API so any
     scheme (s3a://, hdfs://) resolves, not just local paths. The static
-    schema a stream needs is probed from the parquet footer via the
-    batch reader: TIMESTAMP(NANOS) fixtures arrive as bigint under
-    nanosAsLong and are normalized; standard µs-timestamp files pass
-    through unchanged."""
+    schema a stream needs is Spark's own parquet inference, read through
+    the catalog's schema cache (``catalog.read_parquet``):
+    TIMESTAMP(NANOS) fixtures arrive as bigint under nanosAsLong and are
+    normalized; standard µs-timestamp files pass through unchanged."""
     apply_runtime_confs(spark)
     path = f"{sf_dir}/events.parquet"
-    physical = spark.read.parquet(path).schema
+    physical = read_parquet(spark, path).schema
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -74,6 +74,27 @@ def pytest_runtest_call(item):
         signal.signal(signal.SIGALRM, prev)
 
 
+def jobs_fired(spark, fn):
+    """(fn(), the number of Spark jobs it fired), read from the status
+    store after the listener bus drains, so jobs on any thread count.
+    Active streams are stopped first: their jobs would be counted too."""
+    for q in spark.streams.active:
+        q.stop()
+
+    def job_ids() -> set[int]:
+        ssc = spark.sparkContext._jsc.sc()
+        ssc.listenerBus().waitUntilEmpty()
+        it = ssc.statusStore().jobsList(None).iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().jobId())
+        return ids
+
+    before = job_ids()
+    out = fn()
+    return out, len(job_ids() - before)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from sql_redshift_etl_spark.session import get_spark

@@ -356,3 +356,37 @@ def test_quote_scanners_are_not_copied():
         "functions that scan SQL quotes or count parens themselves; use "
         f"the shared scanners in redshift_sql instead: {copies}"
     )
+
+
+# Reads of files the engine itself wrote moments earlier (the streaming
+# upserts' generation files): never a fixture table, so no cached schema.
+_PARQUET_READ_ALLOWED = {
+    ("streaming/queries.py", "spark.read.parquet(gen_paths[(state['gen'] - 1) % 2])"): 4,
+}
+
+
+def test_parquet_reads_go_through_the_catalog():
+    """A bare ``.read.parquet(path)`` fires a schema-inference job on
+    every call; table loads go through ``catalog.load_table`` or
+    ``catalog.read_parquet``, which pay it once per path."""
+    from collections import Counter
+    from pathlib import Path
+
+    import sql_redshift_etl_spark
+
+    root = Path(sql_redshift_etl_spark.__file__).parent
+    reads = Counter(
+        (str(path.relative_to(root)), ast.unparse(node))
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "catalog.py" or path.parent != root
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
+    )
+    assert reads == Counter(_PARQUET_READ_ALLOWED), (
+        f"parquet reads outside catalog.py that bypass its schema cache "
+        f"(allowed: {_PARQUET_READ_ALLOWED}): {dict(reads)}"
+    )

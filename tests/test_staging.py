@@ -16,29 +16,15 @@ from py4j.protocol import Py4JJavaError
 from sql_redshift_etl_spark.catalog import TABLES, load_table
 from sql_redshift_etl_spark.scale import parquet_total_rows
 from sql_redshift_etl_spark.staging import ROWS_PER_PART, stage_inputs
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_fired
 
 PARTS_AT_SF0001 = {"documents": 4, "embeddings": 8}
 # per table: 1 schema job + 1 write job, +1 map-stage job per split table
 JOB_BUDGET = 2 * len(TABLES) + 2
 
 
-def _job_ids(spark) -> set[int]:
-    ssc = spark.sparkContext._jsc.sc()
-    ssc.listenerBus().waitUntilEmpty()
-    it = ssc.statusStore().jobsList(None).iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next().jobId())
-    return ids
-
-
 def _stage_counting_jobs(spark, src: str, dst: str, **kw) -> int:
-    for q in spark.streams.active:  # a live stream's jobs would be counted too
-        q.stop()
-    before = _job_ids(spark)
-    stage_inputs(spark, src, dst, **kw)
-    return len(_job_ids(spark) - before)
+    return jobs_fired(spark, lambda: stage_inputs(spark, src, dst, **kw))[1]
 
 
 def _snapshot(dst: str) -> dict[str, tuple[int, int]]:

@@ -1850,6 +1850,27 @@ def test_script_merge_remove_duplicates(spark):
         )
 
 
+def test_script_merge_remove_duplicates_keeps_column_order(spark):
+    """REMOVE DUPLICATES on a key that is not the target's first column
+    keeps the target's column order, so a later positional INSERT lands
+    in the right columns."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    out = run_redshift_script(
+        spark,
+        """
+        CREATE TEMP TABLE tgt (v VARCHAR(8), k BIGINT);
+        INSERT INTO tgt VALUES ('a', 1), ('b', 2);
+        CREATE TEMP TABLE s AS SELECT * FROM tgt WHERE k = 2;
+        MERGE INTO tgt USING s ON tgt.k = s.k REMOVE DUPLICATES;
+        INSERT INTO tgt VALUES ('c', 3);
+        SELECT * FROM tgt;
+        """,
+    )
+    assert out.columns == ["v", "k"]
+    assert sorted(tuple(r) for r in out.collect()) == [("a", 1), ("b", 2), ("c", 3)]
+
+
 def test_script_alter_column_ddl(spark):
     """ALTER TABLE ADD/DROP/RENAME COLUMN (r6): added columns backfill
     with the DEFAULT (or NULL), drops and renames resolve

@@ -2,7 +2,10 @@
 """Dump explain('formatted') + noop-sink steady timing + job count for a
 list of registered queries — the generic before/after capture used for
 the r14 plan evidence under plans/r14/. ``timed_capture`` is the shared
-harness (also used by tools/bounded_sort_sweep_audit.py).
+harness (also used by tools/bounded_sort_sweep_audit.py). ``build_jobs``
+is the number of Spark jobs the builder call itself fired (schema
+inference, script statements, stream batches), read from the status
+store so jobs on every thread count.
 
 Usage: python tools/capture_plans.py before|after q1 q2 ... [--sf=sf_dir] [--n=3]
 """
@@ -64,6 +67,17 @@ def timed_capture(spark, df, plan_path: str, group: str, n_timed: int = 3) -> di
     return {"jobs": n_jobs, "stages": n_stages, "steady_s": round(best, 4), "plan": plan}
 
 
+def job_ids(spark) -> set[int]:
+    """Ids of every job the status store has seen, after the listener bus drains."""
+    ssc = spark.sparkContext._jsc.sc()
+    ssc.listenerBus().waitUntilEmpty()
+    it = ssc.statusStore().jobsList(None).iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
 def main() -> None:
     mode = sys.argv[1]
     assert mode in ("before", "after"), mode
@@ -81,11 +95,16 @@ def main() -> None:
     spark, data_dir = staged_session("capture-plans", sf_dir)
     qs = all_queries()
     for name in names:
+        before = job_ids(spark)
         df = qs[name].builder(spark, data_dir)
+        build_jobs = len(job_ids(spark) - before)
         r = timed_capture(
             spark, df, os.path.join(out_dir, f"{name}_{mode}.txt"), f"{name}-{mode}", n_timed
         )
-        print(f"{name:34s} jobs={r['jobs']} stages={r['stages']} steady={r['steady_s']:.3f}")
+        print(
+            f"{name:34s} build_jobs={build_jobs} jobs={r['jobs']} stages={r['stages']} "
+            f"steady={r['steady_s']:.3f}"
+        )
     spark.stop()
 
 
