@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines (SURVEY.md §2.9
 L1/L2): exact (content/bag hash), MinHash+LSH, SimHash, n-gram Jaccard,
-and embedding-cosine near-dup.
+embedding-cosine near-dup and exact-substring spans.
 
 Design for 100 TB:
 - Exact dedup = hash → groupBy: one shuffle on the 16-byte fingerprint,
@@ -11,6 +11,19 @@ Design for 100 TB:
 - All hashing is md5 (identical across engines/languages), making even
   the LSH pipeline oracle-checkable — engine-specific hashes
   (xxhash64/FNV) would break both the oracle and cross-system reruns.
+
+Shared core: every near-dup query is a candidate filter plus a verifier,
+and each building block is defined once per engine side.
+- Spark: ``_minhash_bands`` and ``_sign_bands`` build the LSH band
+  relations, ``banded_candidates`` caps and self-joins them,
+  ``_jaccard_verify`` scores shingle-set candidates and ``_jaccard_tail``
+  applies the 0.5 threshold and rounding, ``near_dup_survivors`` turns
+  pairs into the deduplicated corpus, ``_substr_hits`` finds the
+  duplicated windows, and ``similarity._dot`` is the dot product.
+- DuckDB: ``minhash_pairs_oracle`` (the LSH pair pipeline),
+  ``_CLUSTER_LABEL_CTES`` (sym, l0 and the label rounds),
+  ``_DUCK_SUBSTR_DUP`` (w, wins, dup) with ``_DUCK_SPAN_ISLANDS``
+  (flagged, isl, spans), ``similarity.duck_cosine`` and ``BAG_FP_ORACLE``.
 """
 
 from __future__ import annotations
@@ -19,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_redshift_etl_spark.catalog import load_table
+from sql_redshift_etl_spark.llm.similarity import (
+    _dot,
+    duck_cosine,
+    duck_plane_bits,
+    sign_signature_col,
+)
 from sql_redshift_etl_spark.plans.registry import register
+from sql_redshift_etl_spark.scale import parquet_total_rows
 
 N_MINHASH = 8  # minhash permutations (32-bit slices of seeded md5 digests)
 N_BANDS = 4  # LSH bands of 2 rows each
@@ -45,11 +65,7 @@ _DUCK_SHINGLES = (
 )
 
 
-# Normalized bag-of-words fingerprint — ONE definition per engine side,
-# shared by dedup_exact_groups, dedup_keep_canonical, and the end-to-end
-# corpus pipeline (llm/pipeline_e2e): a change to the normalization
-# cannot silently diverge between the standalone queries and the
-# composite ledger.
+# Normalized bag-of-words fingerprint.
 BAG_FP_ORACLE = "md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))"
 
 
@@ -141,9 +157,7 @@ def _minhash_duck_expr(s: int) -> str:
 
 def minhash_pairs_oracle(docs_rel: str = "documents") -> str:
     """The full MinHash+LSH near-dup-pair pipeline as DuckDB SQL over an
-    arbitrary documents relation/CTE (must expose doc_id, text) — shared
-    by the standalone queries below and the end-to-end corpus pipeline
-    (llm/pipeline_e2e.py), so both engines' LSH stays ONE definition."""
+    arbitrary documents relation/CTE (must expose doc_id, text)."""
     return _MINHASH_ORACLE_TEMPLATE.format(docs_rel=docs_rel)
 
 
@@ -224,9 +238,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_sets(d: DataFrame) -> DataFrame:
     """(doc_id, n_sh, sh_set) — the distinct 3-gram shingle set, derived
     ROW-LOCALLY (split + transform + array_distinct; no md5, no
-    shuffle). Shared by the signature derivation below and the verify
-    branch of minhash_lsh_pairs_df, which re-derives it per consumer
-    instead of shuffling the sets (see its Perf notes)."""
+    shuffle), so the verify side of minhash_lsh_pairs_df re-derives it
+    per consumer instead of shuffling the sets."""
     shingles = F.array_distinct(F.expr(_SPARK_SHINGLES))
     return (
         d.select("doc_id", F.split("text", " ").alias("w"))
@@ -241,21 +254,21 @@ def _minhash_signatures(d: DataFrame, repartition: bool = True) -> DataFrame:
 
     ``repartition=False`` skips the materialization exchange — for
     single-consumer callers, the stage decomposition in
-    tools/residual_profile.py, and the r10 pipeline callers that drop
-    the set columns BEFORE adding their own slim repartition (see
-    minhash_lsh_pairs_df); multi-consumer callers that keep the default
-    get the exchange as their shared materialization point.
+    tools/residual_profile.py, and lsh_band_buckets, which drops the set
+    columns BEFORE adding its own slim repartition; multi-consumer
+    callers that keep the default get the exchange as their shared
+    materialization point.
 
-    Perf notes (all measured at sf0.1, staged layout): the r1 shape
-    exploded shingles and aggregated MIN/collect_set per doc_id — a
-    600k-row shuffle; this shape signs row-locally and shuffles ONE
-    compact row per doc. The explicit repartition is load-bearing: it
-    is the materialization point the downstream consumers (band
-    self-join sides; pre-r10, also the verify set lookups) reuse —
-    without it Catalyst inlines the md5 transforms into every consumer
-    (measured 5.8 s at sf0.01 vs 0.3 s with the exchange). Also
-    measured: the md5 wrap around band values added nothing (equality
-    on m_i pairs is equality either way — plain concat keys now)."""
+    Perf notes (all measured at sf0.1, staged layout): exploding
+    shingles and aggregating MIN/collect_set per doc_id was a 600k-row
+    shuffle; this shape signs row-locally and shuffles ONE compact row
+    per doc. The explicit repartition is load-bearing: it is the
+    materialization point the downstream consumers (band self-join
+    sides) reuse — without it Catalyst inlines the md5 transforms into
+    every consumer (measured 5.8 s at sf0.01 vs 0.3 s with the
+    exchange). Also measured: the md5 wrap around band values added
+    nothing (equality on m_i pairs is equality either way — plain
+    concat keys now)."""
     base = _shingle_sets(d).drop("n_sh")
 
     def _md5_arr(seed: int) -> F.Column:
@@ -285,20 +298,33 @@ def _minhash_signatures(d: DataFrame, repartition: bool = True) -> DataFrame:
     return signed.repartition(F.col("doc_id")) if repartition else signed
 
 
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_val) from a signature relation: band b is
+    the concat of m(2b) and m(2b+1)."""
+    band_vals = F.array(
+        *[F.concat(F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")) for b in range(N_BANDS)]
+    )
+    return sig.select("doc_id", F.posexplode(band_vals).alias("band_idx", "band_val"))
+
+
 def lsh_band_buckets(d: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_val) — the LSH band relation on its own,
-    for bucket-size audits (tools/lsh_band_audit.py) and the hot-band
-    cap measurements in docs/SCALE.md. Same r10 projection rule as
-    minhash_lsh_pairs_df: the shingle sets never ride the exchange."""
+    """(doc_id, band_idx, band_val) over a documents frame — the band
+    relation minhash_lsh_pairs_df self-joins, also read on its own by
+    bucket-size audits (tools/lsh_band_audit.py, docs/SCALE.md).
+
+    The signature exchange carries ONLY (doc_id, m0..m7) — ~100 B/doc —
+    instead of riding the corpus-dominant shingle sets through the
+    shuffle (tools/residual_profile.py, sf0.1 staged: 0.83-0.96 s →
+    0.75-0.76 s steady, 5 → 4 jobs, identical rows). At 100 TB the
+    exchange shrinks ~10× always; the sets move over the network ONLY if
+    AQE shuffle-joins the verify (candidate-heavy corpora, where
+    upstream exact dedup + band_cap are prescribed)."""
     sig = (
         _minhash_signatures(d, repartition=False)
         .drop("sh_set", "n_sh")
         .repartition(F.col("doc_id"))
     )
-    band_vals = F.array(
-        *[F.concat(F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")) for b in range(N_BANDS)]
-    )
-    return sig.select("doc_id", F.posexplode(band_vals).alias("band_idx", "band_val"))
+    return _minhash_bands(sig)
 
 
 def banded_candidates(
@@ -310,14 +336,13 @@ def banded_candidates(
     carry: list[str] | None = None,
 ) -> DataFrame:
     """Candidate pairs from a (id, band_idx, band_val[, payload...])
-    relation — the ONE implementation of LSH banding's cap + self-join,
-    shared by the MinHash path (minhash_lsh_pairs_df) and the embedding
-    sign-LSH path (embedding_ann_candidates) so cap semantics cannot
-    drift between them. When ``band_cap`` is set, band buckets holding
-    > cap ids are EXCLUDED before the self-join (the literal ``WHERE
-    n <= cap``), bounding the worst bucket at cap² candidate pairs.
+    relation: LSH banding's cap + self-join for both the MinHash and the
+    sign-LSH bands, so cap semantics cannot drift between them. When
+    ``band_cap`` is set, band buckets holding > cap ids are EXCLUDED
+    before the self-join (the literal ``WHERE n <= cap``), bounding the
+    worst bucket at cap² candidate pairs.
 
-    ``carry`` (r5): payload columns present in ``bands`` to surface on
+    ``carry``: payload columns present in ``bands`` to surface on
     both sides as ``<col>_a``/``<col>_b``, WITHOUT the trailing
     ``.distinct()`` (the caller scores first, then distincts the small
     scored relation). This is the 100 TB verify shape: carrying vectors
@@ -363,8 +388,7 @@ def banded_candidates(
 
 def minhash_lsh_pairs_df(d: DataFrame, band_cap: int | None = None) -> DataFrame:
     """The LSH pipeline over an arbitrary documents frame (doc_id, text)
-    — the Spark twin of ``minhash_pairs_oracle``; reused by the
-    end-to-end corpus pipeline on its quality-filtered subset.
+    — the Spark twin of ``minhash_pairs_oracle``.
 
     ``band_cap``: hot-band guard for boilerplate-heavy corpora (off by
     default — the registered queries are oracle-matched without it, and
@@ -379,29 +403,7 @@ def minhash_lsh_pairs_df(d: DataFrame, band_cap: int | None = None) -> DataFrame
     near-dup verifier through its OTHER 3 bands unless those are
     equally hot — the recall loss is confined to pairs whose every
     other band misses, P = (1-J²)³ per excluded band."""
-    # r10 (the bench-drift profile, tools/residual_profile.py): the
-    # signature exchange now carries ONLY (doc_id, m0..m7) — ~100 B/doc
-    # — instead of riding the full shingle sets (the corpus-dominant
-    # bytes) through the shuffle; the verify branch re-derives the sets
-    # row-locally per consumer (_shingle_sets — md5-free, no shuffle).
-    # Measured at sf0.1 staged: 0.83-0.96 s → 0.75-0.76 s steady, 5 → 4
-    # jobs, identical rows. At 100 TB the exchange shrinks ~10× always;
-    # the sets move over the network ONLY if AQE shuffle-joins the
-    # verify (candidate-heavy corpora — where they'd shuffle once per
-    # verify side vs once total for the old fat exchange; that regime
-    # is exactly where upstream exact dedup + band_cap are prescribed,
-    # and the common post-filter corpus keeps candidates broadcast-small
-    # so the sets never shuffle at all).
-    sig = (
-        _minhash_signatures(d, repartition=False)
-        .drop("sh_set", "n_sh")
-        .repartition(F.col("doc_id"))
-    )
-    band_vals = F.array(
-        *[F.concat(F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")) for b in range(N_BANDS)]
-    )
-    bands = sig.select("doc_id", F.posexplode(band_vals).alias("band_idx", "band_val"))
-    cand = banded_candidates(bands, "doc_id", "doc_a", "doc_b", band_cap=band_cap)
+    cand = banded_candidates(lsh_band_buckets(d), "doc_id", "doc_a", "doc_b", band_cap=band_cap)
     # No broadcast hint on cand: candidates GROW with the corpus (10×
     # docs → ≥10× pairs), so a forced broadcast is a scale cliff — it
     # OOMs the moment the pair table outgrows driver memory (reproduced
@@ -409,31 +411,36 @@ def minhash_lsh_pairs_df(d: DataFrame, band_cap: int | None = None) -> DataFrame
     # while it is actually small (verified: identical executed plan at
     # sf0.1 with and without the hint) and falls back to a shuffle join
     # on doc id when it is not — which is the right plan at that size.
-    sets_ = _shingle_sets(d)
+    return _jaccard_verify(cand, _shingle_sets(d))
+
+
+def _jaccard_verify(cand: DataFrame, sets_: DataFrame) -> DataFrame:
+    """Exact Jaccard of candidate pairs (doc_a, doc_b) over shingle sets
+    (doc_id, n_sh, sh_set): both sets join onto the candidates and
+    intersect in place — candidates only, never a full shingle relation
+    (P[band hit] = J², so false candidates stay rare)."""
+
+    def side(s: str) -> DataFrame:
+        return sets_.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("n_sh").alias(f"n{s}"),
+            F.col("sh_set").alias(f"set_{s}"),
+        )
+
     verified = (
-        cand
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("n_sh").alias("na"),
-                F.col("sh_set").alias("set_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("n_sh").alias("nb"),
-                F.col("sh_set").alias("set_b"),
-            ),
-            "doc_b",
-        )
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
         .withColumn("n_common", F.size(F.array_intersect("set_a", "set_b")))
     )
+    return _jaccard_tail(verified)
+
+
+def _jaccard_tail(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the rows of (doc_a, doc_b, n_common,
+    na, nb) whose Jaccard is >= 0.5, rounded to 6 places."""
     jaccard = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        verified.where(jaccard >= 0.5)
-        .select("doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard"))
+    return pairs.where(jaccard >= 0.5).select(
+        "doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard")
     )
 
 
@@ -450,9 +457,7 @@ def minhash_incremental_pairs_df(corpus: DataFrame, delta: DataFrame) -> DataFra
     full corpus self-join a from-scratch run pays. Here both sides
     derive from the fixture in one plan (the driver contract has no
     cross-run store), but the corpus-signature subtree is exactly the
-    cacheable input a production run would persist as parquet.
-    Verification is the same candidates-only shingle intersection as
-    minhash_lsh_pairs_df."""
+    cacheable input a production run would persist as parquet."""
     return minhash_incremental_pairs_from_sigs(
         _minhash_signatures(corpus), _minhash_signatures(delta)
     )
@@ -463,16 +468,11 @@ def minhash_incremental_pairs_from_sigs(sig_c: DataFrame, sig_d: DataFrame) -> D
     corpus SIGNATURE relation directly (in production a stored parquet
     table — tools/incremental_ingest_ab.py measures exactly that) plus
     the freshly-signed delta."""
-
-    def _bands(sig: DataFrame) -> DataFrame:
-        band_vals = F.array(
-            *[F.concat(F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")) for b in range(N_BANDS)]
-        )
-        return sig.select("doc_id", F.posexplode(band_vals).alias("band_idx", "band_val"))
-
-    bands_all = _bands(sig_c).unionByName(_bands(sig_d))
+    bands_all = _minhash_bands(sig_c).unionByName(_minhash_bands(sig_d))
+    # delta × (corpus ∪ delta), not a self-join: ids compare with !=
+    # and each pair is ordered after the join
     cand = (
-        _bands(sig_d)
+        _minhash_bands(sig_d)
         .alias("a")
         .join(
             bands_all.alias("b"),
@@ -490,30 +490,7 @@ def minhash_incremental_pairs_from_sigs(sig_c: DataFrame, sig_d: DataFrame) -> D
     sets_ = sig_c.select("doc_id", "n_sh", "sh_set").unionByName(
         sig_d.select("doc_id", "n_sh", "sh_set")
     )
-    verified = (
-        cand.join(
-            sets_.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("n_sh").alias("na"),
-                F.col("sh_set").alias("set_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("n_sh").alias("nb"),
-                F.col("sh_set").alias("set_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("set_a", "set_b")))
-    )
-    jaccard = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        verified.where(jaccard >= 0.5)
-        .select("doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard"))
-    )
+    return _jaccard_verify(cand, sets_)
 
 
 # the incremental oracle is the full-pipeline oracle with the candidate
@@ -635,28 +612,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = inter.join(
         sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a"
     ).join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
-    jaccard = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return joined.where(jaccard >= 0.5).select(
-        "doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard")
-    )
+    return _jaccard_tail(joined)
 
 
 @register(
     "dedup_embedding_cosine",
     tags=("L2", "L3"),
-    oracle="""
+    oracle=f"""
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                ROUND(
-                   list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-                   / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
+                   {duck_cosine("a.embedding", "b.embedding")},
                    6) AS cosine
         FROM embeddings a
         JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                 * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
-              >= 0.4
+        WHERE {duck_cosine("a.embedding", "b.embedding")} >= 0.4
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -673,7 +642,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _vec_side(e, "vec_b", "eb", "nb")
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
     return (
-        pairs.select("vec_a", "vec_b", _pair_cosine().alias("cos_raw"))
+        pairs.select("vec_a", "vec_b", _pair_cosine("ea", "eb", "na", "nb").alias("cos_raw"))
         .where(F.col("cos_raw") >= 0.4)
         .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
     )
@@ -726,14 +695,6 @@ def ann_banding_for(
     return min(k, max_bands), b
 
 
-def _vec_dot(u: F.Column, v: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _vec_side(e: DataFrame, id_out: str, vec_out: str, norm_out: str) -> DataFrame:
     """One side of a pair comparison: (id, vector, precomputed norm).
     The norm is computed ONCE PER VECTOR here instead of once per
@@ -743,18 +704,32 @@ def _vec_side(e: DataFrame, id_out: str, vec_out: str, norm_out: str) -> DataFra
     return e.select(
         F.col("vec_id").alias(id_out),
         F.col("embedding").alias(vec_out),
-        F.sqrt(_vec_dot(F.col("embedding"), F.col("embedding"))).alias(norm_out),
+        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias(norm_out),
     )
 
 
-def _pair_cosine() -> F.Column:
-    """Cosine over the (_vec_side a) × (_vec_side b) join — the scoring
-    expression of dedup_embedding_cosine (the brute-force baseline).
-    The ANN path computes the IDENTICAL expression (_vec_dot over the
-    same arrays / product of the same norms) inline in the band join
-    (embedding_ann_pairs_df, r5) — same floats in the same order, so
-    'same scoring as the baseline' still holds bit-for-bit."""
-    return _vec_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+def _pair_cosine(u: str, v: str, norm_u: str, norm_v: str) -> F.Column:
+    """Cosine of two vector columns from their precomputed norms: the
+    scoring of both the brute-force baseline and the ANN verify, so the
+    two compute the same floats in the same order."""
+    return _dot(F.col(u), F.col(v)) / (F.col(norm_u) * F.col(norm_v))
+
+
+def _sign_bands(e: DataFrame, n_bands: int, band_bits: int, **carry: F.Column) -> DataFrame:
+    """(vec_id, *carry, band_idx, band_val): the row-local
+    n_bands × band_bits hyperplane sign signature (zero shuffle) cut
+    into bands. ``carry`` columns (name → expression) ride along for a
+    verify inside the band join; without them only the compact
+    (vec_id, band) relation fans out."""
+    sig = e.select(
+        "vec_id",
+        *[c.alias(name) for name, c in carry.items()],
+        sign_signature_col(n_bands * band_bits).alias("sig"),
+    )
+    band_vals = F.array(
+        *[F.substring("sig", b * band_bits + 1, band_bits) for b in range(n_bands)]
+    )
+    return sig.select("vec_id", *carry, F.posexplode(band_vals).alias("band_idx", "band_val"))
 
 
 def embedding_ann_candidates(
@@ -764,21 +739,13 @@ def embedding_ann_candidates(
     band_bits: int = ANN_DEDUP_BAND_BITS,
 ) -> DataFrame:
     """Candidate (vec_a, vec_b) pairs from the banded sign signature —
-    the generation stage SHARED by embedding_ann_pairs_df, the A/B tool
-    (tools/ann_dedup_ab.py) and the recall/pruning tests, so every
-    consumer measures exactly the production path. Row-local signature
-    (64 sign bits, zero shuffle), band explode on the COMPACT (vec_id,
-    band, 8-bit band-sig) relation only (vectors never fan out), band
-    self-join bounded by bucket occupancy. ``band_cap`` is the same
-    hot-bucket guard as the MinHash side (docs/SCALE.md "LSH hot bands").
+    what the A/B tool (tools/ann_dedup_ab.py) and the recall/pruning
+    tests measure. ``band_cap`` is the same hot-bucket guard as the
+    MinHash side (docs/SCALE.md "LSH hot bands").
     """
-    from sql_redshift_etl_spark.llm.similarity import sign_signature_col
-
-    nb, bw = n_bands, band_bits
-    sig = e.select("vec_id", sign_signature_col(nb * bw).alias("sig"))
-    band_vals = F.array(*[F.substring("sig", b * bw + 1, bw) for b in range(nb)])
-    bands = sig.select("vec_id", F.posexplode(band_vals).alias("band_idx", "band_val"))
-    return banded_candidates(bands, "vec_id", "vec_a", "vec_b", band_cap=band_cap)
+    return banded_candidates(
+        _sign_bands(e, n_bands, band_bits), "vec_id", "vec_a", "vec_b", band_cap=band_cap
+    )
 
 
 def embedding_ann_pairs_df(
@@ -794,37 +761,28 @@ def embedding_ann_pairs_df(
     registered query's oracle inlines those planes); scale tiers pass
     ``ann_banding_for(n)`` (see its docstring for the saturation math).
 
-    Verify plan (r5): vectors+norms are CARRIED THROUGH the band
-    self-join and the exact cosine is computed inside it; only the
-    scored (vec_a, vec_b, cosine) relation is distinct'd. The previous
-    shape — distinct candidate ids, then join both vectors back per
-    pair — shuffles O(candidates·dim): ~240 GB of sort spill at the
-    sf100 tier (measured to disk exhaustion), vs O(n·bands·dim) ≈ 8 GB
-    for the carry plan. A pair colliding in several bands is scored
-    once per collision (band overlap measures <1% — compute is the
-    cheap currency, shuffle the expensive one) and collapses in the
-    final distinct because cosine is deterministic per pair.
+    Verify plan: vectors+norms are CARRIED THROUGH the band self-join
+    and the exact cosine is computed inside it; only the scored
+    (vec_a, vec_b, cosine) relation is distinct'd. Distinct candidate
+    ids first, then both vectors joined back per pair, shuffles
+    O(candidates·dim): ~240 GB of sort spill at the sf100 tier
+    (measured to disk exhaustion), vs O(n·bands·dim) ≈ 8 GB for the
+    carry plan. A pair colliding in several bands is scored once per
+    collision (band overlap measures <1% — compute is the cheap
+    currency, shuffle the expensive one) and collapses in the final
+    distinct because cosine is deterministic per pair.
     """
-    from sql_redshift_etl_spark.llm.similarity import sign_signature_col
-
-    sig = e.select(
-        "vec_id",
-        F.col("embedding").alias("emb"),
-        F.sqrt(_vec_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-        sign_signature_col(n_bands * band_bits).alias("sig"),
-    )
-    band_vals = F.array(
-        *[F.substring("sig", b * band_bits + 1, band_bits) for b in range(n_bands)]
-    )
-    bands = sig.select(
-        "vec_id", "emb", "norm", F.posexplode(band_vals).alias("band_idx", "band_val")
+    bands = _sign_bands(
+        e,
+        n_bands,
+        band_bits,
+        emb=F.col("embedding"),
+        norm=F.sqrt(_dot(F.col("embedding"), F.col("embedding"))),
     )
     scored = banded_candidates(
         bands, "vec_id", "vec_a", "vec_b", band_cap=band_cap, carry=["emb", "norm"]
     ).select(
-        "vec_a",
-        "vec_b",
-        (_vec_dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))).alias("cos_raw"),
+        "vec_a", "vec_b", _pair_cosine("emb_a", "emb_b", "norm_a", "norm_b").alias("cos_raw")
     )
     return (
         scored.where(F.col("cos_raw") >= tau)
@@ -837,23 +795,17 @@ def _embedding_ann_oracle(
     nb: int = ANN_DEDUP_BANDS, bw: int = ANN_DEDUP_BAND_BITS, tau: float = ANN_DEDUP_TAU
 ) -> str:
     """DuckDB twin of the banded sign-LSH pipeline — possible because the
-    planes are md5-derived (inlined as literals via the shared
-    duck_plane_bits generator), so candidate membership and the cosine
-    verify are deterministic cross-engine. Parameterized over the
-    banding (r5) so the scale-aware-policy query gets the same full
-    value oracle as the frozen 8×8 one."""
-    from sql_redshift_etl_spark.llm.similarity import duck_plane_bits
-
+    planes are md5-derived (inlined as literals via duck_plane_bits),
+    so candidate membership and the cosine verify are deterministic
+    cross-engine. Parameterized over the banding so the
+    scale-aware-policy query gets the same full value oracle as the
+    frozen 8×8 one."""
     sig_expr = duck_plane_bits(nb * bw)
     band_sel = " UNION ALL ".join(
         f"SELECT vec_id, {b} AS band, substr(sig, {b * bw + 1}, {bw}) AS bsig FROM s"
         for b in range(nb)
     )
-    cos = (
-        "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-        " / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-        " * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))"
-    )
+    cos = duck_cosine("a.embedding", "b.embedding")
     return f"""
         WITH s AS MATERIALIZED (SELECT vec_id, {sig_expr} AS sig FROM embeddings),
         bands AS ({band_sel}),
@@ -908,8 +860,8 @@ def min_label_propagate(edges: DataFrame, rounds: int) -> DataFrame:
     near-cliques, so small fixed k is exact for them by construction.
 
     Self-edges (u,u) make a node's own label arrive as an ordinary
-    message, so every round references the previous label frame ONCE
-    (r14). The original two-reference form (lu on u, lv on v) made
+    message, so every round references the previous label frame ONCE.
+    The two-reference form (lu on u, lv on v) made
     round k's logical lineage hold 2^(k+1)-1 copies of the edge list —
     each 2 copies of the whole upstream pairs pipeline — and Spark has
     no CTE materialization to stop the blow-up (exchange reuse only
@@ -950,18 +902,35 @@ def _cluster_round_cte(k: int) -> str:
     )
 
 
-@register(
-    "dedup_cluster_components",
-    tags=("L2", "W6"),
-    oracle=f"""
-        WITH pairs AS MATERIALIZED ({_MINHASH_ORACLE}),
-        sym AS MATERIALIZED (
+# DuckDB twin of min_label_propagate over a `pairs` CTE; the last round
+# is l{_CLUSTER_ROUNDS}.
+_CLUSTER_LABEL_CTES = f"""sym AS MATERIALIZED (
             SELECT doc_a AS u, doc_b AS v FROM pairs
             UNION ALL
             SELECT doc_b AS u, doc_a AS v FROM pairs
         ),
         l0 AS MATERIALIZED (SELECT u AS doc_id, LEAST(u, MIN(v)) AS lbl FROM sym GROUP BY u),
-        {", ".join(_cluster_round_cte(k) for k in range(1, _CLUSTER_ROUNDS + 1))}
+        {", ".join(_cluster_round_cte(k) for k in range(1, _CLUSTER_ROUNDS + 1))}"""
+
+
+def near_dup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``docs`` without the near-duplicates: the pairs (doc_a, doc_b)
+    form a graph, min_label_propagate labels each component with its
+    min doc_id, and every member whose label is below its own id is
+    left-anti joined away — one deterministic survivor per component.
+    The anti side is |near-dup members| rows, a broadcast in practice,
+    while the corpus streams through untouched."""
+    lbl = min_label_propagate(pairs.select("doc_a", "doc_b"), _CLUSTER_ROUNDS)
+    drop = lbl.where(F.col("lbl") < F.col("doc_id")).select("doc_id")
+    return docs.join(drop, "doc_id", "left_anti")
+
+
+@register(
+    "dedup_cluster_components",
+    tags=("L2", "W6"),
+    oracle=f"""
+        WITH pairs AS MATERIALIZED ({_MINHASH_ORACLE}),
+        {_CLUSTER_LABEL_CTES}
         SELECT lbl AS cluster, COUNT(*) AS n_members, MAX(doc_id) AS max_member
         FROM l{_CLUSTER_ROUNDS}
         GROUP BY lbl
@@ -993,13 +962,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("L2", "W6"),
     oracle=f"""
         WITH pairs AS MATERIALIZED ({_MINHASH_ORACLE}),
-        sym AS MATERIALIZED (
-            SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION ALL
-            SELECT doc_b AS u, doc_a AS v FROM pairs
-        ),
-        l0 AS MATERIALIZED (SELECT u AS doc_id, LEAST(u, MIN(v)) AS lbl FROM sym GROUP BY u),
-        {", ".join(_cluster_round_cte(k) for k in range(1, _CLUSTER_ROUNDS + 1))}
+        {_CLUSTER_LABEL_CTES}
         SELECT d.doc_id, d.lang, d.source, d.n_chars
         FROM documents d
         WHERE NOT EXISTS (
@@ -1017,15 +980,12 @@ def dedup_survivor_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: inherits the banded-LSH + fixed-round CC chain (every stage
     key-partitioned, nothing all-pairs); the final step is one left-anti
-    join of documents against the (tiny) non-survivor id set — at 100 TB
-    the anti side is |near-dup members| rows, a broadcast in practice,
-    while the corpus streams through untouched.
+    join of documents against the (tiny) non-survivor id set.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    lbl = min_label_propagate(pairs, _CLUSTER_ROUNDS)
-    drop = lbl.where(F.col("lbl") < F.col("doc_id")).select("doc_id")
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    return d.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source", "n_chars")
+    return near_dup_survivors(d, pairs).select("doc_id", "lang", "source", "n_chars")
+
 
 # The scale-aware policy at driver-fixture size: ann_banding_for gives
 # (5 bands, 8 bits) for EVERY n <= 4096 (the 8-bit floor; k depends only
@@ -1053,19 +1013,19 @@ def dedup_embedding_ann_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/dedup_scale_trend.py: candidate mass linear in n, 0.035% of
     pair space at 600 k vectors vs the fixed banding's 3.6%).
     """
-    import pyarrow.dataset as ds
-
     e = load_table(spark, sf_dir, "embeddings")
-    # corpus size for the banding policy from parquet footer metadata —
-    # the same n a Spark count() returns, without spending a job on it
-    # (r7 job census; at 100 TB the store's row-count statistic is the
-    # right input to a PLANNING decision, not a cluster scan)
-    n = ds.dataset(f"{sf_dir}/embeddings.parquet").count_rows()
+    # corpus size for the banding policy from the parquet footers — the
+    # same n a Spark count() returns, without spending a job on it (at
+    # 100 TB the store's row-count statistic is the right input to a
+    # PLANNING decision, not a cluster scan)
+    n = parquet_total_rows(f"{sf_dir}/embeddings.parquet")
+    if n is None:
+        n = e.count()
     nb, bw = ann_banding_for(n)
     return embedding_ann_pairs_df(e, n_bands=nb, band_bits=bw)
 
 
-# --- exact-substring span dedup (r7) ----------------------------------------
+# --- exact-substring span dedup ---------------------------------------------
 # The Lee et al. 2022 "Deduplicating Training Data Makes Language Models
 # Better" exact-substring variant, re-expressed relationally: instead of
 # a distributed suffix array, emit every K-token window per document,
@@ -1081,12 +1041,10 @@ SUBSTR_K = 8  # window length in tokens (Lee et al. use 50 BPE tokens;
 #               the fixtures' planted near-dups share ~sentence-length
 #               runs, so 8 whitespace tokens exercises the same shapes)
 
-
-@register(
-    "dedup_substring_spans",
-    tags=("L2",),
-    oracle=f"""
-        WITH w AS (
+# DuckDB twins of the span family: every k-token window (w, wins) and
+# the windows shared by >= 2 docs (dup); then, over a per-query `hits`
+# CTE of duplicated (doc_id, pos), the gaps-and-islands merge into spans.
+_DUCK_SUBSTR_DUP = f"""w AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents
             WHERE len(string_split(text, ' ')) >= {SUBSTR_K}
         ),
@@ -1103,9 +1061,8 @@ SUBSTR_K = 8  # window length in tokens (Lee et al. use 50 BPE tokens;
         dup AS (
             SELECT win FROM wins GROUP BY win
             HAVING COUNT(DISTINCT doc_id) >= 2
-        ),
-        hits AS (SELECT doc_id, pos FROM wins JOIN dup USING (win)),
-        flagged AS (
+        )"""
+_DUCK_SPAN_ISLANDS = f"""flagged AS (
             SELECT doc_id, pos,
                    CASE WHEN pos - COALESCE(lag(pos) OVER
                        (PARTITION BY doc_id ORDER BY pos), -2) > 1
@@ -1122,7 +1079,16 @@ SUBSTR_K = 8  # window length in tokens (Lee et al. use 50 BPE tokens;
             SELECT doc_id, g, COUNT(*) AS nw, MIN(pos) AS s,
                    MAX(pos) + {SUBSTR_K - 1} AS e
             FROM isl GROUP BY doc_id, g
-        ),
+        )"""
+
+
+@register(
+    "dedup_substring_spans",
+    tags=("L2",),
+    oracle=f"""
+        WITH {_DUCK_SUBSTR_DUP},
+        hits AS (SELECT doc_id, pos FROM wins JOIN dup USING (win)),
+        {_DUCK_SPAN_ISLANDS},
         perdoc AS (
             SELECT doc_id, CAST(SUM(nw) AS BIGINT) AS n_dup_windows,
                    CAST(COUNT(*) AS BIGINT) AS n_spans,
@@ -1136,7 +1102,7 @@ SUBSTR_K = 8  # window length in tokens (Lee et al. use 50 BPE tokens;
     """,
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring span dedup (L2, r7): per document, the contiguous
+    """Exact-substring span dedup (L2): per document, the contiguous
     token spans covered by {SUBSTR_K}-token windows that also appear in
     at least one OTHER document — the span-level signal production
     pipelines use to CUT duplicated passages out of otherwise-unique
@@ -1163,11 +1129,10 @@ def _substr_toks(d: DataFrame, k: int) -> DataFrame:
 
 
 def _substr_wins(d: DataFrame, k: int, hashed: bool) -> DataFrame:
-    """ONE definition of the k-token windowing shared by the whole span
-    family (report/cut/incremental — a tweak here moves all three plus
-    their oracles' expectations together): row-local transform over the
-    pre-split token array, 0-based start position, shuffle key = window
-    text or its xxhash64 (the measured 100 TB configuration)."""
+    """The k-token windowing of the whole span family (report, cut,
+    incremental): row-local transform over the pre-split token array,
+    0-based start position, shuffle key = window text or its xxhash64
+    (the measured 100 TB configuration)."""
     return _substr_toks(d, k).select(
         "doc_id",
         F.posexplode(
@@ -1179,12 +1144,26 @@ def _substr_wins(d: DataFrame, k: int, hashed: bool) -> DataFrame:
     ).withColumn("key", F.xxhash64("win") if hashed else F.col("win"))
 
 
+def _substr_hits(d: DataFrame, k: int, hashed: bool) -> DataFrame:
+    """(doc_id, pos) of every k-token window whose key occurs in >= 2
+    distinct documents: ONE shuffle on the window key plus the join
+    back."""
+    wins = _substr_wins(d, k, hashed)
+    dup = (
+        wins.groupBy("key")
+        .agg(F.countDistinct("doc_id").alias("nd"))
+        .where(F.col("nd") >= 2)
+        .select("key")
+    )
+    return wins.join(dup, "key").select("doc_id", "pos")
+
+
 def _substr_span_metrics(hits: DataFrame, k: int) -> DataFrame:
     """Gaps-and-islands merge of duplicated window START positions into
-    contiguous spans, then per-doc metrics — shared by the report and
-    the incremental form. Spans whose starts gap by 2..k-1 overlap in
-    token extent and double-count dup_tokens: the r7-oracled semantics,
-    kept deliberately (the CUT uses the coverage UNION instead)."""
+    contiguous spans, then per-doc metrics for the report and the
+    incremental form. Spans whose starts gap by 2..k-1 overlap in token
+    extent and double-count dup_tokens: the oracled semantics, kept
+    deliberately (the CUT uses the coverage UNION instead)."""
     from pyspark.sql import Window
 
     ow = Window.partitionBy("doc_id").orderBy("pos")
@@ -1216,15 +1195,7 @@ def substring_spans_df(
     window rows): identical 47,700 flagged docs, steady 18-24 s hashed
     vs a spill-noisy 25-164 s with text keys (docs/ROUND7.md); pytest
     asserts hashed ≡ text on the fixtures."""
-    wins = _substr_wins(d, k, hashed)
-    dup = (
-        wins.groupBy("key")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= 2)
-        .select("key")
-    )
-    hits = wins.join(dup, "key").select("doc_id", "pos")
-    perdoc = _substr_span_metrics(hits, k)
+    perdoc = _substr_span_metrics(_substr_hits(d, k, hashed), k)
     return perdoc.join(
         d.select("doc_id", F.size(F.split("text", " ")).alias("n_tok")), "doc_id"
     ).select(
@@ -1240,24 +1211,7 @@ def substring_spans_df(
     "dedup_substring_cut",
     tags=("L2",),
     oracle=f"""
-        WITH w AS (
-            SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            WHERE len(string_split(text, ' ')) >= {SUBSTR_K}
-        ),
-        wins AS (
-            SELECT doc_id, i - 1 AS pos,
-                   array_to_string(w[i:i+{SUBSTR_K - 1}], ' ') AS win
-            FROM (
-                SELECT doc_id, w,
-                       unnest(generate_series(1, len(w) - {SUBSTR_K - 1}))
-                           AS i
-                FROM w
-            )
-        ),
-        dup AS (
-            SELECT win FROM wins GROUP BY win
-            HAVING COUNT(DISTINCT doc_id) >= 2
-        ),
+        WITH {_DUCK_SUBSTR_DUP},
         hits AS (SELECT doc_id, pos FROM wins JOIN dup USING (win)),
         cov AS (
             SELECT DISTINCT h.doc_id, h.pos + o.off AS ti
@@ -1282,7 +1236,7 @@ def substring_spans_df(
     """,
 )
 def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring span CUTTING (L2, r8) — the consumer of the span
+    """Exact-substring span CUTTING (L2) — the consumer of the span
     signal: rebuild each document's text with every duplicated
     {SUBSTR_K}-token region REMOVED (Lee et al. 2022 cut duplicated
     passages out of otherwise-unique keepers; substring_spans_df only
@@ -1312,15 +1266,11 @@ def substring_cut_df(
     shuffle key for xxhash64 (the spans operator's measured 100 TB
     configuration)."""
     toks = _substr_toks(d, k)
-    wins = _substr_wins(d, k, hashed)
-    dup = (
-        wins.groupBy("key")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= 2)
-        .select("key")
+    hp = (
+        _substr_hits(d, k, hashed)
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("hp"))
     )
-    hits = wins.join(dup, "key").select("doc_id", "pos")
-    hp = hits.groupBy("doc_id").agg(F.sort_array(F.collect_list("pos")).alias("hp"))
     # left join: unflagged docs carry hp = NULL and keep every token
     kept = F.expr(
         f"filter(w, (t, i) -> hp IS NULL OR "
@@ -1342,46 +1292,12 @@ def substring_cut_df(
     "dedup_substring_incremental",
     tags=("L2",),
     oracle=f"""
-        WITH w AS (
-            SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            WHERE len(string_split(text, ' ')) >= {SUBSTR_K}
-        ),
-        wins AS (
-            SELECT doc_id, i - 1 AS pos,
-                   array_to_string(w[i:i+{SUBSTR_K - 1}], ' ') AS win
-            FROM (
-                SELECT doc_id, w,
-                       unnest(generate_series(1, len(w) - {SUBSTR_K - 1}))
-                           AS i
-                FROM w
-            )
-        ),
-        dup AS (
-            SELECT win FROM wins GROUP BY win
-            HAVING COUNT(DISTINCT doc_id) >= 2
-        ),
+        WITH {_DUCK_SUBSTR_DUP},
         hits AS (
             SELECT doc_id, pos FROM wins JOIN dup USING (win)
             WHERE doc_id % 10 = 0
         ),
-        flagged AS (
-            SELECT doc_id, pos,
-                   CASE WHEN pos - COALESCE(lag(pos) OVER
-                       (PARTITION BY doc_id ORDER BY pos), -2) > 1
-                       THEN 1 ELSE 0 END AS brk
-            FROM hits
-        ),
-        isl AS (
-            SELECT doc_id, pos,
-                   SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                                  ROWS UNBOUNDED PRECEDING) AS g
-            FROM flagged
-        ),
-        spans AS (
-            SELECT doc_id, g, COUNT(*) AS nw, MIN(pos) AS s,
-                   MAX(pos) + {SUBSTR_K - 1} AS e
-            FROM isl GROUP BY doc_id, g
-        )
+        {_DUCK_SPAN_ISLANDS}
         SELECT doc_id, CAST(SUM(nw) AS BIGINT) AS n_dup_windows,
                CAST(COUNT(*) AS BIGINT) AS n_spans,
                CAST(SUM(e - s + 1) AS BIGINT) AS dup_tokens
@@ -1389,7 +1305,7 @@ def substring_cut_df(
     """,
 )
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact-substring span dedup (L2, r8): every tenth doc
+    """Incremental exact-substring span dedup (L2): every tenth doc
     (doc_id % 10 = 0) plays the ingest delta, the rest the standing
     corpus whose DISTINCT window keys are the stored relation. A delta
     doc's window is duplicated iff its key exists in the stored corpus
@@ -1402,7 +1318,7 @@ def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: windows are computed for the DELTA only; the stored key
     relation is probed with one join. Bucket it on the key and the
-    probe co-locates — MEASURED and adopted in r9
+    probe co-locates — MEASURED and adopted
     (tools/span_bucketed_probe_ab.py: bucketBy(32, key) removes the
     stored-side exchange, 5 → 4 live shuffles, probe 0.92× at sf10 →
     0.752× at sf30 with a wash store-build cost — the DISTKEY argument,
@@ -1429,7 +1345,7 @@ def substring_spans_incremental_df(
     1-column ``key`` frame, same hashed flavor) via ``stored_keys=`` —
     ingest then pays only the delta windows + one probe join (measured
     2.9-3.5 s vs 7.9-8.2 s from scratch for a 10% delta into 500 k docs
-    at sf10, values identical — BASELINE.md r8); the fixture
+    at sf10, values identical — BASELINE.md); the fixture
     query derives the relation from the corpus docs so it stays
     self-contained. Matches the from-scratch run on corpus ∪ delta
     restricted to delta docs (pytest-asserted)."""

@@ -5,9 +5,9 @@ ledger.
 
 Every stage reuses the exact operator the standalone queries register —
 the Spark side calls the same helpers (llm.text quality predicate,
-llm.dedup bag fingerprint / minhash_lsh_pairs_df / min_label_propagate,
+llm.dedup bag fingerprint / minhash_lsh_pairs_df / near_dup_survivors,
 llm.curation CONTEXT_LEN packing) and the DuckDB oracle composes the
-same SQL fragments (minhash_pairs_oracle, _cluster_round_cte), so the
+same SQL fragments (minhash_pairs_oracle, _CLUSTER_LABEL_CTES), so the
 composite stays bit-checked end to end: a drift in ANY stage
 hash-mismatches the final ledger.
 
@@ -26,13 +26,13 @@ from pyspark.sql import functions as F
 from sql_redshift_etl_spark.catalog import load_table
 from sql_redshift_etl_spark.llm.curation import CONTEXT_LEN
 from sql_redshift_etl_spark.llm.dedup import (
+    _CLUSTER_LABEL_CTES,
     _CLUSTER_ROUNDS,
     BAG_FP_ORACLE,
-    _cluster_round_cte,
     bag_fingerprint,
-    min_label_propagate,
     minhash_lsh_pairs_df,
     minhash_pairs_oracle,
+    near_dup_survivors,
 )
 from sql_redshift_etl_spark.llm.text import quality_predicate, quality_where_sql
 from sql_redshift_etl_spark.plans.registry import register
@@ -40,7 +40,6 @@ from sql_redshift_etl_spark.plans.registry import register
 
 def _pipeline_oracle() -> str:
     pairs_sql = minhash_pairs_oracle("exact")
-    rounds = ", ".join(_cluster_round_cte(k) for k in range(1, _CLUSTER_ROUNDS + 1))
     return f"""
         WITH quality AS MATERIALIZED (
             SELECT doc_id, text, source FROM documents
@@ -57,13 +56,7 @@ def _pipeline_oracle() -> str:
             ) WHERE rn = 1
         ),
         pairs AS MATERIALIZED ({pairs_sql}),
-        sym AS MATERIALIZED (
-            SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION ALL
-            SELECT doc_b AS u, doc_a AS v FROM pairs
-        ),
-        l0 AS MATERIALIZED (SELECT u AS doc_id, LEAST(u, MIN(v)) AS lbl FROM sym GROUP BY u),
-        {rounds},
+        {_CLUSTER_LABEL_CTES},
         final AS MATERIALIZED (
             SELECT e.doc_id, e.text, e.source FROM exact e
             WHERE NOT EXISTS (
@@ -128,10 +121,7 @@ def etl_training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = quality.withColumn("rn", F.row_number().over(w_fp))
     exact = ranked.where(F.col("rn") == 1).drop("rn")
 
-    pairs = minhash_lsh_pairs_df(exact).select("doc_a", "doc_b")
-    lbl = min_label_propagate(pairs, _CLUSTER_ROUNDS)
-    drop = lbl.where(F.col("lbl") < F.col("doc_id")).select("doc_id")
-    final = exact.join(drop, "doc_id", "left_anti")
+    final = near_dup_survivors(exact, minhash_lsh_pairs_df(exact))
 
     toks = final.select(
         "source", "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
@@ -143,8 +133,8 @@ def etl_training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cum = toks.withColumn("cum_tokens", F.sum("n_tokens").over(w_pack))
 
-    # Ledger columns are folded into one aggregate per distinct subtree
-    # (r14): the naive five per-source aggregates re-executed their whole
+    # Ledger columns are folded into one aggregate per distinct subtree:
+    # the naive five per-source aggregates re-executed their whole
     # prefix each (ReusedExchange only unifies up to the exchange, the
     # post-shuffle walk re-runs per consumer) and re-scanned documents for
     # n_raw — measured 2.9 s of the composed query's 7.0 s at sf0.1.

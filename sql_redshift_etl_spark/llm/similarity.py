@@ -43,6 +43,15 @@ def _cosine(u, v) -> F.Column:
     return _dot(u, v) / (F.sqrt(_dot(u, u)) * F.sqrt(_dot(v, v)))
 
 
+def duck_cosine(u: str, v: str) -> str:
+    """DuckDB twin of ``_cosine`` over two list columns, as DOUBLE[]."""
+
+    def dot(x: str, y: str) -> str:
+        return f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
+
+    return f"{dot(u, v)} / (sqrt({dot(u, u)}) * sqrt({dot(v, v)}))"
+
+
 def _query_vec(sf_dir: str) -> list[float]:
     """The query embedding, read driver-side via pyarrow: O(dim) bytes of
     one filtered row — an input PARAMETER of the search (a production
@@ -76,11 +85,7 @@ def _with_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.where(F.col("vec_id") != QUERY_VEC_ID).withColumn("qvec", q)
 
 
-_DUCK_COSINE = (
-    "list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))"
-    " / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))"
-    " * sqrt(list_dot_product(CAST(q.qvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))))"
-)
+_DUCK_COSINE = duck_cosine("e.embedding", "q.qvec")
 
 
 @register(
@@ -548,20 +553,18 @@ _IVF_ORACLE = f"""
     q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
     probe AS (
         SELECT cell FROM cent e CROSS JOIN q
-        ORDER BY list_dot_product(CAST(e.cvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))
-                 / (sqrt(list_dot_product(CAST(e.cvec AS DOUBLE[]), CAST(e.cvec AS DOUBLE[])))
-                    * sqrt(list_dot_product(CAST(q.qvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[])))) DESC,
+        ORDER BY {duck_cosine("e.cvec", "q.qvec")} DESC,
                  cell
         LIMIT 2
     )
-    SELECT e.vec_id, e.label, ROUND({{cos}}, 6) AS cosine
+    SELECT e.vec_id, e.label, ROUND({_DUCK_COSINE}, 6) AS cosine
     FROM embeddings e
     JOIN probe ON e.label = probe.cell
     CROSS JOIN q
     WHERE e.vec_id != {QUERY_VEC_ID}
-    ORDER BY {{cos}} DESC, e.vec_id
+    ORDER BY {_DUCK_COSINE} DESC, e.vec_id
     LIMIT 10
-""".format(cos=_DUCK_COSINE)
+"""
 
 
 # Oracled in r3: cell ASSIGNMENT is by label (no float boundary), so the

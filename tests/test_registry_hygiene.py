@@ -390,3 +390,112 @@ def test_parquet_reads_go_through_the_catalog():
         f"parquet reads outside catalog.py that bypass its schema cache "
         f"(allowed: {_PARQUET_READ_ALLOWED}): {dict(reads)}"
     )
+
+
+# The one home of each near-duplicate building block in llm/ (module
+# file, function): the LSH band relations, the shingle-set Jaccard
+# verify and the vector dot product.
+_NEAR_DUP_CORE = {
+    "band relation": {("dedup.py", "_minhash_bands"), ("dedup.py", "_sign_bands")},
+    "Jaccard verify": {("dedup.py", "_jaccard_verify")},
+    "dot product": {("similarity.py", "_dot")},
+}
+
+
+def _call_name(node) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    return getattr(node.func, "attr", getattr(node.func, "id", None))
+
+
+def _near_dup_block(node) -> str | None:
+    """The core building block ``node`` spells out, if any."""
+    name = _call_name(node)
+    if (
+        name == "alias"
+        and _call_name(node.func.value) == "posexplode"
+        and [ast.literal_eval(a) for a in node.args] == ["band_idx", "band_val"]
+    ):
+        return "band relation"
+    if name == "array_intersect":
+        return "Jaccard verify"
+    if name == "zip_with" and any(
+        isinstance(a, ast.Lambda) and isinstance(a.body, ast.BinOp) and isinstance(a.body.op, ast.Mult)
+        for a in node.args
+    ):
+        return "dot product"
+    return None
+
+
+def _nodes_with_owner(node, owner: str = "<module>"):
+    """Every node under ``node`` with the name of its innermost function."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            inner = child.name
+        else:
+            inner = owner
+        yield child, inner
+        yield from _nodes_with_owner(child, inner)
+
+
+def test_llm_near_dup_core_is_not_copied():
+    """Every near-duplicate query in llm/ is a candidate filter plus a
+    verifier built from one band builder per LSH family, one Jaccard
+    verifier and one dot product. A second ``posexplode(...).alias(
+    "band_idx", "band_val")``, ``array_intersect`` or multiplying
+    ``zip_with`` is a copy of one of them, and copies drift apart."""
+    from pathlib import Path
+
+    from sql_redshift_etl_spark import llm
+
+    copies = [
+        f"{path.name}:{node.lineno} in {owner} ({block})"
+        for path in sorted(Path(llm.__file__).parent.glob("*.py"))
+        for node, owner in _nodes_with_owner(ast.parse(path.read_text()))
+        if (block := _near_dup_block(node)) and (path.name, owner) not in _NEAR_DUP_CORE[block]
+    ]
+    assert not copies, f"near-dup building blocks outside their one home: {copies}"
+
+
+def test_tools_import_names_that_exist():
+    """Every name a script under tools/ imports from the package exists,
+    and so does every attribute it reads through an imported package
+    module (``from ...llm import dedup as dd`` then ``dd.<name>``). The
+    scripts are parsed, not run."""
+    import importlib
+    import types
+    from pathlib import Path
+
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    missing = []
+    for path in sorted(tools.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        modules = {}
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[0] == "sql_redshift_etl_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                try:
+                    value = (
+                        getattr(mod, a.name)
+                        if hasattr(mod, a.name)
+                        else importlib.import_module(f"{node.module}.{a.name}")
+                    )
+                except ModuleNotFoundError:
+                    missing.append(f"{path.name}: {node.module}.{a.name}")
+                    continue
+                if isinstance(value, types.ModuleType):
+                    modules[a.asname or a.name] = value
+        missing += [
+            f"{path.name}:{node.lineno}: {node.value.id}.{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+            and not hasattr(modules[node.value.id], node.attr)
+        ]
+    assert not missing, f"tools import names the package does not have: {missing}"

@@ -1182,6 +1182,25 @@ def test_ann_banding_for_scales_width_and_recall():
     assert ann_banding_for(1) == (ann_banding_for(1)[0], 8)
 
 
+def test_ann_scaled_counts_rows_when_footers_are_unreadable(spark, monkeypatch):
+    """dedup_embedding_ann_scaled sizes its banding from the parquet
+    footers (scale.parquet_total_rows); when they cannot be read it
+    counts the table instead, so the policy sees the same n and the
+    query returns the same pairs."""
+    from sql_redshift_etl_spark.catalog import load_table
+    from sql_redshift_etl_spark.llm import dedup
+    from tests.conftest import SF_DIR
+
+    seen = []
+    policy = dedup.ann_banding_for
+    monkeypatch.setattr(dedup, "ann_banding_for", lambda n: seen.append(n) or policy(n))
+    from_footers = sorted(map(tuple, dedup.dedup_embedding_ann_scaled(spark, SF_DIR).collect()))
+    monkeypatch.setattr(dedup, "parquet_total_rows", lambda path: None)
+    counted = sorted(map(tuple, dedup.dedup_embedding_ann_scaled(spark, SF_DIR).collect()))
+    assert seen == [load_table(spark, SF_DIR, "embeddings").count()] * 2
+    assert counted == from_footers and len(counted) > 0
+
+
 def test_scaled_embedding_perturbation_properties(spark):
     """make_scaled_data's replica perturbation (r5) must be (a) norm-
     preserving — replicas stay unit-comparable with originals — and
