@@ -98,24 +98,25 @@ Statement support:
 - ``SELECT ... INTO [TEMP] name FROM ...`` (r6) — the one-line CTAS.
 - ``CREATE [OR REPLACE] PROCEDURE name(params) AS $$ [DECLARE ...]
   BEGIN ... END $$ LANGUAGE plpgsql`` / ``CALL name(args)`` /
-  ``DROP PROCEDURE`` (r6) — the body executes in place at CALL with IN
-  parameters substituted on identifier boundaries (plpgsql's own
-  lexical substitution), and supports the procedural core: IF/ELSIF/
-  ELSE, WHILE ... LOOP, FOR i IN [REVERSE] a..b [BY step] LOOP (r7:
-  BY; non-positive steps loud, plpgsql's rule), CASE statements (r7:
-  searched + simple value-list forms, case_not_found raise), FOR rec IN
+  ``DROP PROCEDURE`` — the body executes in place at CALL with IN
+  parameters bound as text on identifier boundaries, outside string
+  literals and outside the body of a FOR loop that rebinds the name
+  (plpgsql's own lexical substitution), and supports the procedural
+  core: IF/ELSIF/ELSE (an ``IF [NOT] EXISTS (query) THEN`` included),
+  WHILE ... LOOP, FOR i IN [REVERSE] a..b [BY step] LOOP (a
+  non-positive BY step is loud, plpgsql's rule), CASE statements
+  (searched + simple value-list forms, case_not_found raise), FOR rec IN
   <query> LOOP (bounded control-table iteration), bare LOOP, EXIT/
   CONTINUE [WHEN], bare RETURN, RAISE, and DECLAREd scalar variables
   with ``var := expr`` and ``SELECT ... INTO [STRICT] var`` (values
-  substitute as typed literals at each use site; STRICT — r12 —
-  demands exactly one row, raising catchable no_data_found P0002 /
+  substitute as typed literals at each use site; STRICT demands
+  exactly one row, raising catchable no_data_found P0002 /
   too_many_rows P0003 via a bounded take(2), and always leaves FOUND
-  true on success, plpgsql's rule). Round 9 adds nested
+  true on success, plpgsql's rule). Nested
   ``DECLARE ... BEGIN ... END`` sub-blocks: the inner scalars shadow
   same-name outer variables for the block's extent and un-shadow on any
   exit path (normal, EXIT/CONTINUE, RETURN, or a caught error); defaults
-  re-evaluate at each entry. Round 7 adds the remaining
-  procedural core:
+  re-evaluate at each entry. The rest of the procedural core:
   * ``BEGIN ... EXCEPTION WHEN OTHERS THEN handler END`` blocks (the
     nightly-load error-wrapper idiom) — on entry the script state
     snapshots and every table mutation inside materializes eagerly
@@ -134,7 +135,7 @@ Statement support:
     dynamic SQL — the expression evaluates with current variable
     values (QUOTE_IDENT/QUOTE_LITERAL do the quoting) and the text
     runs as one statement; dynamic SQL does not see plpgsql variables
-    (plpgsql's contract). USING (r8) binds each argument's VALUE to
+    (plpgsql's contract). USING binds each argument's VALUE to
     its $N placeholder as a typed literal — value-not-text, outside
     quotes only, one bounded one-row job per argument.
   * forward-only cursors: ``name CURSOR FOR <query>`` in DECLARE,
@@ -148,29 +149,29 @@ Statement support:
     affected-set plans counted only when read; SELECT INTO var, FETCH
     and EXECUTE INTO report 0/1). Untracked statements reset the
     count, and reading it then is loud — never silently stale.
-  * ``PERFORM query`` (r8) — run-and-discard: sets ``found`` from a
+  * ``PERFORM query`` — run-and-discard: sets ``found`` from a
     bounded limit-1 probe; the discarded row count feeds ROW_COUNT as
     the usual lazy plan.
-  * ``FOUND`` (r12) — the full plpgsql setter list: SELECT INTO,
+  * ``FOUND`` — the full plpgsql setter list: SELECT INTO,
     PERFORM, INSERT/UPDATE/DELETE (lazily, like ROW_COUNT — a body
     that never reads FOUND after a DML pays zero extra jobs), FETCH,
     and query-FOR loop exit — on ANY exit path, EXIT included
-    (r13, ADVICE r12: exec_for_query stamps "iterated at least once"
-    after the loop regardless of how it ended). EXECUTE never sets it
+    (plpgsql's exec_for_query stamps "iterated at least once" after
+    the loop regardless of how it ended). EXECUTE never sets it
     (plpgsql's own rule: EXECUTE feeds GET DIAGNOSTICS, not FOUND);
     TRUNCATE/MERGE are not in plpgsql's setter list and leave it
     alone. Auto-declared (FALSE, per call) when the body mentions
     ``found``/``PERFORM`` or declares a cursor — and a body that ALSO
     declares or aliases a COLUMN literally named ``found`` raises the
     plpgsql variable_conflict ambiguity error instead of silently
-    substituting (r13, ADVICE r12).
-  * INOUT parameters (r8) — scoped variables initialized from the
+    substituting.
+  * INOUT parameters — scoped variables initialized from the
     CALL argument; the CALL returns their final values as a one-row
     result (Redshift's contract). OUT stays loud because Redshift
     itself forbids OUT arguments in a SQL-level CALL.
   Still loud: OUT params, RETURN with a value, GET DIAGNOSTICS of
   anything but ROW_COUNT.
-  Cost model note (r6): WHILE/FOR loop conditions evaluate as one
+  Cost model note: WHILE/FOR loop conditions evaluate as one
   1-row Spark job per iteration (capped at 1000) — faithful to
   coordinator-side plpgsql, so a 1000-iteration loop costs the job
   floor x 1000 at ANY data size; loop over control rows, never facts.
@@ -225,7 +226,8 @@ from __future__ import annotations
 
 import re
 from collections import deque
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -332,7 +334,7 @@ _CREATE_FUNC_TAIL = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_FUNC = re.compile(
-    r"^DROP\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
+    r"^DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
     re.IGNORECASE,
 )
 
@@ -538,7 +540,7 @@ _CREATE_SCHEMA = re.compile(
     re.IGNORECASE,
 )
 _DROP_SCHEMA = re.compile(
-    r"^DROP\s+SCHEMA\s+(?:IF\s+EXISTS\s+)?(\w+)\s*(CASCADE|RESTRICT)?\s*$",
+    r"^DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?(\w+)\s*(CASCADE|RESTRICT)?\s*$",
     re.IGNORECASE,
 )
 _INSERT_DEFAULTS = re.compile(
@@ -701,11 +703,10 @@ _MERGE = re.compile(
 )
 # Redshift stored procedures (plpgsql): the $$ body is [DECLARE ...]
 # BEGIN ... END with plain SQL plus the procedural core (IF/WHILE/FOR/
-# LOOP/EXIT/CONTINUE/RETURN/RAISE/variables — see the control-flow
-# section below); cursors/EXECUTE/EXCEPTION blocks raise loudly. IN
-# params substitute textually at CALL time on identifier boundaries.
-# Matched on the RAW statement (before the dialect front-end) so the
-# body reaches CALL-time untouched.
+# LOOP/EXIT/CONTINUE/RETURN/RAISE/variables, EXCEPTION blocks, EXECUTE,
+# cursors — see the plpgsql section below). IN params bind at CALL time
+# through _bind. Matched on the RAW statement (before the dialect
+# front-end) so the body reaches CALL-time untouched.
 _CREATE_PROC_HEAD = re.compile(
     r"^CREATE\s+(?:OR\s+REPLACE\s+)?PROCEDURE\s+([\w.]+)\s*\(", re.IGNORECASE
 )
@@ -714,21 +715,15 @@ _CREATE_PROC_TAIL = re.compile(
 )
 _CALL = re.compile(r"^CALL\s+([\w.]+)\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
 _DROP_PROC = re.compile(
-    r"^DROP\s+PROCEDURE\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
+    r"^DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
     re.IGNORECASE,
 )
-# plpgsql procedural surface: r6 added IF/ELSIF/ELSE, WHILE ... LOOP,
-# FOR i IN a..b LOOP and RAISE; r7 added EXCEPTION WHEN OTHERS blocks,
-# EXECUTE dynamic SQL, and forward-only cursors; r8 added PERFORM and
-# EXECUTE ... USING — the create-time reject gate is gone because
-# nothing procedural is rejected at CREATE anymore (remaining
-# out-of-subset spellings raise at their own execution sites).
 
 
 def _parse_proc_params(params: str) -> list[tuple[str, str, str]]:
     """(name, mode, type) triples from a procedure signature. IN params
-    substitute textually at CALL time (plpgsql's lexical model); INOUT
-    params (r8) become scoped variables initialized from the CALL
+    bind as text at CALL time (plpgsql's lexical model, see _bind); INOUT
+    params become scoped variables initialized from the CALL
     argument, and the CALL returns their final values as a one-row
     result — Redshift's contract. OUT stays loud because Redshift
     itself forbids OUT arguments in a SQL-level CALL."""
@@ -752,8 +747,8 @@ def _parse_proc_params(params: str) -> list[tuple[str, str, str]]:
 
 
 # ---------------------------------------------------------------------------
-# plpgsql control flow (round 6): IF/ELSIF/ELSE, WHILE ... LOOP,
-# FOR i IN [REVERSE] a..b LOOP, and RAISE inside procedure bodies.
+# plpgsql: IF/ELSIF/ELSE, CASE, WHILE/FOR/bare LOOP, BEGIN ... EXCEPTION
+# and DECLARE blocks, variables, cursors and RAISE inside procedure bodies.
 #
 # Design: block bodies are kept as RAW TEXT and re-parsed lazily when the
 # block executes (a WHILE body re-parses per iteration), so the script
@@ -763,9 +758,17 @@ def _parse_proc_params(params: str) -> list[tuple[str, str, str]]:
 # evaluated through the same dialect front-end as every other statement
 # via a one-row ``SELECT CAST((cond) AS BOOLEAN)``.
 #
-# All of plpgsql's procedural statements are now handled at their own
-# execution sites (r6-r8); out-of-subset SPELLINGS of each construct
-# raise there, not at CREATE.
+# Two lexical rules cover the body text, each written once:
+# - the block walker (_block_tokens over _BLOCK_TOKEN) finds where a
+#   block ends and the dividers at its own depth; each block parser
+#   keeps only its own dividers (IF: THEN/ELSIF/ELSE, CASE: WHEN/THEN/
+#   ELSE, BEGIN: EXCEPTION);
+# - the binder (_bind) puts text in place of names — IN parameters,
+#   loop variables, ``rec.field``, SQLERRM/SQLSTATE, ``$N`` and scope
+#   variables — in one pass, outside quoted literals, skipping the body
+#   of a nested FOR that rebinds the name.
+# Out-of-subset spellings of each construct raise at their own execution
+# sites, not at CREATE.
 
 
 class _IfNode:
@@ -888,17 +891,66 @@ def _mask_quoted(text: str) -> str:
     return "".join(out)
 
 
-# One token scanner drives all block matching. Order matters: END IF /
-# END LOOP before END (CASE closer), IF EXISTS / IF NOT EXISTS (DDL
-# modifiers, no block) before IF. WHILE/FOR heads don't open a block —
-# their LOOP keyword does.
-_CTRL_TOKEN = re.compile(
+# The one block-token scanner. Order matters: END IF / END LOOP /
+# END CASE before END, IF [NOT] EXISTS (a DDL modifier unless it starts
+# a statement) before IF, ELSIF before ELSE. The lookahead on EXCEPTION
+# keeps `RAISE EXCEPTION 'msg'` from reading as a handler divider.
+# WHILE/FOR heads open no block — their LOOP keyword does.
+_BLOCK_TOKEN = re.compile(
     r"(?is)\b(?:(?P<endcase>END\s+CASE)|(?P<endif>END\s+IF)"
-    r"|(?P<endloop>END\s+LOOP)"
-    r"|(?P<ifx>IF\s+(?:NOT\s+)?EXISTS)|(?P<if>IF)|(?P<loop>LOOP)"
-    r"|(?P<then>THEN)|(?P<elsif>ELSIF|ELSEIF)|(?P<else>ELSE)"
-    r"|(?P<case>CASE)|(?P<end>END))\b"
+    r"|(?P<endloop>END\s+LOOP)|(?P<ifx>IF\s+(?:NOT\s+)?EXISTS)"
+    r"|(?P<if>IF)|(?P<loop>LOOP)|(?P<case>CASE)|(?P<begin>BEGIN)"
+    r"|(?P<exc>EXCEPTION(?=\s+WHEN\b))|(?P<when>WHEN)|(?P<then>THEN)"
+    r"|(?P<elsif>ELSIF|ELSEIF)|(?P<else>ELSE)|(?P<end>END))\b"
 )
+# each block opener and its closer; a bare END also closes a CASE
+# (the expression form)
+_CLOSER = {"if": "END IF", "loop": "END LOOP", "case": "END CASE", "begin": "END"}
+_CLOSES = {
+    "endif": ("if",),
+    "endloop": ("loop",),
+    "endcase": ("case",),
+    "end": ("case", "begin"),
+}
+_LOOP_KW = re.compile(r"(?is)\bLOOP\b")
+# IF [NOT] EXISTS opens an IF block where it starts a statement (after
+# ';', THEN, ELSE, LOOP or BEGIN); after a name it is a DDL modifier
+_STMT_START = re.compile(r"(?is)(?:^|;|\b(?:THEN|ELSE|LOOP|BEGIN))\s*\Z")
+
+
+def _block_tokens(text: str, masked: str, start: int, what: str) -> Iterator[re.Match]:
+    """Walk the block whose opener (IF, LOOP, CASE or BEGIN) sits at
+    *start* of the quote-masked body: yield the dividers at the block's
+    own depth (THEN, ELSIF, ELSE, WHEN, EXCEPTION), then its closer, and
+    stop. Nested blocks keep a typed stack: a closer that does not match
+    the innermost open block raises, and so does a block left open.
+    *what* names the construct in those errors."""
+    opener = _BLOCK_TOKEN.match(masked, start)
+    stack = ["if" if opener.lastgroup == "ifx" else opener.lastgroup]
+    for m in _BLOCK_TOKEN.finditer(masked, opener.end()):
+        kind = m.lastgroup
+        if kind == "ifx" and _STMT_START.search(masked, 0, m.start()):
+            kind = "if"
+        elif kind == "endloop" and len(stack) > 1 and stack[-1] == "case":
+            # a CASE expression ending a WHILE condition or a FOR query,
+            # right before the head's LOOP
+            stack[-1] = "loop"
+            continue
+        if kind in _CLOSES:
+            top = stack.pop()
+            if top not in _CLOSES[kind]:
+                raise ValueError(
+                    f"{what}: {' '.join(m.group().split()).upper()} closes an "
+                    f"open {top.upper()} (missing {_CLOSER[top]})"
+                )
+            if not stack:
+                yield m
+                return
+        elif kind in _CLOSER:
+            stack.append(kind)
+        elif len(stack) == 1 and kind != "ifx":
+            yield m
+    raise ValueError(f"{what}: missing {_CLOSER[stack[0]]} near {text[start:start + 60]!r}")
 
 
 def _consume_semi(text: str, j: int) -> int:
@@ -912,131 +964,54 @@ def _parse_if(text: str, masked: str, start: int) -> tuple[_IfNode, int]:
     """Parse ``IF cond THEN ... [ELSIF ...] [ELSE ...] END IF`` starting
     at *start* (the IF keyword). Returns the node and the index past the
     closing ``END IF;``."""
-    stack = 1  # IF/LOOP nesting relative to this IF
-    case_depth = 0  # CASE expressions carry their own THEN/ELSE/END
     branches: list[tuple[str, str]] = []
     cond_start = start + 2
     seg_cond: str | None = None
     body_start: int | None = None
     else_start: int | None = None
-    for m in _CTRL_TOKEN.finditer(masked, start + 2):
+    for m in _block_tokens(text, masked, start, "IF"):
         kind = m.lastgroup
-        if kind == "case":
-            case_depth += 1
-        elif kind in ("end", "endcase"):
-            if case_depth > 0:
-                case_depth -= 1
-        elif kind == "if":
-            stack += 1
-        elif kind == "loop":
-            stack += 1
-        elif kind == "endloop":
-            stack -= 1
-        elif kind == "endif":
-            stack -= 1
-            if stack == 0:
-                if else_start is not None:
-                    else_body: str | None = text[else_start : m.start()]
-                elif body_start is not None:
-                    branches.append((seg_cond, text[body_start : m.start()]))
-                    else_body = None
-                else:
-                    raise ValueError(f"IF: missing THEN near {text[start:start + 60]!r}")
-                return _IfNode(branches, else_body), _consume_semi(text, m.end())
-        elif stack == 1 and case_depth == 0 and else_start is None:
-            if kind == "then" and body_start is None:
-                seg_cond = text[cond_start : m.start()].strip()
-                if not seg_cond:
-                    raise ValueError("IF/ELSIF: empty condition")
-                body_start = m.end()
-            elif kind == "elsif":
-                if body_start is None:
-                    raise ValueError("ELSIF before THEN")
+        if kind == "endif":
+            if else_start is not None:
+                else_body: str | None = text[else_start : m.start()]
+            elif body_start is not None:
                 branches.append((seg_cond, text[body_start : m.start()]))
-                cond_start, seg_cond, body_start = m.end(), None, None
-            elif kind == "else":
-                if body_start is None:
-                    raise ValueError("ELSE before THEN")
-                branches.append((seg_cond, text[body_start : m.start()]))
-                else_start = m.end()
-    raise ValueError(f"IF: missing END IF near {text[start:start + 60]!r}")
-
-
-def _find_block_close(masked: str, pos: int, want: str, what: str) -> re.Match:
-    """Match for the END IF/END LOOP closing the block open at *pos*."""
-    stack = 1
-    for m in _CTRL_TOKEN.finditer(masked, pos):
-        kind = m.lastgroup
-        if kind in ("if", "loop"):
-            stack += 1
-        elif kind in ("endif", "endloop"):
-            stack -= 1
-            if stack == 0:
-                if kind != want:
-                    raise ValueError(f"{what}: mismatched block closer")
-                return m
-    raise ValueError(f"{what}: missing END LOOP")
-
-
-def _sub_skip_shadowed(body: str, var: str, pattern: str, repl) -> str:
-    """``_sub_outside_quotes`` applied plpgsql-SCOPED for a loop
-    variable *var*: a nested ``FOR <same-name> IN`` REBINDS the name, so
-    the nested loop's BODY is skipped (the inner variable shadows the
-    outer there), while the nested loop's range-bound / control-query
-    text still substitutes (both evaluate in the enclosing scope, where
-    the name is the outer variable). Shared by the integer range-FOR
-    substitution and the record-FOR ``var.field`` substitution — the r9
-    review found the shadowing bug existed identically in both paths.
-    Quoted literals are never touched (same discipline as _subst_vars)."""
-    masked = _mask_quoted(body)
-    shadow = re.compile(rf"(?is)\bFOR\s+{re.escape(var)}\s+IN\b")
-    loop_tok = re.compile(r"(?is)\bLOOP\b")
-
-    def _sub(seg: str) -> str:
-        return _sub_outside_quotes(seg, pattern, repl)
-
-    out, pos = [], 0
-    while m := shadow.search(masked, pos):
-        lm = loop_tok.search(masked, m.end())
-        if lm is None:
-            break  # malformed header — the downstream parser raises loudly
-        em = _find_block_close(masked, lm.end(), "endloop", "FOR")
-        out.append(_sub(body[pos : m.start()]))  # text before the nested loop
-        out.append(body[m.start() : m.end()])  # 'FOR var IN' — name rebinds
-        out.append(_sub(body[m.end() : lm.end()]))  # bounds/query + LOOP
-        out.append(body[lm.end() : em.end()])  # shadowed body, verbatim
-        pos = em.end()
-    out.append(_sub(body[pos:]))
-    return "".join(out)
-
-
-def _sub_loop_var(body: str, var: str, val: str) -> str:
-    """Substitute a range-FOR loop variable into its body as an integer
-    literal, shadow-aware (_sub_skip_shadowed). Found by the
-    derandomized r9 property battery: the flat re.sub also mangled the
-    nested header into ``FOR 2 IN ...``, whose digit "variable" then
-    rewrote integer literals inside the inner body."""
-    return _sub_skip_shadowed(
-        body,
-        var,
-        rf"(?i)(?<![\w$]){re.escape(var)}(?![\w$])",
-        lambda _m, _v=val: _v,
-    )
+                else_body = None
+            else:
+                raise ValueError(f"IF: missing THEN near {text[start:start + 60]!r}")
+            return _IfNode(branches, else_body), _consume_semi(text, m.end())
+        if else_start is not None:
+            continue
+        if kind == "then" and body_start is None:
+            seg_cond = text[cond_start : m.start()].strip()
+            if not seg_cond:
+                raise ValueError("IF/ELSIF: empty condition")
+            body_start = m.end()
+        elif kind == "elsif":
+            if body_start is None:
+                raise ValueError("ELSIF before THEN")
+            branches.append((seg_cond, text[body_start : m.start()]))
+            cond_start, seg_cond, body_start = m.end(), None, None
+        elif kind == "else":
+            if body_start is None:
+                raise ValueError("ELSE before THEN")
+            branches.append((seg_cond, text[body_start : m.start()]))
+            else_start = m.end()
 
 
 def _parse_while(text: str, masked: str, start: int) -> tuple[_WhileNode, int]:
-    lm = re.compile(r"(?is)\bLOOP\b").search(masked, start + 5)
+    lm = _LOOP_KW.search(masked, start + 5)
     if lm is None:
         raise ValueError(f"WHILE: missing LOOP near {text[start:start + 60]!r}")
     cond = text[start + 5 : lm.start()].strip()
     if not cond:
         raise ValueError("WHILE: empty condition")
-    em = _find_block_close(masked, lm.end(), "endloop", "WHILE")
+    *_, em = _block_tokens(text, masked, lm.start(), "WHILE")
     return _WhileNode(cond, text[lm.end() : em.start()]), _consume_semi(text, em.end())
 
 
 def _parse_for(text: str, masked: str, start: int) -> tuple[_ForNode, int]:
-    lm = re.compile(r"(?is)\bLOOP\b").search(masked, start + 3)
+    lm = _LOOP_KW.search(masked, start + 3)
     if lm is None:
         raise ValueError(f"FOR: missing LOOP near {text[start:start + 60]!r}")
     head = text[start + 3 : lm.start()].strip()
@@ -1045,7 +1020,7 @@ def _parse_for(text: str, masked: str, start: int) -> tuple[_ForNode, int]:
         raise ValueError(f"FOR: expected 'FOR var IN [REVERSE] a..b LOOP', got {head!r}")
     rng = hm.group(3)
     dots = _mask_quoted(rng).find("..")
-    em = _find_block_close(masked, lm.end(), "endloop", "FOR")
+    *_, em = _block_tokens(text, masked, lm.start(), "FOR")
     if dots < 0:
         # FOR rec IN <query> LOOP — row iteration over a control table
         if hm.group(2):
@@ -1070,9 +1045,9 @@ def _parse_for(text: str, masked: str, start: int) -> tuple[_ForNode, int]:
 
 
 class _GuardNode:
-    """``BEGIN ... [EXCEPTION WHEN OTHERS THEN ...] END`` nested block
-    (round 7). With a handler the block is an exception guard: state
-    snapshots at entry, every table binding inside materializes eagerly
+    """``BEGIN ... [EXCEPTION WHEN OTHERS THEN ...] END`` nested block.
+    With a handler the block is an exception guard: state snapshots at
+    entry, every table binding inside materializes eagerly
     (localCheckpoint — errors surface at the statement that caused them,
     not at some later action), and a caught error restores the snapshot
     and runs the handler — plpgsql's own "changes are rolled back"
@@ -1096,16 +1071,16 @@ class _GuardEnd:
 
 
 class _DeclBlockNode:
-    """``DECLARE ... BEGIN ... END`` sub-block (r9): the declared
-    scalars enter the enclosing scope at block entry — shadowing
-    same-name outer variables — and leave at block exit (the shadowed
-    outer value reappears; assignments to NON-declared outer variables
-    persist, plpgsql's scoping). Defaults evaluate at EACH entry, in
-    order (a loop-contained block re-initializes per iteration, and a
-    later default may reference an earlier inner variable; the default
-    of a variable that shadows an outer one still sees the OUTER value —
-    the inner binding exists only after its own declaration). The BEGIN
-    part may carry its own EXCEPTION section (it parses as the same
+    """``DECLARE ... BEGIN ... END`` sub-block: the declared scalars
+    enter the enclosing scope at block entry — shadowing same-name outer
+    variables — and leave at block exit (the shadowed outer value
+    reappears; assignments to NON-declared outer variables persist,
+    plpgsql's scoping). Defaults evaluate at EACH entry, in order (a
+    loop-contained block re-initializes per iteration, and a later
+    default may reference an earlier inner variable; the default of a
+    variable that shadows an outer one still sees the OUTER value — the
+    inner binding exists only after its own declaration). The BEGIN part
+    may carry its own EXCEPTION section (it parses as the same
     _GuardNode). Scalar variables only — a nested CURSOR declaration is
     loud (declare cursors in the procedure's own DECLARE section)."""
 
@@ -1139,35 +1114,16 @@ class _DeclEnd:
                 self.scope[name] = old
 
 
-# Block scanner for BEGIN ... END: unlike _CTRL_TOKEN it also tracks
-# nested BEGIN blocks and the EXCEPTION divider. The lookahead on
-# EXCEPTION keeps `RAISE EXCEPTION 'msg'` (string follows, not WHEN)
-# from reading as a handler divider.
-_GUARD_TOKEN = re.compile(
-    r"(?is)\b(?:(?P<endcase>END\s+CASE)|(?P<endif>END\s+IF)"
-    r"|(?P<endloop>END\s+LOOP)"
-    r"|(?P<ifx>IF\s+(?:NOT\s+)?EXISTS)|(?P<if>IF)|(?P<loop>LOOP)"
-    r"|(?P<case>CASE)|(?P<begin>BEGIN)"
-    r"|(?P<exc>EXCEPTION(?=\s+WHEN\b))|(?P<end>END))\b"
-)
-
 _HANDLER_HEAD = re.compile(r"(?is)^\s*WHEN\s+OTHERS\s+THEN\b(.*)$")
 
 
-# plpgsql CASE *statement* (r7): both the searched form
+# plpgsql CASE *statement*: both the searched form
 # (CASE WHEN cond THEN stmts ... END CASE) and the simple form
 # (CASE expr WHEN v1 [, v2] THEN stmts ... END CASE), desugared into the
 # proven _IfNode machinery. plpgsql semantics kept: the simple form
 # compares with = (spelled IN for value lists — NULL never matches,
 # same as plpgsql), and a CASE with no matching branch and no ELSE
 # RAISEs case_not_found instead of falling through.
-_CASE_TOKEN = re.compile(
-    r"(?is)\b(?:(?P<endcase>END\s+CASE)|(?P<endif>END\s+IF)"
-    r"|(?P<endloop>END\s+LOOP)|(?P<ifx>IF\s+(?:NOT\s+)?EXISTS)"
-    r"|(?P<if>IF)|(?P<loop>LOOP)|(?P<begin>BEGIN)|(?P<case>CASE)"
-    r"|(?P<when>WHEN)|(?P<then>THEN)|(?P<else>ELSE)|(?P<end>END))\b"
-)
-
 _CASE_NOT_FOUND_MSG = "CASE statement: no matching branch (case_not_found)"
 _CASE_NOT_FOUND = f"RAISE EXCEPTION '{_CASE_NOT_FOUND_MSG}'"
 
@@ -1178,7 +1134,6 @@ def _parse_case_stmt(text: str, masked: str, start: int) -> tuple[_IfNode, int]:
     level; a WHEN directly preceded by EXIT/CONTINUE (loop control) or
     followed by [NOT] MATCHED (a MERGE inside an arm — wrap it in
     BEGIN...END, documented subset) is not a branch divider."""
-    stack = 1
     head_start = start + 4
     search_expr: str | None = None
     branches: list[tuple[str, str]] = []
@@ -1187,20 +1142,13 @@ def _parse_case_stmt(text: str, masked: str, start: int) -> tuple[_IfNode, int]:
     cur_when: str | None = None
     body_start: int | None = None
     else_start: int | None = None
-    for m in _CASE_TOKEN.finditer(masked, head_start):
+    for m in _block_tokens(text, masked, start, "CASE statement"):
         kind = m.lastgroup
-        if kind == "ifx":
-            continue
-        if kind in ("if", "loop", "begin", "case"):
-            stack += 1
-            continue
-        if kind in ("endif", "endloop", "end"):
-            stack -= 1
-            continue
+        if kind == "end":
+            raise ValueError(
+                f"CASE statement: missing END CASE near {text[start:start + 60]!r}"
+            )
         if kind == "endcase":
-            stack -= 1
-            if stack > 0:
-                continue
             if else_start is not None:
                 else_body: str | None = text[else_start : m.start()]
             elif body_start is not None:
@@ -1213,7 +1161,7 @@ def _parse_case_stmt(text: str, masked: str, start: int) -> tuple[_IfNode, int]:
             if search_expr:
                 branches = [(f"({search_expr}) IN ({w})", b) for w, b in branches]
             return _IfNode(branches, else_body), _consume_semi(text, m.end())
-        if stack != 1 or else_start is not None:
+        if else_start is not None:
             continue
         if kind == "when":
             if re.search(r"(?is)\b(EXIT|CONTINUE)\s*$", text[:m.start()]):
@@ -1239,73 +1187,68 @@ def _parse_case_stmt(text: str, masked: str, start: int) -> tuple[_IfNode, int]:
             branches.append((cur_when, text[body_start : m.start()]))
             body_start = None
             else_start = m.end()
-    raise ValueError(f"CASE statement: missing END CASE near {text[start:start + 60]!r}")
 
 
 def _parse_begin_block(text: str, masked: str, start: int) -> tuple[_GuardNode, int]:
     """Parse ``BEGIN ... [EXCEPTION WHEN OTHERS THEN ...] END`` starting
     at *start* (the BEGIN keyword). Returns the node and the index past
     the closing ``END;``."""
-    stack = ["begin"]
-    exc_span: tuple[int, int] | None = None
-    for m in _GUARD_TOKEN.finditer(masked, start + 5):
-        kind = m.lastgroup
-        if kind == "ifx":
-            continue
-        if kind in ("if", "loop", "case", "begin"):
-            stack.append(kind)
-        elif kind == "endif":
-            if not stack or stack.pop() != "if":
-                raise ValueError("BEGIN block: mismatched END IF")
-        elif kind == "endloop":
-            if not stack or stack.pop() != "loop":
-                raise ValueError("BEGIN block: mismatched END LOOP")
-        elif kind == "endcase":
-            if not stack or stack.pop() != "case":
-                raise ValueError("BEGIN block: mismatched END CASE")
-        elif kind == "exc":
-            if len(stack) == 1:
-                if exc_span is not None:
-                    raise ValueError("BEGIN block: multiple EXCEPTION sections")
-                exc_span = (m.start(), m.end())
-        elif kind == "end":
-            top = stack.pop()
-            if top not in ("case", "begin"):
-                raise ValueError(f"BEGIN block: END closes an open {top.upper()}")
-            if not stack:
-                if exc_span is not None:
-                    body = text[start + 5 : exc_span[0]]
-                    hm = _HANDLER_HEAD.match(text[exc_span[1] : m.start()])
-                    if hm is None:
-                        raise ValueError(
-                            "EXCEPTION: only 'WHEN OTHERS THEN ...' is "
-                            "supported (Redshift's own restriction — no "
-                            "named conditions)"
-                        )
-                    return _GuardNode(body, hm.group(1)), _consume_semi(text, m.end())
-                return _GuardNode(text[start + 5 : m.start()], None), _consume_semi(
-                    text, m.end()
+    exc: re.Match | None = None
+    for m in _block_tokens(text, masked, start, "BEGIN block"):
+        if m.lastgroup == "exc":
+            if exc is not None:
+                raise ValueError("BEGIN block: multiple EXCEPTION sections")
+            exc = m
+        elif m.lastgroup == "end":
+            end = _consume_semi(text, m.end())
+            if exc is None:
+                return _GuardNode(text[start + 5 : m.start()], None), end
+            hm = _HANDLER_HEAD.match(text[exc.end() : m.start()])
+            if hm is None:
+                raise ValueError(
+                    "EXCEPTION: only 'WHEN OTHERS THEN ...' is "
+                    "supported (Redshift's own restriction — no "
+                    "named conditions)"
                 )
-    raise ValueError(f"BEGIN block: missing END near {text[start:start + 60]!r}")
+            return _GuardNode(text[start + 5 : exc.start()], hm.group(1)), end
 
 
-def _toplevel_exception(masked_body: str) -> bool:
-    """True when a procedure body (outer BEGIN/END already stripped)
-    carries an EXCEPTION divider at its own top level — the common
-    real-proc form ``BEGIN work EXCEPTION WHEN OTHERS THEN cleanup END``.
-    Depth-0 scan over quote-masked text."""
-    depth = 0
-    for m in _GUARD_TOKEN.finditer(masked_body):
-        kind = m.lastgroup
-        if kind == "ifx":
-            continue
-        if kind in ("if", "loop", "case", "begin"):
-            depth += 1
-        elif kind in ("endif", "endloop", "endcase", "end"):
-            depth -= 1
-        elif kind == "exc" and depth == 0:
-            return True
-    return False
+def _bind(text: str, binds: dict[str, str | Callable[[], str]]) -> str:
+    """*text* with each name of *binds* — a parameter, variable,
+    ``rec.field`` or ``$N`` — replaced by its text, or by what its
+    callable renders (called per occurrence, so a value renders only
+    where the text names it). One pass over identifier-bounded,
+    case-insensitive matches outside quoted literals, so a value is
+    never re-read as a name or as an ``re`` escape. A nested
+    ``FOR <name> IN ... LOOP`` rebinds the name: its bounds or query
+    still bind (they evaluate in the enclosing scope), its body keeps
+    the name (the loop variable shadows it there)."""
+    if not binds:
+        return text
+    keys = sorted(binds, key=len, reverse=True)  # rec.field before rec
+    alts = (r"\s*\.\s*".join(map(re.escape, k.split("."))) for k in keys)
+    pat = re.compile(r"(?i)(?<![\w$])(?:(" + ")|(".join(alts) + r"))(?![\w$])")
+
+    def _render(m: re.Match) -> str:
+        v = binds[keys[m.lastindex - 1]]  # one group per key
+        return v() if callable(v) else v
+
+    heads = {k.split(".")[0].lower() for k in keys}
+    shadow = re.compile(rf"(?is)\bFOR\s+({'|'.join(map(re.escape, heads))})\s+IN\b")
+    masked = _mask_quoted(text)
+    out, pos = [], 0
+    while (m := shadow.search(masked, pos)) and (lm := _LOOP_KW.search(masked, m.end())):
+        *_, close = _block_tokens(text, masked, lm.start(), "FOR")
+        inner = {k: v for k, v in binds.items() if k.split(".")[0].lower() != m.group(1).lower()}
+        out += [
+            _sub_outside_quotes(text[pos : m.start()], pat, _render),
+            text[m.start() : m.end()],  # 'FOR name IN' — the name rebinds
+            _sub_outside_quotes(text[m.end() : lm.end()], pat, _render),
+            _bind(text[lm.end() : close.end()], inner),
+        ]
+        pos = close.end()
+    out.append(_sub_outside_quotes(text[pos:], pat, _render))
+    return "".join(out)
 
 
 def _sqlerrm(exc: BaseException) -> str:
@@ -1324,7 +1267,7 @@ def _classify_sqlstate(exc: BaseException) -> str:
     20000 case_not_found (a CASE statement with no matching branch and
     no ELSE — routed through the runner's own RAISE sentinel), P0001
     raise_exception, P0002 no_data_found / P0003 too_many_rows (SELECT
-    INTO STRICT violations — r12), 22012 division_by_zero, 22P02 invalid text
+    INTO STRICT violations), 22012 division_by_zero, 22P02 invalid text
     representation (a failed cast from a malformed string — Postgres/
     Redshift report 22P02 there, NOT 22018), 22003 numeric out of range
     (including a cast that overflows its target — Postgres raises
@@ -1351,6 +1294,16 @@ def _classify_sqlstate(exc: BaseException) -> str:
     return "XX000"
 
 
+_BLOCK_HEAD = re.compile(r"(?i)(IF|WHILE|FOR|LOOP|BEGIN|DECLARE|CASE)\b")
+_BLOCK_PARSERS = {
+    "IF": _parse_if,
+    "WHILE": _parse_while,
+    "FOR": _parse_for,
+    "BEGIN": _parse_begin_block,
+    "CASE": _parse_case_stmt,
+}
+
+
 def _parse_plpgsql_nodes(text: str) -> list:
     """Split a procedure body into executable items: plain SQL statement
     strings interleaved with control nodes (each block's body stays raw
@@ -1363,11 +1316,14 @@ def _parse_plpgsql_nodes(text: str) -> list:
             i += 1
         if i >= n:
             break
-        m = re.match(r"(?i)(IF|WHILE|FOR|LOOP|BEGIN|DECLARE|CASE)\b", masked[i:])
+        m = _BLOCK_HEAD.match(masked, i)
         kw = m.group(1).upper() if m else None
-        if kw == "DECLARE":
-            # r9: DECLARE ... BEGIN ... END sub-block. The declarations
-            # run from DECLARE to the block's BEGIN; the block itself
+        if kw in _BLOCK_PARSERS:
+            node, i = _BLOCK_PARSERS[kw](text, masked, i)
+            nodes.append(node)
+        elif kw == "DECLARE":
+            # DECLARE ... BEGIN ... END sub-block. The declarations run
+            # from DECLARE to the block's BEGIN; the block itself
             # (including an optional EXCEPTION section) parses as the
             # ordinary _GuardNode.
             bm = re.compile(r"(?i)\bBEGIN\b").search(masked, i + 7)
@@ -1384,26 +1340,10 @@ def _parse_plpgsql_nodes(text: str) -> list:
                 )
             node, i = _parse_begin_block(text, masked, bm.start())
             nodes.append(_DeclBlockNode(decls, node))
-            continue
-        if kw == "BEGIN":
-            node, i = _parse_begin_block(text, masked, i)
-            nodes.append(node)
-        elif kw == "CASE":
-            node, i = _parse_case_stmt(text, masked, i)
-            nodes.append(node)
-        elif kw == "IF":
-            node, i = _parse_if(text, masked, i)
-            nodes.append(node)
-        elif kw == "WHILE":
-            node, i = _parse_while(text, masked, i)
-            nodes.append(node)
-        elif kw == "FOR":
-            node, i = _parse_for(text, masked, i)
-            nodes.append(node)
         elif kw == "LOOP":
             # bare LOOP ... END LOOP: an unconditional loop — EXIT is
             # its only way out (the iteration cap backstops a miss)
-            em = _find_block_close(masked, i + 4, "endloop", "LOOP")
+            *_, em = _block_tokens(text, masked, i, "LOOP")
             nodes.append(_WhileNode("TRUE", text[i + 4 : em.start()]))
             i = _consume_semi(text, em.end())
         else:
@@ -1412,12 +1352,11 @@ def _parse_plpgsql_nodes(text: str) -> list:
                 j = n
             stmt = text[i:j].strip()
             if stmt:
-                if bm := re.match(
-                    r"(?i)(ELSIF|ELSEIF|ELSE|THEN|END\s+IF|END\s+LOOP)\b", stmt
-                ):
+                tm = _BLOCK_TOKEN.match(masked, i)
+                if tm and tm.lastgroup in ("then", "elsif", "else", "endif", "endloop"):
                     # a block keyword with no open block — loud misparse
                     raise ValueError(
-                        f"plpgsql: misplaced {bm.group(1).upper()} "
+                        f"plpgsql: misplaced {tm.group().upper()} "
                         f"near {stmt[:60]!r}"
                     )
                 nodes.append(stmt)
@@ -1425,7 +1364,7 @@ def _parse_plpgsql_nodes(text: str) -> list:
     return nodes
 
 
-# --- plpgsql variables (round 6) -------------------------------------------
+# --- plpgsql variables ------------------------------------------------------
 # DECLARE section + `var := expr` + `SELECT ... INTO var[, ...]`.
 # Variables are DRIVER-SIDE scalars: each use-site substitutes the
 # current value as a typed SQL literal (CAST('..' AS type)), so Catalyst
@@ -1446,7 +1385,7 @@ class _Scoped:
 
 
 class _Cursor:
-    """Forward-only plpgsql cursor (r7): the DECLAREd query evaluates at
+    """Forward-only plpgsql cursor: the DECLAREd query evaluates at
     OPEN with the variable values of that moment, buffering at most
     MAX_ROWS rows driver-side — the same bounded control-table contract
     as _ForQueryNode (plpgsql row loops run on the coordinator by the
@@ -1473,7 +1412,7 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
     A ``name CURSOR FOR <query>`` entry comes back as (name, "CURSOR",
     query). Records/aliases/SCROLL/parameterized cursors are outside the
     subset (loud). *proc* is the error-message context (the procedure
-    name, or "nested block" for a r9 DECLARE sub-block)."""
+    name, or "nested block" for a DECLARE sub-block)."""
     ctx = proc if proc == "nested block" else f"CREATE PROCEDURE {proc}"
     out: list[tuple[str, str, str | None]] = []
     seen: set[str] = set()
@@ -1484,8 +1423,8 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
         # an executable statement in the DECLARE section means the
         # DECLARE/BEGIN split mis-scoped (e.g. statements between a
         # nested DECLARE and a LATER BEGIN) — swallowing it as a
-        # "declaration" would silently drop DML (r9 review; loud-never-
-        # silent policy). Variable names can't be these reserved words.
+        # "declaration" would silently drop DML (loud-never-silent
+        # policy). Variable names can't be these reserved words.
         if re.match(
             r"(?i)^(INSERT|UPDATE|DELETE|SELECT|CREATE|DROP|CALL|SET|COPY"
             r"|UNLOAD|MERGE|TRUNCATE|RAISE|IF|WHILE|FOR|LOOP|EXIT|CONTINUE"
@@ -1517,7 +1456,7 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
             raise ValueError(f"{ctx}: cannot parse DECLARE {d!r}")
         if hm.group(1).lower() in seen:
             # plpgsql raises on a duplicate declaration in one section —
-            # last-wins would silently mask the authoring error (r9 review)
+            # last-wins would silently mask the authoring error
             raise ValueError(
                 f"{ctx}: duplicate declaration of {hm.group(1).lower()!r}"
             )
@@ -1565,7 +1504,7 @@ class _LazyFound:
 
 
 def _mark_found_dml(scope: dict | None, state) -> None:
-    """plpgsql FOUND after INSERT/UPDATE/DELETE (r12): set only when the
+    """plpgsql FOUND after INSERT/UPDATE/DELETE: set only when the
     body declared it (the auto-declare guard bounds the name-capture
     blast radius), and lazily — the captured affected-set is this
     statement's pre-rebind view, same snapshot ROW_COUNT reports.
@@ -1601,27 +1540,28 @@ def _sql_literal(value, typ: str) -> str:
     return f"CAST('{value}' AS {typ})"  # numerics/Decimal/date/timestamp via str()
 
 
+def _cell_literal(cell: list) -> str:
+    """A scope cell ``[type, value]`` as a typed literal. A _LazyFound
+    resolves here, on first read, and memoizes back into the cell."""
+    v = cell[1]
+    if isinstance(v, _LazyFound):
+        v = cell[1] = v.resolve()
+    return _sql_literal(v, cell[0])
+
+
 def _subst_vars(scope: dict | None, sql: str) -> str:
-    for name, cell in (scope or {}).items():
-        if cell[0] == "CURSOR":
-            continue  # cursor names are statement operands, not scalars
-
-        # callable repl, and the literal renders ONLY on a match: a
-        # plain-string repl would re-interpret the literal's doubled
-        # backslashes as re.sub group escapes, and an eager render would
-        # force a _LazyFound's count job for statements that never
-        # mention the variable (memoized back into the cell on first
-        # read).
-        def _repl(_m, _cell=cell):
-            v = _cell[1]
-            if isinstance(v, _LazyFound):
-                v = _cell[1] = v.resolve()
-            return _sql_literal(v, _cell[0])
-
-        sql = _sub_outside_quotes(
-            sql, rf"(?i)(?<![\w$]){re.escape(name)}(?![\w$])", _repl
-        )
-    return sql
+    """*sql* with *scope*'s scalar variables bound as typed literals.
+    Each literal renders only where the statement names its variable, so
+    a _LazyFound's count job runs only for a statement that reads it.
+    Cursor names are statement operands, not scalars."""
+    return _bind(
+        sql,
+        {
+            name: partial(_cell_literal, cell)
+            for name, cell in (scope or {}).items()
+            if cell[0] != "CURSOR"
+        },
+    )
 
 
 # `var := expr;` — plpgsql assignment (also the `var = expr` spelling
@@ -2130,7 +2070,7 @@ def _cast_positional(sel: DataFrame, target: DataFrame, table: str) -> DataFrame
     )
 
 
-def _sub_outside_quotes(text: str, pattern: str, repl) -> str:
+def _sub_outside_quotes(text: str, pattern: str | re.Pattern, repl) -> str:
     """``re.sub`` applied only OUTSIDE single-quoted string literals, so
     an alias-looking token inside a literal ('t.x is a label') survives."""
     segs = text.split("'")
@@ -2618,7 +2558,7 @@ def _exec_for(state: _ScriptState, scope: dict | None, node: _ForNode) -> None:
         # loop marker EXIT/CONTINUE unwind to
         v = node.vals[node.idx]
         node.idx += 1
-        _push_body(state, _sub_loop_var(node.body, node.var, str(v)), scope, node)
+        _push_body(state, _bind(node.body, {node.var: str(v)}), scope, node)
 
 
 def _exec_for_query(state: _ScriptState, scope: dict | None, node: _ForQueryNode) -> None:
@@ -2636,24 +2576,16 @@ def _exec_for_query(state: _ScriptState, scope: dict | None, node: _ForQueryNode
             )
     if node.idx >= len(node.rows):
         # loop exit: plpgsql sets FOUND = "did the loop
-        # iterate at all" when a query-FOR finishes (r12)
+        # iterate at all" when a query-FOR finishes
         _set_found(scope, len(node.rows) > 0)
         return
     row = node.rows[node.idx]
     node.idx += 1
-    body = node.body
+    binds: dict[str, str] = {}
     for (fname, ftyp), val in zip(node.fields, row):
-        lit = _sql_literal(val, ftyp)
-        # shadow-aware: a nested FOR rebinding the
-        # record name owns var.field inside its body
-        body = _sub_skip_shadowed(
-            body,
-            node.var,
-            rf"(?i)(?<![\w$]){re.escape(node.var)}\s*\.\s*"
-            rf"{re.escape(fname)}(?![\w$])",
-            lambda _m, _lit=lit: _lit,
-        )
-    _push_body(state, body, scope, node)
+        # of two same-named fields the first one binds
+        binds.setdefault(f"{node.var}.{fname}", _sql_literal(val, ftyp))
+    _push_body(state, _bind(node.body, binds), scope, node)
 
 
 def _exec_call_end(state: _ScriptState, scope: dict | None, node: _CallEnd) -> None:
@@ -2667,7 +2599,7 @@ def _exec_call_end(state: _ScriptState, scope: dict | None, node: _CallEnd) -> N
 
 
 def _exec_decl_block(state: _ScriptState, scope: dict | None, node: _DeclBlockNode) -> None:
-    # r9: enter the DECLARE sub-block — shadow-save every
+    # enter the DECLARE sub-block — shadow-save every
     # declared name, evaluate defaults in order (each sees
     # earlier inner vars; a shadowing default still sees
     # the outer value), then run the BEGIN block under the
@@ -2676,7 +2608,7 @@ def _exec_decl_block(state: _ScriptState, scope: dict | None, node: _DeclBlockNo
     # saved-dict fills incrementally: a default that raises
     # mid-section leaves the marker live, so an OUTER
     # guard's unwind un-shadows exactly the already-applied
-    # names instead of leaking them (r9 review).
+    # names instead of leaking them.
     eff = scope if scope is not None else {}
     saved: dict = {}
     state.pending.appendleft(_Scoped(_DeclEnd(saved, eff), eff))
@@ -2769,15 +2701,9 @@ def _catch(state: _ScriptState, exc: Exception) -> None:
             and e[1].rows is not g["open_cursors"].get(n)
         ):
             e[1].rows = None
-    handler = _sub_outside_quotes(
+    handler = _bind(
         g["handler"],
-        r"(?i)(?<![\w$])SQLERRM(?![\w$])",
-        lambda _m, _s=_sqlerrm(exc): _s,
-    )
-    handler = _sub_outside_quotes(
-        handler,
-        r"(?i)(?<![\w$])SQLSTATE(?![\w$])",
-        lambda _m, _s=f"'{_classify_sqlstate(exc)}'": _s,
+        {"sqlerrm": _sqlerrm(exc), "sqlstate": f"'{_classify_sqlstate(exc)}'"},
     )
     _push_body(state, handler, g["scope"])
 
@@ -2809,15 +2735,15 @@ def _exec_exit(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
         # plpgsql sets FOUND = "iterated at least
         # once" on ANY query-FOR exit, EXIT
         # included (exec_for_query stamps it after
-        # the loop regardless of how it ended) —
-        # ADVICE r12. Integer-FOR and WHILE never
-        # touch FOUND, per plpgsql.
+        # the loop regardless of how it ended).
+        # Integer-FOR and WHILE never touch FOUND,
+        # per plpgsql.
         if isinstance(inner, _ForQueryNode):
             _set_found(iscope if iscope is not None else scope, inner.idx > 0)
 
 
 def _exec_return(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    if re.sub(r"(?i)^RETURN", "", raw).strip(" ;"):
+    if raw[6:].strip(" ;"):
         raise ValueError(
             "RETURN with a value: procedures return nothing — "
             "write results to a table the caller reads"
@@ -2840,7 +2766,7 @@ def _exec_execute(state: _ScriptState, scope: dict | None, m: re.Match, raw: str
     # variables — plpgsql's own contract — so the built
     # statement enqueues unscoped. `EXECUTE ... INTO
     # var[, ...]` assigns the single result row instead;
-    # `USING expr, ...` (r8) value-binds $N placeholders
+    # `USING expr, ...` value-binds $N placeholders
     # below.
     state.n_execs += 1
     if state.n_execs > 1000:
@@ -2860,7 +2786,7 @@ def _exec_execute(state: _ScriptState, scope: dict | None, m: re.Match, raw: str
         raise ValueError("EXECUTE: command string is NULL/empty")
     sql_text = str(sql_text).strip().rstrip(";").strip()
     if using_tail is not None:
-        # EXECUTE ... USING (r8): $N placeholders bind the
+        # EXECUTE ... USING: $N placeholders bind the
         # N-th USING expression's VALUE (evaluated now, in
         # the current scope — one bounded one-row job per
         # argument) as a typed literal, outside quotes only
@@ -2895,12 +2821,7 @@ def _exec_execute(state: _ScriptState, scope: dict | None, m: re.Match, raw: str
                 "EXECUTE ... USING: $0 referenced but "
                 "placeholders are numbered from $1"
             )
-        for i in sorted(range(1, len(rendered) + 1), reverse=True):
-            sql_text = _sub_outside_quotes(
-                sql_text,
-                rf"\${i}(?!\d)",
-                lambda _m, _lit=rendered[i - 1]: _lit,
-            )
+        sql_text = _bind(sql_text, {f"${i}": lit for i, lit in enumerate(rendered, 1)})
     if into_tail is None:
         state.pending.appendleft(sql_text)
         return
@@ -2932,7 +2853,7 @@ def _assign_row(
 
 
 def _exec_perform(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    # plpgsql PERFORM (r8): run the query, discard the
+    # plpgsql PERFORM: run the query, discard the
     # rows. FOUND reflects whether it produced any row
     # (one bounded limit-1 job); ROW_COUNT is tracked as
     # the usual LAZY plan — the discarded row count is
@@ -2949,7 +2870,7 @@ def _exec_perform(state: _ScriptState, scope: dict | None, m: re.Match, raw: str
 
 
 def _exec_get_diagnostics(state: _ScriptState, scope: dict, m: re.Match, raw: str) -> None:
-    # GET DIAGNOSTICS var := ROW_COUNT (r7): rows
+    # GET DIAGNOSTICS var := ROW_COUNT: rows
     # affected by the last tracked statement —
     # INSERT/UPDATE/DELETE/TRUNCATE (lazy affected-set
     # plans counted on first read, then cached) plus
@@ -2984,7 +2905,7 @@ def _exec_get_diagnostics(state: _ScriptState, scope: dict, m: re.Match, raw: st
     scope[vname][1] = state.last_dml
 
 
-# forward-only cursor ops (r7): OPEN evaluates the
+# forward-only cursor ops: OPEN evaluates the
 # bound query NOW through the dialect front-end with
 # current variable values, buffering at most
 # MAX_ROWS control rows driver-side (the same
@@ -3110,7 +3031,7 @@ def _exec_select_into_vars(state: _ScriptState, scope: dict, m: re.Match, raw: s
     else:
         row = qdf2.first()
     _assign_row(state, scope, names, row, "SELECT INTO", "query")
-    # plpgsql: SELECT INTO sets FOUND (r12) —
+    # plpgsql: SELECT INTO sets FOUND —
     # unlike EXECUTE ... INTO, which never does
     _set_found(scope, row is not None)
     return None
@@ -3142,7 +3063,7 @@ def _exec_create_schema(state: _ScriptState, scope: dict | None, m: re.Match, ra
 
 
 def _exec_drop_schema(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    s, mode = m.group(1).lower(), (m.group(2) or "RESTRICT").upper()
+    s, mode = m.group(2).lower(), (m.group(3) or "RESTRICT").upper()
     if s in state.schemas:
         members = [
             n for n in state.tables if n.lower().startswith(f"{s}__")
@@ -3159,7 +3080,7 @@ def _exec_drop_schema(state: _ScriptState, scope: dict | None, m: re.Match, raw:
             state.drop_meta(n)
             state.mv_defs.pop(n, None)
         state.schemas.discard(s)
-    elif "IF EXISTS" not in raw.upper():
+    elif m.group(1) is None:
         raise ValueError(f"DROP SCHEMA: no schema {s!r}")
 
 
@@ -3252,14 +3173,14 @@ def _exec_create_func(
 
 
 def _exec_drop_func(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    dname = m.group(1).lower()
+    dname = m.group(2).lower()
     if dname in state.py_funcs:
         state.py_funcs.pop(dname)
         _register_py_udf_tombstone(state.spark, dname)
-    elif dname in state.funcs or "IF EXISTS" in raw.upper():
+    elif dname in state.funcs or m.group(1) is not None:
         state.funcs.pop(dname, None)
     else:
-        raise ValueError(f"DROP FUNCTION: no SQL UDF {m.group(1)!r}")
+        raise ValueError(f"DROP FUNCTION: no SQL UDF {m.group(2)!r}")
 
 
 def _inline_udfs(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> str:
@@ -3289,20 +3210,21 @@ def _exec_create_proc(state: _ScriptState, scope: dict | None, m: re.Match, raw:
         )
     decls = _parse_proc_decls(bm.group(1) or "", m.group(1))
     body = bm.group(2)
-    if _toplevel_exception(_mask_quoted(body)):
+    block = f"BEGIN {body} END"
+    if _parse_begin_block(block, _mask_quoted(block), 0)[0].handler is not None:
         # the common real-proc form puts the EXCEPTION
         # section on the procedure's own outer block
-        # (stripped above) — re-wrap so the whole body
-        # parses as one guarded BEGIN...EXCEPTION...END
-        body = f"BEGIN {body} END"
+        # (stripped above) — keep it wrapped so the whole
+        # body parses as one guarded BEGIN...EXCEPTION...END
+        body = block
     _parse_plpgsql_nodes(body)  # surface block-structure errors at define time
     state.procs[m.group(1)] = (params, decls, body)
 
 
 def _exec_drop_proc(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
-    if m.group(1) not in state.procs and "IF EXISTS" not in raw.upper():
-        raise ValueError(f"DROP PROCEDURE: no procedure {m.group(1)!r}")
-    state.procs.pop(m.group(1), None)
+    if m.group(2) not in state.procs and m.group(1) is None:
+        raise ValueError(f"DROP PROCEDURE: no procedure {m.group(2)!r}")
+    state.procs.pop(m.group(2), None)
 
 
 def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -> None:
@@ -3325,7 +3247,6 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
             f"CALL {name}: expected {len(params)} argument(s) "
             f"({', '.join(p[0] for p in params)}), got {len(args)}"
         )
-    call_decls = decls
     caller_scope = scope  # the _Scoped wrapper's scope (or None)
     # a CALL expanded from inside another CALL still has
     # that CALL's end-marker queued — nested per Redshift
@@ -3333,9 +3254,10 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
     scope = {}
     inout: list[tuple[str, str]] = []
     writebacks: list[tuple[dict, str, str]] = []
+    binds: dict[str, str] = {}
     for (pname, pmode, ptyp), a in zip(params, args):
         if pmode == "INOUT":
-            # INOUT (r8): a scoped variable initialized
+            # INOUT: a scoped variable initialized
             # from the CALL argument (evaluated NOW, in
             # the CALLER's scope); the top-level CALL
             # returns its final value, a nested CALL
@@ -3363,22 +3285,18 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
                 init = _eval_script_scalar(state, None, a, ptyp)
             scope[pname.lower()] = [ptyp, init]
             continue
-        # identifier-boundary textual substitution (plpgsql
-        # itself substitutes params lexically) — into the
-        # body AND into DECLARE default expressions; caller
-        # variables in the argument render as typed
-        # literals HERE (the statement-level pass skips
-        # CALL so INOUT variable names survive above)
-        a_lit = _subst_vars(caller_scope, a)
-        p_pat = rf"(?i)(?<![\w$]){re.escape(pname)}(?![\w$])"
-        body = re.sub(p_pat, a_lit, body)
-        call_decls = [
-            (vn, vt, None if vd is None else re.sub(p_pat, a_lit, vd))
-            for vn, vt, vd in call_decls
-        ]
+        # an IN param binds as the argument's text (plpgsql
+        # substitutes params lexically) — into the body AND
+        # into DECLARE defaults; caller variables in the
+        # argument render as typed literals HERE (the
+        # statement-level pass skips CALL so INOUT variable
+        # names survive above)
+        binds[pname] = _subst_vars(caller_scope, a)
+    body = _bind(body, binds)
     # DECLAREd variables: defaults evaluate at block entry,
     # in order (a later default may reference an earlier var)
-    for vname, vtyp, vdefault in call_decls:
+    for vname, vtyp, vdefault in decls:
+        vdefault = vdefault and _bind(vdefault, binds)
         if vtyp == "CURSOR":
             # query text (param-substituted above) binds
             # variable values at OPEN, not here
@@ -3399,8 +3317,8 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
     ):
         # plpgsql's FOUND, maintained by FETCH, PERFORM,
         # SELECT INTO, query-FOR exit, and
-        # INSERT/UPDATE/DELETE (r12 — EXECUTE never sets
-        # it, per plpgsql). Auto-declared only when a
+        # INSERT/UPDATE/DELETE (EXECUTE never sets it,
+        # per plpgsql). Auto-declared only when a
         # cursor exists or the body MENTIONS found/
         # PERFORM, to bound the name-capture blast
         # radius plpgsql variables inherently carry:
@@ -3411,7 +3329,7 @@ def _exec_call(state: _ScriptState, scope: dict | None, m: re.Match, raw: str) -
         # here. Initialized FALSE per call, plpgsql's
         # own start state.
         #
-        # variable_conflict guard (ADVICE r12): once FOUND
+        # variable_conflict guard: once FOUND
         # is live, _subst_vars rewrites every bare `found`
         # token — a body that ALSO uses `found` as a
         # relation column would get that column reference

@@ -358,6 +358,58 @@ def test_quote_scanners_are_not_copied():
     )
 
 
+# The one walker of the PL/pgSQL block grammar in script_runner.py.
+_BLOCK_WALKER = "_block_tokens"
+
+
+def test_plpgsql_block_grammar_is_not_copied():
+    """The PL/pgSQL block grammar is one token regex read by one walker.
+    A second regex that spells ``END\\s+LOOP``, or a second function
+    iterating the token regex, is a second depth rule that can disagree
+    with the first about where a block ends."""
+    from pathlib import Path
+
+    from sql_redshift_etl_spark.functions import script_runner
+
+    tree = ast.parse(Path(script_runner.__file__).read_text())
+
+    def is_grammar(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "re"
+            and bool(node.args)
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+            and r"END\s+LOOP" in node.args[0].value
+        )
+
+    grammars = [ast.unparse(n)[:70] for n in ast.walk(tree) if is_grammar(n)]
+    assert len(grammars) == 1, f"block-token regexes: {grammars}"
+    names = {
+        t.id
+        for n in tree.body
+        if isinstance(n, ast.Assign) and is_grammar(n.value)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    walkers = sorted(
+        {
+            fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "finditer"
+            and isinstance(c.func.value, ast.Name)
+            and c.func.value.id in names
+        }
+    )
+    assert walkers == [_BLOCK_WALKER], f"functions iterating {names}: {walkers}"
+
+
 # Reads of files the engine itself wrote moments earlier (the streaming
 # upserts' generation files): never a fixture table, so no cached schema.
 _PARQUET_READ_ALLOWED = {

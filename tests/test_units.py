@@ -3,6 +3,7 @@ assembly (no live DB — wiring only, SURVEY.md §7), and scale utilities."""
 
 from __future__ import annotations
 
+import re
 from datetime import date, datetime
 
 import pytest
@@ -3095,6 +3096,138 @@ def test_procedure_missing_end_if_loud(spark):
             $$ LANGUAGE plpgsql;
             """,
         )
+
+
+def test_procedure_nested_exists_if_and_case_loop_head(spark):
+    """Nested blocks end where plpgsql ends them: an IF whose condition
+    is an EXISTS test opens a block wherever it starts a statement, a
+    WHILE condition ending in a CASE expression (``... END LOOP``) still
+    opens its loop, and the END of a BEGIN block inside a CASE arm does
+    not close the CASE."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    out = run_redshift_script(
+        spark,
+        """
+        CREATE TEMP TABLE acc (x INT);
+        CREATE PROCEDURE p() AS $$
+        DECLARE
+            n INT := 0;
+        BEGIN
+            FOR i IN 1..3 LOOP
+                IF NOT EXISTS (SELECT 1 FROM acc WHERE x = 2) THEN
+                    INSERT INTO acc VALUES (i);
+                END IF;
+            END LOOP;
+            IF n = 0 THEN
+                WHILE CASE WHEN n < 2 THEN TRUE ELSE FALSE END LOOP
+                    n := n + 1;
+                    INSERT INTO acc VALUES (10 * n);
+                END LOOP;
+            END IF;
+            IF n = 2 THEN
+                CASE WHEN n > 1 THEN
+                    BEGIN
+                        INSERT INTO acc VALUES (100);
+                    END;
+                ELSE
+                    INSERT INTO acc VALUES (-1);
+                END CASE;
+            END IF;
+        END;
+        $$ LANGUAGE plpgsql;
+        CALL p();
+        SELECT x FROM acc ORDER BY x;
+        """,
+    )
+    assert [r.x for r in out.collect()] == [1, 2, 10, 20, 100]
+
+
+# CALL binds IN parameters the way plpgsql does: never inside a string
+# literal, all parameters in one pass (an argument's text is not read as
+# another parameter's name), an argument's backslash is text and not an
+# ``re`` escape, and a FOR loop over the parameter's name shadows it.
+_CALL_BINDING_CASES = {
+    "literal_keeps_param_name": (
+        """
+        CREATE PROCEDURE p(n INT) AS $$
+        BEGIN
+            SELECT 'n is' AS label, n AS v;
+        END;
+        $$ LANGUAGE plpgsql;
+        CALL p(5);
+        """,
+        [("n is", 5)],
+    ),
+    "one_pass_binding": (
+        """
+        CREATE PROCEDURE q(a VARCHAR(8), b INT) AS $$
+        BEGIN
+            SELECT a AS s, b AS k;
+        END;
+        $$ LANGUAGE plpgsql;
+        CALL q('b', 2);
+        """,
+        [("b", 2)],
+    ),
+    "backslash_in_argument": (
+        r"""
+        CREATE PROCEDURE r(x VARCHAR(8)) AS $$
+        BEGIN
+            SELECT x AS s, x = 'a\d' AS same;
+        END;
+        $$ LANGUAGE plpgsql;
+        CALL r('a\d');
+        """,
+        None,  # the plain SELECT's own reading of 'a\d', compared below
+    ),
+    "loop_variable_shadows_param": (
+        """
+        CREATE TEMP TABLE acc (x INT);
+        CREATE PROCEDURE p(i INT) AS $$
+        BEGIN
+            FOR i IN 1..2 LOOP
+                INSERT INTO acc VALUES (i * 10 + 7);
+            END LOOP;
+        END;
+        $$ LANGUAGE plpgsql;
+        CALL p(7);
+        SELECT x FROM acc ORDER BY x;
+        """,
+        [(17,), (27,)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_CALL_BINDING_CASES))
+def test_call_binds_in_params_like_plpgsql(spark, case):
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    script, expected = _CALL_BINDING_CASES[case]
+    if expected is None:
+        plain = run_redshift_script(spark, r"SELECT 'a\d' AS s").first().s
+        expected = [(plain, True)]
+    assert [tuple(r) for r in run_redshift_script(spark, script).collect()] == expected
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "DROP PROCEDURE IF  EXISTS nope",
+        "DROP PROCEDURE IF\n EXISTS nope",
+        "DROP FUNCTION IF\tEXISTS nofn",
+        "DROP SCHEMA IF  EXISTS nosch",
+    ],
+)
+def test_drop_if_exists_any_spacing(spark, stmt):
+    """IF EXISTS is read from the statement's own pattern, so any
+    whitespace between the words is a no-op drop of a missing object;
+    without it the drop stays loud."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    assert run_redshift_script(spark, f"{stmt};\nSELECT 1 AS one").first().one == 1
+    with pytest.raises(ValueError, match="no (procedure|SQL UDF|schema)"):
+        run_redshift_script(spark, re.sub(r"(?s)IF\s+EXISTS\s+", "", stmt))
 
 
 # --- COPY REMOVEQUOTES / epoch TIMEFORMAT / ON COMMIT / search_path ---

@@ -1,13 +1,18 @@
 #!/usr/bin/env python
 """Dump explain('formatted') + noop-sink steady timing + job count for a
-list of registered queries — the generic before/after capture used for
-the r14 plan evidence under plans/r14/. ``timed_capture`` is the shared
-harness (also used by tools/bounded_sort_sweep_audit.py). ``build_jobs``
-is the number of Spark jobs the builder call itself fired (schema
-inference, script statements, stream batches), read from the status
-store so jobs on every thread count.
+list of registered queries — the generic before/after capture.
+``timed_capture`` is the shared harness (also used by
+tools/bounded_sort_sweep_audit.py). ``build_jobs`` is the number of
+Spark jobs the builder call itself fired (schema inference, script
+statements, stream batches), read from the status store so jobs on
+every thread count.
 
-Usage: python tools/capture_plans.py before|after q1 q2 ... [--sf=sf_dir] [--n=3]
+Plans go to ``<out>/<query>_<before|after>.txt``. ``--out`` defaults to
+the git-ignored ``_scratch/plans/`` of this checkout, so a capture never
+overwrites committed evidence; write to ``plans/r14`` only by naming it
+(a relative DIR is taken from the current directory).
+
+Usage: python tools/capture_plans.py before|after q1 q2 ... [--sf=sf_dir] [--n=3] [--out=DIR]
 """
 
 from __future__ import annotations
@@ -84,13 +89,15 @@ def main() -> None:
     names = [a for a in sys.argv[2:] if not a.startswith("--")]
     sf_dir = "/root/testdata/sf0.1"
     n_timed = 3
+    out_dir = os.path.join(REPO_ROOT, "_scratch", "plans")
     for a in sys.argv[2:]:
         if a.startswith("--sf="):
             sf_dir = a.split("=", 1)[1]
         elif a.startswith("--n="):
             n_timed = int(a.split("=", 1)[1])
+        elif a.startswith("--out="):
+            out_dir = a.split("=", 1)[1]
 
-    out_dir = os.path.join(REPO_ROOT, "plans", "r14")
     os.makedirs(out_dir, exist_ok=True)
     spark, data_dir = staged_session("capture-plans", sf_dir)
     qs = all_queries()
