@@ -5,6 +5,25 @@ The same builder config is meant to hold from local[32] tests up to a
 skew-join splitting) is on, shuffle partitions default to the local core
 count but are overridable via SPARK_GRAFT_CPUS / a real cluster's conf,
 and Arrow transfer is enabled for the (rare) Pandas-UDF paths.
+
+Two static confs shape the Python workers of a session built here:
+
+- ``spark.python.daemon.module`` is ``sql_redshift_etl_spark.pydaemon``,
+  pyspark's daemon with a stat-checked zip-archive cache. PySpark's worker
+  calls ``importlib.invalidate_caches()`` on every task, and on CPython
+  3.11 that re-parses every zip archive on the worker path (Spark's core
+  jar, ``pyspark.zip``, py4j) before the user function runs. See that
+  module's docstring.
+- ``spark.executorEnv.PYTHONPATH`` is the directory that holds this
+  package (Spark still puts its own pyspark and py4j archives and the
+  driver environment's ``PYTHONPATH`` next to it). The daemon is started
+  with ``python -m`` on that module, and cloudpickle ships the builders'
+  UDFs by module reference, so a worker must import the package whatever
+  the driver's working directory is.
+
+Both apply only when ``get_spark`` starts the SparkContext; a session
+that already exists (one a caller built itself) keeps pyspark's daemon
+and worker path.
 """
 
 from __future__ import annotations
@@ -40,6 +59,10 @@ RUNTIME_CONFS: dict[str, str] = {
 # on big-big joins, which is the safer 100 TB posture.
 
 
+# The directory that holds the package: what a Python worker needs on its path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -66,6 +89,8 @@ def get_spark(app_name: str = "sql-redshift-etl-spark", *, shuffle_partitions: i
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "sql_redshift_etl_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in {**session_confs, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)

@@ -4,6 +4,7 @@ assembly (no live DB — wiring only, SURVEY.md §7), and scale utilities."""
 from __future__ import annotations
 
 import re
+import sys
 from datetime import date, datetime
 
 import pytest
@@ -6837,3 +6838,194 @@ def test_merge_insert_fills_like_insert(spark, ddl, seed):
     if seed is not None:
         ids = [r.id for r in first]
         assert None not in ids and len(set(ids)) == len(ids) and min(ids) >= seed
+
+
+def _zip_with(path, modules: dict[str, str]) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+@pytest.fixture
+def counted_reads(monkeypatch):
+    """Count zipimport's central-directory reads for the test's span."""
+    import zipimport
+
+    reads: list[str] = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+def test_daemon_keeps_an_unchanged_archive(tmp_path, counted_reads):
+    """The daemon's invalidate_caches re-reads an archive only when its
+    (mtime_ns, size) moved since the last read; every importer of the
+    archive then shares that read."""
+    import zipimport
+
+    from sql_redshift_etl_spark.pydaemon import _invalidate_caches
+
+    archive = tmp_path / "mods.zip"
+    _zip_with(archive, {"zmod_a": "X = 1\n"})
+    importers = [zipimport.zipimporter(str(archive)) for _ in range(3)]
+    counted_reads.clear()
+    _invalidate_caches(importers[0])
+    assert counted_reads == [str(archive)]
+    for _ in range(5):
+        for imp in importers:
+            _invalidate_caches(imp)
+    assert counted_reads == [str(archive)]
+    assert all(imp._files is zipimport._zip_directory_cache[str(archive)] for imp in importers)
+
+
+def test_daemon_rereads_a_rewritten_archive(tmp_path, counted_reads, monkeypatch):
+    import importlib
+    import zipimport
+
+    from sql_redshift_etl_spark.pydaemon import _invalidate_caches
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", _invalidate_caches)
+    archive = tmp_path / "mods.zip"
+    _zip_with(archive, {"zmod_old": "X = 1\n"})
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("zmod_old", "zmod_new"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("zmod_old").X == 1
+    importlib.invalidate_caches()
+    n_before = len(counted_reads)
+    importlib.invalidate_caches()
+    assert len(counted_reads) == n_before
+
+    _zip_with(archive, {"zmod_old": "X = 1\n", "zmod_new": "Y = 2\n"})
+    importlib.invalidate_caches()
+    assert counted_reads[n_before:] == [str(archive)]
+    assert importlib.import_module("zmod_new").Y == 2
+
+
+def test_daemon_rereads_an_archive_it_cannot_stat(tmp_path, counted_reads):
+    import zipimport
+
+    from sql_redshift_etl_spark.pydaemon import _invalidate_caches
+
+    archive = tmp_path / "mods.zip"
+    _zip_with(archive, {"zmod_a": "X = 1\n"})
+    imp = zipimport.zipimporter(str(archive))
+    counted_reads.clear()
+    _invalidate_caches(imp)
+    archive.unlink()
+    _invalidate_caches(imp)
+    assert counted_reads == [str(archive)] * 2
+    assert imp._files == {} and str(archive) not in zipimport._zip_directory_cache
+
+
+def test_daemon_stamps_archives_before_forking(tmp_path):
+    """Run the daemon entry with pyspark's manager() replaced by a probe:
+    at the point where workers would be forked, importlib.invalidate_caches()
+    re-reads no archive, so a worker's first task re-reads none either."""
+    import os
+    import subprocess
+    from pathlib import Path
+
+    archive = tmp_path / "first.zip"
+    _zip_with(archive, {"zmod_first": "X = 1\n"})
+    root = str(Path(__file__).resolve().parent.parent)
+    script = (
+        "import importlib, runpy, sys, zipimport\n"
+        f"sys.path.insert(1, {root!r})\n"
+        "import pyspark.daemon\n"
+        "def probe():\n"
+        "    real, reads = zipimport._read_directory, []\n"
+        "    zipimport._read_directory = lambda a: (reads.append(a), real(a))[1]\n"
+        "    importlib.invalidate_caches()\n"
+        "    held = {i.archive for i in sys.path_importer_cache.values() if isinstance(i, zipimport.zipimporter)}\n"
+        "    print('HELD', len(held), 'READS', len(reads), flush=True)\n"
+        "pyspark.daemon.manager = probe\n"
+        "runpy.run_module('sql_redshift_etl_spark.pydaemon', run_name='__main__', alter_sys=True)\n"
+    )
+    env = {**os.environ, "PYTHONPATH": str(archive)}
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert re.search(r"HELD [1-9]\d* READS 0$", out.stdout.strip()), out.stdout[-500:]
+
+
+def test_daemon_module_swallows_no_exception():
+    import ast
+    from pathlib import Path
+
+    from sql_redshift_etl_spark import pydaemon
+
+    tree = ast.parse(Path(pydaemon.__file__).read_text())
+    caught = [h.type and ast.unparse(h.type) for h in ast.walk(tree) if isinstance(h, ast.ExceptHandler)]
+    assert caught and not {None, "Exception", "BaseException"} & set(caught)
+
+
+def test_session_workers_reuse_zip_directories(spark):
+    """A task in the engine's session runs importlib.invalidate_caches()
+    without re-reading any zip archive (pyspark's own daemon re-reads
+    about 16 per task), and the daemon module the session names is
+    importable."""
+    import importlib.util
+
+    def reads_per_invalidate(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        real, reads = zipimport._read_directory, []
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    df = spark.range(1, numPartitions=1).mapInPandas(reads_per_invalidate, "reads long")
+    assert [r.reads for r in df.collect()] == [0]
+    module = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    assert module == "sql_redshift_etl_spark.pydaemon"
+    assert importlib.util.find_spec(module) is not None
+
+
+def test_pandas_udf_runs_outside_the_repo_root(tmp_path):
+    """Workers import the builders' UDFs by module reference: collect a
+    pandas-UDF query from a driver whose working directory is not the
+    repo root (count() would prune the UDF column and hide a failure)."""
+    import os
+    import subprocess
+    from pathlib import Path
+
+    from tests.conftest import SF_DIR
+
+    root = str(Path(__file__).resolve().parent.parent)
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from sql_redshift_etl_spark.session import get_spark\n"
+        "from sql_redshift_etl_spark.functions.udfs import udf_pandas_scalar_score\n"
+        "spark = get_spark('cwd-probe', shuffle_partitions=2)\n"
+        f"rows = udf_pandas_scalar_score(spark, {SF_DIR!r}).collect()\n"
+        "print('ROWS', len(rows), flush=True)\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert re.search(r"ROWS [1-9]\d*", out.stdout), out.stdout[-500:]
