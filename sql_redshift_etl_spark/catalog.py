@@ -121,6 +121,17 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame of ``schema`` (nullability included), built in
+    the JVM: it plans ``LocalTableScan <empty>`` with no partitions.
+    ``spark.createDataFrame([], schema)`` instead plans a Python RDD scan
+    with ``defaultParallelism`` partitions, so every job reading it
+    starts a Python worker per partition."""
+    jspark = spark._jsparkSession
+    jdf = jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json()))
+    return DataFrame(jdf, spark)
+
+
 def bounded_sort(df: DataFrame, *cols, barrier: bool = False) -> DataFrame:
     """Total order for a result whose row count is bounded at any scale.
 

@@ -234,6 +234,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sql_redshift_etl_spark.catalog import empty_frame
 from sql_redshift_etl_spark.functions.redshift_sql import (
     _in_literal,
     _rewrite_calls,
@@ -633,8 +634,7 @@ def _normalize_ddl_types(body: str) -> str:
 
 def _ddl_schema(ddl: str):
     """The StructType of a DDL column list. CHAR/VARCHAR lower to plain
-    STRING (Spark's own CTAS behavior; read schemas reject char/varchar
-    and an empty LogicalRDD may not carry them)."""
+    STRING (Spark's own CTAS behavior; read schemas reject char/varchar)."""
     parsed = T.StructType.fromDDL(_normalize_ddl_types(ddl))
     return T.StructType(
         [
@@ -892,8 +892,8 @@ def _mask_quoted(text: str) -> str:
 
 
 # The one block-token scanner. Order matters: END IF / END LOOP /
-# END CASE before END, IF [NOT] EXISTS (a DDL modifier unless it starts
-# a statement) before IF, ELSIF before ELSE. The lookahead on EXCEPTION
+# END CASE before END, IF [NOT] EXISTS before IF (either opens a block
+# only at a statement start), ELSIF before ELSE. The lookahead on EXCEPTION
 # keeps `RAISE EXCEPTION 'msg'` from reading as a handler divider.
 # WHILE/FOR heads open no block — their LOOP keyword does.
 _BLOCK_TOKEN = re.compile(
@@ -913,8 +913,9 @@ _CLOSES = {
     "end": ("case", "begin"),
 }
 _LOOP_KW = re.compile(r"(?is)\bLOOP\b")
-# IF [NOT] EXISTS opens an IF block where it starts a statement (after
-# ';', THEN, ELSE, LOOP or BEGIN); after a name it is a DDL modifier
+# IF opens an IF block only where it starts a statement (after ';',
+# THEN, ELSE, LOOP or BEGIN); elsewhere IF [NOT] EXISTS is a DDL modifier
+# and IF( is Spark's conditional function
 _STMT_START = re.compile(r"(?is)(?:^|;|\b(?:THEN|ELSE|LOOP|BEGIN))\s*\Z")
 
 
@@ -929,7 +930,9 @@ def _block_tokens(text: str, masked: str, start: int, what: str) -> Iterator[re.
     stack = ["if" if opener.lastgroup == "ifx" else opener.lastgroup]
     for m in _BLOCK_TOKEN.finditer(masked, opener.end()):
         kind = m.lastgroup
-        if kind == "ifx" and _STMT_START.search(masked, 0, m.start()):
+        if kind in ("if", "ifx"):
+            if not _STMT_START.search(masked, 0, m.start()):
+                continue  # Spark's IF(c, a, b) or a DDL IF [NOT] EXISTS
             kind = "if"
         elif kind == "endloop" and len(stack) > 1 and stack[-1] == "case":
             # a CASE expression ending a WHILE condition or a FOR query,
@@ -948,7 +951,7 @@ def _block_tokens(text: str, masked: str, start: int, what: str) -> Iterator[re.
                 return
         elif kind in _CLOSER:
             stack.append(kind)
-        elif len(stack) == 1 and kind != "ifx":
+        elif len(stack) == 1:
             yield m
     raise ValueError(f"{what}: missing {_CLOSER[stack[0]]} near {text[start:start + 60]!r}")
 
@@ -3639,7 +3642,7 @@ def _exec_create_external(
             # schema — Redshift's behavior; crashing would
             # make empty upstream slices fatal.
             full = cols + ("," + part_cols if part_cols else "")
-            state.bind(name, spark.createDataFrame([], _ddl_schema(full)))
+            state.bind(name, empty_frame(spark, _ddl_schema(full)))
             return
         declared_fields = list(_ddl_schema(cols).fields) + (
             list(_ddl_schema(part_cols).fields) if part_cols else []
@@ -3840,7 +3843,7 @@ def _exec_create_ddl(state: _ScriptState, scope: dict | None, m: re.Match, stmt:
     ddl_body = _IDENTITY_ATTR.sub(r"\1 \2", ddl_body)
     if fills:
         state.fills[m.group(1)] = fills
-    state.bind(m.group(1), state.spark.createDataFrame([], schema=_ddl_schema(ddl_body)))
+    state.bind(m.group(1), empty_frame(state.spark, _ddl_schema(ddl_body)))
 
 
 def _insert_rows(

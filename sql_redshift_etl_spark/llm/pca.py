@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_redshift_etl_spark.catalog import bounded_sort, load_table
+from sql_redshift_etl_spark.catalog import bounded_sort, empty_frame, load_table
 from sql_redshift_etl_spark.plans.registry import register
 
 _PARTIAL_SCHEMA = "n long, s array<double>, xtx array<double>"
@@ -154,8 +154,8 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         comps, mean, evr = fit_pca(emb, k=4)
     except ValueError:
         # empty corpus: no spectrum to fit — empty result, stable schema
-        return spark.createDataFrame(
-            [],
+        return empty_frame(
+            spark,
             T.StructType(
                 [
                     T.StructField("label", emb.schema["label"].dataType),

@@ -7,6 +7,20 @@ session_window(), and the aggregation expressions are shared idioms, so
 an ETL can promote a batch job to incremental streaming without
 rewriting semantics.
 
+Every registered stream runs through one of two runners, one per sink:
+
+- ``run_to_memory`` (memory sink): runs a streaming plan to completion
+  and returns the sink table. It sizes the state store for the plan:
+  ``spark.sql.shuffle.partitions`` is ceil(events rows / 12,500) from
+  the parquet footers, capped at ``defaultParallelism`` and floored at 1
+  (``stream_state_partitions``), set for the stream's start only and
+  restored after.
+- ``fold_event_batches`` (foreachBatch sink): stages events into 4
+  files, streams one file per micro-batch and folds each batch's partial
+  into a table kept as alternating parquet generations
+  (``GenerationFold``). A query supplies only its partial, its combine
+  step and its final projection.
+
 Scale notes:
 - File-source streaming at 100 TB: maxFilesPerTrigger bounds each
   micro-batch; state store (RocksDB in prod conf) holds window/session
@@ -17,21 +31,20 @@ Scale notes:
 
 from __future__ import annotations
 
-import logging
-import os
-
-import pandas as pd
-from collections.abc import Iterator
+import shutil
+from collections.abc import Callable, Iterator
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructField, StructType
 
-from sql_redshift_etl_spark.catalog import read_parquet
+from sql_redshift_etl_spark.catalog import empty_frame, load_table, read_parquet
+from sql_redshift_etl_spark.scale import parquet_total_rows
 from sql_redshift_etl_spark.session import apply_runtime_confs
-
-_log = logging.getLogger(__name__)
+from sql_redshift_etl_spark.sources.queries import _io_dir
 
 # Target input rows per streaming state partition. Stateful-operator cost
 # per micro-batch is O(shuffle partitions): every partition owns a state
@@ -52,24 +65,7 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     ceil(input rows / STREAM_TARGET_ROWS_PER_PARTITION) from the parquet
     footers (driver-side, zero jobs), capped at the cluster's default
     parallelism and floored at 1. At 100 TB the cap keeps today's
-    behavior (partitions = cluster cores); deliberate deployments size
-    state explicitly via SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS, which
-    wins outright because the state layout is a checkpoint-compatibility
-    property an engine should never silently change under a kept
-    checkpoint (these availableNow runs start from fresh checkpoints).
-    A value that is not an integer >= 1 is ignored with a warning."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        n = int(env) if env.strip().isdigit() else 0
-        if n >= 1:
-            return n
-        _log.warning(
-            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS=%r is not an integer >= 1; "
-            "using the partition count derived from the input size",
-            env,
-        )
-    from sql_redshift_etl_spark.scale import parquet_total_rows
-
+    behavior (partitions = cluster cores)."""
     rows = parquet_total_rows(f"{sf_dir}/events.parquet") or 0
     t = STREAM_TARGET_ROWS_PER_PARTITION
     return max(1, min((rows + t - 1) // t, spark.sparkContext.defaultParallelism))
@@ -216,18 +212,13 @@ def interval_join_clicks_purchases(
     )
 
 
-def run_to_memory(
-    agg: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> None:
-    """Execute a streaming aggregation to completion (availableNow) into
-    an in-memory sink table `name`. ``state_partitions`` (usually
-    ``stream_state_partitions``) sets spark.sql.shuffle.partitions for
-    the stream's plan only — captured at start(), restored after — so the
-    state-store count is sized to the input instead of inherited from
-    the batch shuffle setting."""
+def run_to_memory(agg: DataFrame, name: str, output_mode: str, sf_dir: str) -> DataFrame:
+    """Execute a streaming plan over ``sf_dir``'s events to completion
+    (availableNow) into an in-memory sink table ``name`` and return that
+    table. ``spark.sql.shuffle.partitions`` is set to
+    ``stream_state_partitions`` for the stream's plan only — captured at
+    start(), restored after — so the state-store count is sized to the
+    input instead of inherited from the batch shuffle setting."""
     spark = agg.sparkSession
     for q in spark.streams.active:
         if q.name == name:
@@ -239,8 +230,7 @@ def run_to_memory(
     # the one place that plans jobs from a thread pool, and it joins the
     # pool before it returns, so no staging job overlaps a stream start.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(stream_state_partitions(spark, sf_dir)))
     try:
         query = (
             agg.writeStream.format("memory")
@@ -251,8 +241,94 @@ def run_to_memory(
         )
         query.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(name)
+
+
+class GenerationFold:
+    """The foreachBatch function of ``fold_event_batches``: folds each
+    micro-batch's ``partial`` into a table kept as two alternating
+    parquet generations, ``combine(previous generation, partial)``.
+
+    IDEMPOTENT per batch_id: foreachBatch's contract is at-least-once
+    invocation (Spark re-calls a batch after a post-function pre-commit
+    failure), so a batch id already applied is skipped — without that
+    guard a retried batch double-merges its partial. A generation is
+    read back with the schema it was written with: the file source makes
+    a given schema nullable, which is what inference returns, so the
+    read equals ``spark.read.parquet`` without its inference job."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        gen_paths: list[str],
+        partial: Callable[[DataFrame], DataFrame],
+        combine: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> None:
+        self.spark, self.gen_paths = spark, gen_paths
+        self.partial, self.combine = partial, combine
+        self.gens = 0
+        self.applied: set[int] = set()
+        self.schema: StructType | None = None
+
+    def latest(self) -> DataFrame:
+        """The newest generation."""
+        path = self.gen_paths[(self.gens - 1) % 2]
+        return self.spark.read.schema(self.schema).parquet(path)
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in self.applied:
+            return
+        part = self.partial(batch_df)
+        merged = self.combine(self.latest(), part) if self.gens else part
+        merged.write.mode("overwrite").parquet(self.gen_paths[self.gens % 2])
+        self.schema = merged.schema
+        self.gens += 1
+        self.applied.add(batch_id)
+
+
+def fold_event_batches(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    partial: Callable[[DataFrame], DataFrame],
+    combine: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Stream ``sf_dir``'s events one staged file (of 4) per micro-batch
+    through a ``GenerationFold`` and return the folded table. Scratch
+    directories are named ``<tag>_parts``, ``<tag>_ckpt`` and
+    ``<tag>_a``/``_b``. When no batch fired, the result is empty with the
+    schema ``partial`` gives the events, made nullable as a read makes it.
+
+    Each run replays from a clean checkpoint and clean generations
+    (stale generations from an earlier run must not satisfy the final
+    read); a production deployment keeps the checkpoint and persists the
+    generation pointer next to the table, and the batch-id guard then
+    covers cross-restart re-delivery."""
+    ev = load_table(spark, sf_dir, "events")
+    stage_dir, ckpt_dir, *gen_paths = (
+        _io_dir(sf_dir, f"{tag}_{s}") for s in ("parts", "ckpt", "a", "b")
+    )
+    for p in (ckpt_dir, *gen_paths):
+        shutil.rmtree(p, ignore_errors=True)
+    ev.repartition(4).write.mode("overwrite").parquet(stage_dir)
+    fold = GenerationFold(spark, gen_paths, partial, combine)
+    (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(stage_dir)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    if fold.gens:
+        return fold.latest()
+    # no batch fired: the nullable schema a generation read would have
+    fields = [StructField(f.name, f.dataType) for f in partial(ev).schema]
+    return empty_frame(spark, StructType(fields))
 
 
 SESSION_GAP_SECONDS = 1800

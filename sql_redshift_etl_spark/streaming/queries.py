@@ -11,13 +11,15 @@ from pyspark.sql import functions as F
 
 from sql_redshift_etl_spark.catalog import bounded_sort
 from sql_redshift_etl_spark.functions.dialect import dec, dsum
+from sql_redshift_etl_spark.operators.merge import merge_upsert
 from sql_redshift_etl_spark.plans.registry import register
 from sql_redshift_etl_spark.streaming.pipeline import (
+    deduplicated_events,
+    fold_event_batches,
     interval_join_clicks_purchases,
     read_events_stream,
     run_to_memory,
     stateful_session_counts,
-    stream_state_partitions,
     tumbling_daily_counts,
     tumbling_with_watermark,
 )
@@ -40,11 +42,7 @@ def stream_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     input, complete-mode streaming output ≡ the batch aggregation — the
     oracle checks exactly that batch/stream parity."""
     agg = tumbling_daily_counts(read_events_stream(spark, sf_dir))
-    run_to_memory(
-        agg, "stream_tumbling_daily_sink", "complete",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
-    return spark.table("stream_tumbling_daily_sink")
+    return run_to_memory(agg, "stream_tumbling_daily_sink", "complete", sf_dir)
 
 
 @register(
@@ -74,11 +72,7 @@ def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = tumbling_with_watermark(
         read_events_stream(spark, sf_dir, max_files_per_trigger=None)
     )
-    run_to_memory(
-        agg, "stream_tumbling_wm_sink", "append",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
-    return spark.table("stream_tumbling_wm_sink")
+    return run_to_memory(agg, "stream_tumbling_wm_sink", "append", sf_dir)
 
 
 @register(
@@ -116,12 +110,8 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful_session_counts(
         read_events_stream(spark, sf_dir, max_files_per_trigger=None)
     )
-    run_to_memory(
-        out, "stream_sessions_sink", "update",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
     return (
-        spark.table("stream_sessions_sink")
+        run_to_memory(out, "stream_sessions_sink", "update", sf_dir)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -146,15 +136,9 @@ def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates on event_id must restore exactly the source relation —
     the oracle is the plain batch aggregation over the ORIGINAL events
     table, so any surviving duplicate or dropped event hash-mismatches."""
-    from sql_redshift_etl_spark.streaming.pipeline import deduplicated_events
-
     dedup = deduplicated_events(read_events_stream(spark, sf_dir))
-    run_to_memory(
-        dedup, "stream_dedup_sink", "append",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
     return (
-        spark.table("stream_dedup_sink")
+        run_to_memory(dedup, "stream_dedup_sink", "append", sf_dir)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -186,15 +170,10 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     this a full batch/stream-parity check of Spark's stream-stream join
     state machine."""
     joined = interval_join_clicks_purchases(spark, sf_dir, gap_minutes=30)
-    run_to_memory(
-        joined, "stream_interval_join_sink", "append",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
+    sink = run_to_memory(joined, "stream_interval_join_sink", "append", sf_dir)
     # The memory sink is driver-resident by construction, so the final
     # total order can skip the range-sampling exchange (bounded_sort).
-    return bounded_sort(
-        spark.table("stream_interval_join_sink"), "click_id", "purchase_id"
-    )
+    return bounded_sort(sink, "click_id", "purchase_id")
 
 
 @register(
@@ -221,81 +200,30 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the scheduled-COPY + MERGE pattern — each micro-batch
     shuffles only its own per-user partials, the target is rewritten via
     a key-partitioned join (broadcast when the delta is small), and
-    state lives in the table, not the stream. IDEMPOTENT per batch_id:
-    foreachBatch's contract is at-least-once invocation (Spark re-calls
-    a batch after a post-function pre-commit failure), so the function
-    skips batch ids it already applied — without that guard a retried
-    batch double-merges its partials. This run replays from a clean
-    checkpoint (demo semantics); a production deployment KEEPS the
-    checkpoint and persists the generation pointer next to the table,
-    and the same batch-id guard then covers cross-restart re-delivery.
-    Totals accumulate in DECIMAL(28,2) so the merge is exact and
-    order-insensitive."""
-    import os
-    import shutil
-
-    from sql_redshift_etl_spark.catalog import load_table
-    from sql_redshift_etl_spark.operators.merge import merge_upsert
-    from sql_redshift_etl_spark.sources.queries import _io_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    stage_dir = _io_dir(sf_dir, "events_stream_parts")
-    ckpt_dir = _io_dir(sf_dir, "events_stream_ckpt")
-    gen_paths = [_io_dir(sf_dir, f"stream_profile_{g}") for g in ("a", "b")]
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    for p in gen_paths:  # stale generations from a previous run must not
-        shutil.rmtree(p, ignore_errors=True)  # satisfy the final read
-    ev.repartition(4).write.mode("overwrite").parquet(stage_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage_dir)
-    )
-
-    state: dict = {"gen": 0, "applied": set()}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in state["applied"]:  # at-least-once delivery guard
-            return
-        src = batch_df.groupBy("user_id").agg(
+    state lives in the table, not the stream. The fold
+    (``fold_event_batches``) skips re-delivered batch ids, so a retried
+    batch never double-merges its partials. Totals accumulate in
+    DECIMAL(28,2) so the merge is exact and order-insensitive."""
+    profile = fold_event_batches(
+        spark,
+        sf_dir,
+        "stream_profile",
+        lambda batch: batch.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec("value")).cast("decimal(28,2)").alias("total_dec"),
-        )
-        if state["gen"] == 0:
-            merged = src
-        else:
-            tgt = spark.read.parquet(gen_paths[(state["gen"] - 1) % 2])
-            merged = merge_upsert(
-                tgt,
-                src,
-                ["user_id"],
-                update_set={
-                    "n_events": (F.col("t.n_events") + F.col("s.n_events")),
-                    "total_dec": (F.col("t.total_dec") + F.col("s.total_dec")).cast(
-                        "decimal(28,2)"
-                    ),
-                },
-                broadcast_source=True,
-            )
-        merged.write.mode("overwrite").parquet(gen_paths[state["gen"] % 2])
-        state["gen"] += 1
-        state["applied"].add(batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda tgt, src: merge_upsert(
+            tgt,
+            src,
+            ["user_id"],
+            update_set={
+                "n_events": F.col("t.n_events") + F.col("s.n_events"),
+                "total_dec": (F.col("t.total_dec") + F.col("s.total_dec")).cast("decimal(28,2)"),
+            },
+            broadcast_source=True,
+        ),
     )
-    q.awaitTermination()
-    if state["gen"] == 0:  # zero batches fired: empty profile, loud schema
-        return spark.createDataFrame(
-            [], "user_id long, n_events long, total_value double"
-        )
-    final = spark.read.parquet(gen_paths[(state["gen"] - 1) % 2])
-    return final.select(
+    return profile.select(
         "user_id", "n_events", F.col("total_dec").cast("double").alias("total_value")
     ).orderBy("user_id")
 
@@ -327,66 +255,26 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound the same plan degrades to the documented ±0.8% estimate
     (lgK 12), and the oracle would be relaxed to a tolerance check.
 
-    Same at-least-once batch-id guard and generation rotation as
-    stream_foreachbatch_upsert (the alternating-parquet upsert).
+    Same fold as stream_foreachbatch_upsert (fold_event_batches).
     """
-    import shutil
-
-    from sql_redshift_etl_spark.catalog import load_table
-    from sql_redshift_etl_spark.sources.queries import _io_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    stage_dir = _io_dir(sf_dir, "events_hll_parts")
-    ckpt_dir = _io_dir(sf_dir, "events_hll_ckpt")
-    gen_paths = [_io_dir(sf_dir, f"hll_state_{g}") for g in ("a", "b")]
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    for p in gen_paths:
-        shutil.rmtree(p, ignore_errors=True)
-    ev.repartition(4).write.mode("overwrite").parquet(stage_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage_dir)
-    )
-
-    state: dict = {"gen": 0, "applied": set()}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in state["applied"]:  # at-least-once delivery guard
-            return
-        sk = batch_df.groupBy("event_type").agg(
+    sketches = fold_event_batches(
+        spark,
+        sf_dir,
+        "hll_state",
+        lambda batch: batch.groupBy("event_type").agg(
             F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
-        )
-        if state["gen"] == 0:
-            merged = sk
-        else:
-            tgt = spark.read.parquet(gen_paths[(state["gen"] - 1) % 2]).alias("t")
-            merged = tgt.join(sk.alias("s"), "event_type", "full").select(
-                "event_type",
-                F.expr(
-                    "CASE WHEN t.sk IS NULL THEN s.sk "
-                    "WHEN s.sk IS NULL THEN t.sk "
-                    "ELSE hll_union(t.sk, s.sk) END"
-                ).alias("sk"),
-            )
-        merged.write.mode("overwrite").parquet(gen_paths[state["gen"] % 2])
-        state["gen"] += 1
-        state["applied"].add(batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda tgt, src: tgt.alias("t").join(src.alias("s"), "event_type", "full").select(
+            "event_type",
+            F.expr(
+                "CASE WHEN t.sk IS NULL THEN s.sk "
+                "WHEN s.sk IS NULL THEN t.sk "
+                "ELSE hll_union(t.sk, s.sk) END"
+            ).alias("sk"),
+        ),
     )
-    q.awaitTermination()
-    if state["gen"] == 0:
-        return spark.createDataFrame([], "event_type string, n_users bigint")
-    final = spark.read.parquet(gen_paths[(state["gen"] - 1) % 2])
     return bounded_sort(
-        final.select(
+        sketches.select(
             "event_type",
             F.expr("hll_sketch_estimate(sk)").cast("bigint").alias("n_users"),
         ),

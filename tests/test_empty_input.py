@@ -54,3 +54,19 @@ def test_every_query_survives_empty_tables(spark, empty_sf_dir):
                 continue
             failures[name] = msg[:160]
     assert not failures, f"queries crash on empty input: {failures}"
+
+
+# The foreachBatch folds return an empty frame of the same schema as on
+# a non-empty input when no micro-batch fires.
+FOLD_SCHEMAS = {
+    "stream_foreachbatch_upsert": "struct<user_id:bigint,n_events:bigint,total_value:double>",
+    "stream_hll_incremental": "struct<event_type:string,n_users:bigint>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(FOLD_SCHEMAS))
+def test_stream_folds_keep_their_schema_on_empty_tables(spark, empty_sf_dir, name):
+    df = all_queries()[name].builder(spark, empty_sf_dir)
+    assert df.schema.simpleString() == FOLD_SCHEMAS[name]
+    assert all(f.nullable for f in df.schema)
+    assert df.collect() == []

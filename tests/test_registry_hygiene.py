@@ -410,11 +410,8 @@ def test_plpgsql_block_grammar_is_not_copied():
     assert walkers == [_BLOCK_WALKER], f"functions iterating {names}: {walkers}"
 
 
-# Reads of files the engine itself wrote moments earlier (the streaming
-# upserts' generation files): never a fixture table, so no cached schema.
-_PARQUET_READ_ALLOWED = {
-    ("streaming/queries.py", "spark.read.parquet(gen_paths[(state['gen'] - 1) % 2])"): 4,
-}
+# (module, call) -> count of bare parquet reads allowed outside catalog.py
+_PARQUET_READ_ALLOWED: dict[tuple[str, str], int] = {}
 
 
 def test_parquet_reads_go_through_the_catalog():
@@ -442,6 +439,30 @@ def test_parquet_reads_go_through_the_catalog():
         f"parquet reads outside catalog.py that bypass its schema cache "
         f"(allowed: {_PARQUET_READ_ALLOWED}): {dict(reads)}"
     )
+
+
+def test_no_empty_frames_from_python_rdds():
+    """``spark.createDataFrame([], schema)`` plans a Python RDD scan with
+    ``defaultParallelism`` partitions, so every job reading it starts
+    Python workers; ``catalog.empty_frame`` builds the empty relation in
+    the JVM."""
+    from pathlib import Path
+
+    import sql_redshift_etl_spark
+
+    root = Path(sql_redshift_etl_spark.__file__).parent
+    sites = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "createDataFrame"
+        and any(
+            isinstance(a, ast.List) and not a.elts
+            for a in [*node.args[:1], *(k.value for k in node.keywords if k.arg == "data")]
+        )
+    ]
+    assert not sites, f"empty createDataFrame (use catalog.empty_frame): {sites}"
 
 
 # The one home of each near-duplicate building block in llm/ (module

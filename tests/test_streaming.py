@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from sql_redshift_etl_spark.plans.registry import all_queries
 from tests.conftest import SF_DIR
@@ -119,8 +120,8 @@ def test_stateful_sessions_across_real_microbatches(spark, duck, tmp_path):
         _time.sleep(1.1)  # file source orders batches by modification time
         lo = hi
     stream = read_events_stream(spark, str(tmp_path), max_files_per_trigger=1)
-    run_to_memory(stateful_session_counts(stream), "stateful_mb_sink", "update")
-    rows = spark.table("stateful_mb_sink").collect()
+    sink = run_to_memory(stateful_session_counts(stream), "stateful_mb_sink", "update", str(tmp_path))
+    rows = sink.collect()
     assert len(rows) > len({r["user_id"] for r in rows}), (
         "memory sink saw a single update per user — the replay did not "
         "actually split into multiple micro-batches"
@@ -146,23 +147,63 @@ def test_stateful_sessions_across_real_microbatches(spark, duck, tmp_path):
     assert out == batch
 
 
-def test_stream_state_partitions_env_override(spark, monkeypatch, caplog):
-    """SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS wins when it is an integer
-    >= 1; anything else is ignored with a warning, falling back to the
-    count derived from the input size."""
-    import logging
+def test_stream_state_partitions_from_footers(spark, tmp_path):
+    """The state-partition count is ceil(events rows / 12,500) from the
+    parquet footers, capped at defaultParallelism and floored at 1."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     from sql_redshift_etl_spark.streaming.pipeline import stream_state_partitions
 
-    env = "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
-    monkeypatch.delenv(env, raising=False)
-    derived = stream_state_partitions(spark, SF_DIR)
-    assert derived >= 1
-    for bad in ("abc", "0", "-3"):
-        monkeypatch.setenv(env, bad)
-        caplog.clear()
-        with caplog.at_level(logging.WARNING):
-            assert stream_state_partitions(spark, SF_DIR) == derived
-        assert env in caplog.text and repr(bad) in caplog.text
-    monkeypatch.setenv(env, "4")
-    assert stream_state_partitions(spark, SF_DIR) == 4
+    cap = spark.sparkContext.defaultParallelism
+    fixture_rows = ds.dataset(f"{SF_DIR}/events.parquet").count_rows()
+    fixture_want = max(1, min(-(-fixture_rows // 12_500), cap))  # 1 at sf0.001
+    assert stream_state_partitions(spark, SF_DIR) == fixture_want
+    for rows, want in ((0, 1), (25_001, min(3, cap)), (12_500 * cap + 1, cap)):
+        d = tmp_path / str(rows)
+        d.mkdir()
+        pq.write_table(pa.table({"event_id": pa.array(range(rows), pa.int64())}), d / "events.parquet")
+        assert stream_state_partitions(spark, str(d)) == want, rows
+
+
+def _count_fold(spark, tmp_path):
+    from sql_redshift_etl_spark.streaming.pipeline import GenerationFold
+
+    return GenerationFold(
+        spark,
+        [str(tmp_path / "a"), str(tmp_path / "b")],
+        lambda batch: batch.groupBy("k").agg(F.count(F.lit(1)).alias("n")),
+        lambda tgt, src: tgt.alias("t")
+        .join(src.alias("s"), "k", "full")
+        .select("k", (F.coalesce("t.n", F.lit(0)) + F.coalesce("s.n", F.lit(0))).alias("n")),
+    )
+
+
+def test_generation_fold_skips_redelivered_batch(spark, tmp_path):
+    """foreachBatch is at-least-once: a batch id the fold already
+    applied changes neither the generation count nor the rows."""
+    fold = _count_fold(spark, tmp_path)
+    batch = spark.range(10).select((F.col("id") % 3).alias("k"))
+    fold(batch, 0)
+    fold(batch, 1)
+    rows = sorted(fold.latest().collect())
+    assert rows == [(0, 8), (1, 6), (2, 6)]
+    for batch_id in (1, 0):
+        fold(batch, batch_id)
+        assert fold.gens == 2
+        assert sorted(fold.latest().collect()) == rows
+
+
+def test_generation_fold_reads_the_inferred_schema(spark, tmp_path):
+    """Each generation is read with the schema it was written with; the
+    read equals spark.read.parquet's inference, also for the first
+    generation, whose written schema has non-null fields."""
+    fold = _count_fold(spark, tmp_path)
+    batch = spark.range(10).select((F.col("id") % 3).alias("k"))
+    for batch_id in range(3):
+        fold(batch, batch_id)
+        if batch_id == 0:
+            assert not all(f.nullable for f in fold.schema)  # count(1)
+        path = fold.gen_paths[batch_id % 2]
+        assert fold.latest().schema == spark.read.parquet(path).schema

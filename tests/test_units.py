@@ -2100,6 +2100,40 @@ def test_script_procedure_if_exists_in_body_ok(spark):
     assert [r.v for r in out.collect()] == [42]
 
 
+def test_spark_if_function_inside_procedure_body():
+    """Only an IF at a statement start opens a plpgsql IF block; Spark's
+    IF(cond, a, b) function inside a body is part of its statement."""
+    from sql_redshift_etl_spark.functions.script_runner import (
+        _IfNode,
+        _parse_plpgsql_nodes,
+        _WhileNode,
+    )
+
+    (loop,) = _parse_plpgsql_nodes("LOOP SELECT IF(v > 1, 1, 2) AS x; EXIT; END LOOP;")
+    assert isinstance(loop, _WhileNode)
+    assert "IF(v > 1, 1, 2)" in loop.body
+    (node,) = _parse_plpgsql_nodes("IF (v > 1) THEN x := 1; END IF;")
+    assert isinstance(node, _IfNode)
+
+
+def test_script_ddl_table_plans_no_python_rdd(spark):
+    """CREATE TABLE binds an empty JVM relation, so a query over the
+    table starts no Python worker (no ``ExistingRDD`` scan)."""
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    out = run_redshift_script(
+        spark,
+        """
+        CREATE TABLE ddl_t (a BIGINT, b VARCHAR(4));
+        INSERT INTO ddl_t SELECT 1, 'x';
+        SELECT a, b FROM ddl_t;
+        """,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert [tuple(r) for r in out.collect()] == [(1, "x")]
+
+
 def test_copy_fixedwidth_loud_rejections(spark, tmp_path):
     """FIXEDWIDTH: spec must cover exactly the target columns; FORMAT
     alongside FIXEDWIDTH raises; bad field specs raise."""
